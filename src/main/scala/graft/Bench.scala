@@ -30,7 +30,7 @@ import graft.search._
   */
 object Bench {
 
-  private def session(cpus: Int, shufflePartitions: Int): SparkSession = {
+  private[graft] def session(cpus: Int, shufflePartitions: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(s"graft-bench-$cpus")
@@ -42,7 +42,7 @@ object Bench {
     s
   }
 
-  private def timed[T](body: => T): (T, Double) = {
+  private[graft] def timed[T](body: => T): (T, Double) = {
     val t0 = System.nanoTime()
     val r = body
     (r, (System.nanoTime() - t0) / 1e9)
@@ -612,7 +612,7 @@ object Bench {
   /** Map synthetic-vocab queries onto the sfDir documents vocabulary so the
     * batch measurement runs real multi-term queries there too.
     */
-  private def remapToSfVocab(q: Query): Query = {
+  private[graft] def remapToSfVocab(q: Query): Query = {
     val vocab = Vector("join", "hash", "row", "batch", "scan", "customer", "column",
       "filter", "small", "merge", "slow", "order", "vector", "line", "data", "table",
       "agg", "value", "key", "stream", "window", "spark", "group", "part", "big",

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.SparkEntry
+import graft.Bench.{remapToSfVocab, session, timed}
 import graft.index.{BuildConfig, IndexBuilder}
 import graft.search._
 
@@ -23,44 +24,6 @@ import graft.search._
   *    `_after` as third arg).
   */
 object BenchExtra {
-
-  /** Same remap as Bench's (private there; Bench.scala is frozen). */
-  private def remapToSfVocab(q: Query): Query = {
-    val vocab = Vector("join", "hash", "row", "batch", "scan", "customer", "column",
-      "filter", "small", "merge", "slow", "order", "vector", "line", "data", "table",
-      "agg", "value", "key", "stream", "window", "spark", "group", "part", "big",
-      "sort", "query", "fast", "dup")
-    def remap(t: String): String = vocab(math.abs(t.hashCode) % vocab.size)
-    q match {
-      case TermQ(t) => TermQ(remap(t))
-      case BoolQ(m, s, f, n, msm) =>
-        BoolQ(m.map(remapToSfVocab), s.map(remapToSfVocab), f.map(remapToSfVocab),
-          n.map(remapToSfVocab), msm)
-      case BoostQ(s, b) => BoostQ(remapToSfVocab(s), b)
-      case ConstQ(s, b) => ConstQ(remapToSfVocab(s), b)
-      case DisjMaxQ(qs, tb) => DisjMaxQ(qs.map(remapToSfVocab), tb)
-      case TermInSetQ(ts) => TermInSetQ(ts.map(remap))
-      case other => other
-    }
-  }
-
-  private def timed[T](body: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = body
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
-
-  private def session(cpus: Int, shufflePartitions: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-benchextra-$cpus")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   def main(args: Array[String]): Unit = args.headOption.getOrElse("interactive") match {
     case "interactive" => interactive(args.drop(1).headOption.map(_.toInt).getOrElse(2))
@@ -84,8 +47,6 @@ object BenchExtra {
       }
       println("AB minhash " + mh.map(s => f"$s%.3f").mkString(" "))
       val nDocs = sys.env.getOrElse("GRAFT_BENCH_DOCS", "2000000").toLong
-      val corpusPath = SyntheticCorpus.ensureParquet(spark, nDocs, files = 64,
-        dir = sys.props("java.io.tmpdir"))
       val sortedBigDir = s"${sys.props("java.io.tmpdir")}/graft-bench-sortedbig2-$nDocs"
       val m = graft.index.IndexIO.readManifest(spark, sortedBigDir)
         .getOrElse(sys.error("sortedbig index missing — run interactive mode once first"))

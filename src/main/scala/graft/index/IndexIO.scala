@@ -1,6 +1,9 @@
 package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.SessionIds
+
+import graft.search.IndexSearcher
 
 /** Manifest commit/read — the `segments_N` analogue
   * (`core/index/segmentinfos.go:39-46`): the manifest is written last, after
@@ -189,22 +192,20 @@ final class BuiltIndex(val indexDir: String, val manifest: Manifest) extends Ser
   // manifest is immutable, so the visible gen-dir set and schema never
   // change for this instance — re-running the FS listing + parquet footer
   // schema inference on EVERY query is pure driver latency (tens of ms per
-  // search at interactive scale). Keyed by session identity so a restarted
-  // session re-lists; @transient so the memo never rides task closures
-  // (executors get an empty map they never touch).
+  // search at interactive scale). Keyed by the session's UUID so a
+  // restarted session re-lists without the key pinning the old session; a
+  // bounded LRU (the stats memo's policy) so session-cycling processes
+  // evict only the coldest frame at the bound; @transient so the memo never
+  // rides task closures (executors get an empty map they never touch).
   @transient private lazy val readerMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long, Long, Set[Long]), DataFrame]()
+    IndexSearcher.lruCache[(String, String, Long, Long, Set[Long]), DataFrame](64)
 
   private def readGens(spark: SparkSession, root: String, minGen: Long, maxGen: Long,
                        dead: Set[Long] = Set.empty): DataFrame = {
-    // bound the memo so session-cycling processes don't retain stopped
-    // sessions' plans indefinitely (this instance sees a handful of
-    // (session, root) pairs in normal use; losing entries only re-lists)
-    if (readerMemo.size > 64) readerMemo.clear()
     // the gen range and dead set are part of the key: for THIS manifest
     // they are constants per root, but a same-root call with a different
     // visibility window must never be served the stale frame
-    readerMemo.computeIfAbsent((spark, root, minGen, maxGen, dead), _ => {
+    readerMemo.computeIfAbsent((SessionIds.of(spark), root, minGen, maxGen, dead), _ => {
       val dirs = committedGenDirs(spark, root, minGen, maxGen, dead)
       if (dirs.isEmpty) // no committed data dirs (shouldn't happen under a manifest)
         throw new IllegalStateException(s"no committed gen in [$minGen,$maxGen] under $root")

@@ -33,8 +33,7 @@ object TextStats {
       val it = set.iterator
       while (it.hasNext) {
         val t = it.next()
-        val f = tf.get(t)
-        if (f != null) hits += f.toLong
+        hits += tf.getOrDefault(t, 0).toLong
       }
       if (hits > bestHits) { best = lang; bestHits = hits }
     }
@@ -62,7 +61,7 @@ object TextStats {
     if (len == 0) return 0.0
     var stopHits = 0L
     val en = Markers.collectFirst { case ("en", s) => s }.get
-    en.foreach { t => val f = tf.get(t); if (f != null) stopHits += f.toLong }
+    en.foreach(t => stopHits += tf.getOrDefault(t, 0).toLong)
     var alnum = 0
     var i = 0
     while (i < text.length) {

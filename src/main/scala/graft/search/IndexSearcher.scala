@@ -1,10 +1,13 @@
 package graft.search
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.bm25.Bm25
-import graft.index.{BuiltIndex, SegmentMeta, TermPostings}
+import graft.index.{BuiltIndex, DeleteRow, SegmentMeta, TermPostings}
 
 /** Query-wide constants resolved ONCE on the driver (≙ Weight creation,
   * `core/search/termquery.go:220-276`: CollectionStatistics + TermStatistics
@@ -183,17 +186,79 @@ object ScorerBuilder {
   }
 }
 
+/** One segment's match sink, fed by [[SegmentKernel.run]] — the role of
+  * Lucene's LeafCollector. A scoring collector gets a scorer tree pruned by
+  * its own [[minCompetitive]] feedback; a non-scoring one gets the
+  * constant-score, never-pruning tree (no freq decode, no BM25 math). */
+private[search] trait LeafCollector {
+  private[search] def scoring: Boolean
+  private[search] def minCompetitive: Double = Double.NegativeInfinity
+  /** Position the scorer on its first candidate (a cursor skips ahead). */
+  private[search] def first(s: Scorer): Int = s.nextDoc()
+  /** Take the match `doc` the scorer is on; false ends the segment early. */
+  private[search] def collect(doc: Int, s: Scorer): Boolean
+}
+
+/** First `k` matches of a segment in ASCENDING docId order, then STOP — the
+  * early-termination leaf collector for sorted indexes (Lucene's
+  * TopFieldCollector leaf early-exit when the index sort matches the query
+  * sort): on a `buildSorted` index docId order == sort order by
+  * construction, so the first k matching docIds ARE the segment's sorted
+  * top-k. No scoring work.
+  *
+  * `afterDoc` is the paging cursor (the PagingFieldCollector role on a
+  * sorted index, `core/search/topfieldcollector.go` + Lucene's
+  * searchAfter(FieldDoc)): docId order == sort order, so "after the last hit
+  * of the previous page" is a plain docId lower bound — segments wholly
+  * before it skip via one advance() into the skip structure, never a scan.
+  */
+private[search] final class FirstKCollector(k: Int, seg: SegmentMeta, afterDoc: Long)
+    extends LeafCollector {
+  val hits = new scala.collection.mutable.ArrayBuffer[ScoredDoc](k)
+  def scoring = false
+  override def first(s: Scorer): Int =
+    if (k <= 0 || afterDoc >= seg.docBase + seg.docCount) DISI.NO_MORE // page is past this whole segment
+    else if (afterDoc >= seg.docBase) s.advance((afterDoc - seg.docBase).toInt + 1)
+    else s.nextDoc()
+  def collect(doc: Int, s: Scorer): Boolean = { hits += ScoredDoc(seg.docBase + doc, 0.0); hits.size < k }
+}
+
+/** A segment's match count (no scoring work). */
+private[search] final class CountCollector extends LeafCollector {
+  var n = 0L
+  def scoring = false
+  def collect(doc: Int, s: Scorer): Boolean = { n += 1; true }
+}
+
 /** Per-segment search kernel: runs the scorer tree over one segment's
-  * posting lists and collects a local top-k (≙ one leaf in
+  * posting lists into a [[LeafCollector]] (≙ one leaf in
   * `IndexSearcher.SearchLeaves`, `core/search/indexsearcher.go:376-392`).
   */
 object SegmentKernel {
 
-  /** Apply the segment's live-docs: tombstoned local ids are excluded via a
-    * ReqExcl anti-join over the scorer tree (`core/search/weight.go:189-236`
-    * live-docs semantics — scores of surviving docs are untouched). */
-  private def live(s: Scorer, deleted: Array[Int]): Scorer =
-    if (deleted.isEmpty) s else new ReqExclScorer(s, new IntArrayScorer(deleted))
+  /** The segment's scorer tree with its live docs applied: tombstoned local
+    * ids are excluded via a ReqExcl anti-join (`core/search/weight.go:189-236`
+    * live-docs semantics — scores of surviving docs are untouched). None
+    * when the query matches nothing in this segment. */
+  private def scorer(q: Query, postings: Map[String, TermReader], seg: SegmentMeta,
+                     ctx: QueryContext, deleted: Array[Int], scoring: Boolean,
+                     minCompetitive: () => Double): Option[Scorer] =
+    ScorerBuilder.build(q, postings, seg.docCount.toInt, ctx, 1.0, scoring, minCompetitive)
+      .map(s => if (deleted.isEmpty) s else new ReqExclScorer(s, new IntArrayScorer(deleted)))
+
+  /** The one push loop: every collecting path (top-k, top-k + total,
+    * first-k, count, the cross-field kernels) drives a segment through it. */
+  private[search] def run(s: Scorer, c: LeafCollector): Unit = {
+    var d = c.first(s)
+    while (d != DISI.NO_MORE && c.collect(d, s)) d = s.nextDoc()
+  }
+
+  /** Build `q`'s tree for the collector — pruned by its feedback when it
+    * scores — and run the segment through it. */
+  private[search] def run(q: Query, postings: Map[String, TermReader], seg: SegmentMeta,
+                          ctx: QueryContext, deleted: Array[Int], c: LeafCollector): Unit =
+    scorer(q, postings, seg, ctx, deleted, c.scoring,
+      if (c.scoring) () => c.minCompetitive else ScorerBuilder.neverPrune).foreach(run(_, c))
 
   def topK(q: Query, postings: Map[String, TermReader], seg: SegmentMeta,
            ctx: QueryContext, k: Int, after: Option[(Double, Long)],
@@ -203,106 +268,24 @@ object SegmentKernel {
     // (the MaxScoreAccumulator role): leaves sharing an executor JVM raise
     // each other's pruning floor — exact by the strict-floor argument
     val collector = new TopKCollector(k, seg.docBase, after, 0L, runId)
-    ScorerBuilder.build(q, postings, seg.docCount.toInt, ctx, 1.0, scoring = true,
-        () => collector.minCompetitive) match {
-      case None => Iterator.empty
-      case Some(s0) =>
-        val s = live(s0, deleted)
-        var d = s.nextDoc()
-        while (d != DISI.NO_MORE) {
-          collector.collect(d, s.score())
-          d = s.nextDoc()
-        }
-        collector.results.iterator.map { case (gid, sc) => ScoredDoc(gid, sc) }
-    }
+    run(q, postings, seg, ctx, deleted, collector)
+    collector.results.iterator.map { case (gid, sc) => ScoredDoc(gid, sc) }
   }
 
-  /** topK that ALSO reports the segment's hit count + whether pruning made
-    * it a lower bound: one sentinel row (docId = -1) per segment carries
-    * (collected, pruned); the rest are the leaf's top-k. */
-  def topKWithTotal(q: Query, postings: Map[String, TermReader], seg: SegmentMeta,
-                    ctx: QueryContext, k: Int, hitsThreshold: Long,
-                    deleted: Array[Int]): Iterator[LeafHits] = {
-    val collector = new TopKCollector(k, seg.docBase, None, hitsThreshold)
-    ScorerBuilder.build(q, postings, seg.docCount.toInt, ctx, 1.0, scoring = true,
-        () => collector.minCompetitive) match {
-      case None => Iterator.single(LeafHits(-1L, 0.0, 0L, pruned = false))
-      case Some(s0) =>
-        val s = live(s0, deleted)
-        var d = s.nextDoc()
-        while (d != DISI.NO_MORE) {
-          collector.collect(d, s.score())
-          d = s.nextDoc()
-        }
-        Iterator.single(LeafHits(-1L, 0.0, collector.collected, collector.pruned)) ++
-          collector.results.iterator.map { case (gid, sc) => LeafHits(gid, sc, 0L, pruned = false) }
-    }
-  }
-
-  /** First `k` matches of the segment in ASCENDING docId order, then STOP —
-    * the early-termination leaf collector for sorted indexes (Lucene's
-    * TopFieldCollector leaf early-exit when the index sort matches the
-    * query sort): on a `buildSorted` index docId order == sort order by
-    * construction, so the first k matching docIds ARE the segment's sorted
-    * top-k. No scoring work; at most k matches are visited past the last
-    * collected one.
-    */
-  def firstK(q: Query, postings: Map[String, TermReader], seg: SegmentMeta,
-             ctx: QueryContext, k: Int,
-             deleted: Array[Int] = Array.emptyIntArray,
-             afterDoc: Long = -1L): Iterator[ScoredDoc] = {
-    // paging cursor (the PagingFieldCollector role on a sorted index,
-    // `core/search/topfieldcollector.go` + Lucene's searchAfter(FieldDoc)):
-    // docId order == sort order, so "after the last hit of the previous
-    // page" is a plain docId lower bound — segments wholly before it skip
-    // via one advance() into the skip structure, never a scan
-    ScorerBuilder.build(q, postings, seg.docCount.toInt, ctx, 1.0, scoring = false,
-        ScorerBuilder.neverPrune) match {
-      case None => Iterator.empty
-      case Some(s0) =>
-        val s = live(s0, deleted)
-        var d =
-          if (afterDoc >= seg.docBase + seg.docCount) DISI.NO_MORE // page is past this whole segment
-          else if (afterDoc >= seg.docBase) s.advance((afterDoc - seg.docBase).toInt + 1)
-          else s.nextDoc()
-        val out = new scala.collection.mutable.ArrayBuffer[ScoredDoc](k)
-        while (d != DISI.NO_MORE && out.size < k) {
-          out += ScoredDoc(seg.docBase + d, 0.0)
-          d = s.nextDoc()
-        }
-        out.iterator
-    }
-  }
-
-  def count(q: Query, postings: Map[String, TermReader], seg: SegmentMeta,
-            ctx: QueryContext, deleted: Array[Int] = Array.emptyIntArray): Long = {
-    ScorerBuilder.build(q, postings, seg.docCount.toInt, ctx, 1.0, scoring = false,
-        ScorerBuilder.neverPrune) match {
-      case None => 0L
-      case Some(s0) =>
-        val s = live(s0, deleted)
-        var n = 0L
-        var d = s.nextDoc()
-        while (d != DISI.NO_MORE) { n += 1; d = s.nextDoc() }
-        n
-    }
-  }
-
-  /** All matching docs with scores (exhaustive; for oracles & set ops). */
+  /** All matching docs with scores (exhaustive; for oracles & set ops) — the
+    * one PULL path: a segment's whole match set streams lazily, never
+    * buffered. */
   def scoreAll(q: Query, postings: Map[String, TermReader], seg: SegmentMeta,
                ctx: QueryContext, deleted: Array[Int] = Array.emptyIntArray,
-               scoring: Boolean = true): Iterator[ScoredDoc] = {
-    ScorerBuilder.build(q, postings, seg.docCount.toInt, ctx, 1.0, scoring = scoring,
-        ScorerBuilder.neverPrune) match {
+               scoring: Boolean = true): Iterator[ScoredDoc] =
+    scorer(q, postings, seg, ctx, deleted, scoring, ScorerBuilder.neverPrune) match {
       case None => Iterator.empty
-      case Some(s0) =>
-        val s = live(s0, deleted)
+      case Some(s) =>
         Iterator.continually {
           val d = s.nextDoc()
           if (d == DISI.NO_MORE) null else ScoredDoc(seg.docBase + d, if (scoring) s.score() else 0.0)
         }.takeWhile(_ != null)
     }
-  }
 }
 
 /** Driver-side searcher (SURVEY.md §3.2 Spark shape):
@@ -336,9 +319,9 @@ object IndexSearcher {
 
 final class IndexSearcher(val index: BuiltIndex) extends Serializable {
 
-  /** One shared decoded reader per term per partition (executor-side). */
-  private def readers(post: Map[String, TermPostings], ctx: QueryContext): Map[String, TermReader] =
-    post.map { case (t, tp) => t -> new TermReader(tp, ctx.cache) }
+  /** One decoded reader per term (executor-side: a task's queries share it). */
+  private def readers(rows: IterableOnce[TermPostings], ctx: QueryContext): Map[String, TermReader] =
+    rows.iterator.map(tp => tp.term -> new TermReader(tp, ctx.cache)).toMap
 
   /** Resolve the query: normalize, then rewrite PrefixQ/RegexpQ/TermRangeQ
     * into DISTRIBUTED constant-score [[MultiTermQ]]s (Lucene's
@@ -350,19 +333,10 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
   def rewrite(spark: SparkSession, q0: Query): Query = {
     val q1 = Query.normalize(q0)
     val q = Query.normalize(toMultiTerm(q1))
-    if (!index.manifest.hasPositions && hasPhrase(q))
+    if (!index.manifest.hasPositions && q.exists { case PhraseQ(ts, _) => ts.size >= 2; case _ => false })
       throw new IllegalStateException(
         "phrase query over an index without a positions stream — rebuild with BuildConfig.storePositions=true")
     q
-  }
-
-  private def hasPhrase(q: Query): Boolean = q match {
-    case PhraseQ(ts, _) => ts.size >= 2
-    case BoolQ(m, s, f, n, _) => (m ++ s ++ f ++ n).exists(hasPhrase)
-    case BoostQ(s, _) => hasPhrase(s)
-    case ConstQ(s, _) => hasPhrase(s)
-    case DisjMaxQ(qs, _) => qs.exists(hasPhrase)
-    case _ => false
   }
 
   private def toMultiTerm(q: Query): Query = q match {
@@ -522,21 +496,21 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     require(index.manifest.indexSort.nonEmpty,
       s"index at ${index.indexDir} has no index sort (build with IndexBuilder.buildSorted; " +
         "appends clear it — the appended docIds cannot interleave into the sort order)")
-    val q = rewrite(spark, q0)
-    val ctx = queryContext(spark, q)
+    val (Seq(q), _, ctx) = prepare(spark, Seq(q0), scoring = false)
     val afterDoc = after.getOrElse(-1L)
-    val perLeaf = runLeaves(spark, q) { (seg, post, del) =>
-      SegmentKernel.firstK(q, readers(post, ctx), seg, ctx, k, del, afterDoc)
-    }
-    perLeaf.orderBy($"docId".asc).limit(k).as[ScoredDoc]
+    leaves(spark, Seq(q), ctx) { (seg, rds, del, _) =>
+      val c = new FirstKCollector(k, seg, afterDoc)
+      SegmentKernel.run(q, rds, seg, ctx, del, c)
+      c.hits.iterator
+    }.orderBy($"docId".asc).limit(k).as[ScoredDoc]
   }
 
   /** Global term statistics for the query terms: sum over segments, pushed
     * down to the term-sorted parquet (`indexsearcher.go:438-496` analogue).
     * Stats are immutable for a committed index generation, so they are
     * memoized per searcher — repeated-term workloads (interactive sessions,
-    * query logs) skip the stats job entirely. Terms absent from the index
-    * are cached as (0, 0).
+    * query logs, repeated batches) skip the stats job entirely. Terms
+    * absent from the index are cached as (0, 0).
     */
   // Bounded LRU (access-order LinkedHashMap): at the size bound only the
   // LEAST-recently-used entry is evicted per insert, so a long-lived
@@ -556,29 +530,32 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     val hits = terms.iterator
       .flatMap(t => Option(statsCache.get(t)).map(t -> _)).toMap
     val missing = terms -- hits.keySet
-    val fetched: Map[String, (Long, Long)] =
-      if (missing.isEmpty) Map.empty
-      else {
-        // collect the per-(term, segment) stat rows and sum on the driver:
-        // row count is bounded by |query terms| x |segments| (the same
-        // bound the old groupBy's shuffle input had), and skipping the
-        // aggregation exchange makes the stats job ONE stage — for a cold
-        // interactive query this stage is half its latency. Long sums are
-        // exact and order-independent, so the result is identical.
-        val f = scala.collection.mutable.HashMap.empty[String, (Long, Long)]
-        index.postings(spark)
-          .where(col("term").isin(missing.toSeq: _*))
-          .select(col("term"), col("docFreq"), col("totalTermFreq"))
-          .collect()
-          .foreach { r =>
-            val t = r.getString(0)
-            val (df0, ttf0) = f.getOrElse(t, (0L, 0L))
-            f(t) = (df0 + r.getInt(1), ttf0 + r.getLong(2))
-          }
-        missing.foreach(t => statsCache.put(t, f.getOrElse(t, (0L, 0L))))
-        missing.iterator.map(t => t -> f.getOrElse(t, (0L, 0L))).toMap
-      }
+    val fetched =
+      if (missing.isEmpty) Map.empty[String, (Long, Long)]
+      else scanStats(spark, missing, IndexSearcher.DriverMergeMaxRows)
+    missing.foreach(t => statsCache.put(t, fetched.getOrElse(t, (0L, 0L))))
     (hits ++ fetched).filter(_._2._1 > 0)
+  }
+
+  /** Summed (docFreq, totalTermFreq) of `terms` over every segment, read
+    * off a column-pruned scan with term pushdown (the blocks column, the
+    * index's bulk, never leaves the reader). At most |terms| x |segments|
+    * stat rows exist: within `maxDriverRows` they are collected and summed
+    * on the driver — ONE stage, no exchange; for a cold interactive query
+    * that stage is half its latency — and above it a groupBy sums them
+    * distributed, so the collect stays |terms| rows. Long sums are exact
+    * and order-independent: both branches return the same map. */
+  private[search] def scanStats(spark: SparkSession, terms: Set[String],
+                                maxDriverRows: Long): Map[String, (Long, Long)] = {
+    val rows = index.postings(spark).where(col("term").isin(terms.toSeq: _*))
+    if (terms.size.toLong * math.max(1, index.manifest.segments.size) <= maxDriverRows)
+      rows.select(col("term"), col("docFreq"), col("totalTermFreq")).collect()
+        .groupMapReduce(_.getString(0))(r => (r.getInt(1).toLong, r.getLong(2))) {
+          case ((df0, ttf0), (df1, ttf1)) => (df0 + df1, ttf0 + ttf1)
+        }
+    else
+      rows.groupBy("term").agg(sum("docFreq"), sum("totalTermFreq")).collect()
+        .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
   }
 
   def queryContext(spark: SparkSession, q: Query): QueryContext =
@@ -589,6 +566,18 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     val idf = stats.map { case (t, (df, _)) => t -> Bm25.idf(df, n) }
     QueryContext(idf,
       Bm25.buildCacheFor(index.manifest.normMode, index.stats.avgdl), n)
+  }
+
+  /** Every entry point's preparation pass: rewrite the queries, then one
+    * [[QueryContext]] from the memoized [[termStats]] of all their terms (≙
+    * Weight creation). A non-scoring caller skips the stats entirely: idf
+    * is never read without scoring, and the norm cache needs only avgdl. */
+  private def prepare(spark: SparkSession, qs0: Seq[Query], scoring: Boolean)
+      : (Seq[Query], Map[String, (Long, Long)], QueryContext) = {
+    val qs = qs0.map(rewrite(spark, _))
+    val stats =
+      if (scoring) termStats(spark, qs.flatMap(_.terms).toSet) else Map.empty[String, (Long, Long)]
+    (qs, stats, queryContextFor(stats))
   }
 
   /** Fuzzy top-k via the [[FuzzyNgrams]] sidecar: candidate terms come
@@ -624,13 +613,11 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
   def search(spark: SparkSession, q0: Query, k: Int,
              after: Option[(Double, Long)] = None): Dataset[ScoredDoc] = {
     import spark.implicits._
-    val q = rewrite(spark, q0)
-    val ctx = queryContext(spark, q)
+    val (Seq(q), _, ctx) = prepare(spark, Seq(q0), scoring = true)
     val runId = MaxScoreAccumulator.newRunId()
-    val perLeaf = runLeaves(spark, q) { (seg, post, del) =>
-      SegmentKernel.topK(q, readers(post, ctx), seg, ctx, k, after, del, runId)
-    }
-    perLeaf.orderBy($"score".desc, $"docId".asc).limit(k).as[ScoredDoc]
+    leaves(spark, Seq(q), ctx) { (seg, rds, del, _) =>
+      SegmentKernel.topK(q, rds, seg, ctx, k, after, del, runId)
+    }.orderBy($"score".desc, $"docId".asc).limit(k).as[ScoredDoc]
   }
 
   /** Top-k + [[TotalHits]] with the reference's hits-threshold contract
@@ -643,12 +630,15 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
   def searchWithTotal(spark: SparkSession, q0: Query, k: Int,
                       hitsThreshold: Long = 1000L): (Array[ScoredDoc], TotalHits) = {
     import spark.implicits._
-    val q = rewrite(spark, q0)
-    val ctx = queryContext(spark, q)
-    val segsDs = spark.createDataset(index.manifest.segments)
-    val rows = cogroupLeaves(spark, segsDs, q)((seg, post, del) =>
-      SegmentKernel.topKWithTotal(q, readers(post, ctx), seg, ctx, k, hitsThreshold, del))
-      .collect()
+    val (Seq(q), _, ctx) = prepare(spark, Seq(q0), scoring = true)
+    val rows = leaves(spark, Seq(q), ctx) { (seg, rds, del, _) =>
+      val c = new TopKCollector(k, seg.docBase, None, hitsThreshold)
+      SegmentKernel.run(q, rds, seg, ctx, del, c)
+      // one sentinel row (docId = -1) per segment carries its hit count and
+      // whether pruning made it a lower bound; the rest are its top-k
+      Iterator.single(LeafHits(-1L, 0.0, c.collected, c.pruned)) ++
+        c.results.iterator.map { case (gid, sc) => LeafHits(gid, sc, 0L, pruned = false) }
+    }.collect()
     val (sentinels, hits) = rows.partition(_.docId == -1L)
     val total = TotalHits(sentinels.map(_.collected).sum,
       if (sentinels.exists(_.pruned)) TotalHits.GTE else TotalHits.EQ)
@@ -669,34 +659,21 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     */
   def searchLocal(spark: SparkSession, q0: Query, k: Int,
                   maxLocalPostings: Long = 5000000L): Array[ScoredDoc] = {
-    import spark.implicits._
-    val q = rewrite(spark, q0)
+    val (Seq(q), stats, ctx) = prepare(spark, Seq(q0), scoring = true)
     // multi-term and tombstoned indexes stay distributed (deletes would need
-    // a live-docs fetch; correctness first, the fast path is an optimization)
-    if (q.termPreds.nonEmpty || index.manifest.deletedCount > 0L)
+    // a live-docs fetch; correctness first, the fast path is an
+    // optimization), as do queries over the posting budget; the fallback
+    // reads the stats just computed from the memo
+    if (q.termPreds.nonEmpty || index.manifest.deletedCount > 0L ||
+        stats.values.map(_._1).sum > maxLocalPostings ||
+        (q.exists(_ == MatchAllQ) && index.stats.docCount > maxLocalPostings))
       return search(spark, q, k).collect()
-    val stats = termStats(spark, q.terms) // one stats job; ctx derives from it
-    val ctx = queryContextFor(stats)
-    val totalPostings = stats.values.map(_._1).sum
-    val hasMatchAll = {
-      def f(x: Query): Boolean = x match {
-        case MatchAllQ => true
-        case BoolQ(m, s, fl, n, _) => (m ++ s ++ fl ++ n).exists(f)
-        case BoostQ(s, _) => f(s); case ConstQ(s, _) => f(s)
-        case DisjMaxQ(qs, _) => qs.exists(f)
-        case _ => false
-      }
-      f(q)
-    }
-    if (totalPostings > maxLocalPostings || (hasMatchAll && index.stats.docCount > maxLocalPostings))
-      return search(spark, q, k).collect()
-    val rows = postingRows(spark, q.terms).collect().groupBy(_.segmentId)
+    val rows = postingRows(spark, Seq(q)).collect().groupBy(_.segmentId)
     // one shared run id: sequential leaves inherit each other's thresholds
     // (Lucene's single-threaded leaf-order pruning benefit)
     val runId = MaxScoreAccumulator.newRunId()
     val hits = index.manifest.segments.iterator.flatMap { seg =>
-      val post = rows.getOrElse(seg.segmentId, Array.empty)
-        .map(tp => tp.term -> new TermReader(tp, ctx.cache)).toMap
+      val post = readers(rows.getOrElse(seg.segmentId, Array.empty[TermPostings]).iterator, ctx)
       SegmentKernel.topK(q, post, seg, ctx, k, None, runId = runId)
     }.toArray
     hits.sortBy(h => (-h.score, h.docId)).take(k)
@@ -709,7 +686,8 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     * top-k merge happens in a tiny final aggregation (numSegments * k rows
     * per query). QPS scales with executors because the (segment x query)
     * work distributes evenly; per-query Spark job scheduling overhead is
-    * paid once for the set, not once per query.
+    * paid once for the set, not once per query. Term statistics come from
+    * the searcher's memo, so a repeated batch runs no stats job.
     *
     * Rank-identity: same kernels, same tie-break (score desc, global docId
     * asc) as [[search]].
@@ -717,43 +695,9 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
   def searchMany(spark: SparkSession, queries: Seq[(String, Query)], k: Int): Dataset[QueryHit] = {
     import spark.implicits._
     val t0 = System.nanoTime()
-    val normed = queries.map { case (id, q) => id -> rewrite(spark, q) }
-    val allTerms = normed.flatMap(_._2.terms).toSet
-    val allPreds = normed.flatMap(_._2.termPreds).toSet
-    val rows = postingRows(spark, allTerms, allPreds)
-    // Stats pass on a COLUMN-PRUNED scan: only (term, docFreq, ttf) leave
-    // the parquet reader — the blocks column (the index's bulk) is never
-    // touched here. Round 2 persisted the full rows to share one read with
-    // the kernel job, but the persist (a) blocked column pruning, so the
-    // stats job decoded every posting block, and (b) wrote those blocks
-    // through the storage-memory path — a memory-bandwidth-bound serial-ish
-    // cost that capped 8->32 batch scaling. Two pruned scans are cheaper
-    // than one unpruned scan + cache round-trip, and both parallelize.
+    val ids = queries.map(_._1).toArray
+    val (qs, stats, ctx) = prepare(spark, queries.map(_._2), scoring = true)
     val t1 = System.nanoTime()
-    // Stats pass. Fast path: collect the per-(term, segment) stat rows and
-    // sum on the driver — one stage instead of groupBy's two. The collect
-    // is |matched terms| x |segments| rows, so it is gated on a KNOWN
-    // driver-safe bound: explicit terms x segments under the cap and no
-    // multi-term predicates (whose expansion cardinality is unknown until
-    // scanned). Over the cap (huge dictionaries x many segments) the
-    // distributed aggregation keeps the collect at |terms| rows.
-    val statsRowBound = allTerms.size.toLong * math.max(1, index.manifest.segments.size)
-    val stats: scala.collection.Map[String, Long] =
-      if (allPreds.isEmpty && statsRowBound <= IndexSearcher.DriverMergeMaxRows) {
-        val m = scala.collection.mutable.HashMap.empty[String, Long]
-        rows.select(col("term"), col("docFreq")).collect().foreach { r =>
-          val t = r.getString(0)
-          m(t) = m.getOrElse(t, 0L) + r.getInt(1)
-        }
-        m
-      } else
-        rows.groupBy("term").agg(sum("docFreq").as("df"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val n = index.stats.fieldDocCount
-    val ctx = QueryContext(
-      stats.iterator.map { case (t, df) => t -> Bm25.idf(df, n) }.toMap,
-      Bm25.buildCacheFor(index.manifest.normMode, index.stats.avgdl), n)
-    val t2 = System.nanoTime()
     // Task granularity: one-task-per-segment gives |segments| tasks — on a
     // cluster whose core count approaches the segment count that is 1-2
     // waves, and within-wave stragglers stop amortizing (the 4N level of
@@ -764,8 +708,10 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     // queries, multiplying task count without ever splitting a posting
     // list. The posting rows are replicated per shard, so sharding is
     // gated on replicated volume staying small — a whole-vocabulary batch
-    // (matched postings ~ index size) keeps shards = 1 and the old plan.
-    val totalPostings = math.max(1L, stats.values.sum)
+    // (matched postings ~ index size) keeps shards = 1 and the old plan,
+    // and so does a batch carrying multi-term predicates, whose expanded
+    // posting volume is unknown before the scan.
+    val totalPostings = math.max(1L, stats.values.map(_._1).sum)
     val para = spark.sparkContext.defaultParallelism
     val nSegs = index.manifest.segments.size
     // ~4 tasks per core: enough waves that stragglers amortize, few enough
@@ -773,8 +719,9 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     // measured net-negative: +10% Σ kernel from replicated decode for no
     // wall win)
     val shardsWanted = math.max(1, math.min(8, (4 * para) / math.max(1, nSegs)))
-    val shards = math.min(shardsWanted,
-      math.max(1L, ShardedPostingsBudget / totalPostings).toInt)
+    val shards =
+      if (qs.exists(_.termPreds.nonEmpty)) 1
+      else math.min(shardsWanted, math.max(1L, ShardedPostingsBudget / totalPostings).toInt)
     // per-task kernel CPU attribution (accumulators are ~free): Σ task
     // kernel time is work-invariant across parallelism levels, so
     // wall / (Σ/cores) separates engine scaling from host effects in the
@@ -782,15 +729,14 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     val kernelNanos = spark.sparkContext.longAccumulator("graft-batch-kernel-nanos")
     // one run id PER QUERY (shared by that query's segment/shard tasks):
     // concurrent tasks in one executor JVM raise each other's floors
-    val runIds: Array[Long] = Array.fill(normed.size)(MaxScoreAccumulator.newRunId())
-    val perLeaf: Dataset[QueryHit] = runSegments(spark, rows, shards) { (seg, post, del, shard) =>
+    val runIds: Array[Long] = Array.fill(qs.size)(MaxScoreAccumulator.newRunId())
+    val perLeaf: Dataset[QueryHit] = leaves(spark, qs, ctx, shards) { (seg, rds, del, shard) =>
       val tk0 = System.nanoTime()
-      val rds = readers(post, ctx) // decode memo shared across the shard's queries
       val out = new scala.collection.mutable.ArrayBuffer[QueryHit]()
-      normed.iterator.zipWithIndex.foreach { case ((id, q), qi) =>
+      qs.iterator.zipWithIndex.foreach { case (q, qi) =>
         if (qi % shards == shard)
           SegmentKernel.topK(q, rds, seg, ctx, k, None, del, runIds(qi))
-            .foreach(sd => out += QueryHit(id, sd.docId, sd.score))
+            .foreach(sd => out += QueryHit(ids(qi), sd.docId, sd.score))
       }
       kernelNanos.add(System.nanoTime() - tk0)
       out.iterator
@@ -804,7 +750,7 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     // rows do not need a 32-task shuffle). Large batches (the scaling
     // bench's 4000/40000-query rows included) keep the distributed merge.
     val merged: Array[QueryHit] =
-      if (normed.size.toLong * nSegs * k <= IndexSearcher.DriverMergeMaxRows) {
+      if (qs.size.toLong * nSegs * k <= IndexSearcher.DriverMergeMaxRows) {
         perLeaf.collect().groupBy(_.queryId).valuesIterator.flatMap { hits =>
           hits.sortBy(h => (-h.score, h.docId)).take(k)
         }.toArray
@@ -812,27 +758,25 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
         perLeaf.groupByKey(_.queryId).flatMapGroups { (_, hits) =>
           hits.toArray.sortBy(h => (-h.score, h.docId)).take(k).iterator
         }.collect()
-    val t3 = System.nanoTime()
+    val t2 = System.nanoTime()
     if (sys.env.contains("GRAFT_BATCH_TIMING"))
-      System.err.println(f"[graft-batch] rewrite=${(t1 - t0) / 1e9}%.2f stats=${(t2 - t1) / 1e9}%.2f " +
-        f"kernel+merge=${(t3 - t2) / 1e9}%.2f taskKernelSum=${kernelNanos.value / 1e9}%.2f")
+      System.err.println(f"[graft-batch] rewrite+stats=${(t1 - t0) / 1e9}%.2f " +
+        f"kernel+merge=${(t2 - t1) / 1e9}%.2f taskKernelSum=${kernelNanos.value / 1e9}%.2f")
     spark.createDataset(merged.toSeq)
   }
 
   /** Exhaustive (doc, score) stream for every match — oracle/verify path. */
-  def scoreAll(spark: SparkSession, q0: Query): Dataset[ScoredDoc] = {
-    val q = rewrite(spark, q0)
-    val ctx = queryContext(spark, q)
-    runLeaves(spark, q)((seg, post, del) =>
-      SegmentKernel.scoreAll(q, readers(post, ctx), seg, ctx, del))
-  }
+  def scoreAll(spark: SparkSession, q0: Query): Dataset[ScoredDoc] = matches(spark, q0, scoring = true)
 
   /** Matching docIds only (no scoring work) — the delete-by-query feed. */
-  def matchingDocs(spark: SparkSession, q0: Query): Dataset[ScoredDoc] = {
-    val q = rewrite(spark, q0)
-    val ctx = queryContext(spark, q)
-    runLeaves(spark, q)((seg, post, del) =>
-      SegmentKernel.scoreAll(q, readers(post, ctx), seg, ctx, del, scoring = false))
+  def matchingDocs(spark: SparkSession, q0: Query): Dataset[ScoredDoc] =
+    matches(spark, q0, scoring = false)
+
+  private def matches(spark: SparkSession, q0: Query, scoring: Boolean): Dataset[ScoredDoc] = {
+    import spark.implicits._
+    val (Seq(q), _, ctx) = prepare(spark, Seq(q0), scoring)
+    leaves(spark, Seq(q), ctx)((seg, rds, del, _) =>
+      SegmentKernel.scoreAll(q, rds, seg, ctx, del, scoring))
   }
 
   /** SORTED_SET doc-values faceting (`core/document/docvaluestype.go:3-30`
@@ -881,7 +825,7 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
         val tv = index.termVectorsDf(spark).select(col("docId").as("doc_id"), col("term"))
         val sample = matches.limit(maxPushdownIds + 1).collect().map(_.getLong(0))
         if (sample.length <= maxPushdownIds)
-          tv.where(col("doc_id").isin(sample.map(Long.box): _*))
+          tv.where(col("doc_id").isin(sample.toIndexedSeq.map(Long.box): _*))
         else
           // hot query: UNHINTED join — the match set is unbounded (MatchAll
           // on 10^12 docs), so Catalyst must stay free to pick a shuffle
@@ -915,53 +859,47 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     */
   def count(spark: SparkSession, q0: Query): Long = {
     import spark.implicits._
-    val q = rewrite(spark, q0)
+    val (Seq(q), _, ctx) = prepare(spark, Seq(q0), scoring = false)
     val hasDeletes = index.manifest.deletedCount > 0L
     q match {
       case MatchAllQ => index.stats.docCount - index.manifest.deletedCount
       case TermQ(t) if !hasDeletes => termStats(spark, Set(t)).get(t).map(_._1).getOrElse(0L)
       case MatchNoneQ => 0L
       case _ =>
-        val ctx = queryContext(spark, q)
-        val segsDs = spark.createDataset(index.manifest.segments)
-        cogroupLeaves(spark, segsDs, q)((seg, post, del) =>
-          Iterator.single(SegmentKernel.count(q, readers(post, ctx), seg, ctx, del)))
-          .reduce(_ + _)
+        leaves(spark, Seq(q), ctx) { (seg, rds, del, _) =>
+          val c = new CountCollector
+          SegmentKernel.run(q, rds, seg, ctx, del, c)
+          Iterator.single(c.n)
+        }.reduce(_ + _)
     }
   }
 
-  private def runLeaves(spark: SparkSession, q: Query)(
-      kernel: (SegmentMeta, Map[String, TermPostings], Array[Int]) => Iterator[ScoredDoc]): Dataset[ScoredDoc] = {
-    import spark.implicits._
-    val segsDs = spark.createDataset(index.manifest.segments)
-    cogroupLeaves(spark, segsDs, q)(kernel)
-  }
-
-  /** Co-locate each segment's metadata with its query-term posting rows.
-    * Only the query terms' rows move (parquet term pushdown), so the shuffle
-    * is |queryTerms| x |segments| rows regardless of corpus size.
-    */
-  private def cogroupLeaves[T: org.apache.spark.sql.Encoder : scala.reflect.ClassTag](
-      spark: SparkSession, segsDs: Dataset[SegmentMeta], q: Query)(
-      kernel: (SegmentMeta, Map[String, TermPostings], Array[Int]) => Iterator[T]): Dataset[T] =
-    runSegments(spark, postingRows(spark, q.terms, q.termPreds))(kernel)
-
-  /** Query-term posting rows: only the query terms' (and multi-term
+  /** Query posting rows: only the queries' terms' (and multi-term
     * predicates') rows leave the parquet scan (term pushdown), so the
     * shuffle is |matching terms| x |segments| rows regardless of corpus
     * size. Predicates stay distributed end to end — never collected.
     */
-  private def postingRows(spark: SparkSession, terms: Set[String],
-                          preds: Set[TermPredicate] = Set.empty): Dataset[TermPostings] = {
+  private def postingRows(spark: SparkSession, qs: Seq[Query]): Dataset[TermPostings] = {
     import spark.implicits._
+    val terms = qs.flatMap(_.terms).toSet
     val clauses =
       (if (terms.isEmpty) Nil else Seq(col("term").isin(terms.toSeq: _*))) ++
-        preds.toSeq.map(predColumn)
+        qs.flatMap(_.termPreds).toSet.toSeq.map(predColumn)
     clauses.reduceOption(_ || _) match {
       case None => spark.emptyDataset[TermPostings]
       case Some(where) => index.postings(spark).where(where).as[TermPostings]
     }
   }
+
+  /** The leaf pass of every single-index entry point: the queries' posting
+    * rows through [[runSegments]], each (segment, shard) kernel over one
+    * decoded reader per term. */
+  private def leaves[T: Encoder : ClassTag](spark: SparkSession, qs: Seq[Query], ctx: QueryContext,
+                                            shards: Int = 1)(
+      kernel: (SegmentMeta, Map[String, TermReader], Array[Int], Int) => Iterator[T]): Dataset[T] =
+    runSegments(spark, postingRows(spark, qs).rdd.map(tp => tp.segmentId -> tp), shards) {
+      (seg, rows, del, shard) => kernel(seg, readers(rows, ctx), del, shard)
+    }
 
   /** Replicated-posting budget for query-sharded batch kernels: sharding
     * duplicates the matched posting rows per shard, so it only engages when
@@ -969,29 +907,25 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     * query-log norm; a whole-vocabulary batch keeps one task per segment). */
   private val ShardedPostingsBudget = 32000000L
 
-  private def runSegments[T: org.apache.spark.sql.Encoder : scala.reflect.ClassTag](
-      spark: SparkSession, rows: Dataset[TermPostings])(
-      kernel: (SegmentMeta, Map[String, TermPostings], Array[Int]) => Iterator[T]): Dataset[T] =
-    runSegments(spark, rows, 1)((seg, post, del, _) => kernel(seg, post, del))
-
-  /** Run a per-(segment, queryShard) kernel with EXACTLY one group per
-    * task, via an explicit partitioner. (A hash cogroup of S segment-groups
-    * into S partitions is a balls-in-bins collision — some tasks get 3-4
-    * segments while others idle, capping scaling at ~1/maxLoad.) Segment
-    * metadata is tiny and rides in the closure; sentinel rows guarantee
-    * every (segment, shard) partition runs the kernel even when no query
-    * term occurs in it (MatchAllDocs must still match there). With
-    * shards > 1 the posting rows and tombstones are replicated per shard
-    * (caller gates on volume) so each shard-task is self-contained — used
-    * by [[searchMany]] to keep task count well above the core count on
-    * selective batches.
+  /** The one segment runner: a per-(segment, queryShard) kernel over the
+    * `rows` keyed by segmentId, with EXACTLY one group per task via an
+    * explicit partitioner. (A hash cogroup of S segment-groups into S
+    * partitions is a balls-in-bins collision — some tasks get 3-4 segments
+    * while others idle, capping scaling at ~1/maxLoad.) Segment metadata is
+    * tiny and rides in the closure; sentinel rows guarantee every (segment,
+    * shard) partition runs the kernel even when no query term occurs in it
+    * (MatchAllDocs must still match there). With shards > 1 the rows and
+    * tombstones are replicated per shard (caller gates on volume) so each
+    * shard-task is self-contained — [[searchMany]] uses that to keep task
+    * count well above the core count on selective batches. Row payloads
+    * are opaque: [[MultiFieldSearcher]] runs its (field, postings) rows
+    * through here over the segment geometry all its fields share.
     */
-  private def runSegments[T: org.apache.spark.sql.Encoder : scala.reflect.ClassTag](
-      spark: SparkSession, rows: Dataset[TermPostings], shards: Int)(
-      kernel: (SegmentMeta, Map[String, TermPostings], Array[Int], Int) => Iterator[T]): Dataset[T] = {
+  private[search] def runSegments[P <: AnyRef, T: Encoder : ClassTag](
+      spark: SparkSession, rows: RDD[(Int, P)], shards: Int = 1)(
+      kernel: (SegmentMeta, Iterable[P], Array[Int], Int) => Iterator[T]): Dataset[T] = {
     val segMetas = index.manifest.segments.map(s => s.segmentId -> s).toMap
-    val maxSeg = segMetas.keys.max
-    val nSegParts = maxSeg + 1
+    val nSegParts = segMetas.keys.max + 1
     val nParts = nSegParts * shards
     val partitioner = new org.apache.spark.Partitioner {
       def numPartitions: Int = nParts
@@ -1007,12 +941,12 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     val sentinels = spark.sparkContext
       .parallelize(keys, math.min(nParts, 4))
       .map(k => (k, null: AnyRef))
-    // tombstones ride the SAME cogroup shuffle as the posting rows: each
-    // shard-task sees its segment's live-docs without any driver round-trip
+    // tombstones ride the SAME shuffle as the rows: each shard-task sees its
+    // segment's live-docs without any driver round-trip
     val delRdd = index.deleteRows(spark).rdd.flatMap(dr =>
       (0 until shards).iterator.map(sh => ((dr.segmentId, sh), dr: AnyRef)))
-    val parted = rows.rdd.flatMap(tp =>
-        (0 until shards).iterator.map(sh => ((tp.segmentId, sh), tp: AnyRef)))
+    val parted = rows.flatMap { case (sid, p) =>
+        (0 until shards).iterator.map(sh => ((sid, sh), p: AnyRef)) }
       .union(sentinels)
       .union(delRdd)
       .partitionBy(partitioner)
@@ -1020,22 +954,21 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
       // one (segment, shard) per partition by construction
       var seg: SegmentMeta = null
       var shard = 0
-      val post = Map.newBuilder[String, TermPostings]
+      val post = scala.collection.mutable.ArrayBuffer.empty[P]
       val dels = Array.newBuilder[Int]
-      var any = false
       it.foreach { case ((sid, sh), payload) =>
-        if (!any) { seg = segMetas(sid); shard = sh; any = true }
+        if (seg == null) { seg = segMetas(sid); shard = sh }
         payload match {
-          case tp: TermPostings => post += (tp.term -> tp)
-          case dr: graft.index.DeleteRow => dels += dr.localDoc
-          case _ => // sentinel
+          case null => // sentinel
+          case dr: DeleteRow => dels += dr.localDoc
+          case p => post += p.asInstanceOf[P]
         }
       }
-      if (!any) Iterator.empty
+      if (seg == null) Iterator.empty
       else {
         val d = dels.result()
         java.util.Arrays.sort(d)
-        kernel(seg, post.result(), d, shard)
+        kernel(seg, post, d, shard)
       }
     }
     spark.createDataset(out)

@@ -3,7 +3,7 @@ package graft.search
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.index.{BuildConfig, BuiltIndex, IndexBuilder}
+import graft.index.{BuildConfig, BuiltIndex, IndexBuilder, TermPostings}
 
 /** Multi-field index: the reference's `Term` is (field, text) and every
   * statistic is per-field (`core/search/termquery.go:61`,
@@ -165,48 +165,33 @@ final class MultiFieldSearcher(val index: MultiFieldIndex) extends Serializable 
     }
   }
 
-  /** Shared cross-field kernel runner: fetch each field's clause-term
-    * posting rows (one pushed scan per field), cogroup by segment (the
-    * shuffle moves |clauses| x |segments| rows), build one scorer per
-    * segment via `mkScorer`, collect leaf top-ks, merge globally. */
+  /** Shared cross-field kernel: fetch each field's clause-term posting rows
+    * (one pushed scan per field), run them by segment through the one
+    * segment runner (the shuffle moves |clauses| x |segments| rows), build
+    * one scorer per segment via `mkScorer`, collect leaf top-ks, merge
+    * globally. */
   private def crossFieldTopK(spark: SparkSession, termsByField: Map[String, Set[String]], k: Int)(
-      mkScorer: (Map[String, QueryContext],
-                 scala.collection.Map[(String, String), graft.index.TermPostings],
+      mkScorer: (Map[String, QueryContext], Map[(String, String), TermPostings],
                  TopKCollector) => Option[Scorer]): DataFrame = {
     import spark.implicits._
     val fieldCtx: Map[String, QueryContext] = termsByField.map { case (f, ts) =>
       f -> searcher(f).queryContext(spark, BoolQ(should = ts.toSeq.map(TermQ)))
     }
-    val segs = index.perField.head._2.manifest.segments.map(s => s.segmentId -> s).toMap
-    val nParts = segs.keys.max + 1
     val rows = termsByField.toSeq.map { case (f, terms) =>
       index(f).postings(spark)
         .where(col("term").isin(terms.toSeq: _*))
-        .as[graft.index.TermPostings]
+        .as[TermPostings]
         .rdd.map(tp => (tp.segmentId, (f, tp)))
     }.reduce(_ union _)
-    val partitioner = new org.apache.spark.Partitioner {
-      def numPartitions: Int = nParts
-      def getPartition(key: Any): Int = key.asInstanceOf[Int] % nParts
+    // every field shares the segment geometry, so any field's searcher can
+    // run the segments; the callers fall back on tombstones, so none apply
+    val perLeaf = perField.head._2.runSegments(spark, rows) { (seg, fieldRows, _, _) =>
+      val post = fieldRows.iterator.map { case (f, tp) => (f, tp.term) -> tp }.toMap
+      val collector = new TopKCollector(k, seg.docBase, None)
+      mkScorer(fieldCtx, post, collector).foreach(SegmentKernel.run(_, collector))
+      collector.results.iterator.map { case (gid, sc) => ScoredDoc(gid, sc) }
     }
-    val perLeaf = rows.partitionBy(partitioner).mapPartitions { it =>
-      var segId = -1
-      val post = scala.collection.mutable.HashMap.empty[(String, String), graft.index.TermPostings]
-      it.foreach { case (sid, (f, tp)) => segId = sid; post((f, tp.term)) = tp }
-      if (segId < 0) Iterator.empty
-      else {
-        val seg = segs(segId)
-        val collector = new TopKCollector(k, seg.docBase, None)
-        mkScorer(fieldCtx, post, collector) match {
-          case None => Iterator.empty
-          case Some(s) =>
-            var d = s.nextDoc()
-            while (d != DISI.NO_MORE) { collector.collect(d, s.score()); d = s.nextDoc() }
-            collector.results.iterator.map { case (gid, sc) => ScoredDoc(gid, sc) }
-        }
-      }
-    }
-    spark.createDataset(perLeaf).toDF("doc_id", "s")
+    perLeaf.toDF("doc_id", "s")
       .select(col("doc_id"), round(col("s"), 6).as("score"))
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(k)

@@ -12,28 +12,33 @@ package graft.search
   * `core/search/indexsearcher.go:412-429`).
   */
 sealed trait Query {
+  /** The directly nested queries: Bool clauses, the Boost/Const body, the
+    * DisjMax disjuncts — the one tree walk every traversal shares. */
+  private[search] def children: Seq[Query] = this match {
+    case BoolQ(m, s, f, n, _) => m ++ s ++ f ++ n
+    case BoostQ(q, _)         => Seq(q)
+    case ConstQ(q, _)         => Seq(q)
+    case DisjMaxQ(qs, _)      => qs
+    case _                    => Nil
+  }
+
+  /** Whether `p` holds for this query or any query nested in it. */
+  private[search] def exists(p: Query => Boolean): Boolean = p(this) || children.exists(_.exists(p))
+
   /** All dictionary terms the query touches (for the stats lookup + the
     * posting-list pushdown filter). */
   def terms: Set[String] = this match {
-    case TermQ(t)            => Set(t)
-    case BoolQ(m, s, f, n, _) => (m ++ s ++ f ++ n).flatMap(_.terms).toSet
-    case BoostQ(q, _)        => q.terms
-    case ConstQ(q, _)        => q.terms
-    case TermInSetQ(ts)      => ts
-    case DisjMaxQ(qs, _)     => qs.flatMap(_.terms).toSet
-    case PhraseQ(ts, _)      => ts.toSet
-    case _                   => Set.empty
+    case TermQ(t)       => Set(t)
+    case TermInSetQ(ts) => ts
+    case PhraseQ(ts, _) => ts.toSet
+    case _              => children.flatMap(_.terms).toSet
   }
 
   /** All term-dictionary predicates the query carries (distributed
     * multi-term rewrites) — unioned into the posting-scan pushdown. */
   def termPreds: Set[TermPredicate] = this match {
-    case MultiTermQ(p)        => Set(p)
-    case BoolQ(m, s, f, n, _) => (m ++ s ++ f ++ n).flatMap(_.termPreds).toSet
-    case BoostQ(q, _)         => q.termPreds
-    case ConstQ(q, _)         => q.termPreds
-    case DisjMaxQ(qs, _)      => qs.flatMap(_.termPreds).toSet
-    case _                    => Set.empty
+    case MultiTermQ(p) => Set(p)
+    case _             => children.flatMap(_.termPreds).toSet
   }
 }
 
@@ -275,15 +280,8 @@ object Query {
   final class TooManyClauses(n: Int) extends IllegalArgumentException(
     s"BooleanQuery has $n clauses, more than the $MaxClauseCount allowed")
 
-  private def clauseCount(q: Query): Int = q match {
-    case BoolQ(m, s, f, n, _) =>
-      val direct = m.size + s.size + f.size + n.size
-      direct + (m ++ s ++ f ++ n).map(clauseCount).sum
-    case BoostQ(s, _) => clauseCount(s)
-    case ConstQ(s, _) => clauseCount(s)
-    case DisjMaxQ(qs, _) => qs.map(clauseCount).sum
-    case _ => 0
-  }
+  private def clauseCount(q: Query): Int =
+    (if (q.isInstanceOf[BoolQ]) q.children.size else 0) + q.children.map(clauseCount).sum
 
   /** Fixed-point normalization replicating the BooleanQuery rewrites
     * (`core/search/booleanquery.go:75-160` + SURVEY.md §4.1):

@@ -1166,7 +1166,7 @@ object MaxScoreAccumulator {
   * [[MaxScoreAccumulator]] (cross-leaf pruning within each executor JVM).
   */
 final class TopKCollector(k: Int, docBase: Long, after: Option[(Double, Long)],
-                          hitsThreshold: Long = 0L, runId: Long = -1L) {
+                          hitsThreshold: Long = 0L, runId: Long = -1L) extends LeafCollector {
   // primitive parallel-array min-heap (no per-hit boxing — a batch run
   // creates one collector per (query, segment), so allocation here is hot):
   // root = weakest hit (lowest score; among equal, largest docId)
@@ -1195,7 +1195,7 @@ final class TopKCollector(k: Int, docBase: Long, after: Option[(Double, Long)],
     * a lower bound beyond it). Default threshold 0 = prune ASAP. With a
     * shared cell, the threshold is the max of the local heap root and the
     * strict cross-leaf floor (see [[MaxScoreAccumulator]] safety note). */
-  def minCompetitive: Double = {
+  override def minCompetitive: Double = {
     val local =
       if (size >= k && collected >= hitsThreshold) { pruned = true; hScore(0) }
       else Double.NegativeInfinity
@@ -1265,6 +1265,9 @@ final class TopKCollector(k: Int, docBase: Long, after: Option[(Double, Long)],
       siftDown()
     }
   }
+
+  private[search] def scoring = true
+  private[search] def collect(doc: Int, s: Scorer): Boolean = { collect(doc, s.score()); true }
 
   /** Hits ordered score desc, docId asc. */
   def results: Array[(Long, Double)] = {

@@ -38,10 +38,20 @@ class DeleteSpec extends AnyFunSuite {
     val idx2 = IndexOps.deleteByTerm(spark, dir, "id_17")
     assert(idx2.manifest.deletedCount > 0L)
     val s = new IndexSearcher(idx2)
-    for (q <- Seq[Query](TermQ("import"), BoolQ(must = Seq(TermQ("def"), TermQ("val"))),
-                         BoolQ(should = Seq(TermQ("id_1"), TermQ("fn7"))))) {
+    val qs = Seq[Query](TermQ("import"), BoolQ(must = Seq(TermQ("def"), TermQ("val"))),
+                        BoolQ(should = Seq(TermQ("id_1"), TermQ("fn7"))))
+    val batch = s.searchMany(spark, qs.indices.map(i => s"q$i" -> qs(i)), 10).collect()
+      .groupBy(_.queryId)
+    for ((q, i) <- qs.zipWithIndex) {
       val got = s.search(spark, q, 10).collect().map(h => (h.docId, h.score)).toSeq
       assert(got == oracleLive("id_17", q, 10), s"mismatch for $q")
+      val gotBatch = batch.getOrElse(s"q$i", Array.empty[QueryHit]).toSeq.map(h => (h.docId, h.score))
+      assert(gotBatch == oracleLive("id_17", q, 10), s"searchMany mismatch for $q")
+      // every live match, no tombstoned one: count and the match feed
+      val live = oracleLive("id_17", q, corpus.size)
+      assert(s.count(spark, q) == live.size.toLong, s"count mismatch for $q")
+      assert(s.matchingDocs(spark, q).collect().map(_.docId).toSet == live.map(_._1).toSet,
+        s"matchingDocs mismatch for $q")
     }
     // the deleted docs must not match even their own term
     assert(s.count(spark, TermQ("id_17")) == 0L)

@@ -82,6 +82,10 @@ object Oracle {
         lo.forall(v => if (il) t >= v else t > v) && hi.forall(v => if (ih) t <= v else t < v)
       }
       if (in) Some(if (scoring) boost else 0.0) else None
+    case FuzzyQ(ft, e) =>
+      if (tf.keys.exists(levenshtein(_, ft) <= e)) Some(if (scoring) boost else 0.0) else None
+    case WildcardQ(p) =>
+      if (tf.keys.exists(_.matches(WildcardQ.toRegex(p)))) Some(if (scoring) boost else 0.0) else None
     case _: PhraseQ | _: MultiTermQ =>
       throw new UnsupportedOperationException("this tf-only oracle has no positions; PhraseSpec has its own")
     case BoolQ(must, should, filter, mustNot, msm0) =>
@@ -94,6 +98,22 @@ object Oracle {
       if (should.nonEmpty && shouldS.size < msm) return None
       if (must.isEmpty && filter.isEmpty && should.isEmpty) return None
       Some(mustS.flatten.sum + shouldS.sum)
+  }
+
+  /** Classic Levenshtein distance over code points (full DP, no banding). */
+  def levenshtein(a: String, b: String): Int = {
+    val x = a.codePoints().toArray
+    val y = b.codePoints().toArray
+    var prev = Array.range(0, y.length + 1)
+    for (i <- 1 to x.length) {
+      val cur = new Array[Int](y.length + 1)
+      cur(0) = i
+      for (j <- 1 to y.length)
+        cur(j) = math.min(math.min(prev(j), cur(j - 1)) + 1,
+          prev(j - 1) + (if (x(i - 1) == y(j - 1)) 0 else 1))
+      prev = cur
+    }
+    prev(y.length)
   }
 
   def topK(corpus: Seq[(Long, String)], q: Query, k: Int): Seq[(Long, Double)] = {
@@ -161,12 +181,29 @@ class EngineSpec extends AnyFunSuite {
     single ++ ands ++ ors ++ mixed ++ boosted
   }
 
+  /** The top-k of every query through every scoring entry point: search,
+    * searchLocal, the top of searchWithTotal, one searchMany over the whole
+    * set, and the top-k of the exhaustive scoreAll stream. */
+  def topKEverywhere(qs: Seq[(String, Query)], k: Int): Seq[(String, String, Seq[(Long, Double)])] = {
+    def pairs(hits: Seq[ScoredDoc]) = hits.map(h => (h.docId, h.score))
+    val batch = searcher.searchMany(spark, qs, k).collect().groupBy(_.queryId)
+    qs.flatMap { case (name, q) =>
+      Seq(
+        "search" -> pairs(searcher.search(spark, q, k).collect().toSeq),
+        "searchLocal" -> pairs(searcher.searchLocal(spark, q, k).toSeq),
+        "searchWithTotal" -> pairs(searcher.searchWithTotal(spark, q, k)._1.toSeq),
+        "searchMany" -> batch.getOrElse(name, Array.empty[QueryHit]).toSeq.map(h => (h.docId, h.score)),
+        "scoreAll" -> pairs(searcher.scoreAll(spark, q).collect().sortBy(h => (-h.score, h.docId)).take(k).toSeq)
+      ).map { case (entry, got) => (name, entry, got) }
+    }
+  }
+
   test("rank identity: engine top-10 == exhaustive oracle on full reference query set") {
     val k = 10
-    refQueries.foreach { case (name, q) =>
-      val got = searcher.search(spark, q, k).collect().map(s => (s.docId, s.score)).toSeq
-      val want = Oracle.topK(corpus, q, k)
-      assert(got == want, s"query $name mismatch:\n got=$got\nwant=$want")
+    val oracle = refQueries.map { case (name, q) => name -> Oracle.topK(corpus, q, k) }.toMap
+    topKEverywhere(refQueries, k).foreach { case (name, entry, got) =>
+      val want = oracle(name)
+      assert(got == want, s"query $name mismatch via $entry:\n got=$got\nwant=$want")
     }
   }
 
@@ -174,10 +211,10 @@ class EngineSpec extends AnyFunSuite {
     // k=1 drives the collector threshold to its highest values fastest,
     // maximizing both WAND and block-max-conjunction skip opportunities —
     // any unsafe bound shows up here first
-    refQueries.foreach { case (name, q) =>
-      val got = searcher.search(spark, q, 1).collect().map(s => (s.docId, s.score)).toSeq
-      val want = Oracle.topK(corpus, q, 1)
-      assert(got == want, s"k=1 query $name mismatch:\n got=$got\nwant=$want")
+    val oracle = refQueries.map { case (name, q) => name -> Oracle.topK(corpus, q, 1) }.toMap
+    topKEverywhere(refQueries, 1).foreach { case (name, entry, got) =>
+      val want = oracle(name)
+      assert(got == want, s"k=1 query $name mismatch via $entry:\n got=$got\nwant=$want")
     }
   }
 
@@ -252,7 +289,9 @@ class EngineSpec extends AnyFunSuite {
       "regex" -> RegexpQ("id_1.?"),
       "range" -> TermRangeQ(Some("fn1"), Some("fn5"), includeLo = true, includeHi = false),
       "mixed_scored" -> BoolQ(must = Seq(TermQ("import")), should = Seq(PrefixQ("id_7"))),
-      "prefix_filter" -> BoolQ(must = Seq(TermQ("def")), filter = Seq(PrefixQ("fn"))))
+      "prefix_filter" -> BoolQ(must = Seq(TermQ("def")), filter = Seq(PrefixQ("fn"))),
+      "fuzzy" -> FuzzyQ("fnx7", 1),
+      "wildcard" -> WildcardQ("id_?7*"))
     qs.foreach { case (name, q) =>
       val got = searcher.search(spark, q, k).collect().map(s => (s.docId, s.score)).toSeq
       val want = Oracle.topK(corpus, q, k)
@@ -353,12 +392,20 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("searchMany: batch run rank-identical to per-query search") {
-    val qs = refQueries.take(15)
-    val batch = searcher.searchMany(spark, qs, 10).collect()
-      .groupBy(_.queryId).view.mapValues(_.map(h => (h.docId, h.score)).toSeq).toMap
-    qs.foreach { case (name, q) =>
-      val single = searcher.search(spark, q, 10).collect().map(s => (s.docId, s.score)).toSeq
-      assert(batch.getOrElse(name, Nil) == single, s"batch/single mismatch for $name")
+    // the second batch mixes multi-term predicates (distributed expansion,
+    // no stats of their own) with term queries
+    val multiTerm: Seq[(String, Query)] = Seq(
+      "mt_prefix" -> PrefixQ("id_7"),
+      "mt_wildcard" -> WildcardQ("fn?"),
+      "mt_scored" -> BoolQ(must = Seq(TermQ("import")), should = Seq(PrefixQ("id_1"))))
+    Seq(refQueries.take(15), refQueries.take(4) ++ multiTerm).foreach { qs =>
+      val batch = searcher.searchMany(spark, qs, 10).collect()
+        .groupBy(_.queryId).view.mapValues(_.map(h => (h.docId, h.score)).toSeq).toMap
+      qs.foreach { case (name, q) =>
+        val single = searcher.search(spark, q, 10).collect().map(s => (s.docId, s.score)).toSeq
+        assert(batch.getOrElse(name, Nil) == single, s"batch/single mismatch for $name")
+        assert(single == Oracle.topK(corpus, q, 10), s"batch/oracle mismatch for $name")
+      }
     }
   }
 
