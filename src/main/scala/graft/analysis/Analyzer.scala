@@ -93,49 +93,65 @@ final class Analyzer(val stopSet: Set[String] = Set.empty) extends Serializable 
   /** Terms only (the common indexing path). */
   def terms(text: String): Vector[String] = tokenize(text).map(_.term)
 
+  /** The one streaming token loop of the analysis chain (the reference's
+    * `PerField.invert` walk over a TokenStream): splits, lowercases and
+    * stop-filters exactly as [[tokenize]], handing each emitted token to
+    * `sink` without materializing a Token or a Vector (this runs once per
+    * document of the corpus — at 10^12 docs the per-token garbage of
+    * [[tokenize]] would dominate build GC). Terms are interned
+    * through `intern` when non-null (one shared table per build partition:
+    * hot terms allocate their String ONCE per task instead of once per
+    * occurrence). Returns the field length (emitted token count).
+    */
+  def walk(text: String, intern: TermIntern, sink: TokenSink): Int = {
+    if (text == null) return 0
+    val sb = new java.lang.StringBuilder(16)
+    val n = text.length
+    var i = 0          // char index
+    var cpIndex = 0    // code-point index (Go rune offset)
+    var startCp = -1
+    var startChar = 0
+    var pos = 0
+    while (i <= n) {
+      // a virtual space at the end flushes the last token
+      val cp = if (i < n) text.codePointAt(i) else ' '
+      if (GoWhitespace.isSpace(cp)) {
+        if (startCp >= 0) {
+          val term = if (intern == null) sb.toString else intern.intern(sb)
+          if (!stopSet.contains(term)) {
+            sink.token(term, pos, startCp, cpIndex, startChar, i)
+            pos += 1
+          }
+          sb.setLength(0); startCp = -1
+        }
+      } else {
+        if (startCp < 0) { startCp = cpIndex; startChar = i }
+        sb.appendCodePoint(lowerCp(cp))
+      }
+      i += Character.charCount(cp)
+      cpIndex += 1
+    }
+    pos
+  }
+
   /** Per-document term frequencies plus the field length (norm).
     * Norm = token count after the full chain = `invertState.Length`
     * (standard chain has no overlaps, so `Length - NumOverlap = Length`;
     * reference `core/index/defaultindexingchain.go:845-865`,
     * `core/search/similaritybm25.go:111-123`).
-    *
-    * Allocation-lean streaming loop (no Token/Vector materialization): this
-    * runs once per document of the corpus — at 10^12 docs the per-token
-    * garbage of the pretty path would dominate build GC.
     */
   def termFreqCounts(text: String): (java.util.HashMap[String, Int], Int) =
     termFreqCounts(text, null)
 
   /** As [[termFreqCounts]], interning term strings through `intern` when
-    * non-null (one shared table per build partition: hot terms allocate
-    * their String ONCE per task instead of once per occurrence). */
+    * non-null. */
   def termFreqCounts(text: String, intern: TermIntern): (java.util.HashMap[String, Int], Int) = {
     val m = new java.util.HashMap[String, Int]()
-    if (text == null || text.isEmpty) return (m, 0)
-    val sb = new java.lang.StringBuilder(16)
-    var i = 0
-    var inTok = false
-    var count = 0
-    val n = text.length
-    @inline def flush(): Unit = {
-      val term = if (intern == null) sb.toString else intern.intern(sb)
-      if (!stopSet.contains(term)) { m.merge(term, 1, (a, b) => a + b); count += 1 }
-    }
-    while (i < n) {
-      val cp = text.codePointAt(i)
-      if (GoWhitespace.isSpace(cp)) {
-        if (inTok) {
-          flush()
-          sb.setLength(0); inTok = false
-        }
-      } else {
-        inTok = true
-        sb.appendCodePoint(lowerCp(cp))
-      }
-      i += Character.charCount(cp)
-    }
-    if (inTok) flush()
-    (m, count)
+    val len = walk(text, intern, new TokenSink {
+      def token(term: String, position: Int, startCp: Int, endCp: Int,
+                startChar: Int, endChar: Int): Unit = m.merge(term, 1, (a, b) => a + b)
+    })
+    (m, len)
   }
 
   /** Scala-collection view of [[termFreqCounts]] (tests / non-hot callers). */
@@ -143,166 +159,15 @@ final class Analyzer(val stopSet: Set[String] = Set.empty) extends Serializable 
     val (m, len) = termFreqCounts(text)
     (scala.jdk.CollectionConverters.MapHasAsScala(m).asScala, len)
   }
-
-  /** Per-document term -> ascending token positions, plus the field length —
-    * the positions-enabled sibling of [[termFreqCounts]] (freq = positions
-    * per term; the prox stream of the reference's
-    * `core/index/freqproxtermswriterperfield.go:96-122`). Position = index
-    * among EMITTED tokens (the standard chain leaves no stop-word holes,
-    * matching [[tokenize]]). Same allocation discipline: streaming loop,
-    * interned terms, primitive position buffers.
-    */
-  def termPositionCounts(text: String, intern: TermIntern): (java.util.HashMap[String, IntBuf], Int) = {
-    val m = new java.util.HashMap[String, IntBuf]()
-    if (text == null || text.isEmpty) return (m, 0)
-    val sb = new java.lang.StringBuilder(16)
-    var i = 0
-    var inTok = false
-    var count = 0
-    val n = text.length
-    @inline def flush(): Unit = {
-      val term = if (intern == null) sb.toString else intern.intern(sb)
-      if (!stopSet.contains(term)) {
-        var b = m.get(term)
-        if (b == null) { b = new IntBuf; m.put(term, b) }
-        b.add(count)
-        count += 1
-      }
-    }
-    while (i < n) {
-      val cp = text.codePointAt(i)
-      if (GoWhitespace.isSpace(cp)) {
-        if (inTok) { flush(); sb.setLength(0); inTok = false }
-      } else {
-        inTok = true
-        sb.appendCodePoint(lowerCp(cp))
-      }
-      i += Character.charCount(cp)
-    }
-    if (inTok) flush()
-    (m, count)
-  }
-
-  /** As [[termPositionCounts]] but ALSO collecting each occurrence's
-    * code-point offsets — the IndexOptions ..._AND_OFFSETS path
-    * (`core/document/indexoptions.go:3-29`; offset deltas in the postings
-    * stream per `core/index/freqproxtermswriterperfield.go:96-122`).
-    * Offsets match [[tokenize]]'s (Go rune counting). Same streaming
-    * discipline; `off` holds interleaved (start, end) per occurrence,
-    * aligned with `pos`.
-    */
-  def termPositionOffsetCounts(text: String,
-                               intern: TermIntern): (java.util.HashMap[String, PosOffBuf], Int) = {
-    val m = new java.util.HashMap[String, PosOffBuf]()
-    if (text == null || text.isEmpty) return (m, 0)
-    val sb = new java.lang.StringBuilder(16)
-    var i = 0
-    var cpIndex = 0
-    var tokStart = -1
-    var count = 0
-    val n = text.length
-    @inline def flush(endCp: Int): Unit = {
-      val term = if (intern == null) sb.toString else intern.intern(sb)
-      if (!stopSet.contains(term)) {
-        var b = m.get(term)
-        if (b == null) { b = new PosOffBuf; m.put(term, b) }
-        b.pos.add(count)
-        b.off.add(tokStart)
-        b.off.add(endCp)
-        count += 1
-      }
-    }
-    while (i < n) {
-      val cp = text.codePointAt(i)
-      if (GoWhitespace.isSpace(cp)) {
-        if (tokStart >= 0) { flush(cpIndex); sb.setLength(0); tokStart = -1 }
-      } else {
-        if (tokStart < 0) tokStart = cpIndex
-        sb.appendCodePoint(lowerCp(cp))
-      }
-      i += Character.charCount(cp)
-      cpIndex += 1
-    }
-    if (tokStart >= 0) flush(cpIndex)
-    (m, count)
-  }
-
-  /** As [[termPositionOffsetCounts]] but ALSO collecting a per-occurrence
-    * PAYLOAD — the reference's per-position payload slot
-    * (`core/index/freqproxtermswriterperfield.go:96-122` reserves a payload
-    * bit per position; `core/util/attribute` carries PayloadAttribute).
-    * Our built-in payload producer stores the ORIGINAL (pre-lowercasing)
-    * token text as UTF-8 bytes — genuine per-occurrence metadata the index
-    * otherwise loses (case-exact surface form), variable-length so the
-    * whole varint(len)+bytes codec path is exercised. `wantOffsets` toggles
-    * the offsets side stream (payloads do not require it).
-    */
-  def termPositionPayloadCounts(text: String, intern: TermIntern,
-                                wantOffsets: Boolean): (java.util.HashMap[String, ProxPayBuf], Int) = {
-    val m = new java.util.HashMap[String, ProxPayBuf]()
-    if (text == null || text.isEmpty) return (m, 0)
-    val sb = new java.lang.StringBuilder(16)
-    var i = 0
-    var cpIndex = 0
-    var tokStart = -1      // code-point start (offsets)
-    var tokCharStart = -1  // char start (original-surface substring)
-    var count = 0
-    val n = text.length
-    @inline def flush(endCp: Int, endChar: Int): Unit = {
-      val term = if (intern == null) sb.toString else intern.intern(sb)
-      if (!stopSet.contains(term)) {
-        var b = m.get(term)
-        if (b == null) { b = new ProxPayBuf(wantOffsets); m.put(term, b) }
-        b.pos.add(count)
-        if (wantOffsets) { b.off.add(tokStart); b.off.add(endCp) }
-        val payload = text.substring(tokCharStart, endChar)
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        b.payLen.add(payload.length)
-        b.pay.write(payload, 0, payload.length)
-        count += 1
-      }
-    }
-    while (i < n) {
-      val cp = text.codePointAt(i)
-      if (GoWhitespace.isSpace(cp)) {
-        if (tokStart >= 0) { flush(cpIndex, i); sb.setLength(0); tokStart = -1; tokCharStart = -1 }
-      } else {
-        if (tokStart < 0) { tokStart = cpIndex; tokCharStart = i }
-        sb.appendCodePoint(lowerCp(cp))
-      }
-      i += Character.charCount(cp)
-      cpIndex += 1
-    }
-    if (tokStart >= 0) flush(cpIndex, n)
-    (m, count)
-  }
 }
 
-/** Per-term buffer of the payloads-enabled invert path: ascending positions,
-  * optional interleaved (start, end) offsets, and per-occurrence payloads
-  * (lengths + concatenated bytes, position-aligned). */
-final class ProxPayBuf(withOffsets: Boolean) {
-  val pos = new IntBuf(4)
-  val off: IntBuf = if (withOffsets) new IntBuf(8) else null
-  val payLen = new IntBuf(4)
-  val pay = new java.io.ByteArrayOutputStream(32)
-}
-
-/** Per-term buffer of the offsets-enabled invert path: ascending positions
-  * plus interleaved (start, end) code-point offsets per occurrence. */
-final class PosOffBuf {
-  val pos = new IntBuf(4)
-  val off = new IntBuf(8)
-}
-
-/** Growable primitive int buffer (no boxing; build-path hot). */
-final class IntBuf(initial: Int = 4) {
-  var a = new Array[Int](initial)
-  var n = 0
-  def add(v: Int): Unit = {
-    if (n == a.length) a = java.util.Arrays.copyOf(a, n << 1)
-    a(n) = v; n += 1
-  }
+/** Receives each token of [[Analyzer.walk]] in order: the lowercased
+  * `term`, its `position` among emitted tokens, its code-point offsets
+  * `[startCp, endCp)` and the char range `[startChar, endChar)` of its
+  * original surface form in the text. Primitive arguments, so nothing is
+  * boxed per token. */
+abstract class TokenSink {
+  def token(term: String, position: Int, startCp: Int, endCp: Int, startChar: Int, endChar: Int): Unit
 }
 
 object Analyzer {

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.analysis.Analyzer
-import graft.codec.ForBlock
 
 /** One row of the stage-1 output (the per-chunk in-RAM segment flush,
   * ≙ a DWPT flush, `core/index/documentswriterperthread.go:167-226`).
@@ -85,8 +84,7 @@ final case class BuildConfig(
       * reserves a per-position payload bit,
       * `core/index/freqproxtermswriterperfield.go:96-122`). The built-in
       * payload producer stores each occurrence's ORIGINAL (pre-lowercase)
-      * token text as UTF-8 bytes (see
-      * [[graft.analysis.Analyzer.termPositionPayloadCounts]]); implies
+      * token text as UTF-8 bytes (see [[Inverter]]); implies
       * storePositions; appends must match */
     storePayloads: Boolean = false,
     /** norm (field-length) byte encoding — [[graft.bm25.NormMode.Mod256]]
@@ -177,19 +175,13 @@ object IndexBuilder {
         // request would strip positions/TV/offsets/payloads that other
         // consumers of the same index dir rely on (and two callers with
         // different configs would thrash full rebuilds forever).
-        val featuresMatch =
-          (!cfg.storePositions || m.hasPositions) &&
-            (!cfg.storeTermVectors || m.hasTermVectors) &&
-            (!cfg.storeOffsets || m.hasOffsets) &&
-            (!cfg.storePayloads || m.hasPayloads) &&
-            m.normMode == cfg.normMode
-        if (featuresMatch) new BuiltIndex(indexDir, m)
+        val (committed, requested) = (Streams.of(m), Streams.of(cfg))
+        if (committed.serves(requested) && (m.hasTermVectors || !cfg.storeTermVectors))
+          new BuiltIndex(indexDir, m)
         else {
           System.err.println(s"[graft-build] index at $indexDir matches the corpus but not the " +
-            s"requested features (committed pos=${m.hasPositions} tv=${m.hasTermVectors} " +
-            s"off=${m.hasOffsets} pay=${m.hasPayloads} norm=${m.normMode}; requested " +
-            s"pos=${cfg.storePositions} tv=${cfg.storeTermVectors} off=${cfg.storeOffsets} " +
-            s"pay=${cfg.storePayloads} norm=${cfg.normMode}) — rebuilding")
+            s"requested features (committed $committed storeTermVectors=${m.hasTermVectors}; " +
+            s"requested $requested storeTermVectors=${cfg.storeTermVectors}) — rebuilding")
           build(spark, docs, docIdCol, contentCol, indexDir, cfg, inputPath)
         }
       case _ => build(spark, docs, docIdCol, contentCol, indexDir, cfg, inputPath)
@@ -274,12 +266,22 @@ object IndexBuilder {
             streamBatch: Long = -1L,
             indexSort: String = ""): BuiltIndex = {
     import spark.implicits._
+    val streams = Streams.of(cfg)
     require(cfg.chunkDocs % PostingBlock.Size == 0, "chunkDocs must be a multiple of block size")
-    require(!cfg.storeOffsets || cfg.storePositions,
+    require(!streams.offsets || streams.positions,
       "storeOffsets implies storePositions (IndexOptions ..._AND_OFFSETS extends ..._AND_POSITIONS)")
-    require(!cfg.storePayloads || cfg.storePositions,
+    require(!streams.payloads || streams.positions,
       "storePayloads implies storePositions (payloads are per-position metadata)")
-    graft.bm25.NormMode.lengthTable(cfg.normMode) // fail fast on an unknown mode
+    graft.bm25.NormMode.lengthTable(streams.normMode) // fail fast on an unknown mode
+    // a mixed index would break phrase queries, postings highlighting,
+    // payload or term-vector readers on some generations only, or score the
+    // same length two ways; checked before any data of the append is written
+    prev.foreach { m =>
+      require(Streams.of(m) == streams && m.hasTermVectors == cfg.storeTermVectors,
+        s"append must match the committed index: committed ${Streams.of(m)} " +
+          s"storeTermVectors=${m.hasTermVectors}; requested $streams " +
+          s"storeTermVectors=${cfg.storeTermVectors}")
+    }
 
     val input: Dataset[(Long, String)] =
       docs.select(col(docIdCol).cast("long").as("_1"), col(contentCol).cast("string").as("_2"))
@@ -363,27 +365,16 @@ object IndexBuilder {
         // split across runs/partitions yield partial rows; stage 2
         // re-orders them by firstDoc and asserts their ranges don't
         // interleave, so a violated layout contract FAILS the build.
-        val storePos = cfg.storePositions
-        val storeOff = cfg.storeOffsets
-        val storePay = cfg.storePayloads
-        val normMode = cfg.normMode
-        input.rdd.mapPartitions { it =>
-          invertChunks(it, analyzer, segSizeL, chunkDocs, storePos, storeOff, storePay, normMode)
-        }
+        input.rdd.mapPartitions(invertChunks(_, analyzer, segSizeL, chunkDocs, streams))
       } else {
         val partitioner = new org.apache.spark.Partitioner {
           def numPartitions: Int = stage1Parts
           def getPartition(key: Any): Int =
             ((key.asInstanceOf[Long] / chunkDocs) % stage1Parts).toInt
         }
-        val storePos = cfg.storePositions
-        val storeOff = cfg.storeOffsets
-        val storePay = cfg.storePayloads
-        val normMode = cfg.normMode
         input.rdd
           .repartitionAndSortWithinPartitions(partitioner)
-          .mapPartitions(it =>
-            invertChunks(it, analyzer, segSizeL, chunkDocs, storePos, storeOff, storePay, normMode))
+          .mapPartitions(invertChunks(_, analyzer, segSizeL, chunkDocs, streams))
       }
     val chunked: Dataset[Stage1Row] = spark.createDataset(chunkedRdd)
 
@@ -395,8 +386,8 @@ object IndexBuilder {
       if (cfg.stageCheckpoint) {
         val stagingDir = s"$indexDir/staging/gen=$generation"
         val fpPath = s"$indexDir/staging-gen$generation.fp"
-        val fp = sha256Hex(s"${indexFingerprint(inputPath, docCount)}:$segSize:${cfg.chunkDocs}" +
-          s":${cfg.storePositions}:${cfg.storeOffsets}:${cfg.storePayloads}:${cfg.normMode}")
+        val fp = sha256Hex(s"${indexFingerprint(inputPath, docCount)}:$segSize:${cfg.chunkDocs}:" +
+          streams.productIterator.mkString(":"))
         val reusable = inputPath.nonEmpty &&
           IndexIO.readText(spark, fpPath).contains(fp) &&
           IndexIO.exists(spark, s"$stagingDir/_SUCCESS")
@@ -459,38 +450,16 @@ object IndexBuilder {
         lineageSha = sha256Hex(s"$sid:${sid.toLong * segSizeL}:$dc:$sttf"))
     }
     val segs = prev.map(_.segments).getOrElse(Nil) ++ newSegs
-    val stats = IndexStats(
-      docCount = segs.map(_.docCount).sum,
-      fieldDocCount = segs.map(_.fieldDocCount).sum,
-      sumTotalTermFreq = segs.map(_.sumTotalTermFreq).sum,
-      sumDocFreq = segs.map(_.sumDocFreq).sum)
     val corpusSha = prev match {
       case Some(m) => sha256Hex(s"${m.corpusSha}+${indexFingerprint(inputPath, docCount)}")
       case None => indexFingerprint(inputPath, docCount)
-    }
-    prev.foreach { m =>
-      require(m.hasPositions == cfg.storePositions,
-        s"append storePositions=${cfg.storePositions} must match the committed " +
-          s"index's hasPositions=${m.hasPositions} (a mixed index would break phrase queries)")
-      require(m.hasTermVectors == cfg.storeTermVectors,
-        s"append storeTermVectors=${cfg.storeTermVectors} must match the committed " +
-          s"index's hasTermVectors=${m.hasTermVectors}")
-      require(m.hasOffsets == cfg.storeOffsets,
-        s"append storeOffsets=${cfg.storeOffsets} must match the committed " +
-          s"index's hasOffsets=${m.hasOffsets} (a mixed index would break postings highlighting)")
-      require(m.hasPayloads == cfg.storePayloads,
-        s"append storePayloads=${cfg.storePayloads} must match the committed " +
-          s"index's hasPayloads=${m.hasPayloads} (a mixed index would break payload readers)")
-      require(m.normMode == cfg.normMode,
-        s"append normMode=${cfg.normMode} must match the committed index's " +
-          s"normMode=${m.normMode} (a mixed index would score the same length two ways)")
     }
     val manifest = Manifest(
       generation = generation,
       minGen = prev.map(_.minGen).getOrElse(generation),
       numSegments = segs.size,
       segmentSize = segSize,
-      stats = stats, segments = segs,
+      stats = IndexStats.of(segs), segments = segs,
       corpusSha = corpusSha,
       postingsBytes = IndexIO.dirBytes(spark, s"$indexDir/postings"),
       docmetaBytes = IndexIO.dirBytes(spark, s"$indexDir/docmeta"),
@@ -506,11 +475,11 @@ object IndexBuilder {
       lastStreamBatch =
         if (streamBatch >= 0L) streamBatch
         else prev.map(_.lastStreamBatch).getOrElse(-1L),
-      hasPositions = cfg.storePositions,
+      hasPositions = streams.positions,
       hasTermVectors = cfg.storeTermVectors,
-      hasOffsets = cfg.storeOffsets,
-      hasPayloads = cfg.storePayloads,
-      normMode = cfg.normMode,
+      hasOffsets = streams.offsets,
+      hasPayloads = streams.payloads,
+      normMode = streams.normMode,
       // an append's docIds start past the existing range, so its rows CANNOT
       // interleave into the committed sort order — the global
       // docId-order == sort-order invariant no longer holds and the sorted
@@ -526,46 +495,13 @@ object IndexBuilder {
   }
 
   /** Streaming per-chunk invert: input iterator sorted by docId; one
-    * in-memory TermsHash per (segment, salt) chunk (≙ the DWPT's
-    * `TermsHashPerField`, `core/index/termshashperfield.go:245-267`), flushed
-    * as FOR-compressed blocks when the chunk boundary passes. Memory is
-    * bounded by one chunk's postings regardless of corpus size.
+    * [[Inverter]] per (segment, salt) chunk (≙ the DWPT's TermsHash,
+    * `core/index/termshashperfield.go:245-267`), flushed as FOR-compressed
+    * blocks when the chunk boundary passes. Memory is bounded by one
+    * chunk's postings regardless of corpus size.
     */
-  /** Growable primitive posting buffer — no per-append boxing (the build's
-    * hottest allocation site: one append per (doc, distinct term)).
-    * `pos` (present only on positions-enabled builds) holds every doc's
-    * ascending positions concatenated in posting order: the walk order of
-    * (docs, freqs) recovers the per-doc runs, so no offsets are stored. */
-  private final class TermBuf(withPositions: Boolean, withOffsets: Boolean = false,
-                              withPayloads: Boolean = false) {
-    var docs = new Array[Int](8)
-    var freqs = new Array[Int](8)
-    var norms = new Array[Byte](8)
-    var n = 0
-    val pos: graft.analysis.IntBuf = if (withPositions) new graft.analysis.IntBuf(8) else null
-    // interleaved (start, end) code-point offsets, aligned with `pos`
-    val off: graft.analysis.IntBuf = if (withOffsets) new graft.analysis.IntBuf(8) else null
-    // per-occurrence payload lengths + concatenated bytes, aligned with `pos`
-    val payLen: graft.analysis.IntBuf = if (withPayloads) new graft.analysis.IntBuf(8) else null
-    val pay: java.io.ByteArrayOutputStream =
-      if (withPayloads) new java.io.ByteArrayOutputStream(64) else null
-    def add(doc: Int, freq: Int, norm: Byte): Unit = {
-      if (n == docs.length) {
-        val cap = n << 1
-        docs = java.util.Arrays.copyOf(docs, cap)
-        freqs = java.util.Arrays.copyOf(freqs, cap)
-        norms = java.util.Arrays.copyOf(norms, cap)
-      }
-      docs(n) = doc; freqs(n) = freq; norms(n) = norm; n += 1
-    }
-  }
-
   private def invertChunks(it: Iterator[(Long, String)], analyzer: Analyzer,
-                           segSize: Long, chunkDocs: Int,
-                           storePositions: Boolean = false,
-                           storeOffsets: Boolean = false,
-                           storePayloads: Boolean = false,
-                           normMode: String = graft.bm25.NormMode.Mod256): Iterator[Stage1Row] = {
+                           segSize: Long, chunkDocs: Int, streams: Streams): Iterator[Stage1Row] = {
     new Iterator[Stage1Row] {
       private val in = it.buffered
       private var out: Iterator[Stage1Row] = Iterator.empty
@@ -586,7 +522,7 @@ object IndexBuilder {
         val headId = in.head._1
         val seg = (headId / segSize).toInt
         val salt = ((headId - seg.toLong * segSize) / chunkDocs).toInt
-        val terms = new java.util.HashMap[String, TermBuf]()
+        val inverter = new Inverter(analyzer, streams, intern)
         val docRows = Vector.newBuilder[Stage1Row]
         var continue = true
         var lastLocal = -1
@@ -598,94 +534,15 @@ object IndexBuilder {
           else {
             lastLocal = local
             in.next()
-            val len =
-              if (storePayloads) {
-                // positions + payloads (+ optional offsets) path — the full
-                // IndexOptions surface incl. the per-position payload slot
-                val (tp, l) = analyzer.termPositionPayloadCounts(content, intern, storeOffsets)
-                val nb = graft.bm25.NormMode.encode(l, normMode)
-                val tpIt = tp.entrySet().iterator()
-                while (tpIt.hasNext) {
-                  val e = tpIt.next()
-                  var b = terms.get(e.getKey)
-                  if (b == null) { b = new TermBuf(true, storeOffsets, true); terms.put(e.getKey, b) }
-                  val pb = e.getValue
-                  b.add(local, pb.pos.n, nb)
-                  var j = 0
-                  while (j < pb.pos.n) { b.pos.add(pb.pos.a(j)); j += 1 }
-                  if (storeOffsets) {
-                    j = 0
-                    while (j < pb.off.n) { b.off.add(pb.off.a(j)); j += 1 }
-                  }
-                  j = 0
-                  while (j < pb.payLen.n) { b.payLen.add(pb.payLen.a(j)); j += 1 }
-                  pb.pay.writeTo(b.pay)
-                }
-                l
-              } else if (storeOffsets) {
-                // positions + offsets path (IndexOptions ..._AND_OFFSETS)
-                val (tp, l) = analyzer.termPositionOffsetCounts(content, intern)
-                val nb = graft.bm25.NormMode.encode(l, normMode)
-                val tpIt = tp.entrySet().iterator()
-                while (tpIt.hasNext) {
-                  val e = tpIt.next()
-                  var b = terms.get(e.getKey)
-                  if (b == null) { b = new TermBuf(true, true); terms.put(e.getKey, b) }
-                  val pb = e.getValue
-                  b.add(local, pb.pos.n, nb)
-                  var j = 0
-                  while (j < pb.pos.n) { b.pos.add(pb.pos.a(j)); j += 1 }
-                  j = 0
-                  while (j < pb.off.n) { b.off.add(pb.off.a(j)); j += 1 }
-                }
-                l
-              } else if (storePositions) {
-                // positions path: term -> ascending token positions (the
-                // prox stream, freqproxtermswriterperfield.go:96-122)
-                val (tp, l) = analyzer.termPositionCounts(content, intern)
-                val nb = graft.bm25.NormMode.encode(l, normMode)
-                val tpIt = tp.entrySet().iterator()
-                while (tpIt.hasNext) {
-                  val e = tpIt.next()
-                  var b = terms.get(e.getKey)
-                  if (b == null) { b = new TermBuf(true); terms.put(e.getKey, b) }
-                  val pb = e.getValue
-                  b.add(local, pb.n, nb)
-                  var j = 0
-                  while (j < pb.n) { b.pos.add(pb.a(j)); j += 1 }
-                }
-                l
-              } else {
-                val (tf, l) = analyzer.termFreqCounts(content, intern)
-                val nb = graft.bm25.NormMode.encode(l, normMode)
-                val tfIt = tf.entrySet().iterator()
-                while (tfIt.hasNext) {
-                  val e = tfIt.next()
-                  var b = terms.get(e.getKey)
-                  if (b == null) { b = new TermBuf(false); terms.put(e.getKey, b) }
-                  b.add(local, e.getValue, nb)
-                }
-                l
-              }
+            val len = inverter.invert(local, content)
             docRows += Stage1Row(seg, null, salt, 0, 0L, null, local, len,
               sha256Hex(if (content == null) "" else content), firstDoc = local)
           }
         }
-        val postRows = new scala.collection.mutable.ArrayBuffer[Stage1Row](terms.size)
-        terms.forEach { (t, b) =>
-          var ttf = 0L
-          var j = 0
-          while (j < b.n) { ttf += b.freqs(j); j += 1 }
-          val docsA = java.util.Arrays.copyOf(b.docs, b.n)
-          val freqsA = java.util.Arrays.copyOf(b.freqs, b.n)
-          val normsA = java.util.Arrays.copyOf(b.norms, b.n)
-          val posA = if (b.pos == null) null else java.util.Arrays.copyOf(b.pos.a, b.pos.n)
-          val offA = if (b.off == null) null else java.util.Arrays.copyOf(b.off.a, b.off.n)
-          val payLensA = if (b.payLen == null) null else java.util.Arrays.copyOf(b.payLen.a, b.payLen.n)
-          val payA = if (b.pay == null) null else b.pay.toByteArray
-          postRows += Stage1Row(seg, t, salt, b.n, ttf,
-            buildBlocks(docsA, freqsA, normsA, posA, offA, payLensA, payA),
-            -1, 0, null, firstDoc = docsA(0))
+        val postRows = new scala.collection.mutable.ArrayBuffer[Stage1Row](inverter.terms.size)
+        inverter.terms.forEach { (t, b) =>
+          postRows += Stage1Row(seg, t, salt, b.n, b.totalTermFreq, inverter.withNorms(b).blocks(),
+            -1, 0, null, firstDoc = b.docs(0))
         }
         postRows.iterator ++ docRows.result().iterator
       }
@@ -698,105 +555,12 @@ object IndexBuilder {
     }
   }
 
-  /** Pack sorted postings into fixed-size FOR blocks with impacts.
-    * `positions` (optional): every doc's ascending positions concatenated in
-    * posting order (freqs give the per-doc run lengths); each block's slice
-    * is stored as a varint delta stream (first position absolute, then gaps)
-    * — the prox encoding of `core/index/freqproxtermswriterperfield.go:96-122`.
-    * `offsets` (optional, requires positions): interleaved (start, end)
-    * code-point offsets aligned with `positions`; per occurrence the block
-    * stores varint(start - prevStart) [prevStart resets per posting] +
-    * varint(end - start) — the reference's startOffset-delta + length
-    * encoding (same file, offsets branch).
-    * `payLens`/`payFlat` (optional, requires positions): per-occurrence
-    * payload lengths + concatenated bytes aligned with `positions`; per
-    * occurrence the block stores varint(len) + the raw bytes — the
-    * reference's per-position payload slot (same file, payload branch).
-    */
-  def buildBlocks(docs: Array[Int], freqs: Array[Int], norms: Array[Byte],
-                  positions: Array[Int] = null,
-                  offsets: Array[Int] = null,
-                  payLens: Array[Int] = null,
-                  payFlat: Array[Byte] = null): Array[PostingBlock] = {
-    val B = PostingBlock.Size
-    val out = Array.newBuilder[PostingBlock]
-    var i = 0
-    var pcur = 0 // cursor into the flat positions stream
-    var ocur = 0 // cursor into the interleaved offsets stream (pairs)
-    var ycur = 0 // occurrence cursor into payLens
-    var ybyte = 0 // byte cursor into payFlat
-    while (i < docs.length) {
-      val end = math.min(i + B, docs.length)
-      val d = new Array[Long](end - i)
-      val f = new Array[Long](end - i)
-      val nb = new Array[Byte](end - i)
-      var j = i
-      while (j < end) { d(j - i) = docs(j).toLong; f(j - i) = freqs(j).toLong; nb(j - i) = norms(j); j += 1 }
-      val posBytes: Array[Byte] =
-        if (positions == null) null
-        else {
-          val bos = new java.io.ByteArrayOutputStream(4 * (end - i))
-          j = i
-          while (j < end) {
-            var prev = 0
-            var k = 0
-            while (k < freqs(j)) {
-              val p = positions(pcur)
-              graft.codec.Varint.writeUvarint(bos, (p - prev).toLong)
-              prev = p
-              pcur += 1
-              k += 1
-            }
-            j += 1
-          }
-          bos.toByteArray
-        }
-      val offBytes: Array[Byte] =
-        if (offsets == null) null
-        else {
-          val bos = new java.io.ByteArrayOutputStream(8 * (end - i))
-          j = i
-          while (j < end) {
-            var prevStart = 0
-            var k = 0
-            while (k < freqs(j)) {
-              val s = offsets(2 * ocur)
-              val e = offsets(2 * ocur + 1)
-              graft.codec.Varint.writeUvarint(bos, (s - prevStart).toLong)
-              graft.codec.Varint.writeUvarint(bos, (e - s).toLong)
-              prevStart = s
-              ocur += 1
-              k += 1
-            }
-            j += 1
-          }
-          bos.toByteArray
-        }
-      val payBytes: Array[Byte] =
-        if (payLens == null) null
-        else {
-          val bos = new java.io.ByteArrayOutputStream(8 * (end - i))
-          j = i
-          while (j < end) {
-            var k = 0
-            while (k < freqs(j)) {
-              val len = payLens(ycur)
-              graft.codec.Varint.writeUvarint(bos, len.toLong)
-              bos.write(payFlat, ybyte, len)
-              ybyte += len
-              ycur += 1
-              k += 1
-            }
-            j += 1
-          }
-          bos.toByteArray
-        }
-      val (impF, impN) = Impacts.pareto(freqs, norms, i, end)
-      out += PostingBlock(docs(end - 1), end - i, graft.codec.MonotonicBlock.encode(d), ForBlock.encode(f), nb,
-        impF, impN, posBytes, offBytes, payBytes)
-      i = end
-    }
-    out.result()
+  /** Pack sorted postings (no per-occurrence streams) into fixed-size FOR
+    * blocks with impacts — [[PostingsBuffer.blocks]] over the given arrays. */
+  def buildBlocks(docs: Array[Int], freqs: Array[Int], norms: Array[Byte]): Array[PostingBlock] = {
+    val b = new PostingsBuffer(Streams.plain)
+    b.docs = docs; b.freqs = freqs; b.norms = norms; b.n = docs.length
+    b.blocks()
   }
 
   /** Streaming merge: chunk rows sorted by (seg, term, salt, firstDoc);

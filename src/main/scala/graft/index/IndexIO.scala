@@ -1,7 +1,8 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.graft.SessionIds
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 import graft.search.IndexSearcher
 
@@ -24,6 +25,17 @@ import graft.search.IndexSearcher
   */
 object IndexIO {
   def manifestPath(indexDir: String): String = s"$indexDir/manifest"
+
+  // Every parquet tree of an index is written from one of the engine's case
+  // classes, so readers pass its schema instead of letting Spark infer it
+  // (inference reads footers in a Spark job of its own, on every reopen).
+  // Data trees add the `gen` partition column, typed as inference types it.
+  private val manifestSchema = Encoders.product[Manifest].schema
+  private def withGen(data: StructType) = data.add(StructField("gen", IntegerType))
+  private[index] val postingsSchema = withGen(Encoders.product[TermPostings].schema)
+  private[index] val docmetaSchema = withGen(Encoders.product[DocMeta].schema)
+  private[index] val termVectorsSchema = withGen(Encoders.product[TermVectorRow].schema)
+  private[index] val deletesSchema = withGen(Encoders.product[DeleteRow].schema)
 
   private def versionOf(name: String): Option[Long] =
     if (name.startsWith("v=")) name.drop(2).toLongOption else None
@@ -131,8 +143,17 @@ object IndexIO {
       case Some((_, vp)) => Some(vp.toString)
       case None => if (exists(spark, s"$dir/_SUCCESS")) Some(dir) else None
     }
+    // a column the file lacks reads as null: such a manifest (an older
+    // layout) is no index, and is caught here rather than in a task
+    def complete(v: Any): Boolean = v match {
+      case null => false
+      case r: Row => r.toSeq.forall(complete)
+      case xs: scala.collection.Seq[_] => xs.forall(complete)
+      case _ => true
+    }
     def readOnce(path: String): Option[Manifest] =
-      try spark.read.parquet(path).as[Manifest].collect().headOption
+      try spark.read.schema(manifestSchema).parquet(path).collect().headOption.filter(complete)
+        .map(r => spark.createDataFrame(java.util.List.of(r), manifestSchema).as[Manifest].head())
       catch { case scala.util.control.NonFatal(_) => None }
     pickTarget().flatMap { path =>
       readOnce(path).orElse {
@@ -146,7 +167,7 @@ object IndexIO {
       // codec gate: a manifest written by a different block codec must read
       // as "no index" (fail closed) rather than let MonotonicBlock.decode
       // chew FOR-encoded bytes into silent garbage. (Pre-versioned
-      // manifests already fail the schema read above.)
+      // manifests already fail the completeness check above.)
       val ok = m.codecVersion == Manifest.CurrentCodecVersion
       if (!ok) System.err.println(s"[graft] index at $indexDir has codecVersion " +
         s"${m.codecVersion}, this build speaks ${Manifest.CurrentCodecVersion} — treating as no index")
@@ -190,8 +211,8 @@ final class BuiltIndex(val indexDir: String, val manifest: Manifest) extends Ser
 
   // Per-(session, root) memo of the reader DataFrames: a BuiltIndex's
   // manifest is immutable, so the visible gen-dir set and schema never
-  // change for this instance — re-running the FS listing + parquet footer
-  // schema inference on EVERY query is pure driver latency (tens of ms per
+  // change for this instance — re-running the FS listing and DataFrame
+  // resolution on EVERY query is pure driver latency (tens of ms per
   // search at interactive scale). Keyed by the session's UUID so a
   // restarted session re-lists without the key pinning the old session; a
   // bounded LRU (the stats memo's policy) so session-cycling processes
@@ -200,8 +221,8 @@ final class BuiltIndex(val indexDir: String, val manifest: Manifest) extends Ser
   @transient private lazy val readerMemo =
     IndexSearcher.lruCache[(String, String, Long, Long, Set[Long]), DataFrame](64)
 
-  private def readGens(spark: SparkSession, root: String, minGen: Long, maxGen: Long,
-                       dead: Set[Long] = Set.empty): DataFrame = {
+  private def readGens(spark: SparkSession, root: String, schema: StructType, minGen: Long,
+                       maxGen: Long, dead: Set[Long] = Set.empty): DataFrame = {
     // the gen range and dead set are part of the key: for THIS manifest
     // they are constants per root, but a same-root call with a different
     // visibility window must never be served the stale frame
@@ -209,7 +230,7 @@ final class BuiltIndex(val indexDir: String, val manifest: Manifest) extends Ser
       val dirs = committedGenDirs(spark, root, minGen, maxGen, dead)
       if (dirs.isEmpty) // no committed data dirs (shouldn't happen under a manifest)
         throw new IllegalStateException(s"no committed gen in [$minGen,$maxGen] under $root")
-      spark.read.option("basePath", root).parquet(dirs: _*)
+      spark.read.option("basePath", root).schema(schema).parquet(dirs: _*)
     })
   }
 
@@ -232,20 +253,20 @@ final class BuiltIndex(val indexDir: String, val manifest: Manifest) extends Ser
     * to tombstones.
     */
   def postings(spark: SparkSession): DataFrame =
-    readGens(spark, s"$indexDir/postings", manifest.minGen, manifest.generation,
-      manifest.deadGens.toSet)
+    readGens(spark, s"$indexDir/postings", IndexIO.postingsSchema,
+      manifest.minGen, manifest.generation, manifest.deadGens.toSet)
 
   /** (segmentId, docId, norm, sha) — norms + the per-row sha256 invariant.
     * Same committed-generation visibility rule as [[postings]]. */
   def docmeta(spark: SparkSession): DataFrame =
-    readGens(spark, s"$indexDir/docmeta", manifest.minGen, manifest.generation,
-      manifest.deadGens.toSet)
+    readGens(spark, s"$indexDir/docmeta", IndexIO.docmetaSchema,
+      manifest.minGen, manifest.generation, manifest.deadGens.toSet)
 
   /** Committed term-vector rows (when built with storeTermVectors) — same
     * gen-visibility rule as [[postings]]. */
   def termVectorsDf(spark: SparkSession): DataFrame =
-    readGens(spark, s"$indexDir/termvectors", manifest.minGen, manifest.generation,
-      manifest.deadGens.toSet)
+    readGens(spark, s"$indexDir/termvectors", IndexIO.termVectorsSchema,
+      manifest.minGen, manifest.generation, manifest.deadGens.toSet)
 
   /** Committed tombstones (segmentId, localDoc); empty when the index has
     * no deletes. Only generations in [minDeleteGen, deleteGen] are read —
@@ -254,7 +275,8 @@ final class BuiltIndex(val indexDir: String, val manifest: Manifest) extends Ser
   def deleteRows(spark: SparkSession): org.apache.spark.sql.Dataset[DeleteRow] = {
     import spark.implicits._
     if (manifest.deletedCount == 0L) spark.emptyDataset[DeleteRow]
-    else readGens(spark, s"$indexDir/deletes", manifest.minDeleteGen, manifest.deleteGen)
+    else readGens(spark, s"$indexDir/deletes", IndexIO.deletesSchema,
+      manifest.minDeleteGen, manifest.deleteGen)
       .select($"segmentId", $"localDoc").as[DeleteRow]
   }
 }

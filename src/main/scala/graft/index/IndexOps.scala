@@ -132,11 +132,6 @@ object IndexOps {
         if (!mergedSegs.contains(s.segmentId)) Some(s)
         else Compaction.correctedMeta(s, postAgg, docAgg, s"tiered$gen")
       } // merged segments whose docs were ALL deleted drop out
-      val stats = IndexStats(
-        docCount = segs.map(_.docCount).sum,
-        fieldDocCount = segs.map(_.fieldDocCount).sum,
-        sumTotalTermFreq = segs.map(_.sumTotalTermFreq).sum,
-        sumDocFreq = segs.map(_.sumDocFreq).sum)
 
       // ---- consolidate surviving tombstones above a new floor -------------
       val survivors = allDels.filter(d => !mergedSegs.contains(d.segmentId))
@@ -157,7 +152,7 @@ object IndexOps {
       val deadGens = deadAll.filter(_ > newMinGen)
       val m2 = m.copy(
         generation = gen, minGen = newMinGen,
-        numSegments = segs.size, stats = stats, segments = segs,
+        numSegments = segs.size, stats = IndexStats.of(segs), segments = segs,
         corpusSha = IndexBuilder.sha256Hex(s"${m.corpusSha}#tiered:$gen"),
         deadGens = deadGens,
         deleteGen = newDeleteGen, minDeleteGen = newMinDeleteGen, deletedCount = nSurv)
@@ -242,14 +237,9 @@ object IndexOps {
     val segs = m.segments.flatMap(
       Compaction.correctedMeta(_, postAgg, docAgg, s"merged$gen"))
     // segments whose docs were ALL deleted drop out of the manifest
-    val stats = IndexStats(
-      docCount = segs.map(_.docCount).sum,
-      fieldDocCount = segs.map(_.fieldDocCount).sum,
-      sumTotalTermFreq = segs.map(_.sumTotalTermFreq).sum,
-      sumDocFreq = segs.map(_.sumDocFreq).sum)
     val m2 = m.copy(
       generation = gen, minGen = gen,
-      numSegments = segs.size, stats = stats, segments = segs,
+      numSegments = segs.size, stats = IndexStats.of(segs), segments = segs,
       corpusSha = IndexBuilder.sha256Hex(s"${m.corpusSha}#merged:$gen"),
       postingsBytes = IndexIO.dirBytes(spark, s"$indexDir/postings/gen=$gen"),
       docmetaBytes = IndexIO.dirBytes(spark, s"$indexDir/docmeta/gen=$gen"),
@@ -304,13 +294,11 @@ private[index] object Compaction {
                         tvDf: DataFrame,
                         delRdd: org.apache.spark.rdd.RDD[(Int, Int)], outParts: Int): Unit = {
     import spark.implicits._
-    val hasPos = m.hasPositions
-    val hasOff = m.hasOffsets
-    val hasPay = m.hasPayloads
+    val streams = Streams.of(m)
     rewriteWithTombstones[TermPostings](spark,
       postingsDf.as[TermPostings].rdd.map(tp => ((tp.segmentId, tp.term), tp: AnyRef)),
       delRdd, outParts) { (payload, deleted) =>
-        rewriteTerm(payload.asInstanceOf[TermPostings], deleted, hasPos, hasOff, hasPay).iterator
+        rewriteTerm(payload.asInstanceOf[TermPostings], deleted, streams).iterator
       }
       .write.mode("overwrite").parquet(s"$indexDir/postings/gen=$gen")
     rewriteWithTombstones[DocMeta](spark,
@@ -401,7 +389,7 @@ private[index] object Compaction {
       .mapPartitions { it =>
         var curSeg = Int.MinValue
         var deleted: Array[Int] = null
-        val delBuf = new graft.analysis.IntBuf(16)
+        val delBuf = new IntBuf(16)
         it.flatMap { case ((seg, tag, _), payload) =>
           if (seg != curSeg) { curSeg = seg; delBuf.n = 0; deleted = null }
           if (tag == 0) {
@@ -420,78 +408,47 @@ private[index] object Compaction {
   }
 
   /** Rewrite one term's posting list against the segment's sorted tombstone
-    * array; None when every posting was tombstoned. Prox/offsets streams
+    * array: the surviving postings, remapped dense, are re-appended with all
+    * their occurrences to a [[PostingsBuffer]] and flushed as new blocks;
+    * None when every posting was tombstoned. Prox/offsets/payload streams
     * decode through the SAME [[graft.codec.ProxStreams]] the query readers
     * use — one implementation per on-disk layout. */
-  def rewriteTerm(tp: TermPostings, deleted: Array[Int], hasPos: Boolean,
-                  hasOff: Boolean = false, hasPay: Boolean = false): Option[TermPostings] = {
+  def rewriteTerm(tp: TermPostings, deleted: Array[Int], streams: Streams): Option[TermPostings] = {
     if (deleted.isEmpty) return Some(tp) // untouched segment: bytes move as-is
-    val docsB = new graft.analysis.IntBuf(64)
-    val freqsB = new graft.analysis.IntBuf(64)
-    val normsB = new java.io.ByteArrayOutputStream(64)
-    val posB = if (hasPos) new graft.analysis.IntBuf(64) else null
-    val offB = if (hasOff) new graft.analysis.IntBuf(64) else null
-    val payLenB = if (hasPay) new graft.analysis.IntBuf(64) else null
-    val payB = if (hasPay) new java.io.ByteArrayOutputStream(256) else null
-    var ttf = 0L
+    val b = new PostingsBuffer(streams)
     tp.blocks.foreach { blk =>
       val docs = graft.codec.MonotonicBlock.decode(blk.docBytes)
-      val freqs = graft.codec.ForBlock.decode(blk.freqBytes)
-      val freqsI = { val a = new Array[Int](freqs.length); var q = 0
-        while (q < freqs.length) { a(q) = freqs(q).toInt; q += 1 }; a }
-      require(!hasPos || blk.posBytes != null,
+      val freqs = graft.codec.ForBlock.decode(blk.freqBytes).map(_.toInt)
+      require(!streams.positions || blk.posBytes != null,
         "compaction on a positions index requires posBytes in every block")
-      require(!hasOff || blk.offBytes != null,
+      require(!streams.offsets || blk.offBytes != null,
         "compaction on an offsets index requires offBytes in every block")
-      require(!hasPay || blk.payBytes != null,
+      require(!streams.payloads || blk.payBytes != null,
         "compaction on a payloads index requires payBytes in every block")
-      val pos = if (hasPos) graft.codec.ProxStreams.decodePositions(blk.posBytes, freqsI) else null
-      val off = if (hasOff) graft.codec.ProxStreams.decodeOffsets(blk.offBytes, freqsI) else null
-      val pay = if (hasPay) graft.codec.ProxStreams.decodePayloads(blk.payBytes, freqsI) else null
+      // every stream is aligned with the occurrences in posting order
+      val pos = if (streams.positions) graft.codec.ProxStreams.decodePositions(blk.posBytes, freqs)._1 else null
+      val off = if (streams.offsets) graft.codec.ProxStreams.decodeOffsets(blk.offBytes, freqs) else null
+      val pay = if (streams.payloads) graft.codec.ProxStreams.decodePayloads(blk.payBytes, freqs)._1 else null
+      var occ = 0
       var i = 0
       while (i < docs.length) {
         val local = docs(i).toInt
         val shift = deletedAtOrBelow(deleted, local)
+        val occEnd = occ + freqs(i)
         if (shift >= 0) {
-          docsB.add(local - shift)
-          freqsB.add(freqs(i).toInt)
-          normsB.write(blk.norms(i).toInt)
-          ttf += freqs(i)
-          if (hasPos) {
-            val (flat, starts) = pos
-            var k = starts(i)
-            while (k < starts(i + 1)) { posB.add(flat(k)); k += 1 }
-          }
-          if (hasOff) {
-            val (fs, fe, starts) = off
-            var k = starts(i)
-            while (k < starts(i + 1)) { offB.add(fs(k)); offB.add(fe(k)); k += 1 }
-          }
-          if (hasPay) {
-            val (occ, starts) = pay
-            var k = starts(i)
-            while (k < starts(i + 1)) {
-              payLenB.add(occ(k).length)
-              payB.write(occ(k), 0, occ(k).length)
-              k += 1
-            }
+          b.addDoc(local - shift, blk.norms(i))
+          while (occ < occEnd) {
+            b.addOccurrence(if (pos == null) 0 else pos(occ),
+              if (off == null) 0 else off._1(occ), if (off == null) 0 else off._2(occ),
+              if (pay == null) null else pay(occ))
+            occ += 1
           }
         }
+        occ = occEnd
         i += 1
       }
     }
-    if (docsB.n == 0) None
-    else {
-      val docsA = java.util.Arrays.copyOf(docsB.a, docsB.n)
-      val freqsA = java.util.Arrays.copyOf(freqsB.a, freqsB.n)
-      val normsA = normsB.toByteArray
-      val posA = if (posB == null) null else java.util.Arrays.copyOf(posB.a, posB.n)
-      val offA = if (offB == null) null else java.util.Arrays.copyOf(offB.a, offB.n)
-      val payLensA = if (payLenB == null) null else java.util.Arrays.copyOf(payLenB.a, payLenB.n)
-      val payA = if (payB == null) null else payB.toByteArray
-      Some(TermPostings(tp.segmentId, tp.term, docsB.n, ttf,
-        IndexBuilder.buildBlocks(docsA, freqsA, normsA, posA, offA, payLensA, payA),
-        termLen = tp.termLen))
-    }
+    if (b.n == 0) None
+    else Some(TermPostings(tp.segmentId, tp.term, b.n, b.totalTermFreq, b.blocks(), termLen = tp.termLen))
   }
 }

@@ -34,13 +34,16 @@ final case class TermVectorRow(
 object TermVectors {
 
   /** Extract one document's vector rows (shared by the writer and
-    * [[graft.memory.MemoryIndex]]-style in-process use). */
+    * [[graft.memory.MemoryIndex]]-style in-process use): the doc inverted
+    * with positions and offsets, one row per term. */
   def ofDoc(docId: Long, text: String, analyzer: Analyzer): Iterator[TermVectorRow] = {
-    val toks = analyzer.tokenize(if (text == null) "" else text)
-    if (toks.isEmpty) Iterator.empty
-    else toks.groupBy(_.term).iterator.map { case (t, ts) =>
-      TermVectorRow(docId, t, ts.size,
-        ts.map(_.position).toArray, ts.map(_.startOffset).toArray, ts.map(_.endOffset).toArray)
+    val inv = new Inverter(analyzer, Streams.plain.copy(positions = true, offsets = true), null)
+    inv.invert(0, text)
+    scala.jdk.CollectionConverters.IteratorHasAsScala(inv.terms.entrySet.iterator).asScala.map { e =>
+      val b = e.getValue
+      val f = b.freqs(0)
+      TermVectorRow(docId, e.getKey, f, java.util.Arrays.copyOf(b.pos.a, f),
+        Array.tabulate(f)(k => b.off.a(2 * k)), Array.tabulate(f)(k => b.off.a(2 * k + 1)))
     }
   }
 

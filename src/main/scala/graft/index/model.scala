@@ -121,6 +121,15 @@ final case class IndexStats(
   def avgdl: Double = sumTotalTermFreq.toDouble / fieldDocCount.toDouble
 }
 
+object IndexStats {
+  /** The global stats of a manifest's segments (their sums). */
+  def of(segs: Seq[SegmentMeta]): IndexStats = IndexStats(
+    docCount = segs.map(_.docCount).sum,
+    fieldDocCount = segs.map(_.fieldDocCount).sum,
+    sumTotalTermFreq = segs.map(_.sumTotalTermFreq).sum,
+    sumDocFreq = segs.map(_.sumDocFreq).sum)
+}
+
 /** `segments_N` analogue (`core/index/segmentinfos.go:39-46`): JSON manifest
   * written atomically after all segment parquet is durable; readers only see
   * committed generations.

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.analysis.{Analyzer, TermIntern}
+import graft.analysis.{Analyzer, TermIntern, TokenSink}
 import graft.index.{BuildConfig, IndexBuilder, IndexOps, Payloads}
 import graft.search.TermQ
 
@@ -44,14 +44,21 @@ class PayloadSpec extends AnyFunSuite {
   }
 
   test("analyzer payloads = original (pre-lowercase) token bytes, position-aligned") {
-    val (m, len) = analyzer.termPositionPayloadCounts("Alpha beta ALPHA", new TermIntern(), wantOffsets = true)
+    // the walk's surface range is what the inverter stores as the payload
+    val text = "Alpha beta ALPHA"
+    val alpha = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int, Array[Byte])]
+    val len = analyzer.walk(text, new TermIntern(), new TokenSink {
+      def token(term: String, position: Int, startCp: Int, endCp: Int,
+                startChar: Int, endChar: Int): Unit =
+        if (term == "alpha")
+          alpha += ((position, startCp, endCp, text.substring(startChar, endChar).getBytes("UTF-8")))
+    })
     assert(len == 3)
-    val b = m.get("alpha")
-    assert(b.pos.n == 2 && b.pos.a(0) == 0 && b.pos.a(1) == 2)
-    assert(b.payLen.a.take(2).toSeq == Seq(5, 5))
-    assert(new String(b.pay.toByteArray, "UTF-8") == "AlphaALPHA")
+    assert(alpha.map(_._1) == Seq(0, 2))
+    assert(alpha.map(_._4.length) == Seq(5, 5))
+    assert(alpha.map(a => new String(a._4, "UTF-8")).mkString == "AlphaALPHA")
     // offsets side stream still present and aligned
-    assert(b.off.a.take(4).toSeq == Seq(0, 5, 11, 16))
+    assert(alpha.flatMap(a => Seq(a._2, a._3)) == Seq(0, 5, 11, 16))
   }
 
   test("payload read-back: every (doc, position, payload) of a term, both offset configs") {

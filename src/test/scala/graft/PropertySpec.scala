@@ -66,6 +66,35 @@ object EngineProperties extends Properties("graft") {
       tf.values.sum == len && len == ws.size
     }
 
+  // text pieces: Go-only whitespace (U+00A0, U+2007, U+202F, U+3000, which
+  // Java's isWhitespace misses), surrogate pairs (U+1D518 has no case,
+  // U+10400 lowercases to U+10428), mixed case and stop words
+  val piece: Gen[String] = Gen.oneOf(
+    Gen.oneOf(" ", "\t", "\n", "\u00a0", "\u2007", "\u202f", "\u3000", "  "),
+    Gen.oneOf("the", "The", "THE", "a", "A", "Alpha", "alpha", "ÄRGER", "\ud835\udd18x",
+      "\ud801\udc00\ud801\udc00", "mIxEd\ud801\udc00"),
+    Gen.nonEmptyListOf(Gen.alphaNumChar).map(_.mkString))
+
+  property("walk == tokenize: (term, position, offsets), length and surface ranges") =
+    Prop.forAll(Gen.listOf(piece)) { ps =>
+      val text = ps.mkString
+      val stopped = new Analyzer(Set("the", "a"))
+      val walked = Vector.newBuilder[graft.analysis.Token]
+      var surfaceOk = true
+      val len = stopped.walk(text, new graft.analysis.TermIntern(), new graft.analysis.TokenSink {
+        def token(term: String, position: Int, startCp: Int, endCp: Int,
+                  startChar: Int, endChar: Int): Unit = {
+          walked += graft.analysis.Token(term, position, startCp, endCp)
+          val surface = text.substring(startChar, endChar)
+          val lowered = new String(surface.codePoints().map(Character.toLowerCase(_)).toArray, 0,
+            surface.codePointCount(0, surface.length))
+          surfaceOk &&= lowered == term
+        }
+      })
+      val ref = stopped.tokenize(text)
+      walked.result() == ref && len == ref.size && surfaceOk
+    }
+
   property("interned termFreqCounts == plain (and hot terms share one String)") =
     Prop.forAll(Gen.listOf(doc)) { docs =>
       val intern = new graft.analysis.TermIntern(initialPow2 = 4) // force growth

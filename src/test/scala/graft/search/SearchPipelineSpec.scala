@@ -1,12 +1,8 @@
 package graft.search
 
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{Oracle, TestCorpus, TestSpark}
+import graft.{Oracle, SparkWork, TestCorpus, TestSpark}
 import graft.index.{BuildConfig, IndexBuilder}
 
 /** The shared search pipeline: the term-stats pass every entry point reads
@@ -24,40 +20,6 @@ class SearchPipelineSpec extends AnyFunSuite {
       "doc_id", "content", dir, BuildConfig(numSegments = 4, chunkDocs = 128))
   }
 
-  /** Jobs and stages started by `body`, read off a listener attached around
-    * it. The listener bus is asynchronous, so it is drained before and
-    * after with a marker job: the marker's end event arrives after every
-    * event of the jobs started before it. */
-  private def sparkWork(body: => Unit): (Int, Int) = {
-    val sc = spark.sparkContext
-    val markers = ConcurrentHashMap.newKeySet[Int]()
-    val jobs = new AtomicInteger
-    val stages = new AtomicInteger
-    @volatile var drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p => p.getProperty("spark.jobGroup.id") == "drain"))
-          markers.add(e.jobId)
-        else { jobs.incrementAndGet(); stages.addAndGet(e.stageIds.size) }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (markers.contains(e.jobId)) drained.countDown()
-    }
-    def drain(): Unit = {
-      drained = new CountDownLatch(1)
-      sc.setJobGroup("drain", "drain", interruptOnCancel = false)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(drained.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-    }
-    sc.addSparkListener(listener)
-    try {
-      drain()
-      jobs.set(0); stages.set(0)
-      body
-      drain()
-      (jobs.get, stages.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("term stats: driver-collect and groupBy branches of the row bound agree") {
     val terms = Set("import", "def", "val", "id_17", "id_333", "fn7", "no_such_term")
     val s = new IndexSearcher(index)
@@ -66,8 +28,8 @@ class SearchPipelineSpec extends AnyFunSuite {
     // bound 0: every term set is over it, so a groupBy sums them
     var collected = Map.empty[String, (Long, Long)]
     var grouped = Map.empty[String, (Long, Long)]
-    val (_, collectStages) = sparkWork { collected = s.scanStats(spark, terms, Long.MaxValue) }
-    val (_, groupStages) = sparkWork { grouped = s.scanStats(spark, terms, 0L) }
+    val (_, collectStages) = SparkWork(spark) { collected = s.scanStats(spark, terms, Long.MaxValue) }
+    val (_, groupStages) = SparkWork(spark) { grouped = s.scanStats(spark, terms, 0L) }
     assert(collected == grouped)
     assert(collected.keySet == terms - "no_such_term")
     assert(collectStages == 1, "the driver-collect branch is one stage")
@@ -89,19 +51,19 @@ class SearchPipelineSpec extends AnyFunSuite {
     new IndexSearcher(index).search(spark, warmQ, 5).collect() // reader memo, JIT
 
     val s = new IndexSearcher(index)
-    val (firstBatch, _) = sparkWork(s.searchMany(spark, batch, 10).collect())
-    val (secondBatch, _) = sparkWork(s.searchMany(spark, batch, 10).collect())
+    val (firstBatch, _) = SparkWork(spark)(s.searchMany(spark, batch, 10).collect())
+    val (secondBatch, _) = SparkWork(spark)(s.searchMany(spark, batch, 10).collect())
     assert(secondBatch < firstBatch,
       s"a repeated batch reads its stats from the memo ($secondBatch vs $firstBatch jobs)")
 
-    val (coldMatching, _) = sparkWork(new IndexSearcher(index).matchingDocs(spark, warmQ).collect())
+    val (coldMatching, _) = SparkWork(spark)(new IndexSearcher(index).matchingDocs(spark, warmQ).collect())
     val warm = new IndexSearcher(index)
     warm.termStats(spark, warmQ.terms)
-    val (warmMatching, _) = sparkWork(warm.matchingDocs(spark, warmQ).collect())
+    val (warmMatching, _) = SparkWork(spark)(warm.matchingDocs(spark, warmQ).collect())
     assert(coldMatching == warmMatching, "matchingDocs does not depend on term stats")
 
     // one stats job plus the kernel job, as before the pipeline was shared
-    val (searchJobs, _) = sparkWork(new IndexSearcher(index).search(spark, warmQ, 10).collect())
+    val (searchJobs, _) = SparkWork(spark)(new IndexSearcher(index).search(spark, warmQ, 10).collect())
     assert(searchJobs <= 2, s"search started $searchJobs jobs")
   }
 }
