@@ -310,9 +310,8 @@ object IndexBuilder {
       case Some(m) =>
         require(m.segmentSize % cfg.chunkDocs == 0,
           s"append chunkDocs ${cfg.chunkDocs} must divide committed segmentSize ${m.segmentSize}")
-        val nextBase = (m.segments.map(_.segmentId).max + 1).toLong * m.segmentSize
-        require(minIdRow >= nextBase,
-          s"append docIds must be >= nextDocBase $nextBase (got min $minIdRow)")
+        require(minIdRow >= m.nextDocBase,
+          s"append docIds must be >= nextDocBase ${m.nextDocBase} (got min $minIdRow)")
         m.segmentSize
       case None =>
         val segSize0 = math.max(1L, (maxIdRow + cfg.numSegments) / cfg.numSegments)

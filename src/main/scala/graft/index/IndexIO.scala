@@ -183,8 +183,7 @@ final class BuiltIndex(val indexDir: String, val manifest: Manifest) extends Ser
 
   /** First docId of the next empty segment — the id base a caller must use
     * for [[IndexBuilder.append]]ed documents. */
-  def nextDocBase: Long =
-    (manifest.segments.map(_.segmentId).max + 1).toLong * manifest.segmentSize
+  def nextDocBase: Long = manifest.nextDocBase
 
   /** Committed `gen=K` subdirectories of `root` with K <= maxGen, listed via
     * the FileSystem API. Readers open ONLY these paths: an orphan gen dir

@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.analysis.Analyzer
@@ -147,31 +147,39 @@ object Payloads {
     import spark.implicits._
     require(index.manifest.hasPayloads,
       s"index at ${index.indexDir} was built without payloads (BuildConfig.storePayloads)")
-    if (terms.isEmpty) return spark.emptyDataset[PayloadRow]
+    occurrences(spark, index, terms, docPred)((rd, bi) => (rd.positionsOf(bi), rd.payloadsOf(bi))) {
+      case (doc, term, ((pflat, pstarts), (occ, ystarts)), i) =>
+        (pstarts(i) until pstarts(i + 1)).iterator.map { w =>
+          PayloadRow(doc, term, pflat(w), occ(ystarts(i) + (w - pstarts(i))))
+        }
+    }
+  }
+
+  /** The one per-occurrence walk of the postings streams: the scan pushed
+    * down to `terms`' posting rows (term min/max + dictionary pushdown, no
+    * other term's blocks are decoded), one reader per row, blocks with no
+    * doc passing `docPred` skipped before `decode` runs (the common case
+    * for a point read), then `emit(docId, term, decoded block, i)` for
+    * each passing doc, i its index in the block. */
+  private[index] def occurrences[B, T: Encoder](spark: SparkSession, index: BuiltIndex,
+                                                terms: Set[String], docPred: Long => Boolean)(
+      decode: (graft.search.TermReader, Int) => B)(emit: (Long, String, B, Int) => Iterator[T]): Dataset[T] = {
+    import spark.implicits._
+    if (terms.isEmpty) return spark.emptyDataset[T]
     val segSize = index.manifest.segmentSize
-    index.postings(spark)
-      .where(col("term").isin(terms.toSeq: _*))
-      .as[TermPostings]
-      .flatMap { tp =>
-        val rd = new graft.search.TermReader(tp, new Array[Double](256))
-        val base = tp.segmentId.toLong * segSize
-        tp.blocks.indices.iterator.flatMap { bi =>
-          val docs = rd.docsOf(bi)
-          val any = docs.exists(d => docPred(base + d))
-          if (!any) Iterator.empty
-          else {
-            val (pflat, pstarts) = rd.positionsOf(bi)
-            val (occ, ystarts) = rd.payloadsOf(bi)
-            docs.indices.iterator
-              .filter(i => docPred(base + docs(i)))
-              .flatMap { i =>
-                (pstarts(i) until pstarts(i + 1)).iterator.map { w =>
-                  PayloadRow(base + docs(i), tp.term, pflat(w), occ(ystarts(i) + (w - pstarts(i))))
-                }
-              }
-          }
+    index.postings(spark).where(col("term").isin(terms.toSeq: _*)).as[TermPostings].flatMap { tp =>
+      val rd = new graft.search.TermReader(tp, new Array[Double](256))
+      val base = tp.segmentId.toLong * segSize
+      tp.blocks.indices.iterator.flatMap { bi =>
+        val docs = rd.docsOf(bi)
+        if (!docs.exists(d => docPred(base + d))) Iterator.empty
+        else {
+          val block = decode(rd, bi)
+          docs.indices.iterator.filter(i => docPred(base + docs(i)))
+            .flatMap(i => emit(base + docs(i), tp.term, block, i))
         }
       }
+    }
   }
 }
 
@@ -197,34 +205,13 @@ object Highlighter {
     import spark.implicits._
     require(index.manifest.hasOffsets,
       s"index at ${index.indexDir} was built without postings offsets (BuildConfig.storeOffsets)")
-    if (terms.isEmpty) return spark.emptyDataset[TermVectorRow]
-    val segSize = index.manifest.segmentSize
-    index.postings(spark)
-      .where(col("term").isin(terms.toSeq: _*))
-      .as[graft.index.TermPostings]
-      .flatMap { tp =>
-        val rd = new graft.search.TermReader(tp, new Array[Double](256))
-        val base = tp.segmentId.toLong * segSize
-        tp.blocks.indices.iterator.flatMap { bi =>
-          val docs = rd.docsOf(bi)
-          // decode lazily: blocks with no doc passing the predicate are
-          // skipped entirely (the common case for a point read)
-          val any = docs.exists(d => docPred(base + d))
-          if (!any) Iterator.empty
-          else {
-            val (pflat, pstarts) = rd.positionsOf(bi)
-            val (os, oe, ostarts) = rd.offsetsOf(bi)
-            docs.indices.iterator
-              .filter(i => docPred(base + docs(i)))
-              .map { i =>
-                TermVectorRow(base + docs(i), tp.term, pstarts(i + 1) - pstarts(i),
-                  java.util.Arrays.copyOfRange(pflat, pstarts(i), pstarts(i + 1)),
-                  java.util.Arrays.copyOfRange(os, ostarts(i), ostarts(i + 1)),
-                  java.util.Arrays.copyOfRange(oe, ostarts(i), ostarts(i + 1)))
-              }
-          }
-        }
-      }
+    Payloads.occurrences(spark, index, terms, docPred)((rd, bi) => (rd.positionsOf(bi), rd.offsetsOf(bi))) {
+      case (doc, term, ((pflat, pstarts), (os, oe, ostarts)), i) =>
+        Iterator.single(TermVectorRow(doc, term, pstarts(i + 1) - pstarts(i),
+          java.util.Arrays.copyOfRange(pflat, pstarts(i), pstarts(i + 1)),
+          java.util.Arrays.copyOfRange(os, ostarts(i), ostarts(i + 1)),
+          java.util.Arrays.copyOfRange(oe, ostarts(i), ostarts(i + 1))))
+    }
   }
 
   /** [[highlight]] fed from the postings offsets stream instead of term

@@ -211,7 +211,11 @@ final case class Manifest(
     // monotonic codec would return garbage, not an error). Bump on any
     // byte-layout change.
     codecVersion: Int = Manifest.CurrentCodecVersion
-)
+) {
+  /** First docId of the next empty segment — the id base of appended
+    * documents; 0 for an index with no segments left. */
+  def nextDocBase: Long = segments.map(_.segmentId + 1L).maxOption.getOrElse(0L) * segmentSize
+}
 
 object Manifest {
   /** v2 = MonotonicBlock docIds (+ optional positions stream);

@@ -5,6 +5,7 @@ import scala.reflect.ClassTag
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 
 import graft.bm25.Bm25
 import graft.index.{BuiltIndex, DeleteRow, SegmentMeta, TermPostings}
@@ -32,8 +33,10 @@ object TotalHits {
   val GTE = "GREATER_THAN_OR_EQUAL_TO"
 }
 
-/** Per-segment kernel result for threshold-aware search. */
-final case class LeafHits(docId: Long, score: Double, collected: Long, pruned: Boolean)
+/** Query `query`'s top-k over one segment (a leaf) or over all of them (a
+  * merge): hits score desc / docId asc, the matches counted, and whether
+  * pruning made that count a lower bound. */
+final case class LeafTopK(query: Int, hits: Array[ScoredDoc], collected: Long, pruned: Boolean)
 
 /** One hit of a batch multi-query run (see [[IndexSearcher.searchMany]]). */
 final case class QueryHit(queryId: String, docId: Long, score: Double)
@@ -260,17 +263,24 @@ object SegmentKernel {
     scorer(q, postings, seg, ctx, deleted, c.scoring,
       if (c.scoring) () => c.minCompetitive else ScorerBuilder.neverPrune).foreach(run(_, c))
 
+  /** The one top-k leaf: `q` over one segment into a fresh [[TopKCollector]]
+    * (its hits, count and pruning flag). runId >= 0 joins the leaf to the
+    * query's cross-leaf threshold cell (the MaxScoreAccumulator role):
+    * leaves sharing an executor JVM raise each other's pruning floor —
+    * exact by the strict-floor argument. */
+  private[search] def leaf(q: Query, postings: Map[String, TermReader], seg: SegmentMeta,
+                           ctx: QueryContext, k: Int, after: Option[(Double, Long)],
+                           deleted: Array[Int], runId: Long, hitsThreshold: Long): TopKCollector = {
+    val collector = new TopKCollector(k, seg.docBase, after, hitsThreshold, runId)
+    run(q, postings, seg, ctx, deleted, collector)
+    collector
+  }
+
   def topK(q: Query, postings: Map[String, TermReader], seg: SegmentMeta,
            ctx: QueryContext, k: Int, after: Option[(Double, Long)],
            deleted: Array[Int] = Array.emptyIntArray,
-           runId: Long = -1L): Iterator[ScoredDoc] = {
-    // runId >= 0 joins this leaf to the query's cross-leaf threshold cell
-    // (the MaxScoreAccumulator role): leaves sharing an executor JVM raise
-    // each other's pruning floor — exact by the strict-floor argument
-    val collector = new TopKCollector(k, seg.docBase, after, 0L, runId)
-    run(q, postings, seg, ctx, deleted, collector)
-    collector.results.iterator.map { case (gid, sc) => ScoredDoc(gid, sc) }
-  }
+           runId: Long = -1L): Iterator[ScoredDoc] =
+    leaf(q, postings, seg, ctx, k, after, deleted, runId, 0L).hits.iterator
 
   /** All matching docs with scores (exhaustive; for oracles & set ops) — the
     * one PULL path: a segment's whole match set streams lazily, never
@@ -291,21 +301,35 @@ object SegmentKernel {
 /** Driver-side searcher (SURVEY.md §3.2 Spark shape):
   * rewrite + weight on the driver (tiny stats lookup with term pushdown),
   * scorer tree per partition via cogroup over segments, leaf top-k heaps,
-  * final `orderBy(score desc, docId asc).limit(k)` ≡ `MergeTopDocs`
-  * (global docIds encode (segment asc, localDoc asc), so the tie-break keys
-  * are identical to `core/search/topdocs.go:33-110`).
+  * then the per-query merge ≡ `MergeTopDocs`: `orderBy(score desc, docId
+  * asc).limit(k)` for the lazy [[IndexSearcher.search]], [[mergeTopK]] for
+  * the eager top-k runs.
   */
 object IndexSearcher {
   /** Stats-memo LRU bound (entries are a term + two longs — ~100 B each,
     * so the bound caps the memo near 100 MB of driver heap). */
   val StatsCacheMaxEntries: Int = 1 << 20
 
-  /** Small-batch merge bound for [[IndexSearcher.searchMany]]: when
-    * queries × segments × k (the worst-case pre-merge row count) is at most
-    * this, leaf hits are collected and merged on the driver (~40 B/row, so
-    * the bound caps the collect near 40 MB); larger batches keep the
-    * distributed groupByKey merge. */
+  /** Driver-merge bound of the eager top-k runs: when queries × segments ×
+    * k (the worst-case pre-merge hit count) is at most this, leaf hits are
+    * collected and merged on the driver (~40 B/hit, so the bound caps the
+    * collect near 40 MB); larger runs keep the distributed groupByKey merge.
+    * It also bounds the term-stats collect. */
   val DriverMergeMaxRows: Long = 1L << 20
+
+  /** The accumulator every top-k leaf adds its kernel time to, in ns. */
+  val KernelNanos = "graft-batch-kernel-nanos"
+
+  /** The one top-k merge (≡ MergeTopDocs, `core/search/topdocs.go:33-110`):
+    * one query's leaves → its first k hits by score desc, docId asc (global
+    * docIds encode (segment asc, localDoc asc), so the tie-break is
+    * Lucene's), with the leaves' counts summed. It runs on the driver and
+    * inside the exchange alike. */
+  private[search] def mergeTopK(k: Int)(query: Int, leaves: Iterator[LeafTopK]): LeafTopK = {
+    val ls = leaves.toArray
+    LeafTopK(query, ls.flatMap(_.hits).sortBy(h => (-h.score, h.docId)).take(k),
+      ls.iterator.map(_.collected).sum, ls.exists(_.pruned))
+  }
 
   /** Access-order LRU bounded at `max` entries: at the bound each insert
     * evicts only the least-recently-used entry (never the whole map). */
@@ -496,7 +520,7 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     require(index.manifest.indexSort.nonEmpty,
       s"index at ${index.indexDir} has no index sort (build with IndexBuilder.buildSorted; " +
         "appends clear it — the appended docIds cannot interleave into the sort order)")
-    val (Seq(q), _, ctx) = prepare(spark, Seq(q0), scoring = false)
+    val (Seq(q), _, ctx) = prepare(spark, Seq(q0), scoring = false, k)
     val afterDoc = after.getOrElse(-1L)
     leaves(spark, Seq(q), ctx) { (seg, rds, del, _) =>
       val c = new FirstKCollector(k, seg, afterDoc)
@@ -571,9 +595,12 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
   /** Every entry point's preparation pass: rewrite the queries, then one
     * [[QueryContext]] from the memoized [[termStats]] of all their terms (≙
     * Weight creation). A non-scoring caller skips the stats entirely: idf
-    * is never read without scoring, and the norm cache needs only avgdl. */
-  private def prepare(spark: SparkSession, qs0: Seq[Query], scoring: Boolean)
+    * is never read without scoring, and the norm cache needs only avgdl.
+    * The top-k entry points pass their k, checked here before any job:
+    * k = 0 keeps no hits, k < 0 is rejected. */
+  private def prepare(spark: SparkSession, qs0: Seq[Query], scoring: Boolean, k: Int = 0)
       : (Seq[Query], Map[String, (Long, Long)], QueryContext) = {
+    require(k >= 0, s"k must be >= 0, got $k")
     val qs = qs0.map(rewrite(spark, _))
     val stats =
       if (scoring) termStats(spark, qs.flatMap(_.terms).toSet) else Map.empty[String, (Long, Long)]
@@ -607,17 +634,20 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     }
   }
 
-  /** Top-k search. Returns a DataFrame (doc_id, score) ordered by
-    * score desc, doc_id asc, limited to k.
+  /** Top-k search: (docId, score) rows ordered by score desc, docId asc,
+    * limited to k. Lazy: the leaves are the top-k runner's
+    * ([[segmentLeaves]]), the merge is Catalyst's `orderBy.limit`
+    * (TakeOrderedAndProject ≡ MergeTopDocs), so nothing runs until the
+    * Dataset is evaluated — and `search(q, 0)` never runs a job.
     */
   def search(spark: SparkSession, q0: Query, k: Int,
              after: Option[(Double, Long)] = None): Dataset[ScoredDoc] = {
     import spark.implicits._
-    val (Seq(q), _, ctx) = prepare(spark, Seq(q0), scoring = true)
-    val runId = MaxScoreAccumulator.newRunId()
-    leaves(spark, Seq(q), ctx) { (seg, rds, del, _) =>
-      SegmentKernel.topK(q, rds, seg, ctx, k, after, del, runId)
-    }.orderBy($"score".desc, $"docId".asc).limit(k).as[ScoredDoc]
+    val (qs, _, ctx) = prepare(spark, Seq(q0), scoring = true, k)
+    val leavesOf = segmentLeaves(qs, ctx, k, after, 0L, shards = 1,
+      spark.sparkContext.longAccumulator(IndexSearcher.KernelNanos))
+    leaves(spark, qs, ctx)((seg, rds, del, shard) => leavesOf(seg, rds, del, shard).flatMap(_.hits))
+      .orderBy($"score".desc, $"docId".asc).limit(k)
   }
 
   /** Top-k + [[TotalHits]] with the reference's hits-threshold contract
@@ -626,143 +656,148 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     * leaf; beyond it, dynamic pruning may skip non-competitive docs and the
     * reported total becomes a GREATER_THAN_OR_EQUAL_TO lower bound. Pass
     * hitsThreshold = Long.MaxValue for always-exact totals (pruning off).
+    * With k = 0 no hit is kept and the total is exact.
     */
   def searchWithTotal(spark: SparkSession, q0: Query, k: Int,
                       hitsThreshold: Long = 1000L): (Array[ScoredDoc], TotalHits) = {
-    import spark.implicits._
-    val (Seq(q), _, ctx) = prepare(spark, Seq(q0), scoring = true)
-    val rows = leaves(spark, Seq(q), ctx) { (seg, rds, del, _) =>
-      val c = new TopKCollector(k, seg.docBase, None, hitsThreshold)
-      SegmentKernel.run(q, rds, seg, ctx, del, c)
-      // one sentinel row (docId = -1) per segment carries its hit count and
-      // whether pruning made it a lower bound; the rest are its top-k
-      Iterator.single(LeafHits(-1L, 0.0, c.collected, c.pruned)) ++
-        c.results.iterator.map { case (gid, sc) => LeafHits(gid, sc, 0L, pruned = false) }
-    }.collect()
-    val (sentinels, hits) = rows.partition(_.docId == -1L)
-    val total = TotalHits(sentinels.map(_.collected).sum,
-      if (sentinels.exists(_.pruned)) TotalHits.GTE else TotalHits.EQ)
-    val top = hits.map(h => ScoredDoc(h.docId, h.score))
-      .sortBy(h => (-h.score, h.docId)).take(k)
-    (top, total)
+    val top = runTopK(spark, Seq(q0), k, hitsThreshold).head
+    (top.hits, TotalHits(top.collected, if (top.pruned) TotalHits.GTE else TotalHits.EQ))
   }
 
   /** In-process top-k for SELECTIVE queries — the reference's embedded
     * library mode (Lucene runs in-process; ours normally pays 2 Spark jobs
-    * per query). When the query terms' total posting count (known from
-    * TermStatistics before touching any posting data) is at most
+    * per query). When [[place]] finds the query terms' total posting count
+    * (known from TermStatistics before touching any posting data) within
     * `maxLocalPostings`, the posting rows are fetched to the driver via the
-    * same pushed-down scan and the SAME segment kernels run locally —
-    * millisecond latency, rank-identical by construction. Queries over hot
-    * terms exceed the budget and fall back to the distributed path, so this
-    * is safe at any corpus size.
+    * same pushed-down scan and the SAME leaves run locally — millisecond
+    * latency, rank-identical by construction. Other queries run
+    * distributed, so this is safe at any corpus size.
     */
   def searchLocal(spark: SparkSession, q0: Query, k: Int,
-                  maxLocalPostings: Long = 5000000L): Array[ScoredDoc] = {
-    val (Seq(q), stats, ctx) = prepare(spark, Seq(q0), scoring = true)
-    // multi-term and tombstoned indexes stay distributed (deletes would need
-    // a live-docs fetch; correctness first, the fast path is an
-    // optimization), as do queries over the posting budget; the fallback
-    // reads the stats just computed from the memo
-    if (q.termPreds.nonEmpty || index.manifest.deletedCount > 0L ||
-        stats.values.map(_._1).sum > maxLocalPostings ||
-        (q.exists(_ == MatchAllQ) && index.stats.docCount > maxLocalPostings))
-      return search(spark, q, k).collect()
-    val rows = postingRows(spark, Seq(q)).collect().groupBy(_.segmentId)
-    // one shared run id: sequential leaves inherit each other's thresholds
-    // (Lucene's single-threaded leaf-order pruning benefit)
-    val runId = MaxScoreAccumulator.newRunId()
-    val hits = index.manifest.segments.iterator.flatMap { seg =>
-      val post = readers(rows.getOrElse(seg.segmentId, Array.empty[TermPostings]).iterator, ctx)
-      SegmentKernel.topK(q, post, seg, ctx, k, None, runId = runId)
-    }.toArray
-    hits.sortBy(h => (-h.score, h.docId)).take(k)
-  }
+                  maxLocalPostings: Long = 5000000L): Array[ScoredDoc] =
+    runTopK(spark, Seq(q0), k, localBudget = Some(maxLocalPostings)).head.hits
 
   /** Batch execution of a whole query set in ONE distributed job — the
-    * throughput shape for cluster-scale workloads (thousands of queries over
-    * 10^12 docs): postings for the union of all query terms are read once,
-    * every segment scores every query inside one cogroup pass, and per-query
-    * top-k merge happens in a tiny final aggregation (numSegments * k rows
-    * per query). QPS scales with executors because the (segment x query)
-    * work distributes evenly; per-query Spark job scheduling overhead is
-    * paid once for the set, not once per query. Term statistics come from
-    * the searcher's memo, so a repeated batch runs no stats job.
+    * throughput shape for cluster-scale workloads: postings for the union
+    * of all query terms are read once, every segment scores every query
+    * inside one pass, and the per-query merge sees numSegments * k rows per
+    * query. Per-query Spark job scheduling overhead is paid once for the
+    * set; term statistics come from the searcher's memo, so a repeated
+    * batch runs no stats job. Eager: the result is materialized.
     *
-    * Rank-identity: same kernels, same tie-break (score desc, global docId
+    * Rank-identity: same leaves, same tie-break (score desc, global docId
     * asc) as [[search]].
     */
   def searchMany(spark: SparkSession, queries: Seq[(String, Query)], k: Int): Dataset[QueryHit] = {
     import spark.implicits._
-    val t0 = System.nanoTime()
-    val ids = queries.map(_._1).toArray
-    val (qs, stats, ctx) = prepare(spark, queries.map(_._2), scoring = true)
-    val t1 = System.nanoTime()
-    // Task granularity: one-task-per-segment gives |segments| tasks — on a
-    // cluster whose core count approaches the segment count that is 1-2
-    // waves, and within-wave stragglers stop amortizing (the 4N level of
-    // the scaling bench measures exactly this). For SELECTIVE batches
-    // (small matched posting volume — the production query-log shape, known
-    // from the stats pass before touching any block) the kernel is sharded
-    // by query groups: each (segment, shard) task scores 1/shards of the
-    // queries, multiplying task count without ever splitting a posting
-    // list. The posting rows are replicated per shard, so sharding is
-    // gated on replicated volume staying small — a whole-vocabulary batch
-    // (matched postings ~ index size) keeps shards = 1 and the old plan,
-    // and so does a batch carrying multi-term predicates, whose expanded
-    // posting volume is unknown before the scan.
-    val totalPostings = math.max(1L, stats.values.map(_._1).sum)
-    val para = spark.sparkContext.defaultParallelism
+    val tops = runTopK(spark, queries.map(_._2), k)
+    spark.createDataset(queries.zip(tops).flatMap { case ((id, _), top) =>
+      top.hits.map(h => QueryHit(id, h.docId, h.score))
+    })
+  }
+
+  /** Where an eager top-k run executes, as [[place]] decides it. */
+  private case class Placement(local: Boolean, shards: Int, driverMerge: Boolean)
+
+  /** Replicated-posting budget for query-sharded runs: sharding duplicates
+    * the matched posting rows per shard, so it only engages when shards ×
+    * matched postings stays under this (selective batches — the query-log
+    * norm; a whole-vocabulary batch keeps one task per segment). */
+  private val ShardedPostingsBudget = 32000000L
+
+  /** The one placement gate of the eager top-k runs, decided from the term
+    * stats before any posting is read:
+    *  - In process only when the caller offers a posting budget
+    *    (searchLocal) and the queries' total posting count fits it.
+    *    Multi-term queries (expanded volume unknown before the scan),
+    *    tombstoned indexes (deletes would need a live-docs fetch) and a
+    *    MatchAll over more docs than the budget stay distributed.
+    *  - Query shards: one task per segment gives |segments| tasks — on a
+    *    cluster whose core count approaches the segment count that is 1-2
+    *    waves, and within-wave stragglers stop amortizing. Selective batches
+    *    shard the queries instead: each (segment, shard) task scores
+    *    1/shards of them, never splitting a posting list. ~4 tasks per core
+    *    (8 was measured net-negative: +10% Σ kernel from replicated decode
+    *    for no wall win), within the replicated-posting budget, never more
+    *    shards than queries (a shard without a query only idles), and one
+    *    shard for multi-term queries.
+    *  - Merge side: when even the pre-merge row bound (queries × segments ×
+    *    k) is within [[IndexSearcher.DriverMergeMaxRows]], the leaves are
+    *    collected and merged on the driver, skipping the exchange and stage
+    *    that dominated small batches; larger runs merge in a groupByKey.
+    */
+  private def place(spark: SparkSession, qs: Seq[Query], stats: Map[String, (Long, Long)],
+                    k: Int, localBudget: Option[Long]): Placement = {
+    val postings = stats.values.map(_._1).sum
+    val multiTerm = qs.exists(_.termPreds.nonEmpty)
+    val local = localBudget.exists(budget =>
+      !multiTerm && index.manifest.deletedCount == 0L && postings <= budget &&
+        !(qs.exists(_.exists(_ == MatchAllQ)) && index.stats.docCount > budget))
     val nSegs = index.manifest.segments.size
-    // ~4 tasks per core: enough waves that stragglers amortize, few enough
-    // that the per-shard decode replication stays cheap (8 tasks/core was
-    // measured net-negative: +10% Σ kernel from replicated decode for no
-    // wall win)
-    val shardsWanted = math.max(1, math.min(8, (4 * para) / math.max(1, nSegs)))
+    val shardsWanted = math.max(1, math.min(8, 4 * spark.sparkContext.defaultParallelism / math.max(1, nSegs)))
     val shards =
-      if (qs.exists(_.termPreds.nonEmpty)) 1
-      else math.min(shardsWanted, math.max(1L, ShardedPostingsBudget / totalPostings).toInt)
-    // per-task kernel CPU attribution (accumulators are ~free): Σ task
-    // kernel time is work-invariant across parallelism levels, so
-    // wall / (Σ/cores) separates engine scaling from host effects in the
-    // GRAFT_BATCH_TIMING line
-    val kernelNanos = spark.sparkContext.longAccumulator("graft-batch-kernel-nanos")
-    // one run id PER QUERY (shared by that query's segment/shard tasks):
-    // concurrent tasks in one executor JVM raise each other's floors
-    val runIds: Array[Long] = Array.fill(qs.size)(MaxScoreAccumulator.newRunId())
-    val perLeaf: Dataset[QueryHit] = leaves(spark, qs, ctx, shards) { (seg, rds, del, shard) =>
-      val tk0 = System.nanoTime()
-      val out = new scala.collection.mutable.ArrayBuffer[QueryHit]()
-      qs.iterator.zipWithIndex.foreach { case (q, qi) =>
-        if (qi % shards == shard)
-          SegmentKernel.topK(q, rds, seg, ctx, k, None, del, runIds(qi))
-            .foreach(sd => out += QueryHit(ids(qi), sd.docId, sd.score))
+      if (local || multiTerm) 1
+      else Seq(shardsWanted, math.max(1L, ShardedPostingsBudget / math.max(1L, postings)).toInt,
+        math.max(1, qs.size)).min
+    Placement(local, shards, local || qs.size.toLong * nSegs * k <= IndexSearcher.DriverMergeMaxRows)
+  }
+
+  /** The leaves of one (segment, shard): a [[SegmentKernel.leaf]] for each
+    * query of the shard (query i runs in shard i % shards). All leaves of
+    * query i share one [[MaxScoreAccumulator]] run id, so leaves in one
+    * executor JVM, or the sequential in-process ones, raise each other's
+    * pruning floor. Each call adds its kernel time (posting decode plus
+    * scoring) to `kernelNanos`. */
+  private def segmentLeaves(qs: Seq[Query], ctx: QueryContext, k: Int, after: Option[(Double, Long)],
+                            hitsThreshold: Long, shards: Int, kernelNanos: LongAccumulator)
+      : (SegmentMeta, Map[String, TermReader], Array[Int], Int) => Iterator[LeafTopK] = {
+    val runIds = Array.fill(qs.size)(MaxScoreAccumulator.newRunId())
+    (seg, rds, del, shard) => {
+      val t0 = System.nanoTime()
+      val out = qs.indices.filter(_ % shards == shard).map { qi =>
+        val c = SegmentKernel.leaf(qs(qi), rds, seg, ctx, k, after, del, runIds(qi), hitsThreshold)
+        LeafTopK(qi, c.hits, c.collected, c.pruned)
       }
-      kernelNanos.add(System.nanoTime() - tk0)
+      kernelNanos.add(System.nanoTime() - t0)
       out.iterator
     }
-    // per-query merge ≡ MergeTopDocs; the result is small by construction
-    // (≤ queries×k rows), so materialize eagerly. When even the PRE-merge
-    // row bound (queries × segments × k) is driver-small, collect the leaf
-    // hits directly and merge on the driver — same sort, same take(k),
-    // identical rows — skipping the groupByKey exchange+stage that
-    // dominated small batches (e.g. 200 queries × 8 segments × 10 = 16k
-    // rows do not need a 32-task shuffle). Large batches (the scaling
-    // bench's 4000/40000-query rows included) keep the distributed merge.
-    val merged: Array[QueryHit] =
-      if (qs.size.toLong * nSegs * k <= IndexSearcher.DriverMergeMaxRows) {
-        perLeaf.collect().groupBy(_.queryId).valuesIterator.flatMap { hits =>
-          hits.sortBy(h => (-h.score, h.docId)).take(k)
-        }.toArray
-      } else
-        perLeaf.groupByKey(_.queryId).flatMapGroups { (_, hits) =>
-          hits.toArray.sortBy(h => (-h.score, h.docId)).take(k).iterator
-        }.collect()
-    val t2 = System.nanoTime()
+  }
+
+  /** The one eager top-k runner behind searchWithTotal, searchLocal and
+    * searchMany: [[prepare]], [[place]], the [[segmentLeaves]] in process
+    * or through [[runSegments]], then one [[IndexSearcher.mergeTopK]] per
+    * query on the driver or inside the exchange. Element i is query i's
+    * merged top-k. */
+  private def runTopK(spark: SparkSession, qs0: Seq[Query], k: Int, hitsThreshold: Long = 0L,
+                      localBudget: Option[Long] = None): Array[LeafTopK] = {
+    import spark.implicits._
+    val t0 = System.nanoTime()
+    val (qs, stats, ctx) = prepare(spark, qs0, scoring = true, k)
+    val t1 = System.nanoTime()
+    val p = place(spark, qs, stats, k, localBudget)
+    val kernelNanos = spark.sparkContext.longAccumulator(IndexSearcher.KernelNanos)
+    val leavesOf = segmentLeaves(qs, ctx, k, None, hitsThreshold, p.shards, kernelNanos)
+    // every query gets an entry: one without leaves (an index without
+    // segments, which always merges here) merges to no hits
+    def onDriver(leaves: Array[LeafTopK]): Array[LeafTopK] = {
+      val byQuery = leaves.groupBy(_.query)
+      Array.tabulate(qs.size)(qi => IndexSearcher.mergeTopK(k)(qi, byQuery.getOrElse(qi, Array.empty).iterator))
+    }
+    val tops =
+      if (p.local) {
+        val rows = postingRows(spark, qs).collect().groupBy(_.segmentId)
+        onDriver(index.manifest.segments.toArray.flatMap { seg =>
+          leavesOf(seg, readers(rows.getOrElse(seg.segmentId, Array.empty).iterator, ctx), Array.emptyIntArray, 0)
+        })
+      } else {
+        val perLeaf = leaves(spark, qs, ctx, p.shards)(leavesOf)
+        if (p.driverMerge) onDriver(perLeaf.collect())
+        else perLeaf.groupByKey(_.query).mapGroups(IndexSearcher.mergeTopK(k)).collect().sortBy(_.query)
+      }
     if (sys.env.contains("GRAFT_BATCH_TIMING"))
-      System.err.println(f"[graft-batch] rewrite+stats=${(t1 - t0) / 1e9}%.2f " +
-        f"kernel+merge=${(t2 - t1) / 1e9}%.2f taskKernelSum=${kernelNanos.value / 1e9}%.2f")
-    spark.createDataset(merged.toSeq)
+      System.err.println(f"[graft-batch] rewrite+stats=${(t1 - t0) / 1e9}%.2f kernel+merge=" +
+        f"${(System.nanoTime() - t1) / 1e9}%.2f taskKernelSum=${kernelNanos.value / 1e9}%.2f")
+    tops
   }
 
   /** Exhaustive (doc, score) stream for every match — oracle/verify path. */
@@ -870,7 +905,7 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
           val c = new CountCollector
           SegmentKernel.run(q, rds, seg, ctx, del, c)
           Iterator.single(c.n)
-        }.reduce(_ + _)
+        }.collect().sum
     }
   }
 
@@ -901,12 +936,6 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
       (seg, rows, del, shard) => kernel(seg, readers(rows, ctx), del, shard)
     }
 
-  /** Replicated-posting budget for query-sharded batch kernels: sharding
-    * duplicates the matched posting rows per shard, so it only engages when
-    * shards × matched postings stays under this (selective batches — the
-    * query-log norm; a whole-vocabulary batch keeps one task per segment). */
-  private val ShardedPostingsBudget = 32000000L
-
   /** The one segment runner: a per-(segment, queryShard) kernel over the
     * `rows` keyed by segmentId, with EXACTLY one group per task via an
     * explicit partitioner. (A hash cogroup of S segment-groups into S
@@ -915,15 +944,18 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     * tiny and rides in the closure; sentinel rows guarantee every (segment,
     * shard) partition runs the kernel even when no query term occurs in it
     * (MatchAllDocs must still match there). With shards > 1 the rows and
-    * tombstones are replicated per shard (caller gates on volume) so each
-    * shard-task is self-contained — [[searchMany]] uses that to keep task
-    * count well above the core count on selective batches. Row payloads
-    * are opaque: [[MultiFieldSearcher]] runs its (field, postings) rows
-    * through here over the segment geometry all its fields share.
+    * tombstones are replicated per shard ([[place]] gates on volume) so
+    * each shard-task is self-contained — query-sharded top-k runs use that
+    * to keep task count well above the core count on selective batches.
+    * Row payloads are opaque: [[MultiFieldSearcher]] runs its (field,
+    * postings) rows through here over the segment geometry all its fields
+    * share. An index without segments (every doc deleted, then merged)
+    * yields no rows and runs no job.
     */
   private[search] def runSegments[P <: AnyRef, T: Encoder : ClassTag](
       spark: SparkSession, rows: RDD[(Int, P)], shards: Int = 1)(
       kernel: (SegmentMeta, Iterable[P], Array[Int], Int) => Iterator[T]): Dataset[T] = {
+    if (index.manifest.segments.isEmpty) return spark.emptyDataset[T]
     val segMetas = index.manifest.segments.map(s => s.segmentId -> s).toMap
     val nSegParts = segMetas.keys.max + 1
     val nParts = nSegParts * shards

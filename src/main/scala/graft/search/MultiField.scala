@@ -189,7 +189,7 @@ final class MultiFieldSearcher(val index: MultiFieldIndex) extends Serializable 
       val post = fieldRows.iterator.map { case (f, tp) => (f, tp.term) -> tp }.toMap
       val collector = new TopKCollector(k, seg.docBase, None)
       mkScorer(fieldCtx, post, collector).foreach(SegmentKernel.run(_, collector))
-      collector.results.iterator.map { case (gid, sc) => ScoredDoc(gid, sc) }
+      collector.hits.iterator
     }
     perLeaf.toDF("doc_id", "s")
       .select(col("doc_id"), round(col("s"), 6).as("score"))

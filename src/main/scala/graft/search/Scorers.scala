@@ -1196,12 +1196,15 @@ final class TopKCollector(k: Int, docBase: Long, after: Option[(Double, Long)],
     * shared cell, the threshold is the max of the local heap root and the
     * strict cross-leaf floor (see [[MaxScoreAccumulator]] safety note). */
   override def minCompetitive: Double = {
+    // k = 0 keeps no hits, so nothing is ever competitive to prune against:
+    // the leaf only counts (searchWithTotal with k = 0 reports an exact total)
+    val full = k > 0 && size >= k
     val local =
-      if (size >= k && collected >= hitsThreshold) { pruned = true; hScore(0) }
+      if (full && collected >= hitsThreshold) { pruned = true; hScore(0) }
       else Double.NegativeInfinity
     if (sharedCell == null) local
     else {
-      if (size >= k && hScore(0) > lastPublished) {
+      if (full && hScore(0) > lastPublished) {
         // publishing is always safe (the root IS an achieved k-th score);
         // refresh the cached floor on the same CAS round-trip
         lastPublished = hScore(0)
@@ -1260,7 +1263,7 @@ final class TopKCollector(k: Int, docBase: Long, after: Option[(Double, Long)],
     if (size < k) {
       hScore(size) = score; hDoc(size) = gid; size += 1
       siftUp(size - 1)
-    } else if (score > hScore(0) || (score == hScore(0) && gid < hDoc(0))) {
+    } else if (k > 0 && (score > hScore(0) || (score == hScore(0) && gid < hDoc(0)))) {
       hScore(0) = score; hDoc(0) = gid
       siftDown()
     }
@@ -1275,6 +1278,9 @@ final class TopKCollector(k: Int, docBase: Long, after: Option[(Double, Long)],
     val sorted = idx.sortBy(j => (-hScore(j), hDoc(j)))
     sorted.map(j => (hDoc(j), hScore(j)))
   }
+
+  /** [[results]] as hits. */
+  def hits: Array[ScoredDoc] = results.map { case (d, s) => ScoredDoc(d, s) }
 }
 
 object TopKCollector {

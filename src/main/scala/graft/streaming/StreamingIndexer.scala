@@ -51,8 +51,7 @@ object StreamingIndexer {
       throw new IllegalStateException(
         s"$indexDir contains index data but no committed manifest — refusing a " +
           "wiping rebuild from one micro-batch; inspect/rebuild explicitly")
-    val base = prev.map(m =>
-      (m.segments.map(_.segmentId).max + 1).toLong * m.segmentSize).getOrElse(0L)
+    val base = prev.map(_.nextDocBase).getOrElse(0L)
     // rank within the batch -> dense ids at the next segment boundary,
     // DISTRIBUTED via the shared assignDenseIds (a Window.orderBy with no
     // partitionBy would pull the whole micro-batch into ONE task — a burst

@@ -218,6 +218,26 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
+  test("k contract: k = 0 keeps no hits on every top-k entry point, k < 0 is rejected before any job") {
+    val q: Query = BoolQ(should = Seq(TermQ("import"), TermQ("def")))
+    assert(searcher.search(spark, q, 0).collect().isEmpty)
+    assert(searcher.searchLocal(spark, q, 0).isEmpty)
+    assert(searcher.searchLocal(spark, q, 0, maxLocalPostings = 1).isEmpty)
+    assert(searcher.searchMany(spark, Seq("a" -> q, "b" -> TermQ("id_17")), 0).collect().isEmpty)
+    val (hits, total) = searcher.searchWithTotal(spark, q, 0)
+    assert(hits.isEmpty && total == TotalHits(Oracle.count(corpus, q), TotalHits.EQ),
+      s"k = 0 still counts every match: $total")
+    val negative: Seq[(String, () => Any)] = Seq(
+      "search" -> (() => searcher.search(spark, q, -1)),
+      "searchLocal" -> (() => searcher.searchLocal(spark, q, -1)),
+      "searchWithTotal" -> (() => searcher.searchWithTotal(spark, q, -1)),
+      "searchMany" -> (() => searcher.searchMany(spark, Seq("a" -> q), -1)))
+    negative.foreach { case (entry, call) =>
+      val (jobs, _) = SparkWork(spark)(intercept[IllegalArgumentException](call()))
+      assert(jobs == 0, s"$entry started $jobs jobs before rejecting k = -1")
+    }
+  }
+
   test("regex literal-prefix pushdown is SOUND (quantified/alternated prefixes)") {
     // "imports?" must match "import" — a naive startsWith("imports") pushdown
     // would filter the term out of the scan and silently drop its docs

@@ -130,4 +130,29 @@ class ForceMergeSpec extends AnyFunSuite {
     assert(s.count(spark, MatchAllQ) == 128L)
     assert(s.search(spark, TermQ("keeper"), 5).collect().nonEmpty)
   }
+
+  test("an index emptied by deleteByQuery(MatchAll) + forceMerge: every entry point is empty, an append is searchable") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fm-empty").toString
+    val cfg2 = BuildConfig(numSegments = 2, chunkDocs = 128)
+    IndexBuilder.build(spark, (0 until 256).map(i => (i.toLong, s"keeper w${i % 5}")).toDF("doc_id", "text"),
+      "doc_id", "text", dir, cfg2)
+    IndexOps.deleteByQuery(spark, dir, MatchAllQ)
+    val empty = IndexOps.forceMerge(spark, dir)
+    assert(empty.manifest.segments.isEmpty)
+    val s = new IndexSearcher(empty)
+    val q: Query = BoolQ(should = Seq(TermQ("keeper"), TermQ("w1")))
+    assert(s.count(spark, MatchAllQ) == 0L && s.count(spark, q) == 0L)
+    assert(s.search(spark, q, 5).collect().isEmpty)
+    assert(s.searchLocal(spark, q, 5).isEmpty)
+    assert(s.searchWithTotal(spark, q, 5) match { case (hits, t) => hits.isEmpty && t == TotalHits(0L, TotalHits.EQ) })
+    assert(s.searchMany(spark, Seq("a" -> q, "b" -> MatchAllQ), 5).collect().isEmpty)
+    assert(s.scoreAll(spark, q).collect().isEmpty)
+    assert(empty.nextDocBase == 0L)
+
+    val fresh = (0 until 10).map(i => (i.toLong, s"fresh w$i"))
+    val appended = IndexBuilder.append(spark, fresh.toDF("doc_id", "text"), "doc_id", "text", dir, cfg2)
+    val s2 = new IndexSearcher(appended)
+    assert(s2.search(spark, TermQ("fresh"), 20).collect().map(_.docId).toSet == (0L until 10L).toSet)
+    assert(s2.count(spark, TermQ("keeper")) == 0L)
+  }
 }

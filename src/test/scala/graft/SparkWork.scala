@@ -3,29 +3,48 @@ package graft
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskStart}
 import org.apache.spark.sql.SparkSession
 
-/** Counts the Spark jobs and stages a block of driver code starts. */
+/** Counts the Spark jobs, stages and tasks a block of driver code starts. */
 object SparkWork {
 
-  /** Jobs and stages started by `body`, read off a listener attached around
-    * it. The listener bus is asynchronous, so it is drained before and
-    * after with a marker job: the marker's end event arrives after every
-    * event of the jobs started before it. */
+  /** Jobs and stages started by `body`, and the tasks it launched in
+    * result stages (one task per result partition). */
+  final case class Work(jobs: Int, stages: Int, resultTasks: Int)
+
+  /** Jobs and stages started by `body`. */
   def apply(spark: SparkSession)(body: => Unit): (Int, Int) = {
+    val w = measure(spark)(body)
+    (w.jobs, w.stages)
+  }
+
+  /** [[Work]] of `body`, read off a listener attached around it. The
+    * listener bus is asynchronous, so it is drained before and after with a
+    * marker job: the marker's end event arrives after every event of the
+    * jobs started before it. */
+  def measure(spark: SparkSession)(body: => Unit): Work = {
     val sc = spark.sparkContext
     val markers = ConcurrentHashMap.newKeySet[Int]()
     val jobs = new AtomicInteger
     val stages = new AtomicInteger
+    val resultStages = ConcurrentHashMap.newKeySet[Int]()
+    val resultTasks = new AtomicInteger
     @volatile var drained = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(p => p.getProperty("spark.jobGroup.id") == "drain"))
+        if (Option(e.properties).exists(p => p.getProperty("spark.jobGroup.id") == "drain")) {
           markers.add(e.jobId)
-        else { jobs.incrementAndGet(); stages.addAndGet(e.stageIds.size) }
+        } else {
+          jobs.incrementAndGet(); stages.addAndGet(e.stageIds.size)
+          // the scheduler creates a job's result stage after all its parents,
+          // so it holds the job's highest stage id
+          resultStages.add(e.stageIds.max)
+        }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (markers.contains(e.jobId)) drained.countDown()
+      override def onTaskStart(e: SparkListenerTaskStart): Unit =
+        if (resultStages.contains(e.stageId)) resultTasks.incrementAndGet()
     }
     def drain(): Unit = {
       drained = new CountDownLatch(1)
@@ -36,10 +55,10 @@ object SparkWork {
     sc.addSparkListener(listener)
     try {
       drain()
-      jobs.set(0); stages.set(0)
+      jobs.set(0); stages.set(0); resultTasks.set(0)
       body
       drain()
-      (jobs.get, stages.get)
+      Work(jobs.get, stages.get, resultTasks.get)
     } finally sc.removeSparkListener(listener)
   }
 }

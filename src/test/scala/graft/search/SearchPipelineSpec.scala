@@ -66,4 +66,14 @@ class SearchPipelineSpec extends AnyFunSuite {
     val (searchJobs, _) = SparkWork(spark)(new IndexSearcher(index).search(spark, warmQ, 10).collect())
     assert(searchJobs <= 2, s"search started $searchJobs jobs")
   }
+
+  test("a one-query searchMany runs one query shard: one result task per segment") {
+    val s = new IndexSearcher(index)
+    val q: Query = BoolQ(should = Seq(TermQ("import"), TermQ("id_17")))
+    s.termStats(spark, q.terms) // the stats job is not what is measured
+    val work = SparkWork.measure(spark)(s.searchMany(spark, Seq("only" -> q), 10).collect())
+    val segments = index.manifest.segments.size
+    assert(work.resultTasks > 0 && work.resultTasks <= segments,
+      s"${work.resultTasks} result tasks over $segments segments x 1 query shard ($work)")
+  }
 }
