@@ -251,14 +251,12 @@ object IndexBuilder {
              contentCol: String, indexDir: String,
              cfg: BuildConfig = BuildConfig(),
              inputPath: String = "",
-             streamBatch: Long = -1L): BuiltIndex = {
-    val prev = IndexIO.readManifest(spark, indexDir)
-      .getOrElse(throw new IllegalStateException(s"append requires a committed index at $indexDir"))
-    buildInternal(spark, docs, docIdCol, contentCol, indexDir, cfg, inputPath, Some(prev),
-      streamBatch = streamBatch)
-  }
+             streamBatch: Long = -1L): BuiltIndex =
+    buildInternal(spark, docs, docIdCol, contentCol, indexDir, cfg, inputPath,
+      Some(IndexIO.committed(spark, indexDir)), streamBatch = streamBatch)
 
-  private def buildInternal(spark: SparkSession, docs: DataFrame, docIdCol: String,
+  /** A build (`prev` = None) or an append onto the committed manifest `prev`. */
+  private[graft] def buildInternal(spark: SparkSession, docs: DataFrame, docIdCol: String,
             contentCol: String, indexDir: String,
             cfg: BuildConfig,
             inputPath: String,
@@ -399,9 +397,17 @@ object IndexBuilder {
         spark.read.parquet(stagingDir).as[Stage1Row]
       } else chunked.persist(StorageLevel.MEMORY_AND_DISK)
 
+    // the writing tasks of docmeta and stage 2 sum the segment stats (both
+    // maps run in their write job's result stage)
+    val segStats = new SegmentStats
+    spark.sparkContext.register(segStats)
+
     // ---- doc metadata (norms + sha256 invariant), docId-sorted files ----
     staged.filter(_.term == null)
-      .map(r => DocMeta(r.segmentId, r.segmentId.toLong * segSizeL + r.localDoc, r.norm, r.sha))
+      .map { r =>
+        segStats.addDoc(r.segmentId, r.norm)
+        DocMeta(r.segmentId, r.segmentId.toLong * segSizeL + r.localDoc, r.norm, r.sha)
+      }
       .write.mode("overwrite").parquet(docmetaDir)
     // term vectors: their own narrow map over the input (Lucene keeps TV in
     // separate per-segment files too — read by docId, not by term)
@@ -415,53 +421,25 @@ object IndexBuilder {
     val merged: Dataset[TermPostings] = staged.filter(_.term != null)
       .repartition(outParts, $"segmentId", $"term")
       .sortWithinPartitions($"segmentId", $"term", $"salt", $"firstDoc")
-      .mapPartitions(mergeChunks _)
+      .mapPartitions(mergeChunks(_, segStats))
     merged.write.mode("overwrite").parquet(postingsDir)
     phase("stage2-merge")
 
-    // ---- stats + manifest (small aggs; driver holds only S rows) --------
-    // ONE aggregation pass over the still-cached staged dataset covers both
-    // posting and doc stats (merge only concatenates chunk rows, so summing
-    // chunk-level docFreq/ttf equals the merged per-term totals; distinct
-    // terms per segment = merged term count). Re-reading the two written
-    // parquet trees here would add two serial jobs per build.
-    val segStats = staged.toDF()
-      .groupBy($"segmentId")
-      .agg(
-        sum(when($"term".isNotNull, $"docFreq")).as("sumDocFreq"),
-        sum(when($"term".isNotNull, $"totalTermFreq")).as("sumTotalTermFreq"),
-        countDistinct($"term").as("termCount"), // countDistinct skips nulls
-        count(when($"term".isNull, 1)).as("docCount"),
-        sum(when($"term".isNull && $"norm" > 0, 1L).otherwise(0L)).as("fieldDocCount"))
-      .collect()
-      .map(r => r.getInt(0) -> (
-        if (r.isNullAt(1)) 0L else r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(5)))
-      .toMap
+    // ---- stats + manifest: the written rows' sums, no job ----------------
     if (!cfg.stageCheckpoint) staged.unpersist(blocking = false)
+    val segs = prev.map(_.segments).getOrElse(Nil) ++ segStats.metas(segSize)
     phase("stats")
-
-    val newSegs = segStats.keys.toSeq.sorted.map { sid =>
-      val (sdf, sttf, tc, dc, fdc) = segStats(sid)
-      SegmentMeta(sid, sid.toLong * segSizeL, dc, fdc, sttf, sdf, tc, postingCount = sdf,
-        bytesWritten = 0L,
-        lineageSha = sha256Hex(s"$sid:${sid.toLong * segSizeL}:$dc:$sttf"))
-    }
-    val segs = prev.map(_.segments).getOrElse(Nil) ++ newSegs
     val corpusSha = prev match {
       case Some(m) => sha256Hex(s"${m.corpusSha}+${indexFingerprint(inputPath, docCount)}")
       case None => indexFingerprint(inputPath, docCount)
     }
-    val manifest = Manifest(
+    val built = IndexIO.commit(spark, indexDir, Manifest(
       generation = generation,
       minGen = prev.map(_.minGen).getOrElse(generation),
       numSegments = segs.size,
       segmentSize = segSize,
       stats = IndexStats.of(segs), segments = segs,
       corpusSha = corpusSha,
-      postingsBytes = IndexIO.dirBytes(spark, s"$indexDir/postings"),
-      docmetaBytes = IndexIO.dirBytes(spark, s"$indexDir/docmeta"),
       // appends preserve committed tombstones (update = delete + append)
       deleteGen = prev.map(_.deleteGen).getOrElse(0L),
       deletedCount = prev.map(_.deletedCount).getOrElse(0L),
@@ -483,14 +461,13 @@ object IndexBuilder {
       // interleave into the committed sort order — the global
       // docId-order == sort-order invariant no longer holds and the sorted
       // fast path must refuse (cleared, not inherited)
-      indexSort = if (prev.isDefined) "" else indexSort)
-    IndexIO.writeManifest(spark, indexDir, manifest)
+      indexSort = if (prev.isDefined) "" else indexSort))
     // drop STALE staged generations (this one stays reusable for a
     // same-fingerprint re-build; prior gens would otherwise accumulate
     // without bound across repeated checkpointed builds into one dir)
     if (cfg.stageCheckpoint) IndexIO.deleteStaging(spark, indexDir, keepGen = generation)
     phase("manifest")
-    new BuiltIndex(indexDir, manifest)
+    built
   }
 
   /** Streaming per-chunk invert: input iterator sorted by docId; one
@@ -568,9 +545,10 @@ object IndexBuilder {
     * concatenating block arrays preserves ascending docIds — the Lucene
     * merge invariant. The ascending invariant is ASSERTED here: overlapping
     * input partitions (a violated assumeContiguous contract) fail the build
-    * instead of committing a corrupt index.
+    * instead of committing a corrupt index. Each merged row is added to
+    * `stats`.
     */
-  private def mergeChunks(it: Iterator[Stage1Row]): Iterator[TermPostings] = {
+  private def mergeChunks(it: Iterator[Stage1Row], stats: SegmentStats): Iterator[TermPostings] = {
     new Iterator[TermPostings] {
       private val buf = it.buffered
       def hasNext: Boolean = buf.hasNext
@@ -590,8 +568,10 @@ object IndexBuilder {
           df += c.docFreq; ttf += c.totalTermFreq; blocks ++= c.blocks
           lastMax = c.blocks(c.blocks.length - 1).maxDoc
         }
-        TermPostings(seg, term, df, ttf, blocks.result(),
+        val tp = TermPostings(seg, term, df, ttf, blocks.result(),
           termLen = term.codePointCount(0, term.length))
+        stats.addPostings(tp)
+        tp
       }
     }
   }

@@ -52,6 +52,22 @@ object IndexIO {
       .sortBy(_._1)
   }
 
+  /** The committed manifest of `indexDir` — every lifecycle operation's
+    * starting point; throws when there is none. */
+  def committed(spark: SparkSession, indexDir: String): Manifest =
+    readManifest(spark, indexDir)
+      .getOrElse(throw new IllegalStateException(s"no committed index at $indexDir"))
+
+  /** Commit `m` as the index's next manifest, with `postingsBytes` and
+    * `docmetaBytes` set to the bytes of its visible generations — the one
+    * definition of both for every lifecycle commit. */
+  def commit(spark: SparkSession, indexDir: String, m: Manifest): BuiltIndex = {
+    def bytes(tree: String) = m.liveGens.map(g => dirBytes(spark, s"$indexDir/$tree/gen=$g")).sum
+    val sized = m.copy(postingsBytes = bytes("postings"), docmetaBytes = bytes("docmeta"))
+    writeManifest(spark, indexDir, sized)
+    new BuiltIndex(indexDir, sized)
+  }
+
   def writeManifest(spark: SparkSession, indexDir: String, m: Manifest): Unit = {
     import spark.implicits._
     val dir = manifestPath(indexDir)
@@ -176,6 +192,58 @@ object IndexIO {
   }
 }
 
+/** Per-segment sums of the rows a write job writes: sumDocFreq,
+  * sumTotalTermFreq and term count from its [[TermPostings]] rows, doc count
+  * and field doc count from its [[DocMeta]] rows — the field stats Lucene
+  * fills in while it writes a segment. The write tasks of a build or a merge
+  * feed it row by row, and the driver turns the sums into [[SegmentMeta]]s,
+  * so no job re-reads what was just written. Feed it ONLY in code that runs
+  * in a write job's result stage: Spark applies a result task's accumulator
+  * update once, whereas a re-run map stage would add its rows twice.
+  */
+private[index] final class SegmentStats
+    extends org.apache.spark.util.AccumulatorV2[(Int, Array[Long]), Map[Int, Array[Long]]] {
+  // per segment: sumDocFreq, sumTotalTermFreq, terms, docs written,
+  // docs written with >= 1 token, docs read (a merge reads deleted docs too)
+  private val sums = scala.collection.mutable.HashMap.empty[Int, Array[Long]]
+  private def of(seg: Int): Array[Long] = sums.getOrElseUpdate(seg, new Array[Long](6))
+
+  def addPostings(tp: TermPostings): Unit = {
+    val a = of(tp.segmentId); a(0) += tp.docFreq; a(1) += tp.totalTermFreq; a(2) += 1
+  }
+  /** A doc row read by the writing task; `written` = it is in the output. */
+  def addDoc(seg: Int, norm: Int, written: Boolean = true): Unit = {
+    val a = of(seg)
+    if (written) { a(3) += 1; if (norm > 0) a(4) += 1 }
+    a(5) += 1
+  }
+
+  def isZero: Boolean = sums.isEmpty
+  def copy(): SegmentStats = { val c = new SegmentStats; c.merge(this); c }
+  def reset(): Unit = sums.clear()
+  def add(v: (Int, Array[Long])): Unit = {
+    val a = of(v._1)
+    for (i <- a.indices) a(i) += v._2(i)
+  }
+  def merge(other: org.apache.spark.util.AccumulatorV2[(Int, Array[Long]), Map[Int, Array[Long]]]): Unit =
+    other.value.foreach(add)
+  def value: Map[Int, Array[Long]] = sums.toMap
+
+  /** Docs read per segment that the writing tasks read any doc of. */
+  def docsRead: Map[Int, Long] = sums.collect { case (sid, a) if a(5) > 0 => sid -> a(5) }.toMap
+
+  /** The SegmentMeta of every segment with a written doc, ascending. The
+    * lineage salt is empty for a build and names the merge otherwise. */
+  def metas(segmentSize: Long, lineageSalt: String = ""): Seq[SegmentMeta] =
+    sums.toSeq.filter(_._2(3) > 0).sortBy(_._1).map { case (sid, a) =>
+      val docBase = sid.toLong * segmentSize
+      val salt = if (lineageSalt.isEmpty) "" else s":$lineageSalt"
+      SegmentMeta(sid, docBase, docCount = a(3), fieldDocCount = a(4), sumTotalTermFreq = a(1),
+        sumDocFreq = a(0), termCount = a(2), postingCount = a(0), bytesWritten = 0L,
+        lineageSha = IndexBuilder.sha256Hex(s"$sid:$docBase:${a(3)}:${a(1)}$salt"))
+    }
+}
+
 /** Handle to a committed index generation. */
 final class BuiltIndex(val indexDir: String, val manifest: Manifest) extends Serializable {
   def segmentSize: Long = manifest.segmentSize
@@ -233,10 +301,8 @@ final class BuiltIndex(val indexDir: String, val manifest: Manifest) extends Ser
     })
   }
 
-  /** VISIBLE data generations of this manifest: [minGen, generation] minus
-    * the dead (tiered-merged) generations. */
-  def liveGens: Seq[Long] =
-    (manifest.minGen to manifest.generation).filterNot(manifest.deadGens.contains)
+  /** VISIBLE data generations of this manifest ([[Manifest.liveGens]]). */
+  def liveGens: Seq[Long] = manifest.liveGens
 
   /** Posting lists under `postings/gen=N/` (one subdir per committed
     * generation; `gen` is a hive-style partition column). Files are written

@@ -26,8 +26,7 @@ object IndexOps {
     * committed generation (the same handle if nothing new matched). */
   def deleteByQuery(spark: SparkSession, indexDir: String, q: Query): BuiltIndex = {
     import spark.implicits._
-    val m = IndexIO.readManifest(spark, indexDir)
-      .getOrElse(throw new IllegalStateException(s"no committed index at $indexDir"))
+    val m = IndexIO.committed(spark, indexDir)
     val idx = new BuiltIndex(indexDir, m)
     val searcher = new IndexSearcher(idx)
     val segSize = m.segmentSize
@@ -46,9 +45,7 @@ object IndexOps {
       // crashed append into the committed-visibility window.
       val dgen = m.deleteGen + 1
       newDel.write.mode("overwrite").parquet(s"$indexDir/deletes/gen=$dgen")
-      val m2 = m.copy(deleteGen = dgen, deletedCount = m.deletedCount + n)
-      IndexIO.writeManifest(spark, indexDir, m2)
-      new BuiltIndex(indexDir, m2)
+      IndexIO.commit(spark, indexDir, m.copy(deleteGen = dgen, deletedCount = m.deletedCount + n))
     } finally newDel.unpersist(blocking = false)
   }
 
@@ -63,125 +60,43 @@ object IndexOps {
     */
   final case class MergePolicy(smallGenBytes: Long = 64L << 20, minMerge: Int = 2)
 
-  /** Incremental (tiered) compaction: rewrite ONLY the small generations
+  /** Incremental (tiered) compaction: [[merge]] ONLY the small generations
     * into one new generation, leaving big ones alone — the remedy for a day
     * of streaming micro-batches (thousands of tiny `gen=N` dirs) that does
-    * NOT pay forceMerge's full-index rewrite. Tombstones of the merged
-    * segments are reclaimed (dense docId remap + per-segment stat
-    * correction, exactly forceMerge's semantics restricted to those
-    * segments); tombstones of untouched segments survive, consolidated into
-    * a fresh deletes generation above the new `minDeleteGen` floor so the
-    * superseded pre-remap dirs can never be read again. Commit is the usual
-    * atomic manifest flip: the merged gens enter `deadGens` (invisible) and
-    * their dirs are deleted only after the commit is durable.
-    *
-    * Returns the same handle when no merge was warranted. Repeated calls
-    * converge: merged output counts as one (possibly big) generation.
+    * NOT pay forceMerge's full-index rewrite. Returns the same handle when
+    * no merge was warranted. Repeated calls converge: merged output counts
+    * as one (possibly big) generation.
     */
   def maybeMerge(spark: SparkSession, indexDir: String,
                  policy: MergePolicy = MergePolicy(),
                  outputPartitions: Option[Int] = None): BuiltIndex = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val m = IndexIO.readManifest(spark, indexDir)
-      .getOrElse(throw new IllegalStateException(s"no committed index at $indexDir"))
-    val idx = new BuiltIndex(indexDir, m)
+    val m = IndexIO.committed(spark, indexDir)
     // defensive exists(): a manifest gen whose dir is gone (e.g. a legacy
     // pre-fix manifest) must not become a zero-byte merge candidate
-    val live = idx.liveGens.filter(g => IndexIO.exists(spark, s"$indexDir/postings/gen=$g"))
-    val candidates = live.filter { g =>
-      IndexIO.dirBytes(spark, s"$indexDir/postings/gen=$g") < policy.smallGenBytes
+    val candidates = m.liveGens.filter { g =>
+      val dir = s"$indexDir/postings/gen=$g"
+      IndexIO.exists(spark, dir) && IndexIO.dirBytes(spark, dir) < policy.smallGenBytes
     }
-    if (candidates.size < policy.minMerge) return idx
-    val gen = m.generation + 1
-    val segSize = m.segmentSize
-    val outParts = outputPartitions.getOrElse(spark.sessionState.conf.numShufflePartitions)
-    val candSet = candidates.toSet
-
-    def readSub(root: String): org.apache.spark.sql.DataFrame =
-      spark.read.option("basePath", root).parquet(candidates.map(g => s"$root/gen=$g"): _*)
-
-    // segments contained in the candidate gens (builds/appends write whole
-    // segments into one gen dir, so segment -> gen is a function; ASSERT it)
-    val mergedSegs: Set[Int] = readSub(s"$indexDir/docmeta")
-      .select("segmentId").distinct().collect().map(_.getInt(0)).toSet
-    val otherGens = live.filterNot(candSet)
-    if (otherGens.nonEmpty) {
-      val overlap = spark.read.option("basePath", s"$indexDir/docmeta")
-        .parquet(otherGens.map(g => s"$indexDir/docmeta/gen=$g"): _*)
-        .select("segmentId").distinct().collect().map(_.getInt(0)).toSet
-        .intersect(mergedSegs)
-      require(overlap.isEmpty,
-        s"segments $overlap span merged and unmerged generations — gen-per-segment invariant violated")
-    }
-
-    val allDels = idx.deleteRows(spark)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val delRdd = allDels.filter(d => mergedSegs.contains(d.segmentId))
-        .rdd.map(d => (d.segmentId, d.localDoc))
-
-      // the SAME shared rewrite + stats recompute as forceMerge, over the
-      // candidate-gen subset (identical semantics by construction)
-      Compaction.rewriteGeneration(spark, indexDir, gen, segSize, m,
-        readSub(s"$indexDir/postings"), readSub(s"$indexDir/docmeta"),
-        if (m.hasTermVectors) readSub(s"$indexDir/termvectors") else null,
-        delRdd, outParts)
-      val (postAgg, docAgg) = Compaction.recomputeSegStats(spark, indexDir, gen)
-      val segs = m.segments.flatMap { s =>
-        if (!mergedSegs.contains(s.segmentId)) Some(s)
-        else Compaction.correctedMeta(s, postAgg, docAgg, s"tiered$gen")
-      } // merged segments whose docs were ALL deleted drop out
-
-      // ---- consolidate surviving tombstones above a new floor -------------
-      val survivors = allDels.filter(d => !mergedSegs.contains(d.segmentId))
-      val nSurv = survivors.count()
-      val (newDeleteGen, newMinDeleteGen) =
-        if (nSurv > 0L) { val g2 = m.deleteGen + 1; (g2, g2) } else (0L, 0L)
-      if (nSurv > 0L)
-        survivors.write.mode("overwrite").parquet(s"$indexDir/deletes/gen=$newDeleteGen")
-
-      val deadAll = (m.deadGens ++ candidates).distinct.sorted
-      // advance the visibility floor past any dead PREFIX: those generations
-      // can never become visible again, so keeping them listed only grows
-      // the manifest and every [minGen, generation] dirBytes/visibility scan
-      // without bound across long streaming append+merge cycles (deadGens
-      // stays bounded by the number of interior holes, which repeated
-      // merges collapse)
-      val newMinGen = (m.minGen to gen).filterNot(deadAll.contains).min // gen itself is live
-      val deadGens = deadAll.filter(_ > newMinGen)
-      val m2 = m.copy(
-        generation = gen, minGen = newMinGen,
-        numSegments = segs.size, stats = IndexStats.of(segs), segments = segs,
-        corpusSha = IndexBuilder.sha256Hex(s"${m.corpusSha}#tiered:$gen"),
-        deadGens = deadGens,
-        deleteGen = newDeleteGen, minDeleteGen = newMinDeleteGen, deletedCount = nSurv)
-      val m3 = m2.copy(
-        postingsBytes = (m2.minGen to gen).filterNot(deadGens.contains)
-          .map(g => IndexIO.dirBytes(spark, s"$indexDir/postings/gen=$g")).sum,
-        docmetaBytes = (m2.minGen to gen).filterNot(deadGens.contains)
-          .map(g => IndexIO.dirBytes(spark, s"$indexDir/docmeta/gen=$g")).sum)
-      IndexIO.writeManifest(spark, indexDir, m3)
-      // reclaim superseded dirs only after the commit is durable
-      candidates.foreach { g =>
-        IndexIO.delete(spark, s"$indexDir/postings/gen=$g")
-        IndexIO.delete(spark, s"$indexDir/docmeta/gen=$g")
-        if (m.hasTermVectors) IndexIO.delete(spark, s"$indexDir/termvectors/gen=$g")
-      }
-      if (m.deletedCount > 0L) {
-        (m.minDeleteGen to m.deleteGen).foreach { g =>
-          IndexIO.delete(spark, s"$indexDir/deletes/gen=$g")
-        }
-        if (nSurv == 0L) IndexIO.delete(spark, s"$indexDir/deletes")
-      }
-      new BuiltIndex(indexDir, m3)
-    } finally allDels.unpersist(blocking = false)
+    if (candidates.isEmpty || candidates.size < policy.minMerge) new BuiltIndex(indexDir, m)
+    else merge(spark, indexDir, m, candidates, "tiered", outputPartitions)
   }
 
-  /** forceMerge(1): rewrite ALL committed generations into ONE new
-    * generation, dropping tombstoned docs and correcting statistics — the
-    * MergePolicy/SegmentMerger lifecycle
-    * (`core/index/mergepolicy.go:303-335`, `core/index/segmentmerger.go`).
+  /** forceMerge(1): [[merge]] ALL live generations into ONE — the
+    * MergePolicy/SegmentMerger lifecycle (`core/index/mergepolicy.go:303-335`,
+    * `core/index/segmentmerger.go`). Every tombstone is reclaimed, so the
+    * compacted index equals a fresh build over the live docs (oracle row
+    * q53). A no-op on an index with one live generation and no tombstones.
+    */
+  def forceMerge(spark: SparkSession, indexDir: String,
+                 outputPartitions: Option[Int] = None): BuiltIndex = {
+    val m = IndexIO.committed(spark, indexDir)
+    if (m.deletedCount == 0L && m.liveGens.size == 1) new BuiltIndex(indexDir, m) // already compact
+    else merge(spark, indexDir, m, m.liveGens, "merged", outputPartitions)
+  }
+
+  /** The one merge behind [[maybeMerge]] and [[forceMerge]]: rewrite the
+    * generations `gens` (postings + docmeta + term vectors) into ONE new
+    * generation, dropping the tombstoned docs of their segments.
     *
     * DocID remap (SegmentMerger semantics): surviving docs keep their
     * segment but compact to dense locals, newLocal = oldLocal − (# deleted
@@ -191,71 +106,75 @@ object IndexOps {
     * Like Lucene, docIDs are NOT stable across merges; the doc's identity
     * is its stored fields (docmeta sha).
     *
-    * Statistics are recomputed from the compacted postings (docFreq/ttf per
-    * term, per-segment doc counts) — after the merge, BM25 no longer sees
-    * ghost docs, exactly as in Lucene after tombstones are reclaimed. The
-    * compacted index therefore equals a fresh build over the live docs
-    * (oracle row q53).
+    * The merged segments' statistics are the sums of the rows the rewrite
+    * writes (docFreq/ttf per term, per-segment doc counts): BM25 no longer
+    * sees their ghost docs, exactly as in Lucene after tombstones are
+    * reclaimed; segments whose docs were ALL deleted leave the manifest.
+    * Tombstones of untouched segments survive, consolidated into a fresh
+    * deletes generation above a new `minDeleteGen` floor so the superseded
+    * pre-remap dirs can never be read again.
     *
-    * Commit: new postings/docmeta under gen=G+1, then a manifest with
-    * minGen = generation = G+1, deleteGen = 0, deletedCount = 0 — readers
-    * flip atomically to the compacted view (versioned manifest), after
-    * which the superseded generation dirs are deleted.
+    * Commit is the usual atomic manifest flip: `gens` become invisible
+    * (dead, or below a raised `minGen`) and every generation the new
+    * manifest no longer shows is deleted only after the commit is durable
+    * (a crash before that leaves the OLD view fully intact).
     */
-  def forceMerge(spark: SparkSession, indexDir: String,
-                 outputPartitions: Option[Int] = None): BuiltIndex = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val m = IndexIO.readManifest(spark, indexDir)
-      .getOrElse(throw new IllegalStateException(s"no committed index at $indexDir"))
-    val idx = new BuiltIndex(indexDir, m)
-    if (m.deletedCount == 0L && idx.liveGens.size == 1) return idx // already compact
+  private def merge(spark: SparkSession, indexDir: String, m: Manifest, gens: Seq[Long],
+                    tag: String, outputPartitions: Option[Int]): BuiltIndex = {
     val gen = m.generation + 1
-    val segSize = m.segmentSize
     val outParts = outputPartitions.getOrElse(spark.sessionState.conf.numShufflePartitions)
+    // the input generations through the schema-given readers of a view in
+    // which only `gens` are visible
+    val input = new BuiltIndex(indexDir, m.copy(deadGens = m.deadGens ++ m.liveGens.diff(gens)))
+    val allDels = input.deleteRows(spark) // every committed tombstone
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val stats = Compaction.rewriteGeneration(spark, indexDir, gen, m, input,
+        allDels.rdd.map(d => (d.segmentId, d.localDoc)), outParts)
+      // builds and appends write whole segments into one gen dir, so a
+      // segment the rewrite read must have ALL its docs in `gens`
+      val read = stats.docsRead
+      val segById = m.segments.map(s => s.segmentId -> s).toMap
+      read.foreach { case (sid, n) =>
+        require(segById.get(sid).exists(_.docCount == n),
+          s"segment $sid spans merged and unmerged generations — gen-per-segment invariant violated")
+      }
+      val segs = (m.segments.filterNot(s => read.contains(s.segmentId)) ++
+        stats.metas(m.segmentSize, s"$tag$gen")).sortBy(_.segmentId)
 
-    // Tombstones ride the SAME shuffle as the data, SORTED AHEAD of it
-    // within each segment ((segment, tag) composite key: tag 0 = tombstone,
-    // 1 = data row). The rewrite task streams: it accumulates a segment's
-    // tombstone array (small), then rewrites that segment's rows ONE AT A
-    // TIME — task memory is |segment tombstones| + one data row, never a
-    // whole segment's postings (a cogroup would materialize the segment's
-    // full index in one task's CompactBuffer — the anti-pattern at 100 TB).
-    // ONE implementation of that discipline serves postings, docmeta, and
-    // term vectors (Compaction.rewriteWithTombstones).
-    val delRdd = idx.deleteRows(spark).rdd.map(d => (d.segmentId, d.localDoc))
+      // ---- consolidate surviving tombstones above a new floor -------------
+      val mergedSegs = read.keySet
+      val survivors = allDels.filter(d => !mergedSegs.contains(d.segmentId))
+      val nSurv =
+        if (m.deletedCount == 0L || m.segments.forall(s => mergedSegs(s.segmentId))) 0L
+        else survivors.count()
+      val newDeleteGen = if (nSurv > 0L) m.deleteGen + 1 else 0L
+      if (nSurv > 0L)
+        survivors.write.mode("overwrite").parquet(s"$indexDir/deletes/gen=$newDeleteGen")
 
-    // one shared rewrite (postings + docmeta + TV) and one shared stats
-    // recompute serve BOTH compaction paths — forceMerge (all live gens)
-    // and maybeMerge (a size-floored subset) must stay semantically
-    // identical by construction, not by parallel maintenance
-    Compaction.rewriteGeneration(spark, indexDir, gen, segSize, m,
-      idx.postings(spark), idx.docmeta(spark),
-      if (m.hasTermVectors) idx.termVectorsDf(spark) else null,
-      delRdd, outParts)
-    val (postAgg, docAgg) = Compaction.recomputeSegStats(spark, indexDir, gen)
-    val segs = m.segments.flatMap(
-      Compaction.correctedMeta(_, postAgg, docAgg, s"merged$gen"))
-    // segments whose docs were ALL deleted drop out of the manifest
-    val m2 = m.copy(
-      generation = gen, minGen = gen,
-      numSegments = segs.size, stats = IndexStats.of(segs), segments = segs,
-      corpusSha = IndexBuilder.sha256Hex(s"${m.corpusSha}#merged:$gen"),
-      postingsBytes = IndexIO.dirBytes(spark, s"$indexDir/postings/gen=$gen"),
-      docmetaBytes = IndexIO.dirBytes(spark, s"$indexDir/docmeta/gen=$gen"),
-      deadGens = Nil, // every pre-merge generation is superseded and deleted
-      deleteGen = 0L, minDeleteGen = 0L, deletedCount = 0L)
-    IndexIO.writeManifest(spark, indexDir, m2)
-    // superseded generations + tombstones are garbage once the compacted
-    // manifest is durable (versioned commit: a crash before this point
-    // leaves the OLD view fully intact)
-    (m.minGen to m.generation).foreach { g =>
-      IndexIO.delete(spark, s"$indexDir/postings/gen=$g")
-      IndexIO.delete(spark, s"$indexDir/docmeta/gen=$g")
-      if (m.hasTermVectors) IndexIO.delete(spark, s"$indexDir/termvectors/gen=$g")
-    }
-    IndexIO.delete(spark, s"$indexDir/deletes")
-    new BuiltIndex(indexDir, m2)
+      val deadAll = (m.deadGens ++ gens).distinct.sorted
+      // advance the visibility floor past any dead PREFIX: those generations
+      // can never become visible again, so keeping them listed only grows
+      // the manifest and every [minGen, generation] dirBytes/visibility scan
+      // without bound across long streaming append+merge cycles (deadGens
+      // stays bounded by the number of interior holes, which repeated
+      // merges collapse)
+      val newMinGen = (m.minGen to gen).filterNot(deadAll.contains).min // gen itself is live
+      val out = IndexIO.commit(spark, indexDir, m.copy(
+        generation = gen, minGen = newMinGen,
+        numSegments = segs.size, stats = IndexStats.of(segs), segments = segs,
+        corpusSha = IndexBuilder.sha256Hex(s"${m.corpusSha}#$tag:$gen"),
+        deadGens = deadAll.filter(_ > newMinGen),
+        deleteGen = newDeleteGen, minDeleteGen = newDeleteGen, deletedCount = nSurv))
+      // reclaim superseded dirs only after the commit is durable
+      val visible = out.liveGens.toSet
+      (m.minGen to m.generation).filterNot(visible).foreach { g =>
+        Seq("postings", "docmeta", "termvectors").foreach(t => IndexIO.delete(spark, s"$indexDir/$t/gen=$g"))
+      }
+      (m.minDeleteGen to m.deleteGen).foreach(g => IndexIO.delete(spark, s"$indexDir/deletes/gen=$g"))
+      if (nSurv == 0L) IndexIO.delete(spark, s"$indexDir/deletes")
+      out
+    } finally allDels.unpersist(blocking = false)
   }
 
   /** UpdateDocument: tombstone every doc matching `term`, then append the
@@ -270,10 +189,11 @@ object IndexOps {
   }
 }
 
-/** Posting-list rewrite kernels for [[IndexOps.forceMerge]] — the
-  * SegmentMerger's per-term work (`core/index/segmentmerger.go`): drop
-  * tombstoned postings, remap surviving locals to dense, re-encode blocks
-  * (positions stream carried through when present).
+/** Rewrite kernels of the one merge behind [[IndexOps.maybeMerge]] and
+  * [[IndexOps.forceMerge]] — the SegmentMerger's per-term work
+  * (`core/index/segmentmerger.go`): drop tombstoned postings, remap
+  * surviving locals to dense, re-encode blocks (positions stream carried
+  * through when present).
   */
 private[index] object Compaction {
 
@@ -285,29 +205,33 @@ private[index] object Compaction {
   }
 
   /** Rewrite ONE target generation (postings + docmeta + term vectors when
-    * present) from the given source frames, applying tombstones with the
-    * dense docId remap — the single implementation behind forceMerge (all
-    * live generations) and maybeMerge (a size-floored subset). `tvDf` may
-    * be null when the manifest has no term vectors. */
-  def rewriteGeneration(spark: SparkSession, indexDir: String, gen: Long, segSize: Long,
-                        m: Manifest, postingsDf: DataFrame, docmetaDf: DataFrame,
-                        tvDf: DataFrame,
-                        delRdd: org.apache.spark.rdd.RDD[(Int, Int)], outParts: Int): Unit = {
+    * present) from the visible generations of `input`, applying tombstones
+    * with the dense docId remap; returns the sums of the rows it wrote. The
+    * rewrite closures run in their write job's result stage, the only place
+    * a [[SegmentStats]] is fed. */
+  def rewriteGeneration(spark: SparkSession, indexDir: String, gen: Long, m: Manifest,
+                        input: BuiltIndex, delRdd: org.apache.spark.rdd.RDD[(Int, Int)],
+                        outParts: Int): SegmentStats = {
     import spark.implicits._
     val streams = Streams.of(m)
+    val segSize = m.segmentSize
+    val stats = new SegmentStats
+    spark.sparkContext.register(stats)
     rewriteWithTombstones[TermPostings](spark,
-      postingsDf.as[TermPostings].rdd.map(tp => ((tp.segmentId, tp.term), tp: AnyRef)),
+      input.postings(spark).as[TermPostings].rdd.map(tp => ((tp.segmentId, tp.term), tp: AnyRef)),
       delRdd, outParts) { (payload, deleted) =>
-        rewriteTerm(payload.asInstanceOf[TermPostings], deleted, streams).iterator
+        rewriteTerm(payload.asInstanceOf[TermPostings], deleted, streams)
+          .map { tp => stats.addPostings(tp); tp }.iterator
       }
       .write.mode("overwrite").parquet(s"$indexDir/postings/gen=$gen")
     rewriteWithTombstones[DocMeta](spark,
-      docmetaDf.select($"segmentId", $"docId", $"norm", $"sha").as[DocMeta]
+      input.docmeta(spark).select($"segmentId", $"docId", $"norm", $"sha").as[DocMeta]
         .rdd.map(d => ((d.segmentId, "%019d".format(d.docId)), d: AnyRef)),
       delRdd, outParts) { (payload, deleted) =>
         val d = payload.asInstanceOf[DocMeta]
         val local = (d.docId - d.segmentId.toLong * segSize).toInt
         val shift = deletedAtOrBelow(deleted, local)
+        stats.addDoc(d.segmentId, d.norm, written = shift >= 0)
         if (shift >= 0) // negative = the doc itself is tombstoned
           Iterator.single(DocMeta(d.segmentId,
             d.segmentId.toLong * segSize + (local - shift), d.norm, d.sha))
@@ -316,7 +240,8 @@ private[index] object Compaction {
       .write.mode("overwrite").parquet(s"$indexDir/docmeta/gen=$gen")
     if (m.hasTermVectors) {
       rewriteWithTombstones[TermVectorRow](spark,
-        tvDf.select($"docId", $"term", $"freq", $"positions", $"startOffsets", $"endOffsets")
+        input.termVectorsDf(spark)
+          .select($"docId", $"term", $"freq", $"positions", $"startOffsets", $"endOffsets")
           .as[TermVectorRow]
           .rdd.map(tv => (((tv.docId / segSize).toInt, "%019d".format(tv.docId)), tv: AnyRef)),
         delRdd, outParts) { (payload, deleted) =>
@@ -330,33 +255,8 @@ private[index] object Compaction {
         }
         .write.mode("overwrite").parquet(s"$indexDir/termvectors/gen=$gen")
     }
+    stats
   }
-
-  /** Per-segment stats re-aggregated from a freshly written generation. */
-  def recomputeSegStats(spark: SparkSession, indexDir: String, gen: Long)
-      : (Map[Int, (Long, Long, Long)], Map[Int, (Long, Long)]) = {
-    import org.apache.spark.sql.functions._
-    val postAgg = spark.read.parquet(s"$indexDir/postings/gen=$gen")
-      .groupBy("segmentId")
-      .agg(sum("docFreq").as("sdf"), sum("totalTermFreq").as("sttf"), count(lit(1)).as("tc"))
-      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-    val docAgg = spark.read.parquet(s"$indexDir/docmeta/gen=$gen")
-      .groupBy("segmentId")
-      .agg(count(lit(1)).as("dc"), sum(when(col("norm") > 0, 1L).otherwise(0L)).as("fdc"))
-      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-    (postAgg, docAgg)
-  }
-
-  /** Corrected SegmentMeta of a rewritten segment (None = every doc of the
-    * segment was tombstoned — it leaves the manifest). */
-  def correctedMeta(s: SegmentMeta, postAgg: Map[Int, (Long, Long, Long)],
-                    docAgg: Map[Int, (Long, Long)], saltTag: String): Option[SegmentMeta] =
-    docAgg.get(s.segmentId).map { case (dc, fdc) =>
-      val (sdf, sttf, tc) = postAgg.getOrElse(s.segmentId, (0L, 0L, 0L))
-      s.copy(docCount = dc, fieldDocCount = fdc, sumTotalTermFreq = sttf,
-        sumDocFreq = sdf, termCount = tc, postingCount = sdf,
-        lineageSha = IndexBuilder.sha256Hex(s"${s.segmentId}:${s.docBase}:$dc:$sttf:$saltTag"))
-    }
 
   /** The tombstone-ahead streaming rewrite: `data` rows keyed by
     * (segmentId, sortKey) shuffle TOGETHER with the tombstones, which sort

@@ -215,6 +215,10 @@ final case class Manifest(
   /** First docId of the next empty segment — the id base of appended
     * documents; 0 for an index with no segments left. */
   def nextDocBase: Long = segments.map(_.segmentId + 1L).maxOption.getOrElse(0L) * segmentSize
+
+  /** VISIBLE data generations: [minGen, generation] minus the dead
+    * (tiered-merged) generations. */
+  def liveGens: Seq[Long] = (minGen to generation).filterNot(deadGens.contains)
 }
 
 object Manifest {

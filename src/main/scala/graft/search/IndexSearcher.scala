@@ -967,11 +967,11 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
       }
     }
     val keys = for { sid <- segMetas.keys.toSeq; sh <- 0 until shards } yield (sid, sh)
-    // sentinel rows are |segments x shards| tiny tuples: emit them from a
-    // handful of map tasks, not one per partition — at interactive scale
-    // the extra ~30 no-op tasks per query were pure scheduler latency
+    // sentinel rows are |segments x shards| tiny tuples: emit them from one
+    // map task, not one per partition — every extra task is pure scheduler
+    // latency at interactive scale
     val sentinels = spark.sparkContext
-      .parallelize(keys, math.min(nParts, 4))
+      .parallelize(keys, 1)
       .map(k => (k, null: AnyRef))
     // tombstones ride the SAME shuffle as the rows: each shard-task sees its
     // segment's live-docs without any driver round-trip

@@ -57,14 +57,9 @@ object StreamingIndexer {
     // partitionBy would pull the whole micro-batch into ONE task — a burst
     // batch would serialize on, and could OOM, a single executor)
     val withIds = IndexBuilder.assignDenseIds(spark, batch, Seq(col(orderCol)), base)
-    prev match {
-      case None =>
-        IndexBuilder.build(spark, withIds, "__doc_id", contentCol, indexDir, cfg,
-          streamBatch = batchId)
-      case Some(_) =>
-        IndexBuilder.append(spark, withIds, "__doc_id", contentCol, indexDir, cfg,
-          streamBatch = batchId)
-    }
+    // a build for the first batch, else an append onto the manifest read above
+    IndexBuilder.buildInternal(spark, withIds, "__doc_id", contentCol, indexDir, cfg,
+      inputPath = "", prev, streamBatch = batchId)
     ()
   }
 

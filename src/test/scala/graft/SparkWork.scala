@@ -9,9 +9,12 @@ import org.apache.spark.sql.SparkSession
 /** Counts the Spark jobs, stages and tasks a block of driver code starts. */
 object SparkWork {
 
-  /** Jobs and stages started by `body`, and the tasks it launched in
-    * result stages (one task per result partition). */
-  final case class Work(jobs: Int, stages: Int, resultTasks: Int)
+  /** Jobs and stages started by `body`, the tasks it launched in result
+    * stages (one task per result partition) and the tasks it launched in
+    * all stages. */
+  final case class Work(jobs: Int, stages: Int, resultTasks: Int, tasks: Int) {
+    def mapTasks: Int = tasks - resultTasks
+  }
 
   /** Jobs and stages started by `body`. */
   def apply(spark: SparkSession)(body: => Unit): (Int, Int) = {
@@ -30,6 +33,8 @@ object SparkWork {
     val stages = new AtomicInteger
     val resultStages = ConcurrentHashMap.newKeySet[Int]()
     val resultTasks = new AtomicInteger
+    val bodyStages = ConcurrentHashMap.newKeySet[Int]()
+    val tasks = new AtomicInteger
     @volatile var drained = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -40,11 +45,14 @@ object SparkWork {
           // the scheduler creates a job's result stage after all its parents,
           // so it holds the job's highest stage id
           resultStages.add(e.stageIds.max)
+          e.stageIds.foreach(bodyStages.add(_))
         }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (markers.contains(e.jobId)) drained.countDown()
-      override def onTaskStart(e: SparkListenerTaskStart): Unit =
+      override def onTaskStart(e: SparkListenerTaskStart): Unit = {
         if (resultStages.contains(e.stageId)) resultTasks.incrementAndGet()
+        if (bodyStages.contains(e.stageId)) tasks.incrementAndGet()
+      }
     }
     def drain(): Unit = {
       drained = new CountDownLatch(1)
@@ -55,10 +63,10 @@ object SparkWork {
     sc.addSparkListener(listener)
     try {
       drain()
-      jobs.set(0); stages.set(0); resultTasks.set(0)
+      jobs.set(0); stages.set(0); resultTasks.set(0); tasks.set(0)
       body
       drain()
-      Work(jobs.get, stages.get, resultTasks.get)
+      Work(jobs.get, stages.get, resultTasks.get, tasks.get)
     } finally sc.removeSparkListener(listener)
   }
 }

@@ -75,5 +75,9 @@ class SearchPipelineSpec extends AnyFunSuite {
     val segments = index.manifest.segments.size
     assert(work.resultTasks > 0 && work.resultTasks <= segments,
       s"${work.resultTasks} result tasks over $segments segments x 1 query shard ($work)")
+    // the map stage: one task per postings file split, plus one task for
+    // all the sentinel rows
+    val scanTasks = index.postings(spark).rdd.getNumPartitions
+    assert(work.mapTasks <= scanTasks + 1, s"$scanTasks scan tasks, sentinels in one ($work)")
   }
 }
