@@ -476,7 +476,7 @@ object Bench {
       //    match visited and joined to its doc value, then globally sorted.
       // The sorted index is built once and reused (fingerprint-gated).
       val bigDocs = spark.read.parquet(corpusPath)
-      val sortedBigDir = s"${sys.props("java.io.tmpdir")}/graft-bench-sortedbig2-$nDocs"
+      val sortedBigDir = s"${sys.props("java.io.tmpdir")}/graft-bench-sortedbig3-$nDocs"
       // sort key = whitespace token count desc == the norm the index
       // stores, INCLUDING the corpus's deliberate ~2% empty docs: Spark's
       // split("", " ") is [""] (size 1), so empties must be forced to 0 to

@@ -47,7 +47,7 @@ object BenchExtra {
       }
       println("AB minhash " + mh.map(s => f"$s%.3f").mkString(" "))
       val nDocs = sys.env.getOrElse("GRAFT_BENCH_DOCS", "2000000").toLong
-      val sortedBigDir = s"${sys.props("java.io.tmpdir")}/graft-bench-sortedbig2-$nDocs"
+      val sortedBigDir = s"${sys.props("java.io.tmpdir")}/graft-bench-sortedbig3-$nDocs"
       val m = graft.index.IndexIO.readManifest(spark, sortedBigDir)
         .getOrElse(sys.error("sortedbig index missing — run interactive mode once first"))
       val sbig = new IndexSearcher(new graft.index.BuiltIndex(sortedBigDir, m))
@@ -162,7 +162,7 @@ object BenchExtra {
         val corpusPath = SyntheticCorpus.ensureParquet(spark, nDocs, files = 64,
           dir = sys.props("java.io.tmpdir"))
         val bigDocs = spark.read.parquet(corpusPath)
-        val sortedBigDir = s"${sys.props("java.io.tmpdir")}/graft-bench-sortedbig2-$nDocs"
+        val sortedBigDir = s"${sys.props("java.io.tmpdir")}/graft-bench-sortedbig3-$nDocs"
         val bigSortCols = Seq(
           F.when(F.col("content") === "", F.lit(0))
             .otherwise(F.size(F.split(F.col("content"), " "))).desc,

@@ -245,7 +245,8 @@ object IndexBuilder {
     * [[BuiltIndex.nextDocBase]] (the next empty segment boundary — segment
     * geometry is fixed at first build). Commits a new manifest generation
     * whose stats cover all generations; a reader re-opening the manifest
-    * sees the appended docs (the reference's NRT-reopen analogue).
+    * sees the appended docs (the reference's NRT-reopen analogue). An
+    * append of no documents commits nothing and returns the committed index.
     */
   def append(spark: SparkSession, docs: DataFrame, docIdCol: String,
              contentCol: String, indexDir: String,
@@ -297,10 +298,13 @@ object IndexBuilder {
 
     // one tiny agg to fix the segment geometry (driver-side scalars only;
     // reads only the id column — column pruning keeps text out of this scan)
-    val (minIdRow, maxIdRow, docCount) = {
-      val r = input.agg(min($"_1"), max($"_1"), count(lit(1))).head()
-      (r.getLong(0), r.getLong(1), r.getLong(2))
-    }
+    val geometry = input.agg(count(lit(1)), min($"_1"), max($"_1")).head()
+    val docCount = geometry.getLong(0)
+    // no docs: min and max are null. An append of nothing commits nothing;
+    // a build of nothing fails before it retracts the committed index
+    if (docCount == 0L) return prev.map(new BuiltIndex(indexDir, _)).getOrElse(
+      throw new IllegalArgumentException(s"no documents to build an index from at $indexDir"))
+    val (minIdRow, maxIdRow) = (geometry.getLong(1), geometry.getLong(2))
     // segment size rounded UP to a chunk multiple, so a chunk never crosses
     // a segment boundary and chunkId == (segment, salt) 1:1; appends inherit
     // the committed geometry and must start at the next segment boundary

@@ -1,6 +1,10 @@
 package graft.index
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, from_json, struct, to_json}
 import org.apache.spark.sql.graft.SessionIds
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
@@ -9,7 +13,10 @@ import graft.search.IndexSearcher
 /** Manifest commit/read — the `segments_N` analogue
   * (`core/index/segmentinfos.go:39-46`): the manifest is written last, after
   * all segment parquet is durable, so a reader that finds a manifest sees a
-  * complete, consistent generation. Stored as a 1-row parquet dataset.
+  * complete, consistent generation. Stored as one JSON file,
+  * `manifest/v=N/manifest.json`, in the [[Manifest]] encoder's schema, and
+  * read and written on the driver through the Hadoop FS: a commit or a
+  * reopen starts no Spark job (Spark jobs move only data).
   *
   * Commits are VERSIONED like the reference's `segments_N` files
   * (`core/index/segmentinfos.go:39-46` writes a NEW file then flips, never
@@ -26,11 +33,12 @@ import graft.search.IndexSearcher
 object IndexIO {
   def manifestPath(indexDir: String): String = s"$indexDir/manifest"
 
+  // manifest.json is the JSON of a Manifest row in its encoder schema
+  private val manifestSchema = Encoders.product[Manifest].schema
   // Every parquet tree of an index is written from one of the engine's case
   // classes, so readers pass its schema instead of letting Spark infer it
   // (inference reads footers in a Spark job of its own, on every reopen).
   // Data trees add the `gen` partition column, typed as inference types it.
-  private val manifestSchema = Encoders.product[Manifest].schema
   private def withGen(data: StructType) = data.add(StructField("gen", IntegerType))
   private[index] val postingsSchema = withGen(Encoders.product[TermPostings].schema)
   private[index] val docmetaSchema = withGen(Encoders.product[DocMeta].schema)
@@ -41,14 +49,14 @@ object IndexIO {
     if (name.startsWith("v=")) name.drop(2).toLongOption else None
 
   /** Committed manifest versions: (version, path), ascending. */
-  private def manifestVersions(spark: SparkSession, dir: String): Seq[(Long, org.apache.hadoop.fs.Path)] = {
+  private def manifestVersions(spark: SparkSession, dir: String): Seq[(Long, Path)] = {
     val f = fs(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir)
+    val p = new Path(dir)
     if (!f.exists(p)) Nil
     else f.listStatus(p).toSeq
       .filter(_.isDirectory)
       .flatMap(st => versionOf(st.getPath.getName).map(_ -> st.getPath))
-      .filter { case (_, vp) => f.exists(new org.apache.hadoop.fs.Path(vp, "_SUCCESS")) }
+      .filter { case (_, vp) => f.exists(new Path(vp, "_SUCCESS")) }
       .sortBy(_._1)
   }
 
@@ -72,28 +80,26 @@ object IndexIO {
     import spark.implicits._
     val dir = manifestPath(indexDir)
     val next = manifestVersions(spark, dir).lastOption.map(_._1).getOrElse(0L) + 1L
-    Seq(m).toDS().coalesce(1).write.mode("overwrite").parquet(s"$dir/v=$next")
+    // a projection of a local relation: evaluated on the driver, no job
+    val json = Seq(m).toDF().select(to_json(struct(col("*")))).as[String].head()
+    // the marker goes last: a reader never sees a version without its file
+    writeText(spark, s"$dir/v=$next/manifest.json", json)
+    writeText(spark, s"$dir/v=$next/_SUCCESS", "")
     // prune AFTER the new version is durable: the newest two versions stay
-    // (crash-safety margin), everything older goes — including any legacy
-    // flat (unversioned) manifest files from the pre-versioned layout
+    // (crash-safety margin), everything older goes
     val f = fs(spark, dir)
     manifestVersions(spark, dir).dropRight(2)
       .foreach { case (_, vp) => f.delete(vp, true) }
-    val p = new org.apache.hadoop.fs.Path(dir)
-    f.listStatus(p).foreach { st =>
-      if (st.isFile) f.delete(st.getPath, false) // legacy flat manifest parts
-    }
   }
 
-  private def fs(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private[index] def fs(spark: SparkSession, path: String) =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   def exists(spark: SparkSession, path: String): Boolean =
-    fs(spark, path).exists(new org.apache.hadoop.fs.Path(path))
+    fs(spark, path).exists(new Path(path))
 
   def delete(spark: SparkSession, path: String): Unit =
-    fs(spark, path).delete(new org.apache.hadoop.fs.Path(path), true)
+    fs(spark, path).delete(new Path(path), true)
 
   /** Remove staged stage-1 chunks and their fingerprint markers, EXCEPT the
     * given generation's (the current build's staging stays reusable for a
@@ -102,13 +108,13 @@ object IndexIO {
     * generations without bound; pass keepGen = -1 to wipe everything. */
   def deleteStaging(spark: SparkSession, indexDir: String, keepGen: Long = -1L): Unit = {
     val f = fs(spark, indexDir)
-    val stagingDir = new org.apache.hadoop.fs.Path(s"$indexDir/staging")
+    val stagingDir = new Path(s"$indexDir/staging")
     if (f.exists(stagingDir)) {
       f.listStatus(stagingDir).foreach { st =>
         if (st.getPath.getName != s"gen=$keepGen") f.delete(st.getPath, true)
       }
     }
-    val dir = new org.apache.hadoop.fs.Path(indexDir)
+    val dir = new Path(indexDir)
     if (f.exists(dir)) {
       f.listStatus(dir).foreach { st =>
         val n = st.getPath.getName
@@ -119,71 +125,62 @@ object IndexIO {
   }
 
   def writeText(spark: SparkSession, path: String, text: String): Unit = {
-    val out = fs(spark, path).create(new org.apache.hadoop.fs.Path(path), true)
+    val out = fs(spark, path).create(new Path(path), true)
     try out.write(text.getBytes("UTF-8")) finally out.close()
   }
 
+  /** The file's text, or None when it is absent or unreadable. */
   def readText(spark: SparkSession, path: String): Option[String] =
     try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val f = fs(spark, path)
-      if (!f.exists(p)) None
-      else {
-        val in = f.open(p)
-        try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
-      }
-    } catch { case _: Throwable => None }
+      val in = fs(spark, path).open(new Path(path))
+      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+    } catch { case NonFatal(_) => None }
 
   /** Total on-disk bytes under a path (works on any Hadoop FS, not just
     * local — the bytes-written build metric per the north rule). */
   def dirBytes(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0L else fs.getContentSummary(p).getLength
+    val (f, p) = (fs(spark, path), new Path(path))
+    if (!f.exists(p)) 0L else f.getContentSummary(p).getLength
   }
 
   /** Read the committed manifest, or None: the highest `v=N` version whose
     * `_SUCCESS` marker exists (a crash mid-commit leaves a marker-less
-    * partial dir, which readers skip — fail-closed). A stale/partial/absent
-    * manifest dir must read as "no index" WITHOUT a Spark error-log spew (a
-    * killed bench JVM can leave a half-written dir; a read-then-catch probe
-    * would log a full AnalysisException stack that pollutes the driver's
-    * bench stdout, BENCH_r01 tail), so the _SUCCESS check happens before
-    * asking Spark to read at all. Falls back to the legacy flat layout
-    * (parquet files directly under `manifest/`) for pre-versioned indexes.
+    * partial dir, which readers skip — fail-closed). A manifest file that is
+    * absent, malformed, lacks a field (an older layout) or names another
+    * codec reads as "no index" too.
     */
   def readManifest(spark: SparkSession, indexDir: String): Option[Manifest] = {
     import spark.implicits._
     val dir = manifestPath(indexDir)
-    def pickTarget(): Option[String] = manifestVersions(spark, dir).lastOption match {
-      case Some((_, vp)) => Some(vp.toString)
-      case None => if (exists(spark, s"$dir/_SUCCESS")) Some(dir) else None
-    }
-    // a column the file lacks reads as null: such a manifest (an older
-    // layout) is no index, and is caught here rather than in a task
+    def latest(): Option[String] = manifestVersions(spark, dir).lastOption.map(_._2.toString)
+    // a field the JSON lacks (or cannot parse) decodes as null: such a
+    // manifest is no index, and is caught here rather than in the decoder
     def complete(v: Any): Boolean = v match {
       case null => false
       case r: Row => r.toSeq.forall(complete)
       case xs: scala.collection.Seq[_] => xs.forall(complete)
       case _ => true
     }
+    // from_json and the decode run over local relations: no job
     def readOnce(path: String): Option[Manifest] =
-      try spark.read.schema(manifestSchema).parquet(path).collect().headOption.filter(complete)
-        .map(r => spark.createDataFrame(java.util.List.of(r), manifestSchema).as[Manifest].head())
-      catch { case scala.util.control.NonFatal(_) => None }
-    pickTarget().flatMap { path =>
+      readText(spark, s"$path/manifest.json").flatMap { json =>
+        try Option(Seq(json).toDF("json").select(from_json(col("json"), manifestSchema)).head().getStruct(0))
+          .filter(complete)
+          .map(r => spark.createDataFrame(java.util.List.of(r), manifestSchema).as[Manifest].head())
+        catch { case NonFatal(_) => None }
+      }
+    latest().flatMap { path =>
       readOnce(path).orElse {
         // A concurrent committer may have pruned the version we just listed
         // (writeManifest keeps only the two newest): re-list ONCE — the new
         // head version is visible by then — instead of mapping the transient
         // race straight to "no index" for a committed index.
-        pickTarget().filter(_ != path).flatMap(readOnce)
+        latest().filter(_ != path).flatMap(readOnce)
       }
     }.filter { m =>
       // codec gate: a manifest written by a different block codec must read
       // as "no index" (fail closed) rather than let MonotonicBlock.decode
-      // chew FOR-encoded bytes into silent garbage. (Pre-versioned
-      // manifests already fail the completeness check above.)
+      // chew FOR-encoded bytes into silent garbage
       val ok = m.codecVersion == Manifest.CurrentCodecVersion
       if (!ok) System.err.println(s"[graft] index at $indexDir has codecVersion " +
         s"${m.codecVersion}, this build speaks ${Manifest.CurrentCodecVersion} — treating as no index")
@@ -263,8 +260,7 @@ final class BuiltIndex(val indexDir: String, val manifest: Manifest) extends Ser
     */
   private def committedGenDirs(spark: SparkSession, root: String, minGen: Long,
                                maxGen: Long, dead: Set[Long] = Set.empty): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (f, p) = (IndexIO.fs(spark, root), new Path(root))
     if (!f.exists(p)) Nil
     else f.listStatus(p).toSeq
       .filter(_.isDirectory)

@@ -42,14 +42,16 @@ object StreamingIndexer {
     if (prev.exists(_.lastStreamBatch >= batchId)) return // replayed batch
     if (batch.isEmpty) return
     // Fail-closed guard: index data present but no readable manifest means a
-    // commit was interrupted at the worst possible point (or the dir is
-    // foreign). A full build here would WIPE the existing postings/docmeta —
-    // silent loss of previously committed stream batches. Refuse; a human
-    // (or CheckIndex) decides whether to rebuild.
+    // commit was interrupted at the worst possible point, the manifest was
+    // written in an older format, or the dir is foreign. A full build here
+    // would WIPE the existing postings/docmeta — silent loss of previously
+    // committed stream batches. Refuse; a human (or CheckIndex) decides
+    // whether to rebuild.
     if (prev.isEmpty &&
         (IndexIO.exists(spark, s"$indexDir/postings") || IndexIO.exists(spark, s"$indexDir/docmeta")))
       throw new IllegalStateException(
-        s"$indexDir contains index data but no committed manifest — refusing a " +
+        s"$indexDir contains index data but no readable committed manifest (an interrupted " +
+          "commit, a manifest written in an older format, or a foreign dir) — refusing a " +
           "wiping rebuild from one micro-batch; inspect/rebuild explicitly")
     val base = prev.map(_.nextDocBase).getOrElse(0L)
     // rank within the batch -> dense ids at the next segment boundary,

@@ -115,8 +115,8 @@ class CommitPathSpec extends AnyFunSuite {
   }
 
   test("jobs per lifecycle operation stay within the commit path's bounds") {
-    val bounds = Seq("build" -> 6, "append" -> 7, "maybeMerge" -> 11, "forceMerge" -> 5,
-      "indexBatch 2" -> 13)
+    val bounds = Seq("build" -> 5, "append" -> 5, "deleteByTerm" -> 4, "maybeMerge" -> 5,
+      "forceMerge" -> 2, "indexBatch 2" -> 8)
     val over = bounds.flatMap { case (name, max) =>
       val w = stepNamed(name).work
       if (w.jobs > max) Some(s"$name: ${w.jobs} jobs > $max ($w)") else None
@@ -124,6 +124,22 @@ class CommitPathSpec extends AnyFunSuite {
     val report = lifecycle.map(s => s"${s.name}: ${s.work}").mkString("\n")
     info(report)
     assert(over.isEmpty, over.mkString("\n") + "\n" + report)
+  }
+
+  test("an append of no documents commits nothing; a build of none fails before it retracts the index") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-commit-path-empty").toString
+    val built = IndexBuilder.build(spark, docs(0L until 40L, text(_)), "doc_id", "text", dir, cfg)
+    val none = docs(Nil, text(_))
+    val appended = IndexBuilder.append(spark, none, "doc_id", "text", dir, cfg)
+    assert(appended.manifest == built.manifest)
+    assert(IndexIO.readManifest(spark, dir).contains(built.manifest), "no new commit")
+    // update = delete + append: the delete commits, the empty append adds nothing
+    val updated = IndexOps.updateDocuments(spark, dir, "del", none, "doc_id", "text", cfg)
+    assert(updated.manifest.deletedCount == 10L && updated.manifest.segments == built.manifest.segments)
+    val ex = intercept[IllegalArgumentException](
+      IndexBuilder.build(spark, none, "doc_id", "text", dir, cfg))
+    assert(ex.getMessage.contains("no documents"))
+    assert(IndexIO.readManifest(spark, dir).contains(updated.manifest), "the committed index stays")
   }
 
   test("manifest bytes are the visible generations' bytes, with a dead generation's dir on disk") {
