@@ -358,7 +358,7 @@ object SparkEntry {
       searcher(spark, sfDir).facetTopTerms(spark, TermQ("dup"), 10)),
     // index sorting (IndexWriterConfig.setIndexSort analogue): docIds are
     // dense ranks of (n_chars desc, doc_id asc) — docId order == sort order,
-    // assigned distributed (range-partition + zipWithIndex), zero-shuffle
+    // assigned distributed (range-partition + per-partition counts), zero-shuffle
     // build; certified via the per-row sha invariant at the new ids
     "q56_sorted_index" -> ((spark: SparkSession, sfDir: String) => {
       val docsPath = s"$sfDir/documents.parquet"

@@ -2,6 +2,7 @@ package graft.index
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.StaticRows
 import org.apache.spark.storage.StorageLevel
 
 import graft.analysis.Analyzer
@@ -23,6 +24,16 @@ final case class Stage1Row(
     localDoc: Int, norm: Int, sha: String, firstDoc: Int)
 
 final case class DocMeta(segmentId: Int, docId: Long, norm: Int, sha: String)
+
+/** The doc-id column's count, min and max: they fix a build's segment
+  * geometry (min and max are unused when count is 0). */
+final case class Geometry(count: Long, minId: Long, maxId: Long)
+
+/** Rows of [[IndexBuilder.assignDenseIds]]: `df` with the dense ids
+  * `base until base + count` in its `__doc_id` column. */
+final case class DenseIds(df: DataFrame, base: Long, count: Long) {
+  def geometry: Geometry = Geometry(count, base, base + count - 1L)
+}
 
 /** @param numSegments   S: index segments = contiguous docId ranges. Each
   *                      segment is the unit of independent query execution
@@ -200,9 +211,9 @@ object IndexBuilder {
     * in sort-field order at flush; SURVEY §2.3 "Index sorting"): docIds are
     * assigned as the DENSE RANK of `sortCols` order, so docId order == sort
     * order and early-termination-by-docId equals early-termination-by-sort.
-    * Distributed: range-partition by the sort key + sort within partitions +
-    * zipWithIndex (no single-task window); the ranked partitions are then
-    * contiguous ascending docId runs, which is exactly the
+    * Distributed: range-partition by the sort key + sort within partitions
+    * + per-partition id offsets (no single-task window); the ranked
+    * partitions are then contiguous ascending docId runs, which is exactly the
     * `assumeContiguous` contract — the build itself is the ZERO-SHUFFLE
     * path. `sortCols` must define a total order (add a unique tiebreak
     * column) for deterministic ids under replay.
@@ -211,31 +222,41 @@ object IndexBuilder {
                   contentCol: String, indexDir: String,
                   cfg: BuildConfig = BuildConfig(),
                   inputPath: String = ""): BuiltIndex = {
-    val withIds = assignDenseIds(spark, docs, sortCols, base = 0L)
-    buildInternal(spark, withIds, "__doc_id", contentCol, indexDir,
+    val ids = assignDenseIds(spark, docs, sortCols, base = 0L)
+    buildInternal(spark, ids.df, "__doc_id", contentCol, indexDir,
       cfg.copy(assumeContiguous = true), inputPath, prev = None,
-      indexSort = sortCols.map(_.toString).mkString(", "))
+      indexSort = sortCols.map(_.toString).mkString(", "), geometry = Some(ids.geometry))
   }
 
   /** Distributed dense-id assignment: ids = `base` + rank of `sortCols`
     * order, appended as `__doc_id`. Range-partition + in-partition sort +
-    * zipWithIndex (partition offsets = one tiny count job) — never a
-    * single-partition window, so a burst input cannot serialize/OOM one
-    * task. The output partitions are contiguous ascending id runs (the
-    * `assumeContiguous` contract). `sortCols` must define a total order for
-    * deterministic ids under replay. Shared by [[buildSorted]] and the
-    * streaming indexer's per-batch id assignment.
+    * one job that counts the rows of every partition (after the range
+    * partitioning's sample job) — never a single-partition window, so a
+    * burst input cannot serialize/OOM one task. The counts give each partition's first id and the total, so the
+    * ids' count, min and max are known without another job. The output
+    * partitions are contiguous ascending id runs (the `assumeContiguous`
+    * contract). `sortCols` must define a total order for deterministic ids
+    * under replay. Shared by [[buildSorted]] and the streaming indexer's
+    * per-batch id assignment.
     */
   def assignDenseIds(spark: SparkSession, df: DataFrame,
-                     sortCols: Seq[org.apache.spark.sql.Column], base: Long): DataFrame = {
-    val parts = math.max(1, math.min(df.rdd.getNumPartitions,
+                     sortCols: Seq[org.apache.spark.sql.Column], base: Long): DenseIds = {
+    val parts = math.max(1, math.min(StaticRows.of(df).getNumPartitions,
       spark.sparkContext.defaultParallelism))
     val sorted = df.repartitionByRange(parts, sortCols: _*).sortWithinPartitions(sortCols: _*)
     val schema = sorted.schema.add("__doc_id", org.apache.spark.sql.types.LongType)
-    val ranked = sorted.rdd.zipWithIndex().map { case (row, i) =>
-      org.apache.spark.sql.Row.fromSeq(row.toSeq :+ (base + i))
+    // statically planned: the range exchange runs inside the count job
+    // (after its sample job), not as a job of its own, and the build's jobs
+    // reuse its shuffle output
+    val rows = StaticRows.of(sorted)
+    // one count per partition: the collect holds at most defaultParallelism longs
+    val counts = rows.mapPartitions(it => Iterator.single(it.size.toLong)).collect()
+    val firstIds = counts.scanLeft(base)(_ + _)
+    val ranked = rows.mapPartitionsWithIndex { (p, it) =>
+      val first = firstIds(p)
+      it.zipWithIndex.map { case (row, i) => org.apache.spark.sql.Row.fromSeq(row.toSeq :+ (first + i)) }
     }
-    spark.createDataFrame(ranked, schema)
+    DenseIds(spark.createDataFrame(ranked, schema), base, counts.sum)
   }
 
   /** Incremental append — the IndexWriter.AddDocument+Commit lifecycle
@@ -256,14 +277,17 @@ object IndexBuilder {
     buildInternal(spark, docs, docIdCol, contentCol, indexDir, cfg, inputPath,
       Some(IndexIO.committed(spark, indexDir)), streamBatch = streamBatch)
 
-  /** A build (`prev` = None) or an append onto the committed manifest `prev`. */
+  /** A build (`prev` = None) or an append onto the committed manifest `prev`.
+    * A caller that knows the ids' [[Geometry]] (dense ids) passes it, and the
+    * build skips the job that would count them. */
   private[graft] def buildInternal(spark: SparkSession, docs: DataFrame, docIdCol: String,
             contentCol: String, indexDir: String,
             cfg: BuildConfig,
             inputPath: String,
             prev: Option[Manifest],
             streamBatch: Long = -1L,
-            indexSort: String = ""): BuiltIndex = {
+            indexSort: String = "",
+            geometry: Option[Geometry] = None): BuiltIndex = {
     import spark.implicits._
     val streams = Streams.of(cfg)
     require(cfg.chunkDocs % PostingBlock.Size == 0, "chunkDocs must be a multiple of block size")
@@ -296,15 +320,18 @@ object IndexBuilder {
       t0 = t1
     }
 
-    // one tiny agg to fix the segment geometry (driver-side scalars only;
-    // reads only the id column — column pruning keeps text out of this scan)
-    val geometry = input.agg(count(lit(1)), min($"_1"), max($"_1")).head()
-    val docCount = geometry.getLong(0)
-    // no docs: min and max are null. An append of nothing commits nothing;
-    // a build of nothing fails before it retracts the committed index
+    // unless given, one tiny agg fixes the segment geometry (driver-side
+    // scalars only; reads only the id column — column pruning keeps text
+    // out of this scan)
+    val Geometry(docCount, minIdRow, maxIdRow) = geometry.getOrElse {
+      val g = input.agg(count(lit(1)), min($"_1"), max($"_1")).head()
+      // no docs: min and max are null
+      if (g.getLong(0) == 0L) Geometry(0L, 0L, -1L) else Geometry(g.getLong(0), g.getLong(1), g.getLong(2))
+    }
+    // an append of nothing commits nothing; a build of nothing fails before
+    // it retracts the committed index
     if (docCount == 0L) return prev.map(new BuiltIndex(indexDir, _)).getOrElse(
       throw new IllegalArgumentException(s"no documents to build an index from at $indexDir"))
-    val (minIdRow, maxIdRow) = (geometry.getLong(1), geometry.getLong(2))
     // segment size rounded UP to a chunk multiple, so a chunk never crosses
     // a segment boundary and chunkId == (segment, salt) 1:1; appends inherit
     // the committed geometry and must start at the next segment boundary

@@ -3,9 +3,8 @@ package graft.index
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, from_json, struct, to_json}
-import org.apache.spark.sql.graft.SessionIds
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.graft.{JsonCodec, SessionIds}
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 import graft.search.IndexSearcher
@@ -16,7 +15,11 @@ import graft.search.IndexSearcher
   * complete, consistent generation. Stored as one JSON file,
   * `manifest/v=N/manifest.json`, in the [[Manifest]] encoder's schema, and
   * read and written on the driver through the Hadoop FS: a commit or a
-  * reopen starts no Spark job (Spark jobs move only data).
+  * reopen starts no Spark job (Spark jobs move only data). The file is
+  * coded by one [[JsonCodec]] over the `Manifest` encoder, resolved once:
+  * Spark's Jackson generator writes the bytes `to_json(struct(*))` of the
+  * manifest's row would, and its parser reads them back, with no Dataset
+  * query planned per commit or reopen.
   *
   * Commits are VERSIONED like the reference's `segments_N` files
   * (`core/index/segmentinfos.go:39-46` writes a NEW file then flips, never
@@ -34,7 +37,7 @@ object IndexIO {
   def manifestPath(indexDir: String): String = s"$indexDir/manifest"
 
   // manifest.json is the JSON of a Manifest row in its encoder schema
-  private val manifestSchema = Encoders.product[Manifest].schema
+  private val manifestJson = new JsonCodec(Encoders.product[Manifest])
   // Every parquet tree of an index is written from one of the engine's case
   // classes, so readers pass its schema instead of letting Spark infer it
   // (inference reads footers in a Spark job of its own, on every reopen).
@@ -77,13 +80,10 @@ object IndexIO {
   }
 
   def writeManifest(spark: SparkSession, indexDir: String, m: Manifest): Unit = {
-    import spark.implicits._
     val dir = manifestPath(indexDir)
     val next = manifestVersions(spark, dir).lastOption.map(_._1).getOrElse(0L) + 1L
-    // a projection of a local relation: evaluated on the driver, no job
-    val json = Seq(m).toDF().select(to_json(struct(col("*")))).as[String].head()
     // the marker goes last: a reader never sees a version without its file
-    writeText(spark, s"$dir/v=$next/manifest.json", json)
+    writeText(spark, s"$dir/v=$next/manifest.json", manifestJson.encode(m))
     writeText(spark, s"$dir/v=$next/_SUCCESS", "")
     // prune AFTER the new version is durable: the newest two versions stay
     // (crash-safety margin), everything older goes
@@ -150,25 +150,11 @@ object IndexIO {
     * codec reads as "no index" too.
     */
   def readManifest(spark: SparkSession, indexDir: String): Option[Manifest] = {
-    import spark.implicits._
     val dir = manifestPath(indexDir)
     def latest(): Option[String] = manifestVersions(spark, dir).lastOption.map(_._2.toString)
-    // a field the JSON lacks (or cannot parse) decodes as null: such a
-    // manifest is no index, and is caught here rather than in the decoder
-    def complete(v: Any): Boolean = v match {
-      case null => false
-      case r: Row => r.toSeq.forall(complete)
-      case xs: scala.collection.Seq[_] => xs.forall(complete)
-      case _ => true
-    }
-    // from_json and the decode run over local relations: no job
+    // a file that is malformed or lacks a field decodes as None
     def readOnce(path: String): Option[Manifest] =
-      readText(spark, s"$path/manifest.json").flatMap { json =>
-        try Option(Seq(json).toDF("json").select(from_json(col("json"), manifestSchema)).head().getStruct(0))
-          .filter(complete)
-          .map(r => spark.createDataFrame(java.util.List.of(r), manifestSchema).as[Manifest].head())
-        catch { case NonFatal(_) => None }
-      }
+      readText(spark, s"$path/manifest.json").flatMap(manifestJson.decode)
     latest().flatMap { path =>
       readOnce(path).orElse {
         // A concurrent committer may have pruned the version we just listed

@@ -25,6 +25,17 @@ import graft.index.{BuildConfig, IndexBuilder, IndexIO}
   * batch, and subsequent batches append whole segments (docIds assigned
   * from `nextDocBase`), so a day of micro-batches is structurally
   * identical to a day of bulk appends.
+  *
+  * The five Spark jobs of one micro-batch (`CommitPathSpec` pins the count):
+  *  - [[IndexBuilder.assignDenseIds]]: the range partitioning's sample job,
+  *    then one job that shuffles the batch into its range partitions and
+  *    counts each one's rows. The counts fix the batch's ids
+  *    `base until base + n`, so nothing counts the rows again: an empty
+  *    batch returns here, and the build takes its geometry
+  *    (n, base, base + n - 1) as given.
+  *  - the build: the docmeta write (its first stage runs stage 1's
+  *    inversion), the stage-2 shuffle and the postings write.
+  * Reading the manifest before and committing it after start no job.
   */
 object StreamingIndexer {
 
@@ -40,7 +51,13 @@ object StreamingIndexer {
                  batchId: Long): Unit = {
     val prev = IndexIO.readManifest(spark, indexDir)
     if (prev.exists(_.lastStreamBatch >= batchId)) return // replayed batch
-    if (batch.isEmpty) return
+    val base = prev.map(_.nextDocBase).getOrElse(0L)
+    // rank within the batch -> dense ids at the next segment boundary,
+    // DISTRIBUTED via the shared assignDenseIds (a Window.orderBy with no
+    // partitionBy would pull the whole micro-batch into ONE task — a burst
+    // batch would serialize on, and could OOM, a single executor)
+    val ids = IndexBuilder.assignDenseIds(spark, batch, Seq(col(orderCol)), base)
+    if (ids.count == 0L) return // an empty batch commits nothing
     // Fail-closed guard: index data present but no readable manifest means a
     // commit was interrupted at the worst possible point, the manifest was
     // written in an older format, or the dir is foreign. A full build here
@@ -53,15 +70,9 @@ object StreamingIndexer {
         s"$indexDir contains index data but no readable committed manifest (an interrupted " +
           "commit, a manifest written in an older format, or a foreign dir) — refusing a " +
           "wiping rebuild from one micro-batch; inspect/rebuild explicitly")
-    val base = prev.map(_.nextDocBase).getOrElse(0L)
-    // rank within the batch -> dense ids at the next segment boundary,
-    // DISTRIBUTED via the shared assignDenseIds (a Window.orderBy with no
-    // partitionBy would pull the whole micro-batch into ONE task — a burst
-    // batch would serialize on, and could OOM, a single executor)
-    val withIds = IndexBuilder.assignDenseIds(spark, batch, Seq(col(orderCol)), base)
     // a build for the first batch, else an append onto the manifest read above
-    IndexBuilder.buildInternal(spark, withIds, "__doc_id", contentCol, indexDir, cfg,
-      inputPath = "", prev, streamBatch = batchId)
+    IndexBuilder.buildInternal(spark, ids.df, "__doc_id", contentCol, indexDir, cfg,
+      inputPath = "", prev, streamBatch = batchId, geometry = Some(ids.geometry))
     ()
   }
 

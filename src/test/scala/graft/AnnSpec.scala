@@ -40,7 +40,7 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("IVF: probed-bucket rank identity + partition pruning in the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf").toString
+    val dir = TestDirs.fresh("graft-ivf")
     val centroids = Ivf.build(spark, embDf, "vec_id", "embedding", dir, nCentroids = 16)
     val q = vecs(7)._2
     val nProbe = 4
@@ -60,7 +60,7 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("IVF store reopens from persisted centroids (load == build, search identical)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-reload").toString
+    val dir = TestDirs.fresh("graft-ivf-reload")
     val built = Ivf.build(spark, embDf, "vec_id", "embedding", dir, nCentroids = 16)
     val loaded = Ivf.load(spark, dir)
     assert(loaded.length == built.length)
@@ -74,7 +74,7 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("IVF recall@10 at nProbe=8/16 is high on clustered queries") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf2").toString
+    val dir = TestDirs.fresh("graft-ivf2")
     val centroids = Ivf.build(spark, embDf, "vec_id", "embedding", dir, nCentroids = 16)
     val qs = Seq(0, 5, 9).map(i => vecs(i)._2)
     val recalls = qs.map { q =>

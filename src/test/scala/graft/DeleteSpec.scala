@@ -18,7 +18,7 @@ class DeleteSpec extends AnyFunSuite {
 
   private def freshIndex(name: String) = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-$name").toString
+    val dir = TestDirs.fresh(s"graft-$name")
     val df = spark.createDataset(corpus).toDF("doc_id", "content")
     (dir, IndexBuilder.build(spark, df, "doc_id", "content", dir,
       BuildConfig(numSegments = 4, chunkDocs = 128)))

@@ -137,7 +137,7 @@ class EngineSpec extends AnyFunSuite {
 
   def buildIndex(name: String, cfg: BuildConfig, docs: Seq[(Long, String)] = corpus) = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-$name").toString
+    val dir = TestDirs.fresh(s"graft-$name")
     val df = spark.createDataset(docs).toDF("doc_id", "content")
     IndexBuilder.build(spark, df, "doc_id", "content", dir, cfg)
   }
@@ -444,7 +444,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("assumeContiguous zero-shuffle build: identical results to the shuffled path") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-contig").toString
+    val dir = TestDirs.fresh("graft-contig")
     // range-partitioned + sorted input — the contract the flag asserts
     val df = spark.createDataset(corpus).repartitionByRange(4, $"_1")
       .sortWithinPartitions("_1").toDF("doc_id", "content")
@@ -461,7 +461,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("assumeContiguous with UNSORTED input fails the build (no corrupt commit)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-contig-bad").toString
+    val dir = TestDirs.fresh("graft-contig-bad")
     val shuffled = spark.createDataset(scala.util.Random.shuffle(corpus)).coalesce(2)
       .toDF("doc_id", "content")
     val e = intercept[org.apache.spark.SparkException] {
@@ -474,7 +474,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("stageCheckpoint build: staged parquet path produces an identical index") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = TestDirs.fresh("graft-ckpt")
     val df = spark.createDataset(corpus).toDF("doc_id", "content")
     val idx = IndexBuilder.build(spark, df, "doc_id", "content", dir,
       BuildConfig(numSegments = 3, chunkDocs = 128, stageCheckpoint = true))
@@ -490,7 +490,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("resume from staged chunks: second stageCheckpoint build reuses staging") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stagere").toString
+    val dir = TestDirs.fresh("graft-stagere")
     val df = spark.createDataset(corpus).toDF("doc_id", "content")
     val cfg = BuildConfig(numSegments = 3, chunkDocs = 128, stageCheckpoint = true)
     IndexBuilder.build(spark, df, "doc_id", "content", dir, cfg, inputPath = "corpus800")
@@ -559,7 +559,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("resume: buildOrLoad with matching fingerprint skips rebuild") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-resume").toString
+    val dir = TestDirs.fresh("graft-resume")
     val df = spark.createDataset(corpus.take(50)).toDF("doc_id", "content")
     val i1 = IndexBuilder.build(spark, df, "doc_id", "content", dir, BuildConfig(numSegments = 2), inputPath = "corpus50")
     val i2 = IndexBuilder.buildOrLoad(spark, df, "doc_id", "content", dir, BuildConfig(numSegments = 2), inputPath = "corpus50")

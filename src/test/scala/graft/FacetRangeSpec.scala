@@ -30,7 +30,7 @@ class FacetRangeSpec extends AnyFunSuite {
   }
 
   test("facetTopTerms == brute-force term-by-matching-doc counts") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-facet").toString
+    val dir = TestDirs.fresh("graft-facet")
     val idx = IndexBuilder.build(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir,
       BuildConfig(numSegments = 2, chunkDocs = 128))
     val s = new IndexSearcher(idx)
@@ -40,7 +40,7 @@ class FacetRangeSpec extends AnyFunSuite {
   }
 
   test("facetTopTerms respects tombstones (deleted docs don't count)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-facet-del").toString
+    val dir = TestDirs.fresh("graft-facet-del")
     IndexBuilder.build(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir,
       BuildConfig(numSegments = 2, chunkDocs = 128))
     val idx = IndexOps.deleteByTerm(spark, dir, "drop")
@@ -52,7 +52,7 @@ class FacetRangeSpec extends AnyFunSuite {
   }
 
   test("TV-backed facets: identical counts, scan pruned to the matching docIds") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-facet-tv").toString
+    val dir = TestDirs.fresh("graft-facet-tv")
     val idx = IndexBuilder.build(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir,
       BuildConfig(numSegments = 2, chunkDocs = 128, storeTermVectors = true))
     val s = new IndexSearcher(idx)
@@ -73,7 +73,7 @@ class FacetRangeSpec extends AnyFunSuite {
   }
 
   test("facet match set is computed once: the hot-path join reads the cache, not a kernel re-run") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-facet-once").toString
+    val dir = TestDirs.fresh("graft-facet-once")
     val idx = IndexBuilder.build(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir,
       BuildConfig(numSegments = 2, chunkDocs = 128, storeTermVectors = true))
     val s = new IndexSearcher(idx)
@@ -90,7 +90,7 @@ class FacetRangeSpec extends AnyFunSuite {
   }
 
   test("TV-backed facets with tombstones match the live-corpus oracle") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-facet-tv-del").toString
+    val dir = TestDirs.fresh("graft-facet-tv-del")
     IndexBuilder.build(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir,
       BuildConfig(numSegments = 2, chunkDocs = 128, storeTermVectors = true))
     val idx = IndexOps.deleteByTerm(spark, dir, "drop")
@@ -101,7 +101,7 @@ class FacetRangeSpec extends AnyFunSuite {
   }
 
   test("TV-backed facets: hot query takes the broadcast-join path, same counts") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-facet-tv-hot").toString
+    val dir = TestDirs.fresh("graft-facet-tv-hot")
     val idx = IndexBuilder.build(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir,
       BuildConfig(numSegments = 2, chunkDocs = 128, storeTermVectors = true))
     val s = new IndexSearcher(idx)

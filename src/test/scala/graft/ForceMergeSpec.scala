@@ -25,7 +25,7 @@ class ForceMergeSpec extends AnyFunSuite {
   private def shaOf(text: String): String = IndexBuilder.sha256Hex(text)
 
   test("forceMerge: one generation, zero tombstones, dense docIds, corrected stats, live-equivalent scores") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fm").toString
+    val dir = TestDirs.fresh("graft-fm")
     val base = mkDocs(0 until 300)
     IndexBuilder.build(spark, base.toDF("doc_id", "text"), "doc_id", "text", dir, cfg)
     IndexOps.deleteByTerm(spark, dir, "drop")
@@ -79,7 +79,7 @@ class ForceMergeSpec extends AnyFunSuite {
     // ---- score equivalence with a FRESH build over the live docs ---------
     // (docIds differ — Lucene merge remap — but per-sha scores must be
     // bit-identical: same per-doc (freq, norm), same corrected global stats)
-    val freshDir = java.nio.file.Files.createTempDirectory("graft-fm-fresh").toString
+    val freshDir = TestDirs.fresh("graft-fm-fresh")
     val reDense = live.zipWithIndex.map { case ((_, t), k) => (k.toLong, t) }
     val fresh = IndexBuilder.build(spark, reDense.toDF("doc_id", "text"), "doc_id", "text",
       freshDir, cfg)
@@ -103,7 +103,7 @@ class ForceMergeSpec extends AnyFunSuite {
   }
 
   test("codec gate: a manifest from a different block codec reads as no index (fail closed)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-codecgate").toString
+    val dir = TestDirs.fresh("graft-codecgate")
     IndexBuilder.build(spark, mkDocs(0 until 40).toDF("doc_id", "text"), "doc_id", "text",
       dir, BuildConfig(numSegments = 1, chunkDocs = 128))
     val m = IndexIO.readManifest(spark, dir).get
@@ -116,7 +116,7 @@ class ForceMergeSpec extends AnyFunSuite {
   }
 
   test("forceMerge drops a fully-deleted segment from the manifest") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fm-all").toString
+    val dir = TestDirs.fresh("graft-fm-all")
     // segment 1 (ids 128..255) gets a unique term; delete it entirely
     val docs = (0 until 256).map(i =>
       (i.toLong, if (i >= 128) "goner only here" else s"keeper w${i % 5}"))
@@ -132,7 +132,7 @@ class ForceMergeSpec extends AnyFunSuite {
   }
 
   test("an index emptied by deleteByQuery(MatchAll) + forceMerge: every entry point is empty, an append is searchable") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fm-empty").toString
+    val dir = TestDirs.fresh("graft-fm-empty")
     val cfg2 = BuildConfig(numSegments = 2, chunkDocs = 128)
     IndexBuilder.build(spark, (0 until 256).map(i => (i.toLong, s"keeper w${i % 5}")).toDF("doc_id", "text"),
       "doc_id", "text", dir, cfg2)

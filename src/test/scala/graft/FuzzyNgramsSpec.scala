@@ -84,7 +84,7 @@ class FuzzyNgramsSpec extends AnyFunSuite {
   }
 
   test("seek path == scan path exactly (hits, scores, order), incl. fallbacks") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fngram").toString
+    val dir = TestDirs.fresh("graft-fngram")
     val idx = IndexBuilder.build(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir,
       BuildConfig(numSegments = 2, chunkDocs = 128))
     val s = new IndexSearcher(idx)
@@ -117,7 +117,7 @@ class FuzzyNgramsSpec extends AnyFunSuite {
   }
 
   test("gram IN (...) and termLen window both reach the sidecar scan's PushedFilters") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fngram-plan").toString
+    val dir = TestDirs.fresh("graft-fngram-plan")
     val idx = IndexBuilder.build(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir,
       BuildConfig(numSegments = 2, chunkDocs = 128))
     val ng = FuzzyNgrams.buildOrLoad(spark, idx)
@@ -135,7 +135,7 @@ class FuzzyNgramsSpec extends AnyFunSuite {
   }
 
   test("sidecar is generation-keyed: appends invalidate, merges reap dead versions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fngram-gen").toString
+    val dir = TestDirs.fresh("graft-fngram-gen")
     val idx = IndexBuilder.build(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir,
       BuildConfig(numSegments = 2, chunkDocs = 128))
     val s = new IndexSearcher(idx)

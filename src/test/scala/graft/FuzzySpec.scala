@@ -41,7 +41,7 @@ class FuzzySpec extends AnyFunSuite {
   }
 
   test("fuzzy query == brute-force dictionary filter (distributed + searchLocal unsupported path)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fuzzy").toString
+    val dir = TestDirs.fresh("graft-fuzzy")
     val idx = IndexBuilder.build(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir,
       BuildConfig(numSegments = 2, chunkDocs = 128))
     val s = new IndexSearcher(idx)
@@ -61,7 +61,7 @@ class FuzzySpec extends AnyFunSuite {
   }
 
   test("fuzzy length window PUSHES DOWN via the termLen column (dictionary-scale pruning)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fuzzy-plan").toString
+    val dir = TestDirs.fresh("graft-fuzzy-plan")
     val idx = IndexBuilder.build(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir,
       BuildConfig(numSegments = 2, chunkDocs = 128))
     val s = new IndexSearcher(idx)

@@ -92,7 +92,7 @@ class GeoSpec extends AnyFunSuite {
   }
 
   test("the first ring's scan is box-pruned (filters pushed to the parquet scan)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-geo-parquet").toString
+    val dir = TestDirs.fresh("graft-geo-parquet")
     df.write.mode("overwrite").parquet(dir)
     val pdf = spark.read.parquet(dir)
     val ring = Geo.withinDistance(pdf, "lat", "lon", 48.0, 2.0, 25.0)

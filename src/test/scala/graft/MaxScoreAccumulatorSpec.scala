@@ -60,7 +60,7 @@ class MaxScoreAccumulatorSpec extends AnyFunSuite {
     // repeated so racy publish orders get sampled
     val corpus = TestCorpus.generate(500, seed = 99)
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-acc").toString
+    val dir = TestDirs.fresh("graft-acc")
     val idx = graft.index.IndexBuilder.build(spark,
       spark.createDataset(corpus).toDF("doc_id", "text"), "doc_id", "text", dir,
       graft.index.BuildConfig(numSegments = 6, chunkDocs = 128))

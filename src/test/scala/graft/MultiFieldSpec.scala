@@ -20,7 +20,7 @@ class MultiFieldSpec extends AnyFunSuite {
   }
 
   lazy val mf: MultiFieldSearcher = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-mf").toString
+    val dir = TestDirs.fresh("graft-mf")
     val df = spark.createDataset(rows).toDF("doc_id", "body", "tag")
     new MultiFieldSearcher(MultiFieldIndex.buildOrLoad(spark, df, "doc_id",
       Seq("body", "tag"), dir, BuildConfig(numSegments = 3, chunkDocs = 128)))

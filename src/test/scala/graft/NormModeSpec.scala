@@ -53,7 +53,7 @@ class NormModeSpec extends AnyFunSuite {
       (0L, ("needle " + Seq.fill(7)("pad").mkString(" "))),          // len 8
       (1L, ("needle " + Seq.fill(99)("pad").mkString(" ")))          // len 100 (lossy in byte4)
     )
-    val dir = java.nio.file.Files.createTempDirectory("graft-normjava").toString
+    val dir = TestDirs.fresh("graft-normjava")
     val idx = IndexBuilder.build(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir,
       BuildConfig(numSegments = 1, chunkDocs = 128, normMode = NormMode.JavaLucene))
     assert(idx.manifest.normMode == NormMode.JavaLucene)
@@ -76,7 +76,7 @@ class NormModeSpec extends AnyFunSuite {
 
   test("append must match the committed norm mode (fail-closed)") {
     val docs = Seq((0L, "a b c")).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-normmix").toString
+    val dir = TestDirs.fresh("graft-normmix")
     IndexBuilder.build(spark, docs, "doc_id", "text", dir,
       BuildConfig(numSegments = 1, chunkDocs = 128, normMode = NormMode.JavaLucene))
     val e = intercept[IllegalArgumentException] {

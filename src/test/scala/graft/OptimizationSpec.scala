@@ -169,7 +169,7 @@ class OptimizationSpec extends AnyFunSuite {
     val docs = (0L until 200L).map { i =>
       (i, s"alpha w${i % 7} " + ("join " * ((i % 5) + 1).toInt) + s"uniq$i", (i * 37 % 211))
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-optspec").toString
+    val dir = TestDirs.fresh("graft-optspec")
     val idx = IndexBuilder.build(spark, docs.toDF("doc_id", "text", "n_chars"),
       "doc_id", "text", dir, BuildConfig(numSegments = 4, chunkDocs = 128))
     (new IndexSearcher(idx), docs.map(d => (d._1, d._3)).toDF("doc_id", "n_chars"))

@@ -17,7 +17,7 @@ class PagingWildcardSpec extends AnyFunSuite {
   private val corpus: Vector[(Long, String)] = TestCorpus.generate(600, seed = 7)
 
   private lazy val (dir, index) = {
-    val d = java.nio.file.Files.createTempDirectory("graft-paging").toString
+    val d = TestDirs.fresh("graft-paging")
     (d, IndexBuilder.build(spark, corpus.toDF("doc_id", "text"), "doc_id", "text", d,
       BuildConfig(numSegments = 3, chunkDocs = 128)))
   }
@@ -69,7 +69,7 @@ class PagingWildcardSpec extends AnyFunSuite {
   // ---- sorted-index early-termination paging --------------------------
 
   test("searchSortedTopK paging: page 2 == rows k..2k; exhaustion returns empty") {
-    val d = java.nio.file.Files.createTempDirectory("graft-paging-sorted").toString
+    val d = TestDirs.fresh("graft-paging-sorted")
     val docs = corpus.toDF("doc_id", "text")
     val idx = IndexBuilder.buildSorted(spark, docs,
       Seq(length(col("text")).desc, col("doc_id").asc), "text", d,

@@ -37,7 +37,7 @@ class PayloadSpec extends AnyFunSuite {
     }.sortBy(r => (r._1, r._2))
 
   private def build(name: String, withOffsets: Boolean) = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-$name").toString
+    val dir = TestDirs.fresh(s"graft-$name")
     (dir, IndexBuilder.build(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir,
       BuildConfig(numSegments = 2, chunkDocs = 128, storePositions = true,
         storeOffsets = withOffsets, storePayloads = true)))
@@ -118,7 +118,7 @@ class PayloadSpec extends AnyFunSuite {
   }
 
   test("buildOrLoad rebuilds when the committed index lacks requested features") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bol-feat").toString
+    val dir = TestDirs.fresh("graft-bol-feat")
     val df = docs.toDF("doc_id", "text")
     val plain = IndexBuilder.buildOrLoad(spark, df, "doc_id", "text", dir,
       BuildConfig(numSegments = 2, chunkDocs = 128), inputPath = "memA")

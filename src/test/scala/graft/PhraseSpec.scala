@@ -30,7 +30,7 @@ class PhraseSpec extends AnyFunSuite {
   }
 
   private lazy val index = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-phrase").toString
+    val dir = TestDirs.fresh("graft-phrase")
     IndexBuilder.build(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir,
       BuildConfig(numSegments = 4, chunkDocs = 128, storePositions = true))
   }
@@ -226,7 +226,7 @@ class PhraseSpec extends AnyFunSuite {
   }
 
   test("phrase over a positionless index fails closed with a clear error") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-nopos").toString
+    val dir = TestDirs.fresh("graft-nopos")
     val idx = IndexBuilder.build(spark, docs.take(50).toDF("doc_id", "text"),
       "doc_id", "text", dir, BuildConfig(numSegments = 2, chunkDocs = 128))
     val s = new IndexSearcher(idx)
@@ -252,7 +252,7 @@ class PhraseSpec extends AnyFunSuite {
   }
 
   test("append must match the committed index's positions setting") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-posappend").toString
+    val dir = TestDirs.fresh("graft-posappend")
     IndexBuilder.build(spark, docs.take(50).toDF("doc_id", "text"), "doc_id", "text", dir,
       BuildConfig(numSegments = 2, chunkDocs = 128, storePositions = true))
     val next = (1000L to 1010L).map(i => (i, "appended doc")).toDF("doc_id", "text")

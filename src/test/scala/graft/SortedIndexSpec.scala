@@ -21,7 +21,7 @@ class SortedIndexSpec extends AnyFunSuite {
   }
 
   private lazy val sorted = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sortedidx").toString
+    val dir = TestDirs.fresh("graft-sortedidx")
     IndexBuilder.buildSorted(spark, docs.toDF("doc_id", "text", "n_chars"),
       Seq(col("n_chars").desc, col("doc_id").asc), "text", dir,
       BuildConfig(numSegments = 4, chunkDocs = 128))
@@ -29,7 +29,7 @@ class SortedIndexSpec extends AnyFunSuite {
 
   test("manifest records the index sort; appends clear it") {
     assert(sorted.manifest.indexSort.nonEmpty)
-    val dir = java.nio.file.Files.createTempDirectory("graft-sortedidx-app").toString
+    val dir = TestDirs.fresh("graft-sortedidx-app")
     IndexBuilder.buildSorted(spark, docs.toDF("doc_id", "text", "n_chars"),
       Seq(col("n_chars").desc, col("doc_id").asc), "text", dir,
       BuildConfig(numSegments = 2, chunkDocs = 128))
@@ -67,7 +67,7 @@ class SortedIndexSpec extends AnyFunSuite {
     // index sorted by token count (== the norm docmeta stores, single-space
     // text) early-terminates to the SAME ranking the exhaustive
     // TopFieldCollector path (join norm, global sort) produces
-    val dir = java.nio.file.Files.createTempDirectory("graft-sortednorm").toString
+    val dir = TestDirs.fresh("graft-sortednorm")
     val idx = IndexBuilder.buildSorted(spark, docs.toDF("doc_id", "text", "n_chars"),
       Seq(size(split(col("text"), " ")).desc, col("doc_id").asc), "text", dir,
       BuildConfig(numSegments = 4, chunkDocs = 128))
@@ -95,7 +95,7 @@ class SortedIndexSpec extends AnyFunSuite {
       else if (i % 9 == 1) (i, "alpha")
       else (i, s"alpha w${i % 7} " + ("join " * ((i % 5) + 1).toInt).trim)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-sortedempty").toString
+    val dir = TestDirs.fresh("graft-sortedempty")
     val idx = IndexBuilder.buildSorted(spark, mixed.toDF("doc_id", "text"),
       Seq(when(col("text") === "", lit(0))
             .otherwise(size(split(col("text"), " "))).desc,
@@ -114,7 +114,7 @@ class SortedIndexSpec extends AnyFunSuite {
   }
 
   test("early termination respects tombstones") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sortedidx-del").toString
+    val dir = TestDirs.fresh("graft-sortedidx-del")
     IndexBuilder.buildSorted(spark, docs.toDF("doc_id", "text", "n_chars"),
       Seq(col("n_chars").desc, col("doc_id").asc), "text", dir,
       BuildConfig(numSegments = 4, chunkDocs = 128))

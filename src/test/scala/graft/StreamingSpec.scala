@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, lit, row_number, sha2}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.index.{BuildConfig, IndexIO}
@@ -17,8 +19,8 @@ class StreamingSpec extends AnyFunSuite {
   val cfg = BuildConfig(numSegments = 2, chunkDocs = 128)
 
   test("stream of micro-batches builds a live index; each batch visible after commit") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-stream-ckpt").toString
+    val dir = TestDirs.fresh("graft-stream")
+    val ckpt = TestDirs.fresh("graft-stream-ckpt")
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val source = MemoryStream[(Long, String)]
     source.addData((1L, "streamed alpha doc"), (2L, "streamed beta doc"), (3L, "gamma"))
@@ -52,7 +54,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("multi-partition burst batch: docId assignment is distributed and order-correct") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-burst").toString
+    val dir = TestDirs.fresh("graft-stream-burst")
     // a burst batch spread over several partitions, ids deliberately shuffled
     val n = 4000
     val rows = scala.util.Random.shuffle((0 until n).toVector)
@@ -83,7 +85,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("crash-mid-commit safety: a partial manifest version is invisible; data without manifest refuses rebuild") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-crash").toString
+    val dir = TestDirs.fresh("graft-stream-crash")
     val batch = Seq((1L, "crashsafe one"), (2L, "crashsafe two")).toDF("event_id", "content")
     StreamingIndexer.indexBatch(spark, batch, "event_id", "content", dir, cfg, batchId = 0L)
     val m1 = IndexIO.readManifest(spark, dir).get
@@ -105,7 +107,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("replayed micro-batch is idempotent (exactly-once on batchId)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-replay").toString
+    val dir = TestDirs.fresh("graft-stream-replay")
     val batch = Seq((10L, "replay doc one"), (11L, "replay doc two")).toDF("event_id", "content")
     StreamingIndexer.indexBatch(spark, batch, "event_id", "content", dir, cfg, batchId = 0L)
     val m1 = IndexIO.readManifest(spark, dir).get
@@ -118,5 +120,40 @@ class StreamingSpec extends AnyFunSuite {
     StreamingIndexer.indexBatch(spark, batch2, "event_id", "content", dir, cfg, batchId = 1L)
     val m3 = IndexIO.readManifest(spark, dir).get
     assert(m3.stats.docCount == 3L && m3.lastStreamBatch == 1L)
+  }
+
+  test("an empty micro-batch commits nothing, as the first batch and as a later one") {
+    val dir = TestDirs.fresh("graft-stream-empty")
+    val empty = Seq.empty[(Long, String)].toDF("event_id", "content")
+    def versions = Option(new java.io.File(s"$dir/manifest").list()).map(_.sorted.toSeq)
+    StreamingIndexer.indexBatch(spark, empty, "event_id", "content", dir, cfg, batchId = 0L)
+    assert(IndexIO.readManifest(spark, dir).isEmpty && versions.isEmpty)
+    assert(!IndexIO.exists(spark, s"$dir/postings") && !IndexIO.exists(spark, s"$dir/docmeta"))
+    StreamingIndexer.indexBatch(spark, Seq((1L, "empty then one")).toDF("event_id", "content"),
+      "event_id", "content", dir, cfg, batchId = 1L)
+    val m = IndexIO.readManifest(spark, dir).get
+    assert(versions.contains(Seq("v=1")))
+    StreamingIndexer.indexBatch(spark, empty.repartition(4), "event_id", "content", dir, cfg, batchId = 2L)
+    assert(IndexIO.readManifest(spark, dir).contains(m) && versions.contains(Seq("v=1")))
+  }
+
+  test("a shuffled 4-partition batch's docIds are base + row_number() over its orderCol - 1") {
+    val dir = TestDirs.fresh("graft-stream-rank")
+    StreamingIndexer.indexBatch(spark, Seq((5L, "first batch")).toDF("event_id", "content"),
+      "event_id", "content", dir, cfg, batchId = 0L)
+    val base = IndexIO.readManifest(spark, dir).get.nextDocBase
+    // unique event ids (7 is prime to 1000), in no order, over 4 partitions
+    val rows = new scala.util.Random(7).shuffle((0 until 600).toVector)
+      .map(i => (i * 7L % 1000L + 10L, s"ranked w${i % 17} doc $i"))
+    val batch = spark.createDataset(rows).toDF("event_id", "content").repartition(4)
+    assert(batch.rdd.getNumPartitions == 4)
+    StreamingIndexer.indexBatch(spark, batch, "event_id", "content", dir, cfg, batchId = 1L)
+    val expected = batch.select(
+      (lit(base) + row_number().over(Window.orderBy("event_id")) - 1L).as("docId"),
+      sha2(col("content"), 256).as("sha"))
+    val idx = new graft.index.BuiltIndex(dir, IndexIO.readManifest(spark, dir).get)
+    val got = idx.docmeta(spark).where(col("docId") >= base).select("docId", "sha")
+    assert(got.count() == rows.size.toLong)
+    assert(got.collect().toSet == expected.collect().toSet)
   }
 }

@@ -25,7 +25,7 @@ class TermVectorsSpec extends AnyFunSuite {
     storePositions = true, storeTermVectors = true, storeOffsets = true)
 
   private lazy val index = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tv").toString
+    val dir = TestDirs.fresh("graft-tv")
     IndexBuilder.build(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir, cfg)
   }
 
@@ -82,7 +82,7 @@ class TermVectorsSpec extends AnyFunSuite {
   }
 
   test("offsets survive forceMerge (postings highlighting on remapped docIds)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-off-fm").toString
+    val dir = TestDirs.fresh("graft-off-fm")
     IndexBuilder.build(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir, cfg)
     IndexOps.deleteByTerm(spark, dir, "needle")
     val merged = IndexOps.forceMerge(spark, dir)
@@ -102,7 +102,7 @@ class TermVectorsSpec extends AnyFunSuite {
   }
 
   test("append must match the committed index's offsets setting") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-off-append").toString
+    val dir = TestDirs.fresh("graft-off-append")
     IndexBuilder.build(spark, docs.take(30).toDF("doc_id", "text"), "doc_id", "text", dir, cfg)
     val next = (1000L to 1005L).map(i => (i, "appended doc")).toDF("doc_id", "text")
     intercept[IllegalArgumentException] {
@@ -112,7 +112,7 @@ class TermVectorsSpec extends AnyFunSuite {
   }
 
   test("index without term vectors fails closed on TV reads") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tv-none").toString
+    val dir = TestDirs.fresh("graft-tv-none")
     val idx = IndexBuilder.build(spark, docs.take(10).toDF("doc_id", "text"),
       "doc_id", "text", dir, BuildConfig(numSegments = 1, chunkDocs = 128))
     val ex = intercept[IllegalArgumentException] {
@@ -164,7 +164,7 @@ class TermVectorsSpec extends AnyFunSuite {
     val lowDocs = (0L until 12L).map { i =>
       (i, if (i == 0L) "foo bar" else "foo foo foo foo bar bar bar bar")
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-tv-mlt-edge").toString
+    val dir = TestDirs.fresh("graft-tv-mlt-edge")
     val idx = IndexBuilder.build(spark, lowDocs.toDF("doc_id", "text"), "doc_id", "text", dir,
       BuildConfig(numSegments = 1, chunkDocs = 128, storePositions = true, storeTermVectors = true))
     val s = new IndexSearcher(idx)
@@ -182,7 +182,7 @@ class TermVectorsSpec extends AnyFunSuite {
   }
 
   test("forceMerge carries term vectors through with remapped docIds") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tv-fm").toString
+    val dir = TestDirs.fresh("graft-tv-fm")
     IndexBuilder.build(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir, cfg)
     IndexOps.deleteByTerm(spark, dir, "needle")
     val merged = IndexOps.forceMerge(spark, dir)

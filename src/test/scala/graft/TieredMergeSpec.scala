@@ -23,7 +23,7 @@ class TieredMergeSpec extends AnyFunSuite {
     s.termStats(spark, terms)
 
   test("20 streaming micro-batches collapse to one generation; stats and hits unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tiered-stream").toString
+    val dir = TestDirs.fresh("graft-tiered-stream")
     (0 until 20).foreach { b =>
       val docs = (b * 25 until (b + 1) * 25).map(i => (i.toLong, text(i.toLong)))
       graft.streaming.StreamingIndexer.indexBatch(spark, docs.toDF("doc_id", "text"),
@@ -56,7 +56,7 @@ class TieredMergeSpec extends AnyFunSuite {
   }
 
   test("big generation stays untouched while small ones merge") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tiered-big").toString
+    val dir = TestDirs.fresh("graft-tiered-big")
     val big = (0L until 600L).map(i => (i, text(i) + " pad" * 8))
     val built = IndexBuilder.build(spark, big.toDF("doc_id", "text"), "doc_id", "text", dir, cfg)
     var base = built.nextDocBase
@@ -84,7 +84,7 @@ class TieredMergeSpec extends AnyFunSuite {
   }
 
   test("tombstones: merged segments reclaim, untouched segments keep theirs") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tiered-del").toString
+    val dir = TestDirs.fresh("graft-tiered-del")
     // gen 1 = big (segment 0); gens 2..4 = small appends (segments 1..3)
     val big = (0L until 500L).map(i => (i, text(i) + " pad" * 8))
     IndexBuilder.build(spark, big.toDF("doc_id", "text"), "doc_id", "text", dir, cfg)
@@ -136,7 +136,7 @@ class TieredMergeSpec extends AnyFunSuite {
   }
 
   test("merge -> append -> merge cycle: visibility, stats, and identity stay consistent") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tiered-cycle").toString
+    val dir = TestDirs.fresh("graft-tiered-cycle")
     def appendNext(n: Int): Unit = {
       val m = IndexIO.readManifest(spark, dir).get
       val base = (m.segments.map(_.segmentId).max + 1).toLong * m.segmentSize
@@ -170,7 +170,7 @@ class TieredMergeSpec extends AnyFunSuite {
   }
 
   test("no-op below the merge threshold") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-tiered-noop").toString
+    val dir = TestDirs.fresh("graft-tiered-noop")
     val docs = (0L until 100L).map(i => (i, text(i)))
     IndexBuilder.build(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir, cfg)
     val before = IndexIO.readManifest(spark, dir).get

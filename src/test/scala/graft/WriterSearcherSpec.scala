@@ -15,7 +15,7 @@ class TestIndexWriterEquivalent extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   def tmpDir(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$name").toString
+    TestDirs.fresh(s"graft-$name")
 
   test("AddDocument accounting: numDocs == docs added, field stats summed (indexwriter.go semantics)") {
     import spark.implicits._
@@ -110,7 +110,7 @@ class TestIndexSearcherEquivalent extends AnyFunSuite {
 
   def build(docs: Seq[(Long, String)]): IndexSearcher = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-s").toString
+    val dir = TestDirs.fresh("graft-s")
     val df = spark.createDataset(docs).toDF("doc_id", "content")
     new IndexSearcher(IndexBuilder.build(spark, df, "doc_id", "content", dir, BuildConfig(1, 128)))
   }

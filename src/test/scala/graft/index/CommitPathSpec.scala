@@ -3,7 +3,7 @@ package graft.index
 import org.apache.spark.sql.functions.{col, count, lit, sum, when}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkWork, TestSpark}
+import graft.{SparkWork, TestDirs, TestSpark}
 import graft.streaming.StreamingIndexer
 
 /** The lifecycle commit path: build, append, delete and both merges commit
@@ -61,7 +61,7 @@ class CommitPathSpec extends AnyFunSuite {
   }
 
   lazy val lifecycle: Seq[Step] = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-commit-path").toString
+    val dir = TestDirs.fresh("graft-commit-path")
     // segment 0: 256 long docs; segment 1: only empty, blank or null docs
     val built = step("build", dir)(IndexBuilder.build(spark,
       docs(0L until 300L, i => if (i < 256) text(i) * 3 else if (i % 2 == 0) null else " 　"),
@@ -85,10 +85,16 @@ class CommitPathSpec extends AnyFunSuite {
     val forced = step("forceMerge", dir)(IndexOps.forceMerge(spark, dir))
 
     // steady-state micro-batch: the third batch of a stream
-    val sdir = java.nio.file.Files.createTempDirectory("graft-commit-path-stream").toString
+    val sdir = TestDirs.fresh("graft-commit-path-stream")
     def batch(b: Long) = step(s"indexBatch $b", sdir)(StreamingIndexer.indexBatch(spark,
       docs(b * 40 until b * 40 + 40, text(_)), "doc_id", "text", sdir, cfg, batchId = b))
-    Seq(built, appended, appended2, deleted, tiered, afterCrash, forced) ++ (0L to 2L).map(batch)
+    val batches = (0L to 2L).map(batch)
+    // a sorted build: docIds are the rank of the (shuffled) doc_id order
+    val odir = TestDirs.fresh("graft-commit-path-sorted")
+    val sorted = step("buildSorted", odir)(IndexBuilder.buildSorted(spark,
+      docs(scala.util.Random.shuffle((1000L until 1300L).toVector), text(_)).repartition(4),
+      Seq(col("doc_id")), "text", odir, cfg))
+    Seq(built, appended, appended2, deleted, tiered, afterCrash, forced) ++ batches :+ sorted
   }
 
   private def stepNamed(name: String): Step = lifecycle.find(_.name == name).get
@@ -116,7 +122,7 @@ class CommitPathSpec extends AnyFunSuite {
 
   test("jobs per lifecycle operation stay within the commit path's bounds") {
     val bounds = Seq("build" -> 5, "append" -> 5, "deleteByTerm" -> 4, "maybeMerge" -> 5,
-      "forceMerge" -> 2, "indexBatch 2" -> 8)
+      "forceMerge" -> 2, "indexBatch 2" -> 5, "buildSorted" -> 5)
     val over = bounds.flatMap { case (name, max) =>
       val w = stepNamed(name).work
       if (w.jobs > max) Some(s"$name: ${w.jobs} jobs > $max ($w)") else None
@@ -127,7 +133,7 @@ class CommitPathSpec extends AnyFunSuite {
   }
 
   test("an append of no documents commits nothing; a build of none fails before it retracts the index") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-commit-path-empty").toString
+    val dir = TestDirs.fresh("graft-commit-path-empty")
     val built = IndexBuilder.build(spark, docs(0L until 40L, text(_)), "doc_id", "text", dir, cfg)
     val none = docs(Nil, text(_))
     val appended = IndexBuilder.append(spark, none, "doc_id", "text", dir, cfg)

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.TestSpark
+import graft.{TestDirs, TestSpark}
 
 /** Golden index bytes: one fixed corpus built under each IndexOptions
   * combination must produce exactly the recorded rows — every posting-block
@@ -95,7 +95,7 @@ class GoldenIndexSpec extends AnyFunSuite {
     * `del5`, force-merge. */
   private def lifecycleDigests(): Map[String, String] =
     configs.flatMap { case (name, cfg) =>
-      val dir = java.nio.file.Files.createTempDirectory(s"graft-golden-$name").toString
+      val dir = TestDirs.fresh(s"graft-golden-$name")
       val built = IndexBuilder.build(spark, corpus(0, 700).toDF("doc_id", "text"),
         "doc_id", "text", dir, cfg)
       val builtDigest = digest(built)

@@ -1,10 +1,14 @@
 package graft.index
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.sql.functions.{col, struct, to_json}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{SparkWork, TestCorpus, TestSpark}
+import graft.{SparkWork, TestCorpus, TestDirs, TestSpark}
 
 /** Reopening an index: the manifest is one JSON file read and written on the
   * driver, and the data trees are read with the schemas of the engine's own
@@ -15,7 +19,7 @@ class IndexIOSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def buildIndex(name: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft-io-$name").toString
+    val dir = TestDirs.fresh(s"graft-io-$name")
     IndexBuilder.build(spark, TestCorpus.generate(300, seed = 5).toDF("doc_id", "content"),
       "doc_id", "content", dir, BuildConfig(numSegments = 2, chunkDocs = 128, storeTermVectors = true))
     dir
@@ -96,5 +100,48 @@ class IndexIOSpec extends AnyFunSuite {
       IndexIO.delete(spark, s"$dir/manifest/v=99")
       assert(IndexIO.readManifest(spark, dir).contains(m))
     }
+  }
+
+  test("manifest.json is the to_json text of the manifest's row and decodes back to it") {
+    val dir = TestDirs.fresh("graft-io-format")
+    val segs = Seq(
+      SegmentMeta(0, 0L, 512L, 509L, 40960L, 3100L, 900L, 3100L, 0L, IndexBuilder.sha256Hex("0")),
+      SegmentMeta(3, 1536L, 77L, 0L, 0L, 0L, 0L, 0L, 0L, IndexBuilder.sha256Hex("3")))
+    val m = Manifest(generation = 9L, minGen = 2L, numSegments = segs.size, segmentSize = 512L,
+      stats = IndexStats.of(segs), segments = segs, corpusSha = IndexBuilder.sha256Hex("corpus"),
+      postingsBytes = 123456L, docmetaBytes = 7890L, deleteGen = 4L, deletedCount = 17L,
+      indexSort = "n_chars DESC NULLS LAST, \"größe\" ASC", deadGens = Seq(3L, 5L),
+      minDeleteGen = 2L, lastStreamBatch = 41L, hasPositions = true, hasTermVectors = true,
+      hasOffsets = true, hasPayloads = true, normMode = graft.bm25.NormMode.JavaLucene)
+    IndexIO.writeManifest(spark, dir, m)
+    // the reference: the Dataset query that encoded manifests before
+    val reference = Seq(m).toDF().select(to_json(struct(col("*")))).as[String].head()
+    assert(IndexIO.readText(spark, s"$dir/manifest/v=1/manifest.json").contains(reference))
+    assert(IndexIO.readManifest(spark, dir).contains(m))
+  }
+
+  test("readers see a whole committed manifest while another thread commits") {
+    val dir = buildIndex("concurrent")
+    val first = IndexIO.readManifest(spark, dir).get
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    try {
+      val readers = Seq.fill(4)(Future {
+        val seen = Seq.newBuilder[Option[Manifest]]
+        while (!stop.get) seen += IndexIO.readManifest(spark, dir)
+        seen.result()
+      })
+      val commits = Future {
+        try (1 to 20).map(i => IndexIO.commit(spark, dir, first.copy(lastStreamBatch = i.toLong)).manifest)
+        finally stop.set(true)
+      }
+      val committed = Await.result(commits, 2.minutes).toSet + first
+      assert(committed.size == 21)
+      val seen = readers.map(Await.result(_, 2.minutes))
+      assert(seen.forall(_.nonEmpty), "every reader read during the commits")
+      val bad = seen.flatten.filterNot(_.exists(committed))
+      assert(bad.isEmpty, s"${bad.size} of ${seen.map(_.size).sum} reads: ${bad.take(3)}")
+    } finally pool.shutdownNow()
   }
 }

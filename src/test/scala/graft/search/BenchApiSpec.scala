@@ -5,7 +5,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{TestCorpus, TestSpark}
+import graft.{TestCorpus, TestDirs, TestSpark}
 import graft.index.{BuildConfig, IndexBuilder, TermPostings}
 
 /** The engine API the benchmark package (`perfbench/src`) compiles
@@ -21,7 +21,7 @@ class BenchApiSpec extends AnyFunSuite {
 
   test("benchmark API shapes: the replayed top-k equals search and searchLocal") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-benchapi").toString
+    val dir = TestDirs.fresh("graft-benchapi")
     val idx = IndexBuilder.build(spark, spark.createDataset(corpus).toDF("doc_id", "text"),
       "doc_id", "text", dir, BuildConfig(numSegments = 3, chunkDocs = 128))
     val phases: Map[String, Double] = IndexBuilder.lastPhases.toMap

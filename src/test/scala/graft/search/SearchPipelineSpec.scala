@@ -2,7 +2,7 @@ package graft.search
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.{Oracle, SparkWork, TestCorpus, TestSpark}
+import graft.{Oracle, SparkWork, TestCorpus, TestDirs, TestSpark}
 import graft.index.{BuildConfig, IndexBuilder}
 
 /** The shared search pipeline: the term-stats pass every entry point reads
@@ -15,7 +15,7 @@ class SearchPipelineSpec extends AnyFunSuite {
 
   lazy val index = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-pipeline").toString
+    val dir = TestDirs.fresh("graft-pipeline")
     IndexBuilder.build(spark, spark.createDataset(corpus).toDF("doc_id", "content"),
       "doc_id", "content", dir, BuildConfig(numSegments = 4, chunkDocs = 128))
   }
