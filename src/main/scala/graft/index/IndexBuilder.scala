@@ -314,9 +314,7 @@ object IndexBuilder {
     var t0 = System.nanoTime()
     def phase(name: String): Unit = {
       val t1 = System.nanoTime()
-      val secs = (t1 - t0) / 1e9
-      lastPhases.put(name, secs)
-      System.err.println(f"[graft-build] phase=$name secs=$secs%.2f")
+      lastPhases.put(name, (t1 - t0) / 1e9)
       t0 = t1
     }
 

@@ -90,7 +90,7 @@ object ScorerBuilder {
         // the root and neverPrune when nested, exactly like WandScorer's
         // gating in buildBool
         Some(new DisjMaxWandScorer(subs, tb, minCompetitive))
-      else Some(new DisjunctionMaxScorer(subs, tb))
+      else Some(new DisjunctionSumScorer(subs, 1)) // the same docs; a non-scoring score is never read
     case PhraseQ(ts, slop) =>
       // every phrase term must have postings in this segment (conjunction);
       // weight = boost * sum of the terms' idfs (Lucene PhraseQuery+BM25)
@@ -771,9 +771,7 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
   private def runTopK(spark: SparkSession, qs0: Seq[Query], k: Int, hitsThreshold: Long = 0L,
                       localBudget: Option[Long] = None): Array[LeafTopK] = {
     import spark.implicits._
-    val t0 = System.nanoTime()
     val (qs, stats, ctx) = prepare(spark, qs0, scoring = true, k)
-    val t1 = System.nanoTime()
     val p = place(spark, qs, stats, k, localBudget)
     val kernelNanos = spark.sparkContext.longAccumulator(IndexSearcher.KernelNanos)
     val leavesOf = segmentLeaves(qs, ctx, k, None, hitsThreshold, p.shards, kernelNanos)
@@ -783,21 +781,16 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
       val byQuery = leaves.groupBy(_.query)
       Array.tabulate(qs.size)(qi => IndexSearcher.mergeTopK(k)(qi, byQuery.getOrElse(qi, Array.empty).iterator))
     }
-    val tops =
-      if (p.local) {
-        val rows = postingRows(spark, qs).collect().groupBy(_.segmentId)
-        onDriver(index.manifest.segments.toArray.flatMap { seg =>
-          leavesOf(seg, readers(rows.getOrElse(seg.segmentId, Array.empty).iterator, ctx), Array.emptyIntArray, 0)
-        })
-      } else {
-        val perLeaf = leaves(spark, qs, ctx, p.shards)(leavesOf)
-        if (p.driverMerge) onDriver(perLeaf.collect())
-        else perLeaf.groupByKey(_.query).mapGroups(IndexSearcher.mergeTopK(k)).collect().sortBy(_.query)
-      }
-    if (sys.env.contains("GRAFT_BATCH_TIMING"))
-      System.err.println(f"[graft-batch] rewrite+stats=${(t1 - t0) / 1e9}%.2f kernel+merge=" +
-        f"${(System.nanoTime() - t1) / 1e9}%.2f taskKernelSum=${kernelNanos.value / 1e9}%.2f")
-    tops
+    if (p.local) {
+      val rows = postingRows(spark, qs).collect().groupBy(_.segmentId)
+      onDriver(index.manifest.segments.toArray.flatMap { seg =>
+        leavesOf(seg, readers(rows.getOrElse(seg.segmentId, Array.empty).iterator, ctx), Array.emptyIntArray, 0)
+      })
+    } else {
+      val perLeaf = leaves(spark, qs, ctx, p.shards)(leavesOf)
+      if (p.driverMerge) onDriver(perLeaf.collect())
+      else perLeaf.groupByKey(_.query).mapGroups(IndexSearcher.mergeTopK(k)).collect().sortBy(_.query)
+    }
   }
 
   /** Exhaustive (doc, score) stream for every match — oracle/verify path. */

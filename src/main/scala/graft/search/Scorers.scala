@@ -19,6 +19,13 @@ trait Scorer {
   def cost: Long
   /** Upper bound of score() over all remaining docs (for WAND pruning). */
   def maxScore: Double
+  /** Upper bound of score() within the block covering `target`, decoding
+    * nothing — Lucene's `getMaxScore(upTo)` after `advanceShallow`. Only
+    * postings have blocks; every other scorer answers its global bound. */
+  def blockMaxScoreUpTo(target: Int): Double = maxScore
+  /** Last doc of the block covering `target`, the window [[blockMaxScoreUpTo]]
+    * holds for (`advanceShallow`); NO_MORE when the scorer has no blocks. */
+  def blockEndUpTo(target: Int): Int = DISI.NO_MORE
 }
 
 /** Shared, read-only decoded view of one term's posting list within one
@@ -235,18 +242,15 @@ final class PostingsScorer(
   lazy val maxScore: Double =
     if (!scoring) 0.0 else TermReader.bound(weight, reader.maxG)
 
-  /** Upper bound of score() within the block covering `target` (without
-    * decoding it) — the `advanceShallow`/`MaxScoreCache` analogue
-    * (`core/search/impactsdisi.go`). Returns 0 if exhausted.
-    */
-  def blockMaxScoreUpTo(target: Int): Double = {
+  /** The block's padded impact bound — the `MaxScoreCache` analogue
+    * (`core/search/impactsdisi.go`). Returns 0 if exhausted. */
+  override def blockMaxScoreUpTo(target: Int): Double = {
     val j = findBlock(math.max(bi, 0), target)
     if (j >= blocks.length) 0.0 else TermReader.bound(weight, reader.blockG(j))
   }
 
-  /** maxDoc of the block covering `target` (the window end for block-max
-    * skipping; NO_MORE when exhausted). Decodes nothing. */
-  def blockEndUpTo(target: Int): Int = {
+  /** maxDoc of the block covering `target` (NO_MORE when exhausted). */
+  override def blockEndUpTo(target: Int): Int = {
     val j = findBlock(math.max(bi, 0), target)
     if (j >= blocks.length) DISI.NO_MORE else blocks(j).maxDoc
   }
@@ -414,56 +418,85 @@ object SloppyMatch {
   }
 }
 
+/** The one block-max window check (Ding & Suel, "Faster Top-k Document
+  * Retrieval Using Block-Max Indexes", SIGIR 2011) — the role Lucene's
+  * `advanceShallow`/`getMaxScore` pair plays in `ImpactsDISI`,
+  * `BlockMaxConjunctionScorer` and `ReqOptSumScorer`. The window of a
+  * candidate `d` is [d, min over `subs` of blockEndUpTo(d)]; its bound is
+  * the sum, in `subs` order, of the subs' blockMaxScoreUpTo(d), with
+  * `extra` (a windowless addend, e.g. an optional clause's global max)
+  * added last.
+  *
+  * Safety: for every doc of the window the driving scorer's score is at
+  * most that bound — each sub's padded block bound dominates its score
+  * there, `extra` dominates the rest, and fp addition is monotone. A doc
+  * enters the top-k only by scoring STRICTLY above `minCompetitive()`, so a
+  * window whose bound is <= it holds no competitive doc and is skipped
+  * whole; ties at the threshold are never skipped. The check runs once per
+  * window, when a candidate first lands past the last window checked: the
+  * threshold only rises, so not re-checking an accepted window merely
+  * skips less — never wrongly — and inside it the per-doc cost is one
+  * compare. A window without an end (no sub has blocks) is not remembered:
+  * with nothing to skip past, re-checking each candidate is what lets a
+  * rising threshold end the segment early. A never-pruning gate accepts
+  * every window up front.
+  */
+final class BlockMaxGate(subs: Array[Scorer], extra: Double, minCompetitive: () => Double) {
+  private var winEnd = if (minCompetitive eq ConjunctionScorer.neverPrune) DISI.NO_MORE else -1
+
+  /** `d` if its window may hold a competitive doc, else the first doc past
+    * the window (NO_MORE when the window reaches the end). */
+  def check(d: Int): Int = {
+    if (d <= winEnd || d == DISI.NO_MORE) return d
+    var end = DISI.NO_MORE
+    var j = 0
+    while (j < subs.length) { val e = subs(j).blockEndUpTo(d); if (e < end) end = e; j += 1 }
+    if (end != DISI.NO_MORE) winEnd = end
+    val theta = minCompetitive()
+    if (theta == Double.NegativeInfinity) return d
+    var bound = 0.0
+    j = 0
+    while (j < subs.length) { bound += subs(j).blockMaxScoreUpTo(d); j += 1 }
+    if (bound + extra > theta) d
+    else if (end >= Int.MaxValue - 1) DISI.NO_MORE
+    else end + 1
+  }
+
+  /** First doc from `d` (where `lead` stands) whose window may compete,
+    * advancing `lead` past the windows that cannot. */
+  def skip(lead: Scorer, d0: Int): Int = {
+    var d = d0
+    var next = check(d)
+    while (next != d) { d = lead.advance(next); next = check(d) }
+    d
+  }
+}
+
 /** Block-max skipping for a ROOT-LEVEL scoring term query — the
   * ImpactsDISI treatment Lucene's TermScorer gets when its score is the
-  * collected score (`core/search/impactsdisi.go` role; our WAND and
-  * block-max conjunction already consult the same per-block impacts, but a
-  * bare term query previously scored every posting). Iteration skips any
-  * doc whose BLOCK's padded upper bound cannot beat the collector's
-  * current threshold, advancing straight past the block — identical top-k
-  * by the same argument as WAND's pruning (the padded bound certifiably
-  * dominates every score in the block, and ties at the threshold are never
-  * pruned because pruning requires bound <= theta while entry requires
-  * score > theta). The block (end, bound) pair is memoized per block so
-  * the per-doc check is two compares, not a binary search.
+  * collected score (`core/search/impactsdisi.go` role): iteration skips
+  * every block whose padded bound cannot beat the collector's threshold,
+  * through the one [[BlockMaxGate]].
   */
 final class BlockMaxTermScorer(inner: PostingsScorer, minCompetitive: () => Double)
     extends Scorer {
-  private var winEnd = -1 // maxDoc of the last block ACCEPTED as competitive
+  private val gate = new BlockMaxGate(Array(inner), 0.0, minCompetitive)
 
   def docId: Int = inner.docId
   def cost: Long = inner.cost
   lazy val maxScore: Double = inner.maxScore
   def score(): Double = inner.score()
-
-  // The bound/threshold check runs once per BLOCK ENTRY, not per doc:
-  // inside an accepted block the per-doc overhead is a single compare
-  // (d <= winEnd). The threshold only rises, so not re-checking mid-block
-  // merely skips less — never wrongly; a corpus whose impacts are uniform
-  // across blocks (no skip opportunities) pays ~1/128 of the per-doc cost.
-  private def skipNonCompetitive(d0: Int): Int = {
-    var d = d0
-    while (d != DISI.NO_MORE && d > winEnd) {
-      winEnd = inner.blockEndUpTo(d)
-      val theta = minCompetitive()
-      if (theta == Double.NegativeInfinity || inner.blockMaxScoreUpTo(d) > theta) return d
-      // the whole block [d, winEnd] is non-competitive
-      if (winEnd == DISI.NO_MORE || winEnd >= Int.MaxValue - 1) return inner.advance(DISI.NO_MORE)
-      d = inner.advance(winEnd + 1)
-    }
-    d
-  }
-
-  def nextDoc(): Int = skipNonCompetitive(inner.nextDoc())
-  def advance(target: Int): Int = skipNonCompetitive(inner.advance(target))
+  def nextDoc(): Int = gate.skip(inner, inner.nextDoc())
+  def advance(target: Int): Int = gate.skip(inner, inner.advance(target))
 }
 
 /** Phrase scorer — the PhraseQuery/ExactPhraseMatcher shape Lucene pairs
   * with the prox stream the reference stores
   * (`core/index/freqproxtermswriterperfield.go:96-122`; the two-phase
-  * iterator contract of SURVEY §2.4): the APPROXIMATION is the docs-level
-  * leapfrog conjunction of the terms' postings (cheapest-first), and the
-  * CONFIRMATION decodes positions only for docs where all terms co-occur.
+  * iterator contract of SURVEY §2.4): the APPROXIMATION is a non-scoring
+  * [[ConjunctionScorer]] over the terms' postings (the one leapfrog, led by
+  * the rarest term), and the CONFIRMATION decodes positions only for docs
+  * where all terms co-occur.
   * slop 0 counts occurrences where term i sits at position p+i; slop > 0
   * applies [[SloppyMatch]] (semantics documented on [[PhraseQ]]).
   *
@@ -476,8 +509,7 @@ final class PhraseScorer(terms: Array[PostingsScorer], weight: Double,
                          cache: Array[Double], scoring: Boolean,
                          slop: Int = 0) extends Scorer {
   require(terms.length >= 2, "phrase needs >= 2 terms (1-term phrases normalize to TermQ)")
-  private val byCost = terms.clone().sortBy(_.cost) // lead = rarest term
-  private var cur = -1
+  private val approx = new ConjunctionScorer(terms.toArray[Scorer], Array.empty)
   private var curFreq = 0.0
   // slop 0: phraseFreq <= min term freq and g is monotone in freq, so every
   // term's maxG bounds g(phraseFreq, norm) — the min over terms is tightest.
@@ -490,8 +522,8 @@ final class PhraseScorer(terms: Array[PostingsScorer], weight: Double,
     else if (slop == 0) TermReader.bound(weight, terms.iterator.map(_.reader.maxG).min)
     else TermReader.bound(weight, terms(0).reader.maxG)
 
-  def docId: Int = cur
-  def cost: Long = byCost(0).cost
+  def docId: Int = approx.docId
+  def cost: Long = approx.cost
 
   /** Count positions where terms(0)@p, terms(1)@p+1, ... (all ascending
     * arrays; k-way gallop with primitive cursors, no allocation). */
@@ -529,31 +561,16 @@ final class PhraseScorer(terms: Array[PostingsScorer], weight: Double,
     count
   }
 
-  private def doNext(target0: Int): Int = {
-    var target = target0
-    while (target != DISI.NO_MORE) {
-      // leapfrog all terms to agreement on `target` (docs-level approximation)
-      var advanced = true
-      while (advanced && target != DISI.NO_MORE) {
-        advanced = false
-        var j = 0
-        while (j < byCost.length && !advanced) {
-          val s = byCost(j)
-          if (s.docId < target) {
-            val d = s.advance(target)
-            if (d > target) { target = d; advanced = true }
-          } else if (s.docId > target) { target = s.docId; advanced = true }
-          j += 1
-        }
-      }
-      if (target == DISI.NO_MORE) { cur = target; return cur }
-      // confirmation: positions intersect (exact) / window within slop
+  /** The first doc from `d` (where the approximation stands) whose
+    * positions confirm the phrase (exact) or a window within slop. */
+  private def confirm(d0: Int): Int = {
+    var d = d0
+    while (d != DISI.NO_MORE) {
       val f = if (slop == 0) phraseFreqAt().toDouble else sloppyFreqAt()
-      if (f > 0) { cur = target; curFreq = f; return cur }
-      target = byCost(0).advance(target + 1)
+      if (f > 0) { curFreq = f; return d }
+      d = approx.advance(d + 1)
     }
-    cur = target
-    cur
+    d
   }
 
   /** Sloppy confirmation of the current doc: copy each term's position run
@@ -570,15 +587,9 @@ final class PhraseScorer(terms: Array[PostingsScorer], weight: Double,
     SloppyMatch.sloppyFreq(pos, slop)
   }
 
-  def nextDoc(): Int = {
-    if (cur == DISI.NO_MORE) return cur
-    doNext(byCost(0).nextDoc())
-  }
-
-  def advance(target: Int): Int = {
-    if (cur == DISI.NO_MORE || cur >= target) return cur
-    doNext(byCost(0).advance(target))
-  }
+  def nextDoc(): Int = confirm(approx.nextDoc())
+  def advance(target: Int): Int =
+    if (approx.docId >= target) approx.docId else confirm(approx.advance(target))
 
   def score(): Double =
     if (scoring) Bm25.scoreF(weight, curFreq, terms(0).normByte, cache) else 0.0
@@ -633,10 +644,11 @@ final class ConstantScoreScorer(inner: Scorer, boost: Double) extends Scorer {
   * `core/search/blockmaxconjunctionscorer.go:24-60,189-260`): when the
   * collector's threshold exceeds the sum of the clauses' CURRENT-block upper
   * bounds, the whole window up to the earliest block boundary is skipped
-  * without decoding. Only enabled (minCompetitive != -inf) when this
-  * conjunction's score IS the collected score — a pure-MUST/FILTER query —
-  * so pruning is provably safe: a skipped doc's score is bounded by the
-  * padded block sum, which did not beat the current worst top-k hit.
+  * without decoding, through the one [[BlockMaxGate]]. Only enabled
+  * (minCompetitive != neverPrune) when this conjunction's score IS the
+  * collected score — a pure-MUST/FILTER query — so pruning is provably
+  * safe: a skipped doc's score is bounded by the padded block sum, which
+  * did not beat the current worst top-k hit.
   */
 final class ConjunctionScorer(allSubs: Array[Scorer], scoringSubs: Array[Scorer],
                               minCompetitive: () => Double = ConjunctionScorer.neverPrune)
@@ -648,24 +660,7 @@ final class ConjunctionScorer(allSubs: Array[Scorer], scoringSubs: Array[Scorer]
   def cost: Long = subs.map(_.cost).min
   lazy val maxScore: Double = scoringSubs.map(_.maxScore).sum
 
-  /** Upper bound of score() within the blocks covering `target`, and the
-    * earliest covered block end — computed WITHOUT decoding. */
-  private def blockBoundAndEnd(target: Int): (Double, Int) = {
-    var bound = 0.0
-    var end = DISI.NO_MORE
-    var j = 0
-    while (j < scoringSubs.length) {
-      scoringSubs(j) match {
-        case p: PostingsScorer =>
-          bound += p.blockMaxScoreUpTo(target)
-          val e = p.blockEndUpTo(target)
-          if (e < end) end = e
-        case s => bound += s.maxScore
-      }
-      j += 1
-    }
-    (bound, end)
-  }
+  private val gate = new BlockMaxGate(scoringSubs, 0.0, minCompetitive)
 
   private def doNext(target0: Int): Int = {
     var target = target0
@@ -684,18 +679,10 @@ final class ConjunctionScorer(allSubs: Array[Scorer], scoringSubs: Array[Scorer]
           j += 1
         }
       }
-      if (target == DISI.NO_MORE) { cur = target; return cur }
-      // block-max check: can any doc in the current window be competitive?
-      val theta = minCompetitive()
-      if (theta == Double.NegativeInfinity) { cur = target; return cur }
-      val (bound, windowEnd) = blockBoundAndEnd(target)
-      if (bound > theta) { cur = target; return cur }
-      // the whole window [target, windowEnd] is non-competitive
-      target = if (windowEnd == DISI.NO_MORE) DISI.NO_MORE else windowEnd + 1
-      if (target != DISI.NO_MORE) subs(0).advance(target)
-      else { cur = DISI.NO_MORE; return cur }
-      // re-enter the loop from the lead's new position
-      target = subs(0).docId
+      // a window that cannot compete: re-enter from the lead past it
+      val next = gate.check(target)
+      if (next == target) { cur = target; return cur }
+      target = subs(0).advance(next)
     }
     cur = target
     cur
@@ -901,10 +888,7 @@ abstract class WandIterationScorer(subs: Array[Scorer],
         j = 0
         while (j < byDoc.length) {
           if (byDoc(j).docId == pivot) {
-            val ub = byDoc(j) match {
-              case p: PostingsScorer => p.blockMaxScoreUpTo(pivot)
-              case s => s.maxScore
-            }
+            val ub = byDoc(j).blockMaxScoreUpTo(pivot)
             if (ub > bMax) bMax = ub
             bSum += ub
           }
@@ -944,7 +928,8 @@ abstract class WandIterationScorer(subs: Array[Scorer],
   * Block-max pruning (Lucene's BlockMaxReqOptScorer role): when the
   * collector threshold exceeds the required clause's CURRENT-block padded
   * bound PLUS the optional side's certified global max, no doc in that
-  * window can be competitive — skip to the window end without scoring.
+  * window can be competitive — the [[BlockMaxGate]] skips to the window end
+  * without scoring.
   * Live only when this sum IS the collected score (root, scoring, no
   * minShouldMatch coupling — gated in buildBool exactly like the other
   * pruned scorers); the default sentinel keeps the exhaustive behavior.
@@ -956,30 +941,13 @@ final class ReqOptSumScorer(req: Scorer, opt: Scorer,
   def cost: Long = req.cost
   lazy val maxScore: Double = req.maxScore + opt.maxScore
 
-  private var winEnd = -1 // maxDoc of the last ACCEPTED req block
+  // only a postings req has blocks to gate on: a compound req keeps the
+  // exhaustive walk
+  private val gate = new BlockMaxGate(Array(req), opt.maxScore,
+    if (req.isInstanceOf[PostingsScorer]) minCompetitive else ConjunctionScorer.neverPrune)
 
-  // per-BLOCK check (see BlockMaxTermScorer): inside an accepted block the
-  // per-doc overhead is one compare; a non-PostingsScorer req disables the
-  // check permanently by accepting an infinite window
-  private def toCompetitive(d0: Int): Int = {
-    var d = d0
-    while (d != DISI.NO_MORE && d > winEnd) {
-      req match {
-        case p: PostingsScorer =>
-          winEnd = p.blockEndUpTo(d)
-          val theta = minCompetitive()
-          if (theta == Double.NegativeInfinity ||
-              p.blockMaxScoreUpTo(d) + opt.maxScore > theta) return d
-          if (winEnd == DISI.NO_MORE || winEnd >= Int.MaxValue - 1) return p.advance(DISI.NO_MORE)
-          d = p.advance(winEnd + 1)
-        case _ => winEnd = Int.MaxValue; return d // no block structure to consult
-      }
-    }
-    d
-  }
-
-  def nextDoc(): Int = toCompetitive(req.nextDoc())
-  def advance(target: Int): Int = toCompetitive(req.advance(target))
+  def nextDoc(): Int = gate.skip(req, req.nextDoc())
+  def advance(target: Int): Int = gate.skip(req, req.advance(target))
   def score(): Double = {
     var s = req.score()
     if (opt.docId < req.docId) opt.advance(req.docId)
@@ -1041,9 +1009,10 @@ final class ReqExclScorer(req: Scorer, excl: Scorer) extends Scorer {
   * [[WandScorer]], with the additive prefix bound replaced by the dismax
   * bound: for any clause subset, score = (1-tb)·mx + tb·sum is bounded by
   * (1-tb)·max(ub_j) + tb·Σ(ub_j) (tb ∈ [0,1], mx <= max ub, sum <= Σ ub —
-  * both coefficients non-negative). Exact evaluation reuses
-  * [[DisjunctionMaxScorer]]'s op order, so pruned and exhaustive runs are
-  * rank-identical (property-tested under k=1 pruning pressure).
+  * both coefficients non-negative). It is also the exhaustive scoring dismax
+  * (under neverPrune every pivot is evaluated), so pruned and exhaustive
+  * runs share one combiner and are rank-identical (property-tested under
+  * k=1 pruning pressure).
   */
 final class DisjMaxWandScorer(subs: Array[Scorer], tieBreak: Double,
                               minCompetitive: () => Double)
@@ -1059,33 +1028,14 @@ final class DisjMaxWandScorer(subs: Array[Scorer], tieBreak: Double,
     (1.0 - tieBreak) * maxUb + tieBreak * sumUb
 
   /** Exact dismax score of the clauses positioned at `doc`, in ORIGINAL
-    * clause order — the same fp op order as [[DisjunctionMaxScorer]]. */
+    * clause order: max + tieBreak·(sum − max), the oracle's fp op order
+    * (`core/search/disjunctionmaxquery.go:5-34`). */
   protected def scoreAt(doc: Int): Double = {
     var mx = Double.NegativeInfinity
     var sum = 0.0
     var j = 0
     while (j < subs.length) {
       if (subs(j).docId == doc) { val s = subs(j).score(); sum += s; if (s > mx) mx = s }
-      j += 1
-    }
-    mx + tieBreak * (sum - mx)
-  }
-}
-
-/** max + tieBreak*(sum-max) over sub-scores (`core/search/disjunctionmaxquery.go:5-34`). */
-final class DisjunctionMaxScorer(subs: Array[Scorer], tieBreak: Double) extends Scorer {
-  private val inner = new DisjunctionSumScorer(subs, 1)
-  def docId: Int = inner.docId
-  def nextDoc(): Int = inner.nextDoc()
-  def advance(target: Int): Int = inner.advance(target)
-  def cost: Long = inner.cost
-  lazy val maxScore: Double = subs.map(_.maxScore).max + tieBreak * (subs.map(_.maxScore).sum - subs.map(_.maxScore).max)
-  def score(): Double = {
-    var mx = Double.NegativeInfinity
-    var sum = 0.0
-    var j = 0
-    while (j < subs.length) {
-      if (subs(j).docId == inner.docId) { val s = subs(j).score(); sum += s; if (s > mx) mx = s }
       j += 1
     }
     mx + tieBreak * (sum - mx)

@@ -176,7 +176,17 @@ class EngineSpec extends AnyFunSuite {
       "boost_0" -> (BoolQ(should = Seq(BoostQ(TermQ("import"), 2.5), TermQ("id_17"))): Query),
       "dismax_0" -> (DisjMaxQ(Seq(TermQ("import"), TermQ("def"), TermQ("id_1")), 0.3): Query),
       "const_0" -> (BoolQ(must = Seq(TermQ("def")), filter = Seq(TermQ("import"))): Query),
-      "tis_0" -> (BoolQ(must = Seq(TermQ("val")), should = Seq(ConstQ(TermInSetQ(Set("id_1", "id_2", "id_3")), 0.5))): Query)
+      "tis_0" -> (BoolQ(must = Seq(TermQ("val")), should = Seq(ConstQ(TermInSetQ(Set("id_1", "id_2", "id_3")), 0.5))): Query),
+      // pruned conjunctions over compound scoring subs (no blocks of their
+      // own): beside a term's windows, and alone (one window without end)
+      "andcompound_0" -> (BoolQ(must = Seq(TermQ("import"),
+        DisjMaxQ(Seq(TermQ("def"), TermQ("fn7")), 0.2),
+        BoolQ(should = Seq(TermQ("val"), TermQ("return"))))): Query),
+      "andcompound_1" -> (BoolQ(must = Seq(DisjMaxQ(Seq(TermQ("import"), TermQ("id_1")), 0.5),
+        BoolQ(should = Seq(TermQ("def"), TermQ("fn7"))))): Query),
+      // ReqOpt over a conjunction req, which stays ungated
+      "mixed2must_0" -> (BoolQ(must = Seq(TermQ("def"), TermQ("val")),
+        should = Seq(TermQ("id_17"), TermQ("fn7"), TermQ("return"))): Query)
     )
     single ++ ands ++ ors ++ mixed ++ boosted
   }
@@ -323,8 +333,11 @@ class EngineSpec extends AnyFunSuite {
   test("count matches oracle (incl. O(1) shortcuts)") {
     assert(searcher.count(spark, MatchAllQ) == corpus.size)
     assert(searcher.count(spark, TermQ("import")) == Oracle.count(corpus, TermQ("import")))
-    val q = BoolQ(must = Seq(TermQ("def")), mustNot = Seq(TermQ("id_1")))
-    assert(searcher.count(spark, q) == Oracle.count(corpus, q))
+    val dismax = DisjMaxQ(Seq(TermQ("fn7"), TermQ("id_17"), TermQ("val")), 0.4)
+    Seq(BoolQ(must = Seq(TermQ("def")), mustNot = Seq(TermQ("id_1"))), dismax,
+      BoolQ(must = Seq(TermQ("import")), filter = Seq(dismax))).foreach { q =>
+      assert(searcher.count(spark, q) == Oracle.count(corpus, q), s"q=$q")
+    }
   }
 
   test("searchAfter deep paging: page2 == oracle ranks k..2k") {

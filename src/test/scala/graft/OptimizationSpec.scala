@@ -118,6 +118,43 @@ class OptimizationSpec extends AnyFunSuite {
     }
   }
 
+  test("ConjunctionScorer block-max pruning: top-k identical to exhaustive (filter + compound scoring sub)") {
+    val cache = Bm25.buildCache(avgdl = 30.0)
+    // `a` scores high (large freqs, short docs) below doc 1000 and low above
+    // it, so a high threshold rejects its later windows even against the
+    // union's global bound (a compound sub has no blocks of its own)
+    def term(density: Double, seed: Int, hot: Boolean): TermPostings = {
+      val r = new scala.util.Random(seed)
+      val ds = (0 until 4000).filter(_ => r.nextDouble() < density).toArray
+      val fs = ds.map(d => if (hot && d < 1000) 10 + r.nextInt(20) else 1 + r.nextInt(3))
+      val ns = ds.map(d => (if (hot && d < 1000) 3 + r.nextInt(5) else 20 + r.nextInt(200)).toByte)
+      TermPostings(0, s"t$seed", ds.length, fs.map(_.toLong).sum,
+        IndexBuilder.buildBlocks(ds, fs, ns), 2)
+    }
+    val tps = Seq(term(0.8, 3, hot = true), term(0.7, 5, hot = false), term(0.9, 7, hot = false),
+      term(0.5, 11, hot = false), term(0.4, 13, hot = false))
+    val weights = Seq(3.0, 0.5, 0.0, 0.3, 0.3)
+    for (k <- Seq(1, 3, 10)) {
+      def run(pruned: Boolean): (Seq[(Long, Double)], Long) = {
+        val col = new TopKCollector(k, 0L, None)
+        val Seq(a, b, f, c, d) = tps.zip(weights).zipWithIndex.map { case ((tp, w), i) =>
+          new PostingsScorer(new TermReader(tp, cache), w, cache, scoring = i != 2): Scorer
+        }
+        val union: Scorer = new DisjunctionSumScorer(Array(c, d), 1)
+        // `f` is FILTER-only: it iterates but neither scores nor bounds
+        val s = new ConjunctionScorer(Array(a, f, union, b), Array(a, union, b),
+          if (pruned) () => col.minCompetitive else ConjunctionScorer.neverPrune)
+        var doc = s.nextDoc()
+        while (doc != DISI.NO_MORE) { col.collect(doc, s.score()); doc = s.nextDoc() }
+        (col.results.toSeq, col.collected)
+      }
+      val (prunedTop, prunedSeen) = run(pruned = true)
+      val (fullTop, fullSeen) = run(pruned = false)
+      assert(prunedTop == fullTop, s"k=$k")
+      assert(prunedSeen < fullSeen, s"k=$k: the gate skipped no window ($prunedSeen of $fullSeen)")
+    }
+  }
+
   test("DisjunctionSumScorer msm leapfrog: identical (doc, score) stream to brute force") {
     val rnd = new scala.util.Random(23)
     val cache = Bm25.buildCache(avgdl = 25.0)
