@@ -1,5 +1,6 @@
 package graft.search
 
+import scala.collection.mutable.ArrayBuilder
 import scala.reflect.ClassTag
 
 import org.apache.spark.rdd.RDD
@@ -33,10 +34,51 @@ object TotalHits {
   val GTE = "GREATER_THAN_OR_EQUAL_TO"
 }
 
-/** Query `query`'s top-k over one segment (a leaf) or over all of them (a
-  * merge): hits score desc / docId asc, the matches counted, and whether
-  * pruning made that count a lower bound. */
-final case class LeafTopK(query: Int, hits: Array[ScoredDoc], collected: Long, pruned: Boolean)
+/** The top-k of a run of queries, flat: query `queries(j)`'s hits are
+  * `docIds(h)`/`scores(h)` for h in [offsets(j), offsets(j + 1)), score desc,
+  * docId asc; `collected(j)` counts its matches and `pruned(j)` says whether
+  * pruning made that count a lower bound. Queries ascend. A kernel task
+  * emits one leaf block per merge partition; [[IndexSearcher.mergeTopK]]
+  * merges blocks into one that holds each of their queries once. */
+final case class HitBlock(queries: Array[Int], offsets: Array[Int], docIds: Array[Long],
+                          scores: Array[Double], collected: Array[Long], pruned: Array[Boolean]) {
+  /** Every hit in block order, as `f(query, docId, score)`. */
+  def rows[T](f: (Int, Long, Double) => T): Iterator[T] =
+    queries.indices.iterator.flatMap(j =>
+      (offsets(j) until offsets(j + 1)).iterator.map(h => f(queries(j), docIds(h), scores(h))))
+}
+
+object HitBlock {
+  /** Appends queries in ascending order, each after its hits. */
+  private[search] final class Builder {
+    private val queries = new ArrayBuilder.ofInt
+    private val offsets = new ArrayBuilder.ofInt
+    private val docIds = new ArrayBuilder.ofLong
+    private val scores = new ArrayBuilder.ofDouble
+    private val collected = new ArrayBuilder.ofLong
+    private val pruned = new ArrayBuilder.ofBoolean
+    offsets.addOne(0)
+
+    def nonEmpty: Boolean = queries.length > 0
+
+    def hit(docId: Long, score: Double): Unit = { docIds.addOne(docId); scores.addOne(score) }
+
+    /** Close query `q` over the hits added since the previous query. */
+    def query(q: Int, count: Long, wasPruned: Boolean): Unit = {
+      queries.addOne(q); offsets.addOne(docIds.length); collected.addOne(count); pruned.addOne(wasPruned)
+    }
+
+    /** Query `q`'s leaf: its collector's hits and counts. */
+    def leaf(q: Int, c: TopKCollector): Unit = {
+      val (d, s) = c.sortedHits
+      docIds.addAll(d); scores.addAll(s)
+      query(q, c.collected, c.pruned)
+    }
+
+    def result(): HitBlock = HitBlock(queries.result(), offsets.result(), docIds.result(),
+      scores.result(), collected.result(), pruned.result())
+  }
+}
 
 /** One hit of a batch multi-query run (see [[IndexSearcher.searchMany]]). */
 final case class QueryHit(queryId: String, docId: Long, score: Double)
@@ -302,34 +344,96 @@ object SegmentKernel {
   * rewrite + weight on the driver (tiny stats lookup with term pushdown),
   * scorer tree per partition via cogroup over segments, leaf top-k heaps,
   * then the per-query merge ≡ `MergeTopDocs`: `orderBy(score desc, docId
-  * asc).limit(k)` for the lazy [[IndexSearcher.search]], [[mergeTopK]] for
-  * the eager top-k runs.
+  * asc).limit(k)` for [[IndexSearcher.search]], [[mergeTopK]] for the
+  * batch and single-query top-k runs.
   */
 object IndexSearcher {
   /** Stats-memo LRU bound (entries are a term + two longs — ~100 B each,
     * so the bound caps the memo near 100 MB of driver heap). */
   val StatsCacheMaxEntries: Int = 1 << 20
 
-  /** Driver-merge bound of the eager top-k runs: when queries × segments ×
-    * k (the worst-case pre-merge hit count) is at most this, leaf hits are
-    * collected and merged on the driver (~40 B/hit, so the bound caps the
-    * collect near 40 MB); larger runs keep the distributed groupByKey merge.
-    * It also bounds the term-stats collect. */
+  /** Driver-merge bound of the single-query top-k runs (searchWithTotal,
+    * searchLocal): when segments × k (the worst-case pre-merge hit count)
+    * is at most this, the leaf blocks are collected and merged on the
+    * driver (~16 B/hit, so the bound caps the collect near 16 MB); larger
+    * runs merge in the exchange first. It also bounds the term-stats
+    * collect. */
   val DriverMergeMaxRows: Long = 1L << 20
 
   /** The accumulator every top-k leaf adds its kernel time to, in ns. */
   val KernelNanos = "graft-batch-kernel-nanos"
 
   /** The one top-k merge (≡ MergeTopDocs, `core/search/topdocs.go:33-110`):
-    * one query's leaves → its first k hits by score desc, docId asc (global
-    * docIds encode (segment asc, localDoc asc), so the tie-break is
-    * Lucene's), with the leaves' counts summed. It runs on the driver and
-    * inside the exchange alike. */
-  private[search] def mergeTopK(k: Int)(query: Int, leaves: Iterator[LeafTopK]): LeafTopK = {
-    val ls = leaves.toArray
-    LeafTopK(query, ls.flatMap(_.hits).sortBy(h => (-h.score, h.docId)).take(k),
-      ls.iterator.map(_.collected).sum, ls.exists(_.pruned))
+    * blocks → one block holding each of their queries once, in ascending
+    * order, with its first k hits by score desc, docId asc (global docIds
+    * encode (segment asc, localDoc asc), so the tie-break is Lucene's) and
+    * its counts summed. A k-way merge over the blocks' runs of each query,
+    * which are already in that order; it runs on the driver and inside the
+    * exchange alike. */
+  private[search] def mergeTopK(k: Int)(blocks: Array[HitBlock]): HitBlock = {
+    val out = new HitBlock.Builder
+    val next = new Array[Int](blocks.length) // each block's next query slot
+    val pos = new Array[Int](blocks.length)  // each block's run of the query
+    val end = new Array[Int](blocks.length)  // being merged: pos until end
+    // the lowest query a block has left; Int.MaxValue once none has
+    def nextQuery(): Int = {
+      var q = Int.MaxValue
+      var b = 0
+      while (b < blocks.length) {
+        if (next(b) < blocks(b).queries.length) q = math.min(q, blocks(b).queries(next(b)))
+        b += 1
+      }
+      q
+    }
+    // block b's next hit ranks before block c's: score desc, docId asc
+    def before(b: Int, c: Int): Boolean = {
+      val sb = blocks(b).scores(pos(b))
+      val sc = blocks(c).scores(pos(c))
+      sb > sc || (sb == sc && blocks(b).docIds(pos(b)) < blocks(c).docIds(pos(c)))
+    }
+    var q = nextQuery()
+    while (q != Int.MaxValue) {
+      var collected = 0L
+      var pruned = false
+      var b = 0
+      while (b < blocks.length) {
+        val bl = blocks(b)
+        val j = next(b)
+        if (j < bl.queries.length && bl.queries(j) == q) {
+          pos(b) = bl.offsets(j); end(b) = bl.offsets(j + 1)
+          collected += bl.collected(j); pruned ||= bl.pruned(j)
+          next(b) = j + 1
+        } else { pos(b) = 0; end(b) = 0 }
+        b += 1
+      }
+      var taken = 0
+      var best = 0
+      while (taken < k && best >= 0) {
+        best = -1
+        b = 0
+        while (b < blocks.length) {
+          if (pos(b) < end(b) && (best < 0 || before(b, best))) best = b
+          b += 1
+        }
+        if (best >= 0) {
+          out.hit(blocks(best).docIds(pos(best)), blocks(best).scores(pos(best)))
+          pos(best) += 1
+          taken += 1
+        }
+      }
+      out.query(q, collected, pruned)
+      q = nextQuery()
+    }
+    out.result()
   }
+
+  /** The merge exchange: the leaf blocks routed by the merge partition they
+    * are keyed by (an Int key below `parts` hashes to itself) in the same
+    * lineage as the segment run, so a top-k run stays one job with no
+    * adaptive map stage, and each merge task's blocks merged into one. */
+  private[search] def mergeExchange(leaves: RDD[(Int, HitBlock)], parts: Int, k: Int): RDD[HitBlock] =
+    leaves.partitionBy(new org.apache.spark.HashPartitioner(parts))
+      .mapPartitions(it => Iterator.single(mergeTopK(k)(it.map(_._2).toArray)))
 
   /** Access-order LRU bounded at `max` entries: at the bound each insert
     * evicts only the least-recently-used entry (never the whole map). */
@@ -644,9 +748,10 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
              after: Option[(Double, Long)] = None): Dataset[ScoredDoc] = {
     import spark.implicits._
     val (qs, _, ctx) = prepare(spark, Seq(q0), scoring = true, k)
-    val leavesOf = segmentLeaves(qs, ctx, k, after, 0L, shards = 1,
+    val leavesOf = segmentLeaves(spark, qs, ctx, k, after, 0L, shards = 1, parts = 1,
       spark.sparkContext.longAccumulator(IndexSearcher.KernelNanos))
-    leaves(spark, qs, ctx)((seg, rds, del, shard) => leavesOf(seg, rds, del, shard).flatMap(_.hits))
+    leaves(spark, qs, ctx)((seg, rds, del, shard) =>
+      leavesOf(seg, rds, del, shard).flatMap(_._2.rows((_, d, s) => ScoredDoc(d, s))))
       .orderBy($"score".desc, $"docId".asc).limit(k)
   }
 
@@ -659,10 +764,8 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     * With k = 0 no hit is kept and the total is exact.
     */
   def searchWithTotal(spark: SparkSession, q0: Query, k: Int,
-                      hitsThreshold: Long = 1000L): (Array[ScoredDoc], TotalHits) = {
-    val top = runTopK(spark, Seq(q0), k, hitsThreshold).head
-    (top.hits, TotalHits(top.collected, if (top.pruned) TotalHits.GTE else TotalHits.EQ))
-  }
+                      hitsThreshold: Long = 1000L): (Array[ScoredDoc], TotalHits) =
+    runTopK(spark, q0, k, hitsThreshold)
 
   /** In-process top-k for SELECTIVE queries — the reference's embedded
     * library mode (Lucene runs in-process; ours normally pays 2 Spark jobs
@@ -675,7 +778,7 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     */
   def searchLocal(spark: SparkSession, q0: Query, k: Int,
                   maxLocalPostings: Long = 5000000L): Array[ScoredDoc] =
-    runTopK(spark, Seq(q0), k, localBudget = Some(maxLocalPostings)).head.hits
+    runTopK(spark, q0, k, localBudget = Some(maxLocalPostings))._1
 
   /** Batch execution of a whole query set in ONE distributed job — the
     * throughput shape for cluster-scale workloads: postings for the union
@@ -683,20 +786,37 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     * inside one pass, and the per-query merge sees numSegments * k rows per
     * query. Per-query Spark job scheduling overhead is paid once for the
     * set; term statistics come from the searcher's memo, so a repeated
-    * batch runs no stats job. Eager: the result is materialized.
+    * batch runs no stats job. The job has three stages: the posting scan,
+    * the kernel, whose tasks hand one flat [[HitBlock]] per merge partition
+    * to the exchange, and the merge, whose tasks each own an ascending range
+    * of the batch. Rows come in batch order, each query's hits score desc,
+    * docId asc.
+    *
+    * Lazy, like [[search]]: the term stats are read in the call, and each
+    * action on the Dataset runs the job again (Spark skips the stages whose
+    * shuffle output an earlier action left, so a repeat may rerun only the
+    * merge).
     *
     * Rank-identity: same leaves, same tie-break (score desc, global docId
     * asc) as [[search]].
     */
   def searchMany(spark: SparkSession, queries: Seq[(String, Query)], k: Int): Dataset[QueryHit] = {
     import spark.implicits._
-    val tops = runTopK(spark, queries.map(_._2), k)
-    spark.createDataset(queries.zip(tops).flatMap { case ((id, _), top) =>
-      top.hits.map(h => QueryHit(id, h.docId, h.score))
-    })
+    val (qs, stats, ctx) = prepare(spark, queries.map(_._2), scoring = true, k)
+    if (qs.isEmpty || index.manifest.segments.isEmpty) return spark.emptyDataset[QueryHit]
+    val shards = place(spark, qs, stats, k, localBudget = None).shards
+    val parts = math.min(qs.size, spark.sparkContext.defaultParallelism)
+    val leavesOf = segmentLeaves(spark, qs, ctx, k, None, 0L, shards, parts,
+      spark.sparkContext.longAccumulator(IndexSearcher.KernelNanos))
+    val ids = spark.sparkContext.broadcast(queries.map(_._1).toArray)
+    spark.createDataset(IndexSearcher.mergeExchange(leafRdd(spark, qs, ctx, shards)(leavesOf), parts, k)
+      .mapPartitions { merged =>
+        val id = ids.value
+        merged.flatMap(_.rows((q, d, s) => QueryHit(id(q), d, s)))
+      })
   }
 
-  /** Where an eager top-k run executes, as [[place]] decides it. */
+  /** Where a top-k run executes, as [[place]] decides it. */
   private case class Placement(local: Boolean, shards: Int, driverMerge: Boolean)
 
   /** Replicated-posting budget for query-sharded runs: sharding duplicates
@@ -705,7 +825,7 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     * norm; a whole-vocabulary batch keeps one task per segment). */
   private val ShardedPostingsBudget = 32000000L
 
-  /** The one placement gate of the eager top-k runs, decided from the term
+  /** The one placement gate of the top-k runs, decided from the term
     * stats before any posting is read:
     *  - In process only when the caller offers a posting budget
     *    (searchLocal) and the queries' total posting count fits it.
@@ -723,8 +843,9 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     *    shard for multi-term queries.
     *  - Merge side: when even the pre-merge row bound (queries × segments ×
     *    k) is within [[IndexSearcher.DriverMergeMaxRows]], the leaves are
-    *    collected and merged on the driver, skipping the exchange and stage
-    *    that dominated small batches; larger runs merge in a groupByKey.
+    *    collected and merged on the driver, skipping the exchange and its
+    *    stage; larger runs merge in the exchange first. Only the
+    *    single-query runs read it: searchMany always merges in the exchange.
     */
   private def place(spark: SparkSession, qs: Seq[Query], stats: Map[String, (Long, Long)],
                     k: Int, localBudget: Option[Long]): Placement = {
@@ -743,54 +864,64 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
   }
 
   /** The leaves of one (segment, shard): a [[SegmentKernel.leaf]] for each
-    * query of the shard (query i runs in shard i % shards). All leaves of
-    * query i share one [[MaxScoreAccumulator]] run id, so leaves in one
-    * executor JVM, or the sequential in-process ones, raise each other's
-    * pruning floor. Each call adds its kernel time (posting decode plus
-    * scoring) to `kernelNanos`. */
-  private def segmentLeaves(qs: Seq[Query], ctx: QueryContext, k: Int, after: Option[(Double, Long)],
-                            hitsThreshold: Long, shards: Int, kernelNanos: LongAccumulator)
-      : (SegmentMeta, Map[String, TermReader], Array[Int], Int) => Iterator[LeafTopK] = {
-    val runIds = Array.fill(qs.size)(MaxScoreAccumulator.newRunId())
+    * query of the shard (query i runs in shard i % shards), handed over as
+    * one [[HitBlock]] per merge partition that has any, keyed by it: query
+    * i merges in partition i * parts / |qs|, so each partition owns an
+    * ascending range of queries. A leaf that neither counted a match nor
+    * pruned adds nothing to its query's merge and is left out.
+    *
+    * The queries and their [[MaxScoreAccumulator]] run ids ship once per
+    * call in one broadcast, not in each task's closure. All leaves of query
+    * i share its run id, so leaves in one executor JVM, or the sequential
+    * in-process ones, raise each other's pruning floor. The broadcast is
+    * not destroyed here, since a lazy Dataset may run the leaves again; the
+    * ContextCleaner frees it once it is unreachable. Each call adds its
+    * kernel time (posting decode plus scoring) to `kernelNanos`. */
+  private[search] def segmentLeaves(spark: SparkSession, qs: Seq[Query], ctx: QueryContext, k: Int,
+                                    after: Option[(Double, Long)], hitsThreshold: Long, shards: Int,
+                                    parts: Int, kernelNanos: LongAccumulator)
+      : (SegmentMeta, Map[String, TermReader], Array[Int], Int) => Iterator[(Int, HitBlock)] = {
+    val batch = spark.sparkContext.broadcast((qs.toArray, Array.fill(qs.size)(MaxScoreAccumulator.newRunId())))
+    val n = qs.size
     (seg, rds, del, shard) => {
       val t0 = System.nanoTime()
-      val out = qs.indices.filter(_ % shards == shard).map { qi =>
-        val c = SegmentKernel.leaf(qs(qi), rds, seg, ctx, k, after, del, runIds(qi), hitsThreshold)
-        LeafTopK(qi, c.hits, c.collected, c.pruned)
+      val (queries, runIds) = batch.value
+      val blocks = Array.fill(parts)(new HitBlock.Builder)
+      for (qi <- shard until n by shards) {
+        val c = SegmentKernel.leaf(queries(qi), rds, seg, ctx, k, after, del, runIds(qi), hitsThreshold)
+        if (c.collected > 0 || c.pruned) blocks((qi.toLong * parts / n).toInt).leaf(qi, c)
       }
       kernelNanos.add(System.nanoTime() - t0)
-      out.iterator
+      blocks.indices.iterator.collect { case p if blocks(p).nonEmpty => p -> blocks(p).result() }
     }
   }
 
-  /** The one eager top-k runner behind searchWithTotal, searchLocal and
-    * searchMany: [[prepare]], [[place]], the [[segmentLeaves]] in process
-    * or through [[runSegments]], then one [[IndexSearcher.mergeTopK]] per
-    * query on the driver or inside the exchange. Element i is query i's
-    * merged top-k. */
-  private def runTopK(spark: SparkSession, qs0: Seq[Query], k: Int, hitsThreshold: Long = 0L,
-                      localBudget: Option[Long] = None): Array[LeafTopK] = {
-    import spark.implicits._
-    val (qs, stats, ctx) = prepare(spark, qs0, scoring = true, k)
+  /** The one eager top-k runner behind searchWithTotal and searchLocal:
+    * [[prepare]], [[place]], the [[segmentLeaves]] of the query in process
+    * or through [[runSegments]], then [[IndexSearcher.mergeTopK]] on the
+    * driver — over the leaf blocks, or over-bound over the block the
+    * exchange merged. The query's hits and total. */
+  private def runTopK(spark: SparkSession, q0: Query, k: Int, hitsThreshold: Long = 0L,
+                      localBudget: Option[Long] = None): (Array[ScoredDoc], TotalHits) = {
+    val (qs, stats, ctx) = prepare(spark, Seq(q0), scoring = true, k)
     val p = place(spark, qs, stats, k, localBudget)
-    val kernelNanos = spark.sparkContext.longAccumulator(IndexSearcher.KernelNanos)
-    val leavesOf = segmentLeaves(qs, ctx, k, None, hitsThreshold, p.shards, kernelNanos)
-    // every query gets an entry: one without leaves (an index without
-    // segments, which always merges here) merges to no hits
-    def onDriver(leaves: Array[LeafTopK]): Array[LeafTopK] = {
-      val byQuery = leaves.groupBy(_.query)
-      Array.tabulate(qs.size)(qi => IndexSearcher.mergeTopK(k)(qi, byQuery.getOrElse(qi, Array.empty).iterator))
-    }
-    if (p.local) {
-      val rows = postingRows(spark, qs).collect().groupBy(_.segmentId)
-      onDriver(index.manifest.segments.toArray.flatMap { seg =>
-        leavesOf(seg, readers(rows.getOrElse(seg.segmentId, Array.empty).iterator, ctx), Array.emptyIntArray, 0)
-      })
-    } else {
-      val perLeaf = leaves(spark, qs, ctx, p.shards)(leavesOf)
-      if (p.driverMerge) onDriver(perLeaf.collect())
-      else perLeaf.groupByKey(_.query).mapGroups(IndexSearcher.mergeTopK(k)).collect().sortBy(_.query)
-    }
+    val leavesOf = segmentLeaves(spark, qs, ctx, k, None, hitsThreshold, p.shards, parts = 1,
+      spark.sparkContext.longAccumulator(IndexSearcher.KernelNanos))
+    val blocks: Array[HitBlock] =
+      if (p.local) {
+        val rows = postingRows(spark, qs).collect().groupBy(_.segmentId)
+        index.manifest.segments.toArray.flatMap { seg =>
+          leavesOf(seg, readers(rows.getOrElse(seg.segmentId, Array.empty).iterator, ctx), Array.emptyIntArray, 0)
+            .map(_._2)
+        }
+      } else if (index.manifest.segments.isEmpty) Array.empty
+      else if (p.driverMerge) leafRdd(spark, qs, ctx, p.shards)(leavesOf).values.collect()
+      else IndexSearcher.mergeExchange(leafRdd(spark, qs, ctx, p.shards)(leavesOf), 1, k).collect()
+    // a query without leaves (no match in any segment) merges to no hits
+    val top = IndexSearcher.mergeTopK(k)(blocks)
+    val hits = top.rows((_, d, s) => ScoredDoc(d, s)).toArray
+    if (top.queries.isEmpty) (hits, TotalHits(0L, TotalHits.EQ))
+    else (hits, TotalHits(top.collected(0), if (top.pruned(0)) TotalHits.GTE else TotalHits.EQ))
   }
 
   /** Exhaustive (doc, score) stream for every match — oracle/verify path. */
@@ -922,12 +1053,17 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
   /** The leaf pass of every single-index entry point: the queries' posting
     * rows through [[runSegments]], each (segment, shard) kernel over one
     * decoded reader per term. */
-  private def leaves[T: Encoder : ClassTag](spark: SparkSession, qs: Seq[Query], ctx: QueryContext,
-                                            shards: Int = 1)(
-      kernel: (SegmentMeta, Map[String, TermReader], Array[Int], Int) => Iterator[T]): Dataset[T] =
+  private def leafRdd[T: ClassTag](spark: SparkSession, qs: Seq[Query], ctx: QueryContext, shards: Int = 1)(
+      kernel: (SegmentMeta, Map[String, TermReader], Array[Int], Int) => Iterator[T]): RDD[T] =
     runSegments(spark, postingRows(spark, qs).rdd.map(tp => tp.segmentId -> tp), shards) {
       (seg, rows, del, shard) => kernel(seg, readers(rows, ctx), del, shard)
     }
+
+  /** [[leafRdd]] as a Dataset; an index without segments runs no job. */
+  private def leaves[T: Encoder : ClassTag](spark: SparkSession, qs: Seq[Query], ctx: QueryContext)(
+      kernel: (SegmentMeta, Map[String, TermReader], Array[Int], Int) => Iterator[T]): Dataset[T] =
+    if (index.manifest.segments.isEmpty) spark.emptyDataset[T]
+    else spark.createDataset(leafRdd(spark, qs, ctx)(kernel))
 
   /** The one segment runner: a per-(segment, queryShard) kernel over the
     * `rows` keyed by segmentId, with EXACTLY one group per task via an
@@ -943,12 +1079,12 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     * Row payloads are opaque: [[MultiFieldSearcher]] runs its (field,
     * postings) rows through here over the segment geometry all its fields
     * share. An index without segments (every doc deleted, then merged)
-    * yields no rows and runs no job.
+    * yields an RDD without partitions.
     */
-  private[search] def runSegments[P <: AnyRef, T: Encoder : ClassTag](
+  private[search] def runSegments[P <: AnyRef, T: ClassTag](
       spark: SparkSession, rows: RDD[(Int, P)], shards: Int = 1)(
-      kernel: (SegmentMeta, Iterable[P], Array[Int], Int) => Iterator[T]): Dataset[T] = {
-    if (index.manifest.segments.isEmpty) return spark.emptyDataset[T]
+      kernel: (SegmentMeta, Iterable[P], Array[Int], Int) => Iterator[T]): RDD[T] = {
+    if (index.manifest.segments.isEmpty) return spark.sparkContext.emptyRDD[T]
     val segMetas = index.manifest.segments.map(s => s.segmentId -> s).toMap
     val nSegParts = segMetas.keys.max + 1
     val nParts = nSegParts * shards
@@ -966,16 +1102,18 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     val sentinels = spark.sparkContext
       .parallelize(keys, 1)
       .map(k => (k, null: AnyRef))
-    // tombstones ride the SAME shuffle as the rows: each shard-task sees its
-    // segment's live-docs without any driver round-trip
-    val delRdd = index.deleteRows(spark).rdd.flatMap(dr =>
-      (0 until shards).iterator.map(sh => ((dr.segmentId, sh), dr: AnyRef)))
-    val parted = rows.flatMap { case (sid, p) =>
+    val keyed = rows.flatMap { case (sid, p) =>
         (0 until shards).iterator.map(sh => ((sid, sh), p: AnyRef)) }
       .union(sentinels)
-      .union(delRdd)
+    // tombstones ride the SAME shuffle as the rows: each shard-task sees its
+    // segment's live-docs without any driver round-trip. Without deletes
+    // there is nothing to read, and planning the empty scan would cost
+    // every call
+    val parted = (if (index.manifest.deletedCount == 0L) keyed
+      else keyed.union(index.deleteRows(spark).rdd.flatMap(dr =>
+        (0 until shards).iterator.map(sh => ((dr.segmentId, sh), dr: AnyRef)))))
       .partitionBy(partitioner)
-    val out = parted.mapPartitions { it =>
+    parted.mapPartitions { it =>
       // one (segment, shard) per partition by construction
       var seg: SegmentMeta = null
       var shard = 0
@@ -996,6 +1134,5 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
         kernel(seg, post, d, shard)
       }
     }
-    spark.createDataset(out)
   }
 }

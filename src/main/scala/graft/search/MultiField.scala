@@ -191,7 +191,7 @@ final class MultiFieldSearcher(val index: MultiFieldIndex) extends Serializable 
       mkScorer(fieldCtx, post, collector).foreach(SegmentKernel.run(_, collector))
       collector.hits.iterator
     }
-    perLeaf.toDF("doc_id", "s")
+    spark.createDataset(perLeaf).toDF("doc_id", "s")
       .select(col("doc_id"), round(col("s"), 6).as("score"))
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(k)

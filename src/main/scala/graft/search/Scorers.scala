@@ -1176,30 +1176,13 @@ final class TopKCollector(k: Int, docBase: Long, after: Option[(Double, Long)],
     }
   }
 
-  // a is "worse" than b if lower score, or equal score and larger docId
-  @inline private def worse(s1: Double, d1: Long, s2: Double, d2: Long): Boolean =
-    s1 < s2 || (s1 == s2 && d1 > d2)
-
-  private def siftDown(): Unit = {
-    var i = 0
-    while (true) {
-      val l = 2 * i + 1
-      val r = l + 1
-      var m = i
-      if (l < size && worse(hScore(l), hDoc(l), hScore(m), hDoc(m))) m = l
-      if (r < size && worse(hScore(r), hDoc(r), hScore(m), hDoc(m))) m = r
-      if (m == i) return
-      val ts = hScore(i); hScore(i) = hScore(m); hScore(m) = ts
-      val td = hDoc(i); hDoc(i) = hDoc(m); hDoc(m) = td
-      i = m
-    }
-  }
+  private def siftDown(): Unit = TopKCollector.siftDown(hScore, hDoc, size)
 
   private def siftUp(i0: Int): Unit = {
     var i = i0
     while (i > 0) {
       val p = (i - 1) >>> 1
-      if (!worse(hScore(i), hDoc(i), hScore(p), hDoc(p))) return
+      if (!TopKCollector.worse(hScore(i), hDoc(i), hScore(p), hDoc(p))) return
       val ts = hScore(i); hScore(i) = hScore(p); hScore(p) = ts
       val td = hDoc(i); hDoc(i) = hDoc(p); hDoc(p) = td
       i = p
@@ -1222,15 +1205,27 @@ final class TopKCollector(k: Int, docBase: Long, after: Option[(Double, Long)],
   private[search] def scoring = true
   private[search] def collect(doc: Int, s: Scorer): Boolean = { collect(doc, s.score()); true }
 
-  /** Hits ordered score desc, docId asc. */
-  def results: Array[(Long, Double)] = {
-    val idx = Array.range(0, size)
-    val sorted = idx.sortBy(j => (-hScore(j), hDoc(j)))
-    sorted.map(j => (hDoc(j), hScore(j)))
+  /** Hits ordered score desc, docId asc, as parallel (docIds, scores): a
+    * heap sort of a copy of the heap, each weakest root popped to the tail,
+    * so no boxed sort key. */
+  def sortedHits: (Array[Long], Array[Double]) = {
+    val s = java.util.Arrays.copyOf(hScore, size)
+    val d = java.util.Arrays.copyOf(hDoc, size)
+    var n = size
+    while (n > 1) {
+      n -= 1
+      val ts = s(0); s(0) = s(n); s(n) = ts
+      val td = d(0); d(0) = d(n); d(n) = td
+      TopKCollector.siftDown(s, d, n)
+    }
+    (d, s)
   }
 
+  /** Hits ordered score desc, docId asc. */
+  def results: Array[(Long, Double)] = { val (d, s) = sortedHits; d.zip(s) }
+
   /** [[results]] as hits. */
-  def hits: Array[ScoredDoc] = results.map { case (d, s) => ScoredDoc(d, s) }
+  def hits: Array[ScoredDoc] = { val (d, s) = sortedHits; Array.tabulate(d.length)(i => ScoredDoc(d(i), s(i))) }
 }
 
 object TopKCollector {
@@ -1239,4 +1234,25 @@ object TopKCollector {
     * the same reason: the cell's cache line ping-pongs across every
     * thread of the query while thresholds climb). */
   val FloorRefreshInterval = 64
+
+  // a is "worse" than b if lower score, or equal score and larger docId
+  @inline private def worse(s1: Double, d1: Long, s2: Double, d2: Long): Boolean =
+    s1 < s2 || (s1 == s2 && d1 > d2)
+
+  /** Restore the min-heap (root = weakest hit) over the first `size`
+    * entries after its root was replaced. */
+  private def siftDown(hScore: Array[Double], hDoc: Array[Long], size: Int): Unit = {
+    var i = 0
+    while (true) {
+      val l = 2 * i + 1
+      val r = l + 1
+      var m = i
+      if (l < size && worse(hScore(l), hDoc(l), hScore(m), hDoc(m))) m = l
+      if (r < size && worse(hScore(r), hDoc(r), hScore(m), hDoc(m))) m = r
+      if (m == i) return
+      val ts = hScore(i); hScore(i) = hScore(m); hScore(m) = ts
+      val td = hDoc(i); hDoc(i) = hDoc(m); hDoc(m) = td
+      i = m
+    }
+  }
 }

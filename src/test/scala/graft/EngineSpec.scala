@@ -248,6 +248,19 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
+  test("searchWithTotal above the driver-merge bound merges in the exchange: same hits and total") {
+    val q: Query = BoolQ(should = Seq(TermQ("import"), TermQ("id_17")))
+    // segments x k just over the bound: the leaf blocks go through the
+    // merge exchange, whose one merge task is the job's only result task
+    val k = (IndexSearcher.DriverMergeMaxRows / index.manifest.segments.size + 1).toInt
+    searcher.termStats(spark, q.terms) // the stats job is not what is measured
+    var got: (Array[ScoredDoc], TotalHits) = null
+    val work = SparkWork.measure(spark) { got = searcher.searchWithTotal(spark, q, k, Long.MaxValue) }
+    assert(work.resultTasks == 1, s"the over-bound run merges in one exchange task ($work)")
+    assert(got._1.toSeq.map(h => (h.docId, h.score)) == Oracle.topK(corpus, q, k))
+    assert(got._2 == TotalHits(Oracle.count(corpus, q), TotalHits.EQ))
+  }
+
   test("regex literal-prefix pushdown is SOUND (quantified/alternated prefixes)") {
     // "imports?" must match "import" — a naive startsWith("imports") pushdown
     // would filter the term out of the scan and silently drop its docs
@@ -439,6 +452,27 @@ class EngineSpec extends AnyFunSuite {
         assert(batch.getOrElse(name, Nil) == single, s"batch/single mismatch for $name")
         assert(single == Oracle.topK(corpus, q, 10), s"batch/oracle mismatch for $name")
       }
+    }
+  }
+
+  test("searchMany: rows in batch order, each query as search returns it; the Dataset reruns") {
+    // more queries than merge partitions, so each merge task owns a range;
+    // some match nothing, and two share an id
+    val n = 4 * spark.sparkContext.defaultParallelism + 1
+    val qs: Seq[(String, Query)] = Seq.tabulate(n) { i =>
+      val q: Query =
+        if (i % 5 == 3) TermQ(s"no_such_term_$i")
+        else refQueries(i % refQueries.size)._2
+      (if (i == n - 1) "q0" else s"q$i") -> q
+    }
+    Seq(1, 10).foreach { k =>
+      val batch = searcher.searchMany(spark, qs, k)
+      val want = qs.flatMap { case (id, q) =>
+        searcher.search(spark, q, k).collect().toSeq.map(h => QueryHit(id, h.docId, h.score))
+      }
+      val first = batch.collect().toSeq
+      assert(first == want, s"k=$k: searchMany rows differ from the per-query searches")
+      assert(batch.collect().toSeq == first, s"k=$k: a second collect of the same Dataset differs")
     }
   }
 

@@ -1,5 +1,6 @@
 package graft.search
 
+import org.apache.spark.SparkEnv
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Oracle, SparkWork, TestCorpus, TestDirs, TestSpark}
@@ -67,17 +68,33 @@ class SearchPipelineSpec extends AnyFunSuite {
     assert(searchJobs <= 2, s"search started $searchJobs jobs")
   }
 
-  test("a one-query searchMany runs one query shard: one result task per segment") {
+  test("a one-query searchMany is one job, one merge task") {
     val s = new IndexSearcher(index)
     val q: Query = BoolQ(should = Seq(TermQ("import"), TermQ("id_17")))
     s.termStats(spark, q.terms) // the stats job is not what is measured
     val work = SparkWork.measure(spark)(s.searchMany(spark, Seq("only" -> q), 10).collect())
     val segments = index.manifest.segments.size
-    assert(work.resultTasks > 0 && work.resultTasks <= segments,
-      s"${work.resultTasks} result tasks over $segments segments x 1 query shard ($work)")
-    // the map stage: one task per postings file split, plus one task for
-    // all the sentinel rows
+    assert(work.jobs == 1, s"one job: posting scan, kernel and merge stages ($work)")
+    assert(work.resultTasks == 1, s"one query is one merge partition ($work)")
+    // the map stages: one task per postings file split, one task for all the
+    // sentinel rows, then the kernel, one task per segment x 1 query shard
     val scanTasks = index.postings(spark).rdd.getNumPartitions
-    assert(work.mapTasks <= scanTasks + 1, s"$scanTasks scan tasks, sentinels in one ($work)")
+    assert(work.mapTasks <= scanTasks + 1 + segments,
+      s"$scanTasks scan tasks, sentinels in one, $segments kernel tasks ($work)")
+  }
+
+  test("the query batch ships by broadcast: the kernel closure does not grow with it") {
+    val s = new IndexSearcher(index)
+    val terms = Vector("import", "def", "val", "fn7", "id_17")
+    val ctx = s.queryContext(spark, BoolQ(should = terms.map(TermQ(_))))
+    val acc = spark.sparkContext.longAccumulator(IndexSearcher.KernelNanos)
+    def closureBytes(n: Int): Int = {
+      val qs: Seq[Query] = Seq.tabulate(n)(i =>
+        BoolQ(must = Seq(TermQ(terms(i % terms.size))), should = Seq(TermQ(terms((i + 1) % terms.size)))))
+      val kernel = s.segmentLeaves(spark, qs, ctx, 10, None, 0L, shards = 4, parts = 4, acc)
+      SparkEnv.get.closureSerializer.newInstance().serialize(kernel).limit()
+    }
+    val (small, large) = (closureBytes(10), closureBytes(2000))
+    assert(math.abs(large - small) < 1024, s"closure of 10 queries: $small B, of 2000: $large B")
   }
 }
