@@ -110,7 +110,7 @@ object SparkEntry {
     "q03_and" -> topk(BoolQ(must = Seq(TermQ("spark"), TermQ("join"))), 10),
     // pure disjunction: block-max WAND pruning path (WandScorer)
     "q04_or_wand" -> topk(BoolQ(should = Seq(TermQ("dup"), TermQ("vector"))), 10),
-    // disjunction with minimumShouldMatch=2 (DisjunctionSumScorer)
+    // disjunction with minimumShouldMatch=2 (WandScorer with msm, pruned)
     "q05_or_msm2" -> topk(BoolQ(
       should = Seq(TermQ("spark"), TermQ("data"), TermQ("dup")), minShouldMatch = 2), 10),
     // MUST_NOT exclusion (ReqExclScorer)

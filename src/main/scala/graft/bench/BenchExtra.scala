@@ -25,6 +25,9 @@ import graft.search._
   *  - `plans`: dump `.explain("formatted")` of the bench-surface queries to
   *    the directory given as second arg (e.g. plans/r06, suffix `_before` /
   *    `_after` as third arg).
+  *  - `union`: the cost of a constant-score multi-term union in one
+  *    segment's kernel, against ORing the same postings into a bitset
+  *    ([[union]]; no Spark session).
   */
 object BenchExtra {
 
@@ -33,7 +36,60 @@ object BenchExtra {
     case "batch" => batch()
     case "plans" => plans(args(1), args.lift(2).getOrElse(""))
     case "ab" => ab(args.drop(1).headOption.map(_.toInt).getOrElse(4))
+    case "union" => union()
     case other => sys.error(s"unknown mode $other")
+  }
+
+  /** One 200 000-doc segment whose 4 096 terms have Zipf document
+    * frequencies (df = 20 000 / rank, at least 1; uniform random docs,
+    * fixed seed). For the 64 / 256 / 1 024 / 4 096 most frequent terms it
+    * times the engine's constant-score union — `ScorerBuilder.build` of a
+    * non-scoring `TermInSetQ`, every match iterated — and ORing the same
+    * decoded postings into a `java.util.BitSet`, and prints one line per
+    * size: `UNION terms=N union_ms=… bitset_ms=… docs=…` (median of 11
+    * reps after 10 warm-ups; both counts must agree). Run with
+    * `sbt "runMain graft.bench.BenchExtra union"`. */
+  private def union(): Unit = {
+    val segDocs = 200000
+    val rnd = new scala.util.Random(11)
+    val cache = graft.bm25.Bm25.buildCache(avgdl = 20.0)
+    val readers = (1 to 4096).map { rank =>
+      val df = math.max(1, 20000 / rank)
+      val bits = new java.util.BitSet(segDocs)
+      var n = 0
+      while (n < df) { val d = rnd.nextInt(segDocs); if (!bits.get(d)) { bits.set(d); n += 1 } }
+      val blocks = IndexBuilder.buildBlocks(bits.stream().toArray, Array.fill(df)(1), Array.fill(df)(10.toByte))
+      val term = f"t$rank%04d"
+      term -> new TermReader(graft.index.TermPostings(0, term, df, df.toLong, blocks, term.length), cache)
+    }
+    val ctx = QueryContext(Map.empty, cache, segDocs.toLong)
+    def median(f: () => Int): (Double, Int) = {
+      var docs = 0
+      (1 to 10).foreach(_ => docs = f())
+      val ms = (1 to 11).map { _ =>
+        val t0 = System.nanoTime(); docs = f(); (System.nanoTime() - t0) / 1e6
+      }.sorted
+      (ms(5), docs)
+    }
+    Seq(64, 256, 1024, 4096).foreach { n =>
+      val postings = readers.take(n).toMap
+      val (unionMs, unionDocs) = median { () =>
+        val s = ScorerBuilder.build(TermInSetQ(postings.keySet), postings, segDocs, ctx, 1.0,
+          scoring = false, ScorerBuilder.neverPrune).get
+        var count = 0
+        while (s.nextDoc() != DISI.NO_MORE) count += 1
+        count
+      }
+      val (bitsetMs, bitsetDocs) = median { () =>
+        val bits = new java.util.BitSet(segDocs)
+        postings.values.foreach { rd =>
+          rd.blocks.indices.foreach { bi => val ds = rd.docsOf(bi); var i = 0; while (i < ds.length) { bits.set(ds(i)); i += 1 } }
+        }
+        bits.cardinality()
+      }
+      require(unionDocs == bitsetDocs, s"union counts $unionDocs docs, the bitset $bitsetDocs")
+      println(f"UNION terms=$n union_ms=$unionMs%.3f bitset_ms=$bitsetMs%.3f docs=$unionDocs")
+    }
   }
 
   /** In-window repeats of the two noisiest interactive rows (minhash and

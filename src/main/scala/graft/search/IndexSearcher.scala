@@ -85,8 +85,11 @@ final case class QueryHit(queryId: String, docId: Long, score: Double)
 
 /** Builds the scorer tree for one segment — the Boolean2ScorerSupplier
   * decision tree (`core/search/boolean2scorersupplier.go:74-135`):
-  * pure conjunction => req(); pure disjunction => opt() (WAND when pruning
-  * is allowed); mixed => ReqOptSum(req, opt); MUST_NOT via ReqExcl.
+  * pure conjunction => req(); pure disjunction => opt(); mixed =>
+  * ReqOptSum(req, opt); MUST_NOT via ReqExcl. Every union of two or more
+  * scorers (should, MUST_NOT, dismax) is one WAND walk, pruned only where
+  * its score is the collected score; a constant-score multi-term union is
+  * a doc-id set.
   */
 object ScorerBuilder {
 
@@ -115,24 +118,23 @@ object ScorerBuilder {
       build(sub, postings, segDocCount, ctx, 1.0, scoring = false, minCompetitive)
         .map(inner => new ConstantScoreScorer(inner, if (scoring) boost * b else 0.0))
     case TermInSetQ(ts) =>
-      constUnion(ts.toArray.flatMap(t => postings.get(t)), ctx, boost, scoring)
+      constUnion(ts.toArray.flatMap(t => postings.get(t)), segDocCount, ctx, boost, scoring)
     case MultiTermQ(pred) =>
       // the co-grouped rows were already scan-filtered by this predicate;
       // the exact re-check here only drops rows pulled in by OTHER clauses
       constUnion(postings.iterator.collect { case (t, rd) if pred.matches(t) => rd }.toArray,
-        ctx, boost, scoring)
+        segDocCount, ctx, boost, scoring)
     case DisjMaxQ(qs, tb) =>
       val subs = qs.flatMap(build(_, postings, segDocCount, ctx, boost, scoring, neverPrune)).toArray
       if (subs.isEmpty) None
       else if (subs.length == 1) Some(subs(0))
-      else if (scoring)
+      else
         // block-max pruning for dismax (Lucene gives DisjunctionMaxQuery the
         // WAND treatment too): live only when this dismax's score IS the
-        // collected score — minCompetitive is the collector's feedback at
-        // the root and neverPrune when nested, exactly like WandScorer's
-        // gating in buildBool
-        Some(new DisjMaxWandScorer(subs, tb, minCompetitive))
-      else Some(new DisjunctionSumScorer(subs, 1)) // the same docs; a non-scoring score is never read
+        // collected score — the collector's feedback at a scoring root;
+        // neverPrune when nested or non-scoring (ConstQ forwards the live
+        // threshold to its non-scoring subtree)
+        Some(new DisjMaxWandScorer(subs, tb, if (scoring) minCompetitive else neverPrune))
     case PhraseQ(ts, slop) =>
       // every phrase term must have postings in this segment (conjunction);
       // weight = boost * sum of the terms' idfs (Lucene PhraseQuery+BM25)
@@ -148,15 +150,26 @@ object ScorerBuilder {
     case b: BoolQ => buildBool(b, postings, segDocCount, ctx, boost, scoring, minCompetitive)
   }
 
-  /** Constant-score union over term readers (TermInSet / MultiTerm body). */
-  private def constUnion(rds: Array[TermReader], ctx: QueryContext, boost: Double,
-                         scoring: Boolean): Option[Scorer] = {
-    val subs = rds.map(rd => new PostingsScorer(rd, 0.0, ctx.cache, scoring = false): Scorer)
-    if (subs.isEmpty) None
-    else {
-      val union = if (subs.length == 1) subs(0) else new DisjunctionSumScorer(subs, 1)
-      Some(new ConstantScoreScorer(union, if (scoring) boost else 0.0))
+  /** Constant-score union over term readers (TermInSet / MultiTerm body):
+    * only docs are read, since the score is the constant. */
+  private def constUnion(rds: Array[TermReader], segDocCount: Int, ctx: QueryContext,
+                         boost: Double, scoring: Boolean): Option[Scorer] =
+    if (rds.isEmpty) None
+    else Some(new ConstantScoreScorer(
+      docIdSet(rds.map(rd => new PostingsScorer(rd, 0.0, ctx.cache, scoring = false)), segDocCount),
+      if (scoring) boost else 0.0))
+
+  /** The docs of a union of `subs`, each posting read once: every sub's
+    * docs are ORed into a bitset of the segment, whose set bits are then
+    * iterated — Lucene 8.11's `DocIdSetBuilder` path for
+    * `MultiTermQueryConstantScoreWrapper` and `TermInSetQuery`. */
+  def docIdSet(subs: Array[_ <: Scorer], segDocCount: Int): Scorer = {
+    val bits = new java.util.BitSet(segDocCount)
+    subs.foreach { s =>
+      var d = s.nextDoc()
+      while (d != DISI.NO_MORE) { bits.set(d); d = s.nextDoc() }
     }
+    new IntArrayScorer(bits.stream().toArray)
   }
 
   /** The shared no-pruning sentinel — REFERENCE identity marks a scorer
@@ -195,12 +208,9 @@ object ScorerBuilder {
 
     val msm = math.max(b.minShouldMatch, if (req.isEmpty) 1 else 0)
     val shouldS = b.should.flatMap(q => build(q, postings, segDocCount, ctx, boost, scoring, neverPrune)).toArray
-    val opt: Option[Scorer] =
-      if (b.should.isEmpty) None
-      else if (shouldS.length < msm) None
-      else if (shouldS.length == 1 && msm <= 1) Some(shouldS(0))
-      else if (req.isEmpty && msm <= 1 && scoring) Some(new WandScorer(shouldS, minCompetitive))
-      else Some(new DisjunctionSumScorer(shouldS, msm))
+    // the union's score IS the collected score only without required
+    // clauses; a scoring root then prunes it with the live threshold
+    val opt = WandScorer.union(shouldS, msm, if (scoring && req.isEmpty) minCompetitive else neverPrune)
 
     // combine req/opt (Boolean2ScorerSupplier.getInternal)
     val positive: Option[Scorer] = (req, opt) match {
@@ -220,13 +230,9 @@ object ScorerBuilder {
             if (scoring) minCompetitive else ConjunctionScorer.neverPrune))
     }
 
-    positive.flatMap { pos =>
+    positive.map { pos =>
       val exclS = b.mustNot.flatMap(q => build(q, postings, segDocCount, ctx, 1.0, scoring = false, neverPrune))
-      if (exclS.isEmpty) Some(pos)
-      else {
-        val excl = if (exclS.size == 1) exclS.head else new DisjunctionSumScorer(exclS.toArray, 1)
-        Some(new ReqExclScorer(pos, excl))
-      }
+      WandScorer.union(exclS.toArray, 1, neverPrune).fold(pos)(new ReqExclScorer(pos, _))
     }
   }
 }

@@ -128,9 +128,7 @@ final class MultiFieldSearcher(val index: MultiFieldIndex) extends Serializable 
           if (w == 1.0) base: Scorer else new ScaledScorer(base, w): Scorer
         }
       }.toArray
-      if (scorers.isEmpty) None
-      else if (scorers.length == 1) Some(scorers(0))
-      else Some(new WandScorer(scorers, () => collector.minCompetitive))
+      WandScorer.union(scorers, 1, () => collector.minCompetitive)
     }
   }
 

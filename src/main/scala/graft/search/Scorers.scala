@@ -710,79 +710,6 @@ object ConjunctionScorer {
   val neverPrune: () => Double = () => Double.NegativeInfinity
 }
 
-/** Exhaustive disjunction-sum with minShouldMatch
-  * (semantics of the reference's stubbed `DisjunctionSumScorer`
-  * `core/search/disjunctionsumscorer.go:12-38`: doc matches if >= msm
-  * clauses match; score = sum of matching clause scores).
-  */
-final class DisjunctionSumScorer(subs: Array[Scorer], msm: Int) extends Scorer {
-  private var cur = -1
-  private var curScore = 0.0
-  def docId: Int = cur
-  def cost: Long = subs.map(_.cost).sum
-  lazy val maxScore: Double = subs.map(_.maxScore).sum
-
-  private val headBuf = new Array[Int](subs.length)
-
-  /** msm-th smallest current head docId (with multiplicity). Any doc
-    * matched by >= msm clauses has >= msm heads at or below it once every
-    * clause is positioned >= target, so no qualifying doc below this
-    * candidate exists — the standard minShouldMatch leapfrog: docs present
-    * in fewer than msm lists are skipped without being evaluated. With
-    * msm = 1 this IS the old min-head iteration. */
-  private def kthSmallestHead(): Int = {
-    // msm <= 1 (0 = "optional" side of a mixed query) IS the plain
-    // min-head iteration — one scan, no sort (this path carries the big
-    // constant-score unions: prefix/regex/term-set expansions)
-    if (msm <= 1) {
-      var min = DISI.NO_MORE
-      var j = 0
-      while (j < subs.length) { if (subs(j).docId < min) min = subs(j).docId; j += 1 }
-      min
-    } else {
-      var j = 0
-      while (j < subs.length) { headBuf(j) = subs(j).docId; j += 1 }
-      java.util.Arrays.sort(headBuf) // n is the clause count — tiny
-      headBuf(msm - 1)
-    }
-  }
-
-  private def positionAt(target0: Int): Int = {
-    // an EMPTY disjunction (every optional clause absent from this
-    // segment) matches nothing — same as the old min-head loop's behavior
-    if (subs.isEmpty) { cur = DISI.NO_MORE; return cur }
-    var target = target0
-    while (true) {
-      var j = 0
-      while (j < subs.length) {
-        val s = subs(j)
-        if (s.docId < target) s.advance(target)
-        j += 1
-      }
-      val cand = kthSmallestHead()
-      if (cand == DISI.NO_MORE) { cur = DISI.NO_MORE; return cur }
-      var matched = 0
-      var sc = 0.0
-      j = 0
-      while (j < subs.length) {
-        val s = subs(j)
-        if (s.docId < cand) s.advance(cand)
-        // score summed in ORIGINAL clause order — the canonical fp op
-        // order shared with the oracle (unchanged from the min-head loop)
-        if (s.docId == cand) { matched += 1; sc += s.score() }
-        j += 1
-      }
-      if (matched >= msm) { cur = cand; curScore = sc; return cur }
-      target = cand + 1
-    }
-    cur
-  }
-
-  def nextDoc(): Int = if (cur == DISI.NO_MORE) cur else positionAt(cur + 1)
-  def advance(target: Int): Int = if (cur == DISI.NO_MORE || cur >= target) cur else positionAt(target)
-  def score(): Double = curScore
-}
-
 /** WAND dynamic pruning over a scoring disjunction (Broder et al.; the
   * reference's `WANDScorer` is a stub that panics, `core/search/wandscorer.go`
   * — semantics per the cited papers + Lucene 8.11). Pivot selection uses
@@ -790,22 +717,26 @@ final class DisjunctionSumScorer(subs: Array[Scorer], msm: Int) extends Scorer {
   * check (Ding & Suel) against per-block impacts skips non-competitive
   * pivots without decoding. Pruning is SAFE: only docs whose score upper
   * bound is <= the collector's current threshold are skipped, so top-k is
-  * rank-identical to the exhaustive sum (property-tested).
+  * rank-identical to the exhaustive sum (property-tested). Under
+  * [[ConjunctionScorer.neverPrune]] it is the one exhaustive union: every
+  * should side, MUST_NOT union and nested disjunction.
   *
+  * @param msm            minShouldMatch: a doc matches when at least this
+  *                       many clauses do (0 counts as 1)
   * @param minCompetitive collector feedback: current worst top-k score
   *                       (docs must score STRICTLY above it to enter — ties
   *                       lose on docId asc and docIds only grow)
   */
-final class WandScorer(subs: Array[Scorer], minCompetitive: () => Double)
-    extends WandIterationScorer(subs, minCompetitive) {
+final class WandScorer(subs: Array[Scorer], msm: Int, minCompetitive: () => Double)
+    extends WandIterationScorer(subs, msm, minCompetitive) {
   lazy val maxScore: Double = subs.map(_.maxScore).sum
   // additive bound: any clause subset's sum is bounded by the sum of its
   // per-clause upper bounds (sumUb is accumulated in byDoc order, the same
   // float adds the pre-unification pivot loop performed)
   protected def bound(maxUb: Double, sumUb: Double): Double = sumUb
   /** Sum in ORIGINAL clause order — the canonical float64 addition order
-    * shared with the exhaustive oracle (the reference's own
-    * DisjunctionSumScorer is a stub, so clause order is our spec). */
+    * shared with the exhaustive oracle (the reference's own disjunction
+    * scorer is a stub, so clause order is our spec). */
   protected def scoreAt(doc: Int): Double = {
     var sc = 0.0
     var j = 0
@@ -815,6 +746,16 @@ final class WandScorer(subs: Array[Scorer], minCompetitive: () => Double)
     }
     sc
   }
+}
+
+object WandScorer {
+  /** The union of `subs` on the docs at least `msm` of them match (0 counts
+    * as 1): None when there are fewer clauses than that, else the lone
+    * clause itself or a [[WandScorer]]. */
+  def union(subs: Array[Scorer], msm: Int, minCompetitive: () => Double): Option[Scorer] =
+    if (subs.length < math.max(msm, 1)) None
+    else if (subs.length == 1) Some(subs(0))
+    else Some(new WandScorer(subs, msm, minCompetitive))
 }
 
 /** The WAND iteration skeleton (pivot selection over docId-sorted clauses,
@@ -827,9 +768,17 @@ final class WandScorer(subs: Array[Scorer], minCompetitive: () => Double)
   * pruning then only skips docs that provably cannot beat theta, keeping
   * top-k rank-identical to the exhaustive path (property-tested for both
   * subclasses).
+  *
+  * minShouldMatch (Lucene 8.11 `WANDScorer`): the pivot is the first
+  * docId-sorted clause at index >= msm - 1 whose prefix bound beats theta.
+  * A doc before the msm-th smallest head lies on fewer than msm clauses,
+  * and a doc before a later pivot only on clauses of a prefix whose bound
+  * did not beat theta; a pivot evaluated has every clause through its own
+  * on it, so at least msm.
   */
-abstract class WandIterationScorer(subs: Array[Scorer],
+abstract class WandIterationScorer(subs: Array[Scorer], msm: Int,
                                    minCompetitive: () => Double) extends Scorer {
+  require(subs.nonEmpty, "a union needs at least one clause")
   protected var cur = -1
   protected var curScore = 0.0
   def docId: Int = cur
@@ -844,6 +793,9 @@ abstract class WandIterationScorer(subs: Array[Scorer],
   protected def scoreAt(doc: Int): Double
 
   private val byDoc: Array[Scorer] = subs.clone()
+  private val minPivot = math.max(msm, 1) - 1
+  // a never-pruning walk has no threshold to check block bounds against
+  private val exhaustive = minCompetitive eq ConjunctionScorer.neverPrune
 
   private def sortByDoc(): Unit = {
     // insertion sort: nearly sorted between calls
@@ -857,14 +809,30 @@ abstract class WandIterationScorer(subs: Array[Scorer],
     }
   }
 
+  /** The block-max bound of the clauses at `pivot`. */
+  private def blockBoundAt(pivot: Int): Double = {
+    var bMax = 0.0
+    var bSum = 0.0
+    var j = 0
+    while (j < byDoc.length) {
+      if (byDoc(j).docId == pivot) {
+        val ub = byDoc(j).blockMaxScoreUpTo(pivot)
+        if (ub > bMax) bMax = ub
+        bSum += ub
+      }
+      j += 1
+    }
+    bound(bMax, bSum)
+  }
+
   private def positionAt(target0: Int): Int = {
     var target = target0
     while (true) {
       val theta = minCompetitive()
       sortByDoc()
-      if (byDoc(0).docId == DISI.NO_MORE) { cur = DISI.NO_MORE; return cur }
-      // pivot: first prefix whose bound can beat theta (monotone in prefix
-      // extension: each clause only grows maxUb and sumUb)
+      // pivot: first prefix of at least msm clauses whose bound can beat
+      // theta (monotone in prefix extension: each clause only grows maxUb
+      // and sumUb)
       var maxUb = 0.0
       var sumUb = 0.0
       var pi = -1
@@ -873,7 +841,7 @@ abstract class WandIterationScorer(subs: Array[Scorer],
         val ub = byDoc(j).maxScore
         if (ub > maxUb) maxUb = ub
         sumUb += ub
-        if (bound(maxUb, sumUb) > theta) pi = j
+        if (j >= minPivot && bound(maxUb, sumUb) > theta) pi = j
         j += 1
       }
       if (pi < 0) { cur = DISI.NO_MORE; return cur } // nothing can be competitive
@@ -881,20 +849,9 @@ abstract class WandIterationScorer(subs: Array[Scorer],
       if (pivot == DISI.NO_MORE) { cur = DISI.NO_MORE; return cur }
       if (pivot < target) pivot = target
       if (byDoc(0).docId >= pivot) {
-        // all clauses below the pivot bound are AT the pivot (sorted
-        // order): block-max re-check before full evaluation
-        var bMax = 0.0
-        var bSum = 0.0
-        j = 0
-        while (j < byDoc.length) {
-          if (byDoc(j).docId == pivot) {
-            val ub = byDoc(j).blockMaxScoreUpTo(pivot)
-            if (ub > bMax) bMax = ub
-            bSum += ub
-          }
-          j += 1
-        }
-        if (bound(bMax, bSum) > theta) {
+        // all clauses through the pivot's are AT the pivot (sorted order):
+        // block-max re-check before full evaluation
+        if (exhaustive || blockBoundAt(pivot) > theta) {
           val sc = scoreAt(pivot)
           if (sc > theta) { cur = pivot; curScore = sc; return cur }
         }
@@ -958,7 +915,8 @@ final class ReqOptSumScorer(req: Scorer, opt: Scorer,
 
 /** DISI over a sorted int array — the deleted-docs iterator fed to
   * [[ReqExclScorer]] (live-docs anti-join; the reference applies a live-docs
-  * bitset per leaf, `core/search/weight.go:189-236`). */
+  * bitset per leaf, `core/search/weight.go:189-236`), and the iterator over
+  * a constant-score union's doc-id set ([[ScorerBuilder.docIdSet]]). */
 final class IntArrayScorer(docs: Array[Int]) extends Scorer {
   private var i = -1
   def docId: Int = if (i < 0) -1 else if (i >= docs.length) DISI.NO_MORE else docs(i)
@@ -1009,14 +967,14 @@ final class ReqExclScorer(req: Scorer, excl: Scorer) extends Scorer {
   * [[WandScorer]], with the additive prefix bound replaced by the dismax
   * bound: for any clause subset, score = (1-tb)·mx + tb·sum is bounded by
   * (1-tb)·max(ub_j) + tb·Σ(ub_j) (tb ∈ [0,1], mx <= max ub, sum <= Σ ub —
-  * both coefficients non-negative). It is also the exhaustive scoring dismax
-  * (under neverPrune every pivot is evaluated), so pruned and exhaustive
+  * both coefficients non-negative). It is also the exhaustive dismax, scoring
+  * or not (under neverPrune every pivot is evaluated), so pruned and exhaustive
   * runs share one combiner and are rank-identical (property-tested under
   * k=1 pruning pressure).
   */
 final class DisjMaxWandScorer(subs: Array[Scorer], tieBreak: Double,
                               minCompetitive: () => Double)
-    extends WandIterationScorer(subs, minCompetitive) {
+    extends WandIterationScorer(subs, 1, minCompetitive) {
   lazy val maxScore: Double = {
     val ubs = subs.map(_.maxScore)
     (1.0 - tieBreak) * ubs.max + tieBreak * ubs.sum

@@ -140,7 +140,7 @@ class OptimizationSpec extends AnyFunSuite {
         val Seq(a, b, f, c, d) = tps.zip(weights).zipWithIndex.map { case ((tp, w), i) =>
           new PostingsScorer(new TermReader(tp, cache), w, cache, scoring = i != 2): Scorer
         }
-        val union: Scorer = new DisjunctionSumScorer(Array(c, d), 1)
+        val union: Scorer = new WandScorer(Array(c, d), 1, ConjunctionScorer.neverPrune)
         // `f` is FILTER-only: it iterates but neither scores nor bounds
         val s = new ConjunctionScorer(Array(a, f, union, b), Array(a, union, b),
           if (pruned) () => col.minCompetitive else ConjunctionScorer.neverPrune)
@@ -155,26 +155,26 @@ class OptimizationSpec extends AnyFunSuite {
     }
   }
 
-  test("DisjunctionSumScorer msm leapfrog: identical (doc, score) stream to brute force") {
-    val rnd = new scala.util.Random(23)
+  // sparse random lists with varied overlap: (postings, doc -> (freq, norm))
+  private def sparseTerm(seed: Int, docs: Int, density: Double): (TermPostings, Map[Int, (Int, Int)]) = {
+    val r = new scala.util.Random(seed)
+    val ds = (0 until docs).filter(_ => r.nextDouble() < density).toArray
+    val fs = ds.map(_ => 1 + r.nextInt(5))
+    val ns = ds.map(_ => (1 + r.nextInt(120)).toByte)
+    val blocks = IndexBuilder.buildBlocks(ds, fs, ns)
+    (TermPostings(0, s"t$seed", ds.length, fs.map(_.toLong).sum, blocks, 2),
+      ds.indices.map(i => ds(i) -> (fs(i), ns(i) & 0xFF)).toMap)
+  }
+
+  test("WandScorer msm (neverPrune): identical (doc, score) stream to brute force") {
     val cache = Bm25.buildCache(avgdl = 25.0)
-    // sparse random lists with varied overlap
-    def term(seed: Int): (TermPostings, Map[Int, (Int, Int)]) = {
-      val r = new scala.util.Random(seed)
-      val ds = (0 until 2000).filter(_ => r.nextDouble() < 0.15).toArray
-      val fs = ds.map(_ => 1 + r.nextInt(5))
-      val ns = ds.map(_ => (1 + r.nextInt(120)).toByte)
-      val blocks = IndexBuilder.buildBlocks(ds, fs, ns)
-      (TermPostings(0, s"t$seed", ds.length, fs.map(_.toLong).sum, blocks, 2),
-        ds.indices.map(i => ds(i) -> (fs(i), ns(i) & 0xFF)).toMap)
-    }
-    val terms = Seq(31, 37, 41, 43).map(term)
+    val terms = Seq(31, 37, 41, 43).map(sparseTerm(_, 2000, 0.15))
     val weights = Seq(1.1, 0.7, 2.3, 0.4)
     for (msm <- 1 to 4) {
       val subs: Array[Scorer] = terms.zip(weights).map { case ((tp, _), w) =>
         new PostingsScorer(new TermReader(tp, cache), w, cache, scoring = true): Scorer
       }.toArray
-      val s = new DisjunctionSumScorer(subs, msm)
+      val s = new WandScorer(subs, msm, ConjunctionScorer.neverPrune)
       val got = Iterator.continually(s.nextDoc()).takeWhile(_ != DISI.NO_MORE)
         .map(d => (d, s.score())).toList
       // brute force: same per-clause score op order (clause order sum)
@@ -186,6 +186,65 @@ class OptimizationSpec extends AnyFunSuite {
       }.toList
       assert(got == want, s"msm=$msm")
     }
+  }
+
+  test("WandScorer msm pruning: root top-k with collector feedback == exhaustive top-k") {
+    val cache = Bm25.buildCache(avgdl = 25.0)
+    val terms = Seq(53, 59, 61, 67, 71).zip(Seq(0.5, 0.4, 0.3, 0.6, 0.2))
+      .map { case (seed, density) => sparseTerm(seed, 6000, density)._1 }
+    val weights = Seq(1.9, 0.6, 2.7, 0.3, 1.2)
+    var prunedSeen, fullSeen = 0L
+    for (msm <- 2 to 4; k <- Seq(1, 3, 10)) {
+      def run(pruned: Boolean): Seq[(Long, Double)] = {
+        val col = new TopKCollector(k, 0L, None)
+        val subs: Array[Scorer] = terms.zip(weights).map { case (tp, w) =>
+          new PostingsScorer(new TermReader(tp, cache), w, cache, scoring = true): Scorer
+        }.toArray
+        val s = new WandScorer(subs, msm,
+          if (pruned) () => col.minCompetitive else ConjunctionScorer.neverPrune)
+        var d = s.nextDoc()
+        while (d != DISI.NO_MORE) { col.collect(d, s.score()); d = s.nextDoc() }
+        if (pruned) prunedSeen += col.collected else fullSeen += col.collected
+        col.results.toSeq
+      }
+      assert(run(pruned = true) == run(pruned = false), s"msm=$msm k=$k")
+    }
+    assert(prunedSeen < fullSeen, s"pruning skipped no doc ($prunedSeen of $fullSeen)")
+  }
+
+  test("constant-score union of 17+ terms reads each posting once (doc-id set)") {
+    // counts every cursor call a union makes on its clauses
+    final class CountingScorer(inner: Scorer) extends Scorer {
+      var calls = 0L
+      def docId: Int = { calls += 1; inner.docId }
+      def nextDoc(): Int = { calls += 1; inner.nextDoc() }
+      def advance(target: Int): Int = { calls += 1; inner.advance(target) }
+      def score(): Double = { calls += 1; inner.score() }
+      def cost: Long = inner.cost
+      def maxScore: Double = inner.maxScore
+    }
+    val cache = Bm25.buildCache(avgdl = 25.0)
+    val segDocs = 5000
+    // one segment, every term over several blocks
+    val terms = (0 until 20).map(i => sparseTerm(101 + i, segDocs, 0.05 + 0.01 * i))
+    assert(terms.forall(_._1.blocks.length > 1))
+    val readers = terms.map(t => new TermReader(t._1, cache))
+    val counted = readers.map(rd => new CountingScorer(new PostingsScorer(rd, 0.0, cache, scoring = false))).toArray
+    val union = ScorerBuilder.docIdSet(counted, segDocs)
+    val got = Iterator.continually(union.nextDoc()).takeWhile(_ != DISI.NO_MORE).toList
+    val want = terms.flatMap(_._2.keys).distinct.sorted.toList
+    assert(got == want)
+    val budget = terms.map(_._1.docFreq + 1L).sum
+    val calls = counted.map(_.calls).sum
+    assert(calls <= budget, s"$calls clause calls for ${budget - terms.size} postings")
+    // the TermInSetQ body is that doc-id set, under the constant score
+    val postings = terms.zip(readers).map { case (t, rd) => t._1.term -> rd }.toMap
+    val ctx = QueryContext(Map.empty, cache, segDocs.toLong)
+    val viaQuery = ScorerBuilder.build(TermInSetQ(postings.keySet), postings, segDocs, ctx, 2.0,
+      scoring = true, ScorerBuilder.neverPrune).get
+    val docs = Iterator.continually(viaQuery.nextDoc()).takeWhile(_ != DISI.NO_MORE)
+      .map(d => (d, viaQuery.score())).toList
+    assert(docs == want.map(d => (d, 2.0)))
   }
 
   // ---- stats-memo LRU ---------------------------------------------------
