@@ -184,7 +184,7 @@ object SparkEntry {
         .select("doc_id", "n_chars")
     }),
     // required clause + minimumShouldMatch=2 over three SHOULDs (the mixed
-    // Boolean2ScorerSupplier path: ConjunctionScorer(req, DisjSum(msm)))
+    // Boolean2ScorerSupplier path: ConjunctionScorer(req, WandScorer(msm)))
     "q25_must_msm2" -> topk(BoolQ(
       must = Seq(TermQ("table")),
       should = Seq(TermQ("spark"), TermQ("data"), TermQ("dup")),

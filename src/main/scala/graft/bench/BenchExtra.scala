@@ -75,7 +75,7 @@ object BenchExtra {
       val postings = readers.take(n).toMap
       val (unionMs, unionDocs) = median { () =>
         val s = ScorerBuilder.build(TermInSetQ(postings.keySet), postings, segDocs, ctx, 1.0,
-          scoring = false, ScorerBuilder.neverPrune).get
+          ScoreMode.Matches).get
         var count = 0
         while (s.nextDoc() != DISI.NO_MORE) count += 1
         count

@@ -149,8 +149,21 @@ object IndexOps {
         if (m.deletedCount == 0L || m.segments.forall(s => mergedSegs(s.segmentId))) 0L
         else survivors.count()
       val newDeleteGen = if (nSurv > 0L) m.deleteGen + 1 else 0L
-      if (nSurv > 0L)
-        survivors.write.mode("overwrite").parquet(s"$indexDir/deletes/gen=$newDeleteGen")
+      if (nSurv > 0L) {
+        // one file per segment, in localDoc order: the bytes written must not
+        // depend on how the scan packed the tombstone files it read (files
+        // of equal length come in directory-listing order)
+        import spark.implicits._
+        val kept = m.segments.map(_.segmentId).filterNot(mergedSegs)
+        val slot = kept.zipWithIndex.toMap
+        val bySegment = new org.apache.spark.Partitioner {
+          def numPartitions: Int = kept.size
+          def getPartition(key: Any): Int = slot(key.asInstanceOf[(Int, Int)]._1)
+        }
+        spark.createDataset(survivors.rdd.map(d => ((d.segmentId, d.localDoc), ()))
+            .repartitionAndSortWithinPartitions(bySegment).keys.map { case (sid, local) => DeleteRow(sid, local) })
+          .write.mode("overwrite").parquet(s"$indexDir/deletes/gen=$newDeleteGen")
+      }
 
       val deadAll = (m.deadGens ++ gens).distinct.sorted
       // advance the visibility floor past any dead PREFIX: those generations
@@ -204,6 +217,13 @@ private[index] object Compaction {
     if (i >= 0) -1 else -(i + 1)
   }
 
+  /** The dense docId of global `docId` of segment `seg` after the remap
+    * (local − deleted locals below it), or -1 when the doc is tombstoned. */
+  def remapDoc(docId: Long, seg: Int, segSize: Long, deleted: Array[Int]): Long = {
+    val shift = deletedAtOrBelow(deleted, (docId - seg * segSize).toInt)
+    if (shift < 0) -1L else docId - shift
+  }
+
   /** Rewrite ONE target generation (postings + docmeta + term vectors when
     * present) from the visible generations of `input`, applying tombstones
     * with the dense docId remap; returns the sums of the rows it wrote. The
@@ -229,13 +249,9 @@ private[index] object Compaction {
         .rdd.map(d => ((d.segmentId, "%019d".format(d.docId)), d: AnyRef)),
       delRdd, outParts) { (payload, deleted) =>
         val d = payload.asInstanceOf[DocMeta]
-        val local = (d.docId - d.segmentId.toLong * segSize).toInt
-        val shift = deletedAtOrBelow(deleted, local)
-        stats.addDoc(d.segmentId, d.norm, written = shift >= 0)
-        if (shift >= 0) // negative = the doc itself is tombstoned
-          Iterator.single(DocMeta(d.segmentId,
-            d.segmentId.toLong * segSize + (local - shift), d.norm, d.sha))
-        else Iterator.empty
+        val id = remapDoc(d.docId, d.segmentId, segSize, deleted)
+        stats.addDoc(d.segmentId, d.norm, written = id >= 0)
+        if (id >= 0) Iterator.single(d.copy(docId = id)) else Iterator.empty
       }
       .write.mode("overwrite").parquet(s"$indexDir/docmeta/gen=$gen")
     if (m.hasTermVectors) {
@@ -246,12 +262,8 @@ private[index] object Compaction {
           .rdd.map(tv => (((tv.docId / segSize).toInt, "%019d".format(tv.docId)), tv: AnyRef)),
         delRdd, outParts) { (payload, deleted) =>
           val tv = payload.asInstanceOf[TermVectorRow]
-          val seg = (tv.docId / segSize).toInt
-          val local = (tv.docId - seg.toLong * segSize).toInt
-          val shift = deletedAtOrBelow(deleted, local)
-          if (shift >= 0)
-            Iterator.single(tv.copy(docId = seg.toLong * segSize + (local - shift)))
-          else Iterator.empty
+          val id = remapDoc(tv.docId, (tv.docId / segSize).toInt, segSize, deleted)
+          if (id >= 0) Iterator.single(tv.copy(docId = id)) else Iterator.empty
         }
         .write.mode("overwrite").parquet(s"$indexDir/termvectors/gen=$gen")
     }

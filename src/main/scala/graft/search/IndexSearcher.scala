@@ -93,48 +93,47 @@ final case class QueryHit(queryId: String, docId: Long, score: Double)
   */
 object ScorerBuilder {
 
-  /** @param minCompetitive collector threshold feedback (enables WAND);
-    *                       pass ScorerBuilder.neverPrune for exhaustive
+  /** `q`'s scorer tree under `mode`: only a `TopScores` site whose score is
+    * the collected score hands the threshold on (the root term, a lone
+    * scoring MUST, a pure conjunction, a should union without required
+    * clauses, ReqOpt and dismax); other clauses get `mode.nested`, and
+    * ConstQ, FILTER and MUST_NOT subtrees `Matches`.
     * @return None when the query matches nothing in this segment
     */
   def build(q: Query, postings: Map[String, TermReader], segDocCount: Int,
-            ctx: QueryContext, boost: Double, scoring: Boolean,
-            minCompetitive: () => Double): Option[Scorer] = q match {
+            ctx: QueryContext, boost: Double, mode: ScoreMode): Option[Scorer] = q match {
     case MatchNoneQ => None
-    case MatchAllQ => Some(new RangeAllScorer(segDocCount, if (scoring) boost else 0.0))
+    case MatchAllQ => Some(new RangeAllScorer(segDocCount, if (mode.scores) boost else 0.0))
     case TermQ(t) =>
       postings.get(t).map { rd =>
-        val ps = new PostingsScorer(rd, boost * ctx.idf.getOrElse(t, 0.0), ctx.cache, scoring)
-        // a ROOT-LEVEL scoring term query gets the ImpactsDISI treatment
-        // (skip whole blocks the collector threshold already beats) — live
-        // only when this term's score IS the collected score, exactly like
-        // WAND's gating: nested clauses arrive here with neverPrune
-        if (scoring && (minCompetitive ne neverPrune))
-          new BlockMaxTermScorer(ps, minCompetitive)
-        else ps
+        val ps = new PostingsScorer(rd, boost * ctx.idf.getOrElse(t, 0.0), ctx.cache, mode.scores)
+        // the ImpactsDISI treatment: skip whole blocks the collector
+        // threshold already beats
+        mode match {
+          case ScoreMode.TopScores(minCompetitive) => new BlockMaxTermScorer(ps, minCompetitive)
+          case _ => ps
+        }
       }
-    case BoostQ(sub, b) => build(sub, postings, segDocCount, ctx, boost * b, scoring, minCompetitive)
+    case BoostQ(sub, b) => build(sub, postings, segDocCount, ctx, boost * b, mode)
     case ConstQ(sub, b) =>
-      build(sub, postings, segDocCount, ctx, 1.0, scoring = false, minCompetitive)
-        .map(inner => new ConstantScoreScorer(inner, if (scoring) boost * b else 0.0))
+      build(sub, postings, segDocCount, ctx, 1.0, ScoreMode.Matches)
+        .map(inner => new ConstantScoreScorer(inner, if (mode.scores) boost * b else 0.0))
     case TermInSetQ(ts) =>
-      constUnion(ts.toArray.flatMap(t => postings.get(t)), segDocCount, ctx, boost, scoring)
+      constUnion(ts.toArray.flatMap(t => postings.get(t)), segDocCount, ctx, boost, mode)
     case MultiTermQ(pred) =>
       // the co-grouped rows were already scan-filtered by this predicate;
       // the exact re-check here only drops rows pulled in by OTHER clauses
       constUnion(postings.iterator.collect { case (t, rd) if pred.matches(t) => rd }.toArray,
-        segDocCount, ctx, boost, scoring)
+        segDocCount, ctx, boost, mode)
     case DisjMaxQ(qs, tb) =>
-      val subs = qs.flatMap(build(_, postings, segDocCount, ctx, boost, scoring, neverPrune)).toArray
+      val subs = qs.flatMap(build(_, postings, segDocCount, ctx, boost, mode.nested)).toArray
       if (subs.isEmpty) None
       else if (subs.length == 1) Some(subs(0))
       else
-        // block-max pruning for dismax (Lucene gives DisjunctionMaxQuery the
-        // WAND treatment too): live only when this dismax's score IS the
-        // collected score — the collector's feedback at a scoring root;
-        // neverPrune when nested or non-scoring (ConstQ forwards the live
-        // threshold to its non-scoring subtree)
-        Some(new DisjMaxWandScorer(subs, tb, if (scoring) minCompetitive else neverPrune))
+        // one WAND walk (Lucene gives DisjunctionMaxQuery the WAND
+        // treatment too), pruned when this dismax's score is the collected
+        // score
+        Some(new DisjMaxWandScorer(subs, tb, mode.prune))
     case PhraseQ(ts, slop) =>
       // every phrase term must have postings in this segment (conjunction);
       // weight = boost * sum of the terms' idfs (Lucene PhraseQuery+BM25)
@@ -143,21 +142,21 @@ object ScorerBuilder {
       else {
         val subs = readers.map(r => new PostingsScorer(r.get, 0.0, ctx.cache, scoring = true)).toArray
         val w = boost * ts.map(t => ctx.idf.getOrElse(t, 0.0)).sum
-        Some(new PhraseScorer(subs, w, ctx.cache, scoring, slop))
+        Some(new PhraseScorer(subs, w, ctx.cache, mode.scores, slop))
       }
     case _: PrefixQ | _: RegexpQ | _: TermRangeQ | _: FuzzyQ | _: WildcardQ =>
       throw new IllegalStateException("multi-term queries must be rewritten to MultiTermQ before scoring")
-    case b: BoolQ => buildBool(b, postings, segDocCount, ctx, boost, scoring, minCompetitive)
+    case b: BoolQ => buildBool(b, postings, segDocCount, ctx, boost, mode)
   }
 
   /** Constant-score union over term readers (TermInSet / MultiTerm body):
     * only docs are read, since the score is the constant. */
   private def constUnion(rds: Array[TermReader], segDocCount: Int, ctx: QueryContext,
-                         boost: Double, scoring: Boolean): Option[Scorer] =
+                         boost: Double, mode: ScoreMode): Option[Scorer] =
     if (rds.isEmpty) None
     else Some(new ConstantScoreScorer(
       docIdSet(rds.map(rd => new PostingsScorer(rd, 0.0, ctx.cache, scoring = false)), segDocCount),
-      if (scoring) boost else 0.0))
+      if (mode.scores) boost else 0.0))
 
   /** The docs of a union of `subs`, each posting read once: every sub's
     * docs are ORed into a bitset of the segment, whose set bits are then
@@ -172,45 +171,29 @@ object ScorerBuilder {
     new IntArrayScorer(bits.stream().toArray)
   }
 
-  /** The shared no-pruning sentinel — REFERENCE identity marks a scorer
-    * tree as exhaustive (build's TermQ case tests `ne neverPrune` to decide
-    * whether block-max term skipping is live), so every non-pruning caller
-    * must pass THIS instance, not a fresh equivalent lambda. */
-  val neverPrune: () => Double = ConjunctionScorer.neverPrune
-
   private def buildBool(b: BoolQ, postings: Map[String, TermReader], segDocCount: Int,
-                        ctx: QueryContext, boost: Double, scoring: Boolean,
-                        minCompetitive: () => Double): Option[Scorer] = {
+                        ctx: QueryContext, boost: Double, mode: ScoreMode): Option[Scorer] = {
     // required clauses: every MUST/FILTER must produce a scorer. A LONE
-    // scoring MUST with no FILTER/SHOULD clauses IS the collected score
-    // (MUST_NOT only removes matches), so it gets the live threshold at
-    // construction — one build, not a neverPrune build discarded by a
-    // rebuild below
-    val loneScoringMust = b.must.size == 1 && b.filter.isEmpty && b.should.isEmpty &&
-      scoring && (minCompetitive ne neverPrune)
-    val mustPrune = if (loneScoringMust) minCompetitive else neverPrune
-    val mustS = b.must.map(q => build(q, postings, segDocCount, ctx, boost, scoring, mustPrune))
-    val filtS = b.filter.map(q => build(q, postings, segDocCount, ctx, 1.0, scoring = false, neverPrune))
+    // MUST with no FILTER/SHOULD clauses IS the collected score (MUST_NOT
+    // only removes matches), so it is built under this query's own mode
+    val mustMode = if (b.must.size == 1 && b.filter.isEmpty && b.should.isEmpty) mode else mode.nested
+    val mustS = b.must.map(q => build(q, postings, segDocCount, ctx, boost, mustMode))
+    val filtS = b.filter.map(q => build(q, postings, segDocCount, ctx, 1.0, ScoreMode.Matches))
     if ((mustS ++ filtS).exists(_.isEmpty)) return None
     val must = mustS.flatten.toArray
     val filt = filtS.flatten.toArray
-    // block-max pruning is safe only when this conjunction's score IS the
-    // final collected score: no SHOULD clauses can add to it (MUST_NOT and
-    // FILTER only subtract matches, never score). ConstQ subtrees pass
-    // scoring=false, so they never reach here with a live threshold.
-    val conjPrune = if (b.should.isEmpty && scoring) minCompetitive
-                    else ConjunctionScorer.neverPrune
+    // a conjunction's score IS the collected score only when no SHOULD
+    // clause adds to it (MUST_NOT and FILTER never score)
     val req: Option[Scorer] = (must ++ filt) match {
       case Array() => None
-      case Array(one) if must.length <= 1 => Some(one) // incl. the loneScoringMust build above
-      case all => Some(new ConjunctionScorer(all, must, conjPrune))
+      case Array(one) if must.length <= 1 => Some(one) // incl. the lone MUST built above
+      case all => Some(new ConjunctionScorer(all, must, if (b.should.isEmpty) mode.prune else None))
     }
 
     val msm = math.max(b.minShouldMatch, if (req.isEmpty) 1 else 0)
-    val shouldS = b.should.flatMap(q => build(q, postings, segDocCount, ctx, boost, scoring, neverPrune)).toArray
-    // the union's score IS the collected score only without required
-    // clauses; a scoring root then prunes it with the live threshold
-    val opt = WandScorer.union(shouldS, msm, if (scoring && req.isEmpty) minCompetitive else neverPrune)
+    val shouldS = b.should.flatMap(q => build(q, postings, segDocCount, ctx, boost, mode.nested)).toArray
+    // the union's score IS the collected score only without required clauses
+    val opt = WandScorer.union(shouldS, msm, if (req.isEmpty) mode.prune else None)
 
     // combine req/opt (Boolean2ScorerSupplier.getInternal)
     val positive: Option[Scorer] = (req, opt) match {
@@ -221,29 +204,25 @@ object ScorerBuilder {
         else r
       case (Some(r), Some(o)) =>
         if (b.minShouldMatch > 0) Some(new ConjunctionScorer(Array(r, o), Array(r, o)))
-        else
-          // req+opt sum IS the collected score here (MUST_NOT only removes
-          // matches), so the block-max req/opt pruning may use the live
-          // threshold; nested trees arrive with neverPrune and stay
-          // exhaustive
-          Some(new ReqOptSumScorer(r, o,
-            if (scoring) minCompetitive else ConjunctionScorer.neverPrune))
+        // req+opt sum IS the collected score here (MUST_NOT only removes
+        // matches)
+        else Some(new ReqOptSumScorer(r, o, mode.prune))
     }
 
     positive.map { pos =>
-      val exclS = b.mustNot.flatMap(q => build(q, postings, segDocCount, ctx, 1.0, scoring = false, neverPrune))
-      WandScorer.union(exclS.toArray, 1, neverPrune).fold(pos)(new ReqExclScorer(pos, _))
+      val exclS = b.mustNot.flatMap(q => build(q, postings, segDocCount, ctx, 1.0, ScoreMode.Matches))
+      WandScorer.union(exclS.toArray, 1, None).fold(pos)(new ReqExclScorer(pos, _))
     }
   }
 }
 
 /** One segment's match sink, fed by [[SegmentKernel.run]] — the role of
-  * Lucene's LeafCollector. A scoring collector gets a scorer tree pruned by
-  * its own [[minCompetitive]] feedback; a non-scoring one gets the
-  * constant-score, never-pruning tree (no freq decode, no BM25 math). */
+  * Lucene's LeafCollector. Its [[mode]] builds the scorer tree: a top-k
+  * collector's `TopScores` prunes by its own threshold feedback; a
+  * `Matches` one gets the constant-score, exhaustive tree (no freq
+  * decode, no BM25 math). */
 private[search] trait LeafCollector {
-  private[search] def scoring: Boolean
-  private[search] def minCompetitive: Double = Double.NegativeInfinity
+  private[search] def mode: ScoreMode
   /** Position the scorer on its first candidate (a cursor skips ahead). */
   private[search] def first(s: Scorer): Int = s.nextDoc()
   /** Take the match `doc` the scorer is on; false ends the segment early. */
@@ -266,7 +245,7 @@ private[search] trait LeafCollector {
 private[search] final class FirstKCollector(k: Int, seg: SegmentMeta, afterDoc: Long)
     extends LeafCollector {
   val hits = new scala.collection.mutable.ArrayBuffer[ScoredDoc](k)
-  def scoring = false
+  def mode: ScoreMode = ScoreMode.Matches
   override def first(s: Scorer): Int =
     if (k <= 0 || afterDoc >= seg.docBase + seg.docCount) DISI.NO_MORE // page is past this whole segment
     else if (afterDoc >= seg.docBase) s.advance((afterDoc - seg.docBase).toInt + 1)
@@ -277,7 +256,7 @@ private[search] final class FirstKCollector(k: Int, seg: SegmentMeta, afterDoc: 
 /** A segment's match count (no scoring work). */
 private[search] final class CountCollector extends LeafCollector {
   var n = 0L
-  def scoring = false
+  def mode: ScoreMode = ScoreMode.Matches
   def collect(doc: Int, s: Scorer): Boolean = { n += 1; true }
 }
 
@@ -292,9 +271,8 @@ object SegmentKernel {
     * live-docs semantics — scores of surviving docs are untouched). None
     * when the query matches nothing in this segment. */
   private def scorer(q: Query, postings: Map[String, TermReader], seg: SegmentMeta,
-                     ctx: QueryContext, deleted: Array[Int], scoring: Boolean,
-                     minCompetitive: () => Double): Option[Scorer] =
-    ScorerBuilder.build(q, postings, seg.docCount.toInt, ctx, 1.0, scoring, minCompetitive)
+                     ctx: QueryContext, deleted: Array[Int], mode: ScoreMode): Option[Scorer] =
+    ScorerBuilder.build(q, postings, seg.docCount.toInt, ctx, 1.0, mode)
       .map(s => if (deleted.isEmpty) s else new ReqExclScorer(s, new IntArrayScorer(deleted)))
 
   /** The one push loop: every collecting path (top-k, top-k + total,
@@ -304,12 +282,11 @@ object SegmentKernel {
     while (d != DISI.NO_MORE && c.collect(d, s)) d = s.nextDoc()
   }
 
-  /** Build `q`'s tree for the collector — pruned by its feedback when it
-    * scores — and run the segment through it. */
+  /** Build `q`'s tree under the collector's mode and run the segment
+    * through it. */
   private[search] def run(q: Query, postings: Map[String, TermReader], seg: SegmentMeta,
                           ctx: QueryContext, deleted: Array[Int], c: LeafCollector): Unit =
-    scorer(q, postings, seg, ctx, deleted, c.scoring,
-      if (c.scoring) () => c.minCompetitive else ScorerBuilder.neverPrune).foreach(run(_, c))
+    scorer(q, postings, seg, ctx, deleted, c.mode).foreach(run(_, c))
 
   /** The one top-k leaf: `q` over one segment into a fresh [[TopKCollector]]
     * (its hits, count and pruning flag). runId >= 0 joins the leaf to the
@@ -335,13 +312,13 @@ object SegmentKernel {
     * buffered. */
   def scoreAll(q: Query, postings: Map[String, TermReader], seg: SegmentMeta,
                ctx: QueryContext, deleted: Array[Int] = Array.emptyIntArray,
-               scoring: Boolean = true): Iterator[ScoredDoc] =
-    scorer(q, postings, seg, ctx, deleted, scoring, ScorerBuilder.neverPrune) match {
+               mode: ScoreMode = ScoreMode.Complete): Iterator[ScoredDoc] =
+    scorer(q, postings, seg, ctx, deleted, mode) match {
       case None => Iterator.empty
       case Some(s) =>
         Iterator.continually {
           val d = s.nextDoc()
-          if (d == DISI.NO_MORE) null else ScoredDoc(seg.docBase + d, if (scoring) s.score() else 0.0)
+          if (d == DISI.NO_MORE) null else ScoredDoc(seg.docBase + d, if (mode.scores) s.score() else 0.0)
         }.takeWhile(_ != null)
     }
 }
@@ -931,17 +908,17 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
   }
 
   /** Exhaustive (doc, score) stream for every match — oracle/verify path. */
-  def scoreAll(spark: SparkSession, q0: Query): Dataset[ScoredDoc] = matches(spark, q0, scoring = true)
+  def scoreAll(spark: SparkSession, q0: Query): Dataset[ScoredDoc] = matches(spark, q0, ScoreMode.Complete)
 
   /** Matching docIds only (no scoring work) — the delete-by-query feed. */
   def matchingDocs(spark: SparkSession, q0: Query): Dataset[ScoredDoc] =
-    matches(spark, q0, scoring = false)
+    matches(spark, q0, ScoreMode.Matches)
 
-  private def matches(spark: SparkSession, q0: Query, scoring: Boolean): Dataset[ScoredDoc] = {
+  private def matches(spark: SparkSession, q0: Query, mode: ScoreMode): Dataset[ScoredDoc] = {
     import spark.implicits._
-    val (Seq(q), _, ctx) = prepare(spark, Seq(q0), scoring)
+    val (Seq(q), _, ctx) = prepare(spark, Seq(q0), mode.scores)
     leaves(spark, Seq(q), ctx)((seg, rds, del, _) =>
-      SegmentKernel.scoreAll(q, rds, seg, ctx, del, scoring))
+      SegmentKernel.scoreAll(q, rds, seg, ctx, del, mode))
   }
 
   /** SORTED_SET doc-values faceting (`core/document/docvaluestype.go:3-30`
@@ -1072,73 +1049,56 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     else spark.createDataset(leafRdd(spark, qs, ctx)(kernel))
 
   /** The one segment runner: a per-(segment, queryShard) kernel over the
-    * `rows` keyed by segmentId, with EXACTLY one group per task via an
-    * explicit partitioner. (A hash cogroup of S segment-groups into S
-    * partitions is a balls-in-bins collision — some tasks get 3-4 segments
-    * while others idle, capping scaling at ~1/maxLoad.) Segment metadata is
-    * tiny and rides in the closure; sentinel rows guarantee every (segment,
-    * shard) partition runs the kernel even when no query term occurs in it
-    * (MatchAllDocs must still match there). With shards > 1 the rows and
-    * tombstones are replicated per shard ([[place]] gates on volume) so
-    * each shard-task is self-contained — query-sharded top-k runs use that
-    * to keep task count well above the core count on selective batches.
-    * Row payloads are opaque: [[MultiFieldSearcher]] runs its (field,
-    * postings) rows through here over the segment geometry all its fields
-    * share. An index without segments (every doc deleted, then merged)
-    * yields an RDD without partitions.
+    * `rows` keyed by segmentId, with EXACTLY one (segment, shard) per task.
+    * Rows and tombstones are keyed by their partition index, slot(segment)
+    * × shards + shard over the dense slots of the manifest's segments, and
+    * an identity partitioner routes them (a hash cogroup of S segment
+    * groups into S partitions is a balls-in-bins collision — some tasks get
+    * 3-4 segments while others idle, capping scaling at ~1/maxLoad). Each
+    * task reads its (segment, shard) off its partition index, so it runs
+    * the kernel even when no row reaches it (MatchAllDocs must still match
+    * there). Segment metadata is tiny and rides in the closure. With
+    * shards > 1 the rows and tombstones are replicated per shard ([[place]]
+    * gates on volume) so each shard-task is self-contained — query-sharded
+    * top-k runs use that to keep task count well above the core count on
+    * selective batches. Row payloads are opaque: [[MultiFieldSearcher]]
+    * runs its (field, postings) rows through here over the segment
+    * geometry all its fields share. An index without segments (every doc
+    * deleted, then merged) yields an RDD without partitions.
     */
   private[search] def runSegments[P <: AnyRef, T: ClassTag](
       spark: SparkSession, rows: RDD[(Int, P)], shards: Int = 1)(
       kernel: (SegmentMeta, Iterable[P], Array[Int], Int) => Iterator[T]): RDD[T] = {
-    if (index.manifest.segments.isEmpty) return spark.sparkContext.emptyRDD[T]
-    val segMetas = index.manifest.segments.map(s => s.segmentId -> s).toMap
-    val nSegParts = segMetas.keys.max + 1
-    val nParts = nSegParts * shards
-    val partitioner = new org.apache.spark.Partitioner {
+    val segs = index.manifest.segments.toArray
+    if (segs.isEmpty) return spark.sparkContext.emptyRDD[T]
+    val slot = segs.iterator.map(_.segmentId).zipWithIndex.toMap
+    val nParts = segs.length * shards
+    val byIndex = new org.apache.spark.Partitioner {
       def numPartitions: Int = nParts
-      def getPartition(key: Any): Int = {
-        val (sid, sh) = key.asInstanceOf[(Int, Int)]
-        (sid % nSegParts) * shards + sh
-      }
+      def getPartition(key: Any): Int = key.asInstanceOf[Int]
     }
-    val keys = for { sid <- segMetas.keys.toSeq; sh <- 0 until shards } yield (sid, sh)
-    // sentinel rows are |segments x shards| tiny tuples: emit them from one
-    // map task, not one per partition — every extra task is pure scheduler
-    // latency at interactive scale
-    val sentinels = spark.sparkContext
-      .parallelize(keys, 1)
-      .map(k => (k, null: AnyRef))
-    val keyed = rows.flatMap { case (sid, p) =>
-        (0 until shards).iterator.map(sh => ((sid, sh), p: AnyRef)) }
-      .union(sentinels)
+    val keyed = (sid: Int, p: AnyRef) => {
+      val base = slot(sid) * shards
+      (0 until shards).iterator.map(sh => (base + sh, p))
+    }
+    val postingRows = rows.flatMap { case (sid, p) => keyed(sid, p) }
     // tombstones ride the SAME shuffle as the rows: each shard-task sees its
     // segment's live-docs without any driver round-trip. Without deletes
     // there is nothing to read, and planning the empty scan would cost
     // every call
-    val parted = (if (index.manifest.deletedCount == 0L) keyed
-      else keyed.union(index.deleteRows(spark).rdd.flatMap(dr =>
-        (0 until shards).iterator.map(sh => ((dr.segmentId, sh), dr: AnyRef)))))
-      .partitionBy(partitioner)
-    parted.mapPartitions { it =>
-      // one (segment, shard) per partition by construction
-      var seg: SegmentMeta = null
-      var shard = 0
+    val parted = (if (index.manifest.deletedCount == 0L) postingRows
+      else postingRows.union(index.deleteRows(spark).rdd.flatMap(dr => keyed(dr.segmentId, dr))))
+      .partitionBy(byIndex)
+    parted.mapPartitionsWithIndex { (part, it) =>
       val post = scala.collection.mutable.ArrayBuffer.empty[P]
       val dels = Array.newBuilder[Int]
-      it.foreach { case ((sid, sh), payload) =>
-        if (seg == null) { seg = segMetas(sid); shard = sh }
-        payload match {
-          case null => // sentinel
-          case dr: DeleteRow => dels += dr.localDoc
-          case p => post += p.asInstanceOf[P]
-        }
+      it.foreach {
+        case (_, dr: DeleteRow) => dels += dr.localDoc
+        case (_, p) => post += p.asInstanceOf[P]
       }
-      if (seg == null) Iterator.empty
-      else {
-        val d = dels.result()
-        java.util.Arrays.sort(d)
-        kernel(seg, post, d, shard)
-      }
+      val d = dels.result()
+      java.util.Arrays.sort(d)
+      kernel(segs(part / shards), post, d, part % shards)
     }
   }
 }

@@ -128,7 +128,7 @@ final class MultiFieldSearcher(val index: MultiFieldIndex) extends Serializable 
           if (w == 1.0) base: Scorer else new ScaledScorer(base, w): Scorer
         }
       }.toArray
-      WandScorer.union(scorers, 1, () => collector.minCompetitive)
+      WandScorer.union(scorers, 1, collector.mode.prune)
     }
   }
 
@@ -158,7 +158,7 @@ final class MultiFieldSearcher(val index: MultiFieldIndex) extends Serializable 
         val filt = new PostingsScorer(new TermReader(ftp, fieldCtx(filterField).cache),
           0.0, fieldCtx(filterField).cache, scoring = false)
         new ConjunctionScorer(Array[Scorer](scoring, filt), Array[Scorer](scoring),
-          () => collector.minCompetitive): Scorer
+          collector.mode.prune): Scorer
       }
     }
   }

@@ -28,6 +28,27 @@ trait Scorer {
   def blockEndUpTo(target: Int): Int = DISI.NO_MORE
 }
 
+/** How a scorer tree is built — Lucene 8.11's `ScoreMode`, and the one
+  * place that decides where a tree may prune:
+  *  - `Matches`: no scores (every score is 0.0, no freq decode);
+  *  - `Complete`: every match scored, nothing skipped;
+  *  - `TopScores(minCompetitive)`: the root of a top-k, whose score IS the
+  *    collected score — it may skip what cannot score strictly above the
+  *    collector's live threshold.
+  * A clause whose score is only a part of its parent's is built under
+  * [[nested]], and a subtree whose score is discarded (ConstQ, FILTER,
+  * MUST_NOT) under `Matches`, so a threshold reaches only the sites whose
+  * score is the collected score. */
+sealed abstract class ScoreMode(val scores: Boolean, val prune: Option[() => Double]) {
+  def nested: ScoreMode = if (scores) ScoreMode.Complete else ScoreMode.Matches
+}
+
+object ScoreMode {
+  case object Matches extends ScoreMode(false, None)
+  case object Complete extends ScoreMode(true, None)
+  final case class TopScores(minCompetitive: () => Double) extends ScoreMode(true, Some(minCompetitive))
+}
+
 /** Shared, read-only decoded view of one term's posting list within one
   * segment. Created ONCE per (partition, term) and reused by every query of
   * a batch: block decode and impact maxima are memoized here, so a
@@ -430,7 +451,7 @@ object SloppyMatch {
   * Safety: for every doc of the window the driving scorer's score is at
   * most that bound — each sub's padded block bound dominates its score
   * there, `extra` dominates the rest, and fp addition is monotone. A doc
-  * enters the top-k only by scoring STRICTLY above `minCompetitive()`, so a
+  * enters the top-k only by scoring STRICTLY above the threshold, so a
   * window whose bound is <= it holds no competitive doc and is skipped
   * whole; ties at the threshold are never skipped. The check runs once per
   * window, when a candidate first lands past the last window checked: the
@@ -438,11 +459,11 @@ object SloppyMatch {
   * skips less — never wrongly — and inside it the per-doc cost is one
   * compare. A window without an end (no sub has blocks) is not remembered:
   * with nothing to skip past, re-checking each candidate is what lets a
-  * rising threshold end the segment early. A never-pruning gate accepts
-  * every window up front.
+  * rising threshold end the segment early. A gate without a threshold
+  * (`prune` None) accepts every window up front.
   */
-final class BlockMaxGate(subs: Array[Scorer], extra: Double, minCompetitive: () => Double) {
-  private var winEnd = if (minCompetitive eq ConjunctionScorer.neverPrune) DISI.NO_MORE else -1
+final class BlockMaxGate(subs: Array[Scorer], extra: Double, prune: Option[() => Double]) {
+  private var winEnd = if (prune.isEmpty) DISI.NO_MORE else -1
 
   /** `d` if its window may hold a competitive doc, else the first doc past
     * the window (NO_MORE when the window reaches the end). */
@@ -452,7 +473,7 @@ final class BlockMaxGate(subs: Array[Scorer], extra: Double, minCompetitive: () 
     var j = 0
     while (j < subs.length) { val e = subs(j).blockEndUpTo(d); if (e < end) end = e; j += 1 }
     if (end != DISI.NO_MORE) winEnd = end
-    val theta = minCompetitive()
+    val theta = prune.get.apply()
     if (theta == Double.NegativeInfinity) return d
     var bound = 0.0
     j = 0
@@ -480,7 +501,7 @@ final class BlockMaxGate(subs: Array[Scorer], extra: Double, minCompetitive: () 
   */
 final class BlockMaxTermScorer(inner: PostingsScorer, minCompetitive: () => Double)
     extends Scorer {
-  private val gate = new BlockMaxGate(Array(inner), 0.0, minCompetitive)
+  private val gate = new BlockMaxGate(Array(inner), 0.0, Some(minCompetitive))
 
   def docId: Int = inner.docId
   def cost: Long = inner.cost
@@ -645,13 +666,13 @@ final class ConstantScoreScorer(inner: Scorer, boost: Double) extends Scorer {
   * collector's threshold exceeds the sum of the clauses' CURRENT-block upper
   * bounds, the whole window up to the earliest block boundary is skipped
   * without decoding, through the one [[BlockMaxGate]]. Only enabled
-  * (minCompetitive != neverPrune) when this conjunction's score IS the
-  * collected score — a pure-MUST/FILTER query — so pruning is provably
-  * safe: a skipped doc's score is bounded by the padded block sum, which
-  * did not beat the current worst top-k hit.
+  * (`prune` Some) when this conjunction's score IS the collected score — a
+  * pure-MUST/FILTER query — so pruning is provably safe: a skipped doc's
+  * score is bounded by the padded block sum, which did not beat the
+  * current worst top-k hit.
   */
 final class ConjunctionScorer(allSubs: Array[Scorer], scoringSubs: Array[Scorer],
-                              minCompetitive: () => Double = ConjunctionScorer.neverPrune)
+                              prune: Option[() => Double] = None)
     extends Scorer {
   private val subs = allSubs.sortBy(_.cost) // lead = cheapest
   private var cur = -1
@@ -660,7 +681,7 @@ final class ConjunctionScorer(allSubs: Array[Scorer], scoringSubs: Array[Scorer]
   def cost: Long = subs.map(_.cost).min
   lazy val maxScore: Double = scoringSubs.map(_.maxScore).sum
 
-  private val gate = new BlockMaxGate(scoringSubs, 0.0, minCompetitive)
+  private val gate = new BlockMaxGate(scoringSubs, 0.0, prune)
 
   private def doNext(target0: Int): Int = {
     var target = target0
@@ -706,10 +727,6 @@ final class ConjunctionScorer(allSubs: Array[Scorer], scoringSubs: Array[Scorer]
   }
 }
 
-object ConjunctionScorer {
-  val neverPrune: () => Double = () => Double.NegativeInfinity
-}
-
 /** WAND dynamic pruning over a scoring disjunction (Broder et al.; the
   * reference's `WANDScorer` is a stub that panics, `core/search/wandscorer.go`
   * — semantics per the cited papers + Lucene 8.11). Pivot selection uses
@@ -717,18 +734,18 @@ object ConjunctionScorer {
   * check (Ding & Suel) against per-block impacts skips non-competitive
   * pivots without decoding. Pruning is SAFE: only docs whose score upper
   * bound is <= the collector's current threshold are skipped, so top-k is
-  * rank-identical to the exhaustive sum (property-tested). Under
-  * [[ConjunctionScorer.neverPrune]] it is the one exhaustive union: every
-  * should side, MUST_NOT union and nested disjunction.
+  * rank-identical to the exhaustive sum (property-tested). Without a
+  * threshold it is the one exhaustive union: every should side, MUST_NOT
+  * union and nested disjunction.
   *
-  * @param msm            minShouldMatch: a doc matches when at least this
-  *                       many clauses do (0 counts as 1)
-  * @param minCompetitive collector feedback: current worst top-k score
-  *                       (docs must score STRICTLY above it to enter — ties
-  *                       lose on docId asc and docIds only grow)
+  * @param msm   minShouldMatch: a doc matches when at least this many
+  *              clauses do (0 counts as 1)
+  * @param prune collector feedback: current worst top-k score (docs must
+  *              score STRICTLY above it to enter — ties lose on docId asc
+  *              and docIds only grow); None = exhaustive
   */
-final class WandScorer(subs: Array[Scorer], msm: Int, minCompetitive: () => Double)
-    extends WandIterationScorer(subs, msm, minCompetitive) {
+final class WandScorer(subs: Array[Scorer], msm: Int, prune: Option[() => Double])
+    extends WandIterationScorer(subs, msm, prune) {
   lazy val maxScore: Double = subs.map(_.maxScore).sum
   // additive bound: any clause subset's sum is bounded by the sum of its
   // per-clause upper bounds (sumUb is accumulated in byDoc order, the same
@@ -752,10 +769,10 @@ object WandScorer {
   /** The union of `subs` on the docs at least `msm` of them match (0 counts
     * as 1): None when there are fewer clauses than that, else the lone
     * clause itself or a [[WandScorer]]. */
-  def union(subs: Array[Scorer], msm: Int, minCompetitive: () => Double): Option[Scorer] =
+  def union(subs: Array[Scorer], msm: Int, prune: Option[() => Double]): Option[Scorer] =
     if (subs.length < math.max(msm, 1)) None
     else if (subs.length == 1) Some(subs(0))
-    else Some(new WandScorer(subs, msm, minCompetitive))
+    else Some(new WandScorer(subs, msm, prune))
 }
 
 /** The WAND iteration skeleton (pivot selection over docId-sorted clauses,
@@ -777,7 +794,7 @@ object WandScorer {
   * on it, so at least msm.
   */
 abstract class WandIterationScorer(subs: Array[Scorer], msm: Int,
-                                   minCompetitive: () => Double) extends Scorer {
+                                   prune: Option[() => Double]) extends Scorer {
   require(subs.nonEmpty, "a union needs at least one clause")
   protected var cur = -1
   protected var curScore = 0.0
@@ -794,8 +811,8 @@ abstract class WandIterationScorer(subs: Array[Scorer], msm: Int,
 
   private val byDoc: Array[Scorer] = subs.clone()
   private val minPivot = math.max(msm, 1) - 1
-  // a never-pruning walk has no threshold to check block bounds against
-  private val exhaustive = minCompetitive eq ConjunctionScorer.neverPrune
+  // a walk without a threshold evaluates every pivot
+  private val exhaustive = prune.isEmpty
 
   private def sortByDoc(): Unit = {
     // insertion sort: nearly sorted between calls
@@ -828,7 +845,7 @@ abstract class WandIterationScorer(subs: Array[Scorer], msm: Int,
   private def positionAt(target0: Int): Int = {
     var target = target0
     while (true) {
-      val theta = minCompetitive()
+      val theta = if (exhaustive) Double.NegativeInfinity else prune.get.apply()
       sortByDoc()
       // pivot: first prefix of at least msm clauses whose bound can beat
       // theta (monotone in prefix extension: each clause only grows maxUb
@@ -887,12 +904,11 @@ abstract class WandIterationScorer(subs: Array[Scorer], msm: Int,
   * bound PLUS the optional side's certified global max, no doc in that
   * window can be competitive — the [[BlockMaxGate]] skips to the window end
   * without scoring.
-  * Live only when this sum IS the collected score (root, scoring, no
-  * minShouldMatch coupling — gated in buildBool exactly like the other
-  * pruned scorers); the default sentinel keeps the exhaustive behavior.
+  * Live only when this sum IS the collected score (a `TopScores` root with
+  * no minShouldMatch coupling, as buildBool decides); `prune` None keeps
+  * the exhaustive walk.
   */
-final class ReqOptSumScorer(req: Scorer, opt: Scorer,
-                            minCompetitive: () => Double = ConjunctionScorer.neverPrune)
+final class ReqOptSumScorer(req: Scorer, opt: Scorer, prune: Option[() => Double])
     extends Scorer {
   def docId: Int = req.docId
   def cost: Long = req.cost
@@ -901,7 +917,7 @@ final class ReqOptSumScorer(req: Scorer, opt: Scorer,
   // only a postings req has blocks to gate on: a compound req keeps the
   // exhaustive walk
   private val gate = new BlockMaxGate(Array(req), opt.maxScore,
-    if (req.isInstanceOf[PostingsScorer]) minCompetitive else ConjunctionScorer.neverPrune)
+    if (req.isInstanceOf[PostingsScorer]) prune else None)
 
   def nextDoc(): Int = gate.skip(req, req.nextDoc())
   def advance(target: Int): Int = gate.skip(req, req.advance(target))
@@ -968,13 +984,13 @@ final class ReqExclScorer(req: Scorer, excl: Scorer) extends Scorer {
   * bound: for any clause subset, score = (1-tb)·mx + tb·sum is bounded by
   * (1-tb)·max(ub_j) + tb·Σ(ub_j) (tb ∈ [0,1], mx <= max ub, sum <= Σ ub —
   * both coefficients non-negative). It is also the exhaustive dismax, scoring
-  * or not (under neverPrune every pivot is evaluated), so pruned and exhaustive
-  * runs share one combiner and are rank-identical (property-tested under
-  * k=1 pruning pressure).
+  * or not (without a threshold every pivot is evaluated), so pruned and
+  * exhaustive runs share one combiner and are rank-identical
+  * (property-tested under k=1 pruning pressure).
   */
 final class DisjMaxWandScorer(subs: Array[Scorer], tieBreak: Double,
-                              minCompetitive: () => Double)
-    extends WandIterationScorer(subs, 1, minCompetitive) {
+                              prune: Option[() => Double])
+    extends WandIterationScorer(subs, 1, prune) {
   lazy val maxScore: Double = {
     val ubs = subs.map(_.maxScore)
     (1.0 - tieBreak) * ubs.max + tieBreak * ubs.sum
@@ -1103,7 +1119,7 @@ final class TopKCollector(k: Int, docBase: Long, after: Option[(Double, Long)],
     * a lower bound beyond it). Default threshold 0 = prune ASAP. With a
     * shared cell, the threshold is the max of the local heap root and the
     * strict cross-leaf floor (see [[MaxScoreAccumulator]] safety note). */
-  override def minCompetitive: Double = {
+  def minCompetitive: Double = {
     // k = 0 keeps no hits, so nothing is ever competitive to prune against:
     // the leaf only counts (searchWithTotal with k = 0 reports an exact total)
     val full = k > 0 && size >= k
@@ -1160,7 +1176,7 @@ final class TopKCollector(k: Int, docBase: Long, after: Option[(Double, Long)],
     }
   }
 
-  private[search] def scoring = true
+  private[search] def mode: ScoreMode = ScoreMode.TopScores(() => minCompetitive)
   private[search] def collect(doc: Int, s: Scorer): Boolean = { collect(doc, s.score()); true }
 
   /** Hits ordered score desc, docId asc, as parallel (docIds, scores): a

@@ -57,6 +57,20 @@ class DeleteSpec extends AnyFunSuite {
     assert(s.count(spark, TermQ("id_17")) == 0L)
   }
 
+  test("queries without posting rows run every segment, with and without tombstones") {
+    val (dir, idx) = freshIndex("del-rowless")
+    assert(idx.manifest.segments.size > 1)
+    def hits(s: IndexSearcher, q: Query) = s.search(spark, q, corpus.size).collect().map(h => (h.docId, h.score)).toSeq
+    // MatchAll reads no posting row; id_333 occurs in few docs, so most
+    // segments get no row of the MUST_NOT clause either
+    val minus: Query = BoolQ(must = Seq(MatchAllQ), mustNot = Seq(TermQ("id_333")))
+    assert(hits(new IndexSearcher(idx), MatchAllQ) == Oracle.topK(corpus, MatchAllQ, corpus.size))
+    val s = new IndexSearcher(IndexOps.deleteByTerm(spark, dir, "id_17"))
+    assert(hits(s, MatchAllQ) == oracleLive("id_17", MatchAllQ, corpus.size))
+    assert(s.matchingDocs(spark, minus).collect().map(_.docId).toSet ==
+      oracleLive("id_17", minus, corpus.size).map(_._1).toSet)
+  }
+
   test("delete is idempotent and re-delete commits no new generation") {
     val (dir, _) = freshIndex("del-idem")
     val first = IndexOps.deleteByTerm(spark, dir, "id_333")

@@ -100,7 +100,9 @@ object DisjunctionPropertySpec {
     "root_msm3_prunes" -> BoolQ(should = Seq(TermQ("import"), TermQ("def"), TermQ("val"), TermQ("fn42")),
       minShouldMatch = 3),
     "msm_over_multiterm" -> BoolQ(should = Seq(PrefixQ("id_"), TermInSetQ(vocabulary.take(20).toSet),
-      TermQ("return")), minShouldMatch = 2, mustNot = Seq(PrefixQ("fn"))))
+      TermQ("return")), minShouldMatch = 2, mustNot = Seq(PrefixQ("fn"))),
+    // a live threshold on the non-scoring dismax below a ConstQ root
+    "const_dismax_two_terms" -> ConstQ(DisjMaxQ(Seq(TermQ("fn3"), TermQ("int")), 0.3), 2.0))
 }
 
 class DisjunctionPropertySpec extends AnyFunSuite {

@@ -109,7 +109,7 @@ class OptimizationSpec extends AnyFunSuite {
         val req = new PostingsScorer(new TermReader(reqTp, cache), 1.7, cache, scoring = true)
         val opt = new PostingsScorer(new TermReader(optTp, cache), 0.9, cache, scoring = true)
         val s = new ReqOptSumScorer(req, opt,
-          if (pruned) () => col.minCompetitive else ConjunctionScorer.neverPrune)
+          Option.when(pruned)(() => col.minCompetitive))
         var d = s.nextDoc()
         while (d != DISI.NO_MORE) { col.collect(d, s.score()); d = s.nextDoc() }
         col.results.toSeq
@@ -140,10 +140,10 @@ class OptimizationSpec extends AnyFunSuite {
         val Seq(a, b, f, c, d) = tps.zip(weights).zipWithIndex.map { case ((tp, w), i) =>
           new PostingsScorer(new TermReader(tp, cache), w, cache, scoring = i != 2): Scorer
         }
-        val union: Scorer = new WandScorer(Array(c, d), 1, ConjunctionScorer.neverPrune)
+        val union: Scorer = new WandScorer(Array(c, d), 1, None)
         // `f` is FILTER-only: it iterates but neither scores nor bounds
         val s = new ConjunctionScorer(Array(a, f, union, b), Array(a, union, b),
-          if (pruned) () => col.minCompetitive else ConjunctionScorer.neverPrune)
+          Option.when(pruned)(() => col.minCompetitive))
         var doc = s.nextDoc()
         while (doc != DISI.NO_MORE) { col.collect(doc, s.score()); doc = s.nextDoc() }
         (col.results.toSeq, col.collected)
@@ -174,7 +174,7 @@ class OptimizationSpec extends AnyFunSuite {
       val subs: Array[Scorer] = terms.zip(weights).map { case ((tp, _), w) =>
         new PostingsScorer(new TermReader(tp, cache), w, cache, scoring = true): Scorer
       }.toArray
-      val s = new WandScorer(subs, msm, ConjunctionScorer.neverPrune)
+      val s = new WandScorer(subs, msm, None)
       val got = Iterator.continually(s.nextDoc()).takeWhile(_ != DISI.NO_MORE)
         .map(d => (d, s.score())).toList
       // brute force: same per-clause score op order (clause order sum)
@@ -201,7 +201,7 @@ class OptimizationSpec extends AnyFunSuite {
           new PostingsScorer(new TermReader(tp, cache), w, cache, scoring = true): Scorer
         }.toArray
         val s = new WandScorer(subs, msm,
-          if (pruned) () => col.minCompetitive else ConjunctionScorer.neverPrune)
+          Option.when(pruned)(() => col.minCompetitive))
         var d = s.nextDoc()
         while (d != DISI.NO_MORE) { col.collect(d, s.score()); d = s.nextDoc() }
         if (pruned) prunedSeen += col.collected else fullSeen += col.collected
@@ -241,7 +241,7 @@ class OptimizationSpec extends AnyFunSuite {
     val postings = terms.zip(readers).map { case (t, rd) => t._1.term -> rd }.toMap
     val ctx = QueryContext(Map.empty, cache, segDocs.toLong)
     val viaQuery = ScorerBuilder.build(TermInSetQ(postings.keySet), postings, segDocs, ctx, 2.0,
-      scoring = true, ScorerBuilder.neverPrune).get
+      ScoreMode.Complete).get
     val docs = Iterator.continually(viaQuery.nextDoc()).takeWhile(_ != DISI.NO_MORE)
       .map(d => (d, viaQuery.score())).toList
     assert(docs == want.map(d => (d, 2.0)))

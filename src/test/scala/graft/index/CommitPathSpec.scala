@@ -148,6 +148,49 @@ class CommitPathSpec extends AnyFunSuite {
     assert(IndexIO.readManifest(spark, dir).contains(updated.manifest), "the committed index stays")
   }
 
+  /** Size of every file under the postings, docmeta, deletes and manifest
+    * trees of `dir`, keyed by its path with the write job's UUID masked. */
+  private def fileSizes(dir: String): Map[String, Long] = {
+    val root = java.nio.file.Paths.get(dir)
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+    Seq("postings", "docmeta", "deletes", "manifest").map(root.resolve).filter(java.nio.file.Files.exists(_))
+      .flatMap { tree =>
+        val files = java.nio.file.Files.walk(tree)
+        try files.filter(java.nio.file.Files.isRegularFile(_)).toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+        finally files.close()
+      }
+      .map(f => root.relativize(f).toString.replaceAll(uuid, "U") -> java.nio.file.Files.size(f)).toMap
+  }
+
+  test("the same input written twice gives the same file sizes after every commit") {
+    // build, two micro-batches, a delete hitting both and a tiered merge
+    // of the two batches only, so tombstones survive it
+    def run(): Seq[(String, Map[String, Long])] = {
+      val dir = TestDirs.fresh("graft-commit-path-bytes")
+      val built = IndexBuilder.build(spark, docs(0L until 300L, text(_)), "doc_id", "text", dir, cfg)
+      val steps = Seq.newBuilder[(String, Map[String, Long])]
+      steps += "build" -> fileSizes(dir)
+      val buildBytes = IndexIO.dirBytes(spark, s"$dir/postings/gen=1")
+      val base = built.nextDocBase
+      (0L to 1L).foreach { b =>
+        StreamingIndexer.indexBatch(spark, docs(base + b * 60 until base + b * 60 + 60, text(_, "del")),
+          "doc_id", "text", dir, cfg, batchId = b)
+        steps += s"indexBatch $b" -> fileSizes(dir)
+      }
+      IndexOps.deleteByTerm(spark, dir, "del")
+      steps += "deleteByTerm" -> fileSizes(dir)
+      val merged = IndexOps.maybeMerge(spark, dir, IndexOps.MergePolicy(smallGenBytes = buildBytes))
+      assert(merged.manifest.deletedCount > 0L, "the build's tombstones survive the merge")
+      steps += "maybeMerge" -> fileSizes(dir)
+      steps.result()
+    }
+    val (first, second) = (run(), run())
+    first.zip(second).foreach { case ((step, a), (_, b)) =>
+      val differ = (a.keySet ++ b.keySet).toSeq.sorted.filter(f => a.get(f) != b.get(f))
+      assert(differ.isEmpty, s"$step: " + differ.map(f => s"$f ${a.get(f)} vs ${b.get(f)}").mkString(", "))
+    }
+  }
+
   test("manifest bytes are the visible generations' bytes, with a dead generation's dir on disk") {
     lifecycle.foreach { s =>
       val m = s.index.manifest

@@ -4,7 +4,7 @@ import org.apache.spark.SparkEnv
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Oracle, SparkWork, TestCorpus, TestDirs, TestSpark}
-import graft.index.{BuildConfig, IndexBuilder}
+import graft.index.{BuildConfig, IndexBuilder, IndexOps}
 
 /** The shared search pipeline: the term-stats pass every entry point reads
   * (one memoized implementation, a bounded driver collect) and the Spark
@@ -76,11 +76,32 @@ class SearchPipelineSpec extends AnyFunSuite {
     val segments = index.manifest.segments.size
     assert(work.jobs == 1, s"one job: posting scan, kernel and merge stages ($work)")
     assert(work.resultTasks == 1, s"one query is one merge partition ($work)")
-    // the map stages: one task per postings file split, one task for all the
-    // sentinel rows, then the kernel, one task per segment x 1 query shard
+    // the map stages: one task per postings file split, then the kernel,
+    // one task per segment x 1 query shard
     val scanTasks = index.postings(spark).rdd.getNumPartitions
-    assert(work.mapTasks <= scanTasks + 1 + segments,
-      s"$scanTasks scan tasks, sentinels in one, $segments kernel tasks ($work)")
+    assert(work.mapTasks <= scanTasks + segments,
+      s"$scanTasks scan tasks, $segments kernel tasks ($work)")
+  }
+
+  test("a search runs one kernel task per live segment after a merge drops a middle segment") {
+    import spark.implicits._
+    val dir = TestDirs.fresh("graft-pipeline-dropped")
+    // segment 1 (ids 128..255) holds only docs of the term "goner"
+    val docs = (0 until 384).map(i =>
+      (i.toLong, if (i >= 128 && i < 256) "goner only here" else s"keeper w${i % 5}"))
+    IndexBuilder.build(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir,
+      BuildConfig(numSegments = 3, chunkDocs = 128))
+    IndexOps.deleteByTerm(spark, dir, "goner")
+    val merged = IndexOps.forceMerge(spark, dir)
+    assert(merged.manifest.segments.map(_.segmentId) == Seq(0, 2))
+    val s = new IndexSearcher(merged)
+    val q: Query = TermQ("w1")
+    s.termStats(spark, q.terms) // the stats job is not what is measured
+    var hits = Array.empty[ScoredDoc]
+    val work = SparkWork.measure(spark) { hits = s.search(spark, q, 100).collect() }
+    // the kernel stage is the result stage of the search's one job
+    assert(work.jobs == 1 && work.resultTasks == 2, s"one kernel task per live segment ($work)")
+    assert(hits.map(_.docId).sorted.toSeq == docs.collect { case (id, t) if t.endsWith("w1") => id }.sorted)
   }
 
   test("the query batch ships by broadcast: the kernel closure does not grow with it") {
