@@ -17,11 +17,14 @@ import graft.analysis.Analyzer
   * stage-2 tiebreak that keeps concatenation in docId order when ONE chunk
   * was split across input partitions (assumeContiguous path — partial
   * chunks share (segment, term, salt) but cover disjoint ascending ranges).
+  * `vector` (doc rows of a `storeTermVectors` build, else null) = the doc's
+  * term-vector rows, filled by the same walk that inverts it.
   */
 final case class Stage1Row(
     segmentId: Int, term: String, salt: Int,
     docFreq: Int, totalTermFreq: Long, blocks: Array[PostingBlock],
-    localDoc: Int, norm: Int, sha: String, firstDoc: Int)
+    localDoc: Int, norm: Int, sha: String, firstDoc: Int,
+    vector: Array[TermVectorRow])
 
 final case class DocMeta(segmentId: Int, docId: Long, norm: Int, sha: String)
 
@@ -320,9 +323,9 @@ object IndexBuilder {
 
     // unless given, one tiny agg fixes the segment geometry (driver-side
     // scalars only; reads only the id column — column pruning keeps text
-    // out of this scan)
+    // out of this scan); statically planned, so it is one job
     val Geometry(docCount, minIdRow, maxIdRow) = geometry.getOrElse {
-      val g = input.agg(count(lit(1)), min($"_1"), max($"_1")).head()
+      val g = StaticRows.of(input.agg(count(lit(1)), min($"_1"), max($"_1"))).collect().head
       // no docs: min and max are null
       if (g.getLong(0) == 0L) Geometry(0L, 0L, -1L) else Geometry(g.getLong(0), g.getLong(1), g.getLong(2))
     }
@@ -369,6 +372,7 @@ object IndexBuilder {
     val analyzer = new Analyzer(cfg.stopWords)
     val chunkDocs = cfg.chunkDocs
     val segSizeL = segSize
+    val tv = cfg.storeTermVectors
     val outParts = cfg.outputPartitions.getOrElse(spark.sessionState.conf.numShufflePartitions)
 
     // ---- stage 1: per-chunk invert + block encode (≙ DWPT flush) --------
@@ -391,7 +395,7 @@ object IndexBuilder {
         // split across runs/partitions yield partial rows; stage 2
         // re-orders them by firstDoc and asserts their ranges don't
         // interleave, so a violated layout contract FAILS the build.
-        input.rdd.mapPartitions(invertChunks(_, analyzer, segSizeL, chunkDocs, streams))
+        input.rdd.mapPartitions(invertChunks(_, analyzer, segSizeL, chunkDocs, streams, tv))
       } else {
         val partitioner = new org.apache.spark.Partitioner {
           def numPartitions: Int = stage1Parts
@@ -400,7 +404,7 @@ object IndexBuilder {
         }
         input.rdd
           .repartitionAndSortWithinPartitions(partitioner)
-          .mapPartitions(invertChunks(_, analyzer, segSizeL, chunkDocs, streams))
+          .mapPartitions(invertChunks(_, analyzer, segSizeL, chunkDocs, streams, tv))
       }
     val chunked: Dataset[Stage1Row] = spark.createDataset(chunkedRdd)
 
@@ -412,8 +416,9 @@ object IndexBuilder {
       if (cfg.stageCheckpoint) {
         val stagingDir = s"$indexDir/staging/gen=$generation"
         val fpPath = s"$indexDir/staging-gen$generation.fp"
+        // staged doc rows carry term vectors only when the build stores them
         val fp = sha256Hex(s"${indexFingerprint(inputPath, docCount)}:$segSize:${cfg.chunkDocs}:" +
-          streams.productIterator.mkString(":"))
+          streams.productIterator.mkString(":") + s":tv=$tv")
         val reusable = inputPath.nonEmpty &&
           IndexIO.readText(spark, fpPath).contains(fp) &&
           IndexIO.exists(spark, s"$stagingDir/_SUCCESS")
@@ -432,65 +437,52 @@ object IndexBuilder {
     spark.sparkContext.register(segStats)
 
     // ---- doc metadata (norms + sha256 invariant), docId-sorted files ----
-    staged.filter(_.term == null)
+    val docRows = staged.where($"term".isNull)
+    docRows
       .map { r =>
         segStats.addDoc(r.segmentId, r.norm)
         DocMeta(r.segmentId, r.segmentId.toLong * segSizeL + r.localDoc, r.norm, r.sha)
       }
       .write.mode("overwrite").parquet(docmetaDir)
-    // term vectors: their own narrow map over the input (Lucene keeps TV in
-    // separate per-segment files too — read by docId, not by term)
-    if (cfg.storeTermVectors)
-      TermVectors.write(spark, input, cfg.stopWords, indexDir, generation)
+    // term vectors: the doc rows' vectors in their own files (Lucene keeps
+    // TV in separate per-segment files too — read by docId, not by term);
+    // an assumeContiguous partition may hold its runs out of order
+    if (tv)
+      docRows.sortWithinPartitions($"segmentId", $"localDoc").flatMap(_.vector.iterator)
+        .write.mode("overwrite").parquet(s"$indexDir/termvectors/gen=$generation")
     phase("stage1+docmeta")
 
     // ---- stage 2: salted sort-merge of chunk blocks (≙ SegmentMerger) ---
     // (salt asc, firstDoc asc) == docId asc: firstDoc only differs for
-    // partial chunks of the assumeContiguous path, which share a salt
-    val merged: Dataset[TermPostings] = staged.filter(_.term != null)
+    // partial chunks of the assumeContiguous path, which share a salt.
+    // Statically planned, the exchange is a stage of the postings write job.
+    val merged = StaticRows.of(staged.where($"term".isNotNull)
       .repartition(outParts, $"segmentId", $"term")
-      .sortWithinPartitions($"segmentId", $"term", $"salt", $"firstDoc")
+      .sortWithinPartitions($"segmentId", $"term", $"salt", $"firstDoc"))
       .mapPartitions(mergeChunks(_, segStats))
-    merged.write.mode("overwrite").parquet(postingsDir)
+    spark.createDataset(merged).write.mode("overwrite").parquet(postingsDir)
     phase("stage2-merge")
 
     // ---- stats + manifest: the written rows' sums, no job ----------------
     if (!cfg.stageCheckpoint) staged.unpersist(blocking = false)
-    val segs = prev.map(_.segments).getOrElse(Nil) ++ segStats.metas(segSize)
+    // a build starts from a fresh manifest; an append commits a copy of the
+    // committed one, so what it does not own (tombstones, tiered-merge
+    // visibility, the features the match rule checked) carries over. An
+    // append's docIds start past the existing range, so its rows CANNOT
+    // interleave into the committed sort order: the global docId-order ==
+    // sort-order invariant no longer holds and its indexSort is cleared.
+    val base = prev.map(_.copy(indexSort = "")).getOrElse(Manifest(generation = generation,
+      minGen = generation, numSegments = 0, segmentSize = segSize, stats = IndexStats.of(Nil),
+      segments = Nil, corpusSha = "", hasPositions = streams.positions,
+      hasTermVectors = cfg.storeTermVectors, hasOffsets = streams.offsets,
+      hasPayloads = streams.payloads, normMode = streams.normMode, indexSort = indexSort))
+    val segs = base.segments ++ segStats.metas(segSize)
     phase("stats")
-    val corpusSha = prev match {
-      case Some(m) => sha256Hex(s"${m.corpusSha}+${indexFingerprint(inputPath, docCount)}")
-      case None => indexFingerprint(inputPath, docCount)
-    }
-    val built = IndexIO.commit(spark, indexDir, Manifest(
-      generation = generation,
-      minGen = prev.map(_.minGen).getOrElse(generation),
-      numSegments = segs.size,
-      segmentSize = segSize,
-      stats = IndexStats.of(segs), segments = segs,
-      corpusSha = corpusSha,
-      // appends preserve committed tombstones (update = delete + append)
-      deleteGen = prev.map(_.deleteGen).getOrElse(0L),
-      deletedCount = prev.map(_.deletedCount).getOrElse(0L),
-      // ...and the tiered-merge visibility state: dropping deadGens here
-      // would resurrect merged-away generations into [minGen, generation]
-      // (their dirs are deleted — readers would crash, or worse read stale
-      // pre-merge data in the deletion crash window)
-      deadGens = prev.map(_.deadGens).getOrElse(Nil),
-      minDeleteGen = prev.map(_.minDeleteGen).getOrElse(0L),
-      lastStreamBatch =
-        if (streamBatch >= 0L) streamBatch
-        else prev.map(_.lastStreamBatch).getOrElse(-1L),
-      hasPositions = streams.positions,
-      hasTermVectors = cfg.storeTermVectors,
-      hasOffsets = streams.offsets,
-      hasPayloads = streams.payloads,
-      normMode = streams.normMode,
-      // an append's docIds start past the existing range, so its rows CANNOT
-      // interleave into the committed sort order — the global
-      // docId-order == sort-order invariant no longer holds and the sorted
-      // fast path must refuse (cleared, not inherited)
-      indexSort = if (prev.isDefined) "" else indexSort))
+    val fp = indexFingerprint(inputPath, docCount)
+    val built = IndexIO.commit(spark, indexDir, base.copy(generation = generation,
+      numSegments = segs.size, stats = IndexStats.of(segs), segments = segs,
+      corpusSha = prev.fold(fp)(m => sha256Hex(s"${m.corpusSha}+$fp")),
+      lastStreamBatch = if (streamBatch >= 0L) streamBatch else base.lastStreamBatch))
     // drop STALE staged generations (this one stays reusable for a
     // same-fingerprint re-build; prior gens would otherwise accumulate
     // without bound across repeated checkpointed builds into one dir)
@@ -505,8 +497,8 @@ object IndexBuilder {
     * blocks when the chunk boundary passes. Memory is bounded by one
     * chunk's postings regardless of corpus size.
     */
-  private def invertChunks(it: Iterator[(Long, String)], analyzer: Analyzer,
-                           segSize: Long, chunkDocs: Int, streams: Streams): Iterator[Stage1Row] = {
+  private def invertChunks(it: Iterator[(Long, String)], analyzer: Analyzer, segSize: Long,
+                           chunkDocs: Int, streams: Streams, tv: Boolean): Iterator[Stage1Row] = {
     new Iterator[Stage1Row] {
       private val in = it.buffered
       private var out: Iterator[Stage1Row] = Iterator.empty
@@ -527,7 +519,7 @@ object IndexBuilder {
         val headId = in.head._1
         val seg = (headId / segSize).toInt
         val salt = ((headId - seg.toLong * segSize) / chunkDocs).toInt
-        val inverter = new Inverter(analyzer, streams, intern)
+        val inverter = new Inverter(analyzer, streams, intern, tv)
         val docRows = Vector.newBuilder[Stage1Row]
         var continue = true
         var lastLocal = -1
@@ -541,13 +533,14 @@ object IndexBuilder {
             in.next()
             val len = inverter.invert(local, content)
             docRows += Stage1Row(seg, null, salt, 0, 0L, null, local, len,
-              sha256Hex(if (content == null) "" else content), firstDoc = local)
+              sha256Hex(if (content == null) "" else content), firstDoc = local,
+              vector = if (tv) inverter.vector(docId) else null)
           }
         }
         val postRows = new scala.collection.mutable.ArrayBuffer[Stage1Row](inverter.terms.size)
         inverter.terms.forEach { (t, b) =>
           postRows += Stage1Row(seg, t, salt, b.n, b.totalTermFreq, inverter.withNorms(b).blocks(),
-            -1, 0, null, firstDoc = b.docs(0))
+            -1, 0, null, firstDoc = b.docs(0), vector = null)
         }
         postRows.iterator ++ docRows.result().iterator
       }

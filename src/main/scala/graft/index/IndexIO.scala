@@ -3,7 +3,7 @@ package graft.index
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.graft.{JsonCodec, SessionIds}
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
@@ -100,6 +100,16 @@ object IndexIO {
 
   def delete(spark: SparkSession, path: String): Unit =
     fs(spark, path).delete(new Path(path), true)
+
+  /** Write `rows` as the parquet tree `dir` and return how many it wrote,
+    * counted by the writing tasks: Spark applies a result task's
+    * accumulator update once, so a re-run map stage cannot count a row
+    * twice (the [[SegmentStats]] rule). */
+  def writeCounted[T](spark: SparkSession, rows: Dataset[T], dir: String): Long = {
+    val n = spark.sparkContext.longAccumulator
+    rows.map { r => n.add(1L); r }(rows.encoder).write.mode("overwrite").parquet(dir)
+    n.value
+  }
 
   /** Remove staged stage-1 chunks and their fingerprint markers, EXCEPT the
     * given generation's (the current build's staging stays reusable for a

@@ -30,23 +30,24 @@ object IndexOps {
     val idx = new BuiltIndex(indexDir, m)
     val searcher = new IndexSearcher(idx)
     val segSize = m.segmentSize
+    // tombstone dirs are numbered by deleteGen ONLY — the shared
+    // `generation` counter stays untouched. Bumping it here would let a
+    // delete commit claim a generation number for which no postings/
+    // docmeta were written, aliasing an orphan postings/gen=K left by a
+    // crashed append into the committed-visibility window.
+    val dgen = m.deleteGen + 1
     // matchingDocs applies current tombstones — only NEW deletions are
     // written, keeping deletedCount exact (and MatchAll count O(1))
-    val newDel = searcher.matchingDocs(spark, q)
-      .map(sd => DeleteRow((sd.docId / segSize).toInt, (sd.docId % segSize).toInt))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = newDel.count()
-      if (n == 0L) return idx
-      // tombstone dirs are numbered by deleteGen ONLY — the shared
-      // `generation` counter stays untouched. Bumping it here would let a
-      // delete commit claim a generation number for which no postings/
-      // docmeta were written, aliasing an orphan postings/gen=K left by a
-      // crashed append into the committed-visibility window.
-      val dgen = m.deleteGen + 1
-      newDel.write.mode("overwrite").parquet(s"$indexDir/deletes/gen=$dgen")
-      IndexIO.commit(spark, indexDir, m.copy(deleteGen = dgen, deletedCount = m.deletedCount + n))
-    } finally newDel.unpersist(blocking = false)
+    val n = IndexIO.writeCounted(spark, searcher.matchingDocs(spark, q)
+      .map(sd => DeleteRow((sd.docId / segSize).toInt, (sd.docId % segSize).toInt)),
+      s"$indexDir/deletes/gen=$dgen")
+    if (n > 0L) IndexIO.commit(spark, indexDir, m.copy(deleteGen = dgen, deletedCount = m.deletedCount + n))
+    else {
+      // nothing new matched: no commit, and no tombstone dir is left (with
+      // no committed tombstones, the whole tree holds none)
+      IndexIO.delete(spark, if (m.deleteGen == 0L) s"$indexDir/deletes" else s"$indexDir/deletes/gen=$dgen")
+      idx
+    }
   }
 
   def deleteByTerm(spark: SparkSession, indexDir: String, term: String): BuiltIndex =
@@ -68,8 +69,7 @@ object IndexOps {
     * as one (possibly big) generation.
     */
   def maybeMerge(spark: SparkSession, indexDir: String,
-                 policy: MergePolicy = MergePolicy(),
-                 outputPartitions: Option[Int] = None): BuiltIndex = {
+                 policy: MergePolicy = MergePolicy()): BuiltIndex = {
     val m = IndexIO.committed(spark, indexDir)
     // defensive exists(): a manifest gen whose dir is gone (e.g. a legacy
     // pre-fix manifest) must not become a zero-byte merge candidate
@@ -78,7 +78,7 @@ object IndexOps {
       IndexIO.exists(spark, dir) && IndexIO.dirBytes(spark, dir) < policy.smallGenBytes
     }
     if (candidates.isEmpty || candidates.size < policy.minMerge) new BuiltIndex(indexDir, m)
-    else merge(spark, indexDir, m, candidates, "tiered", outputPartitions)
+    else merge(spark, indexDir, m, candidates, "tiered")
   }
 
   /** forceMerge(1): [[merge]] ALL live generations into ONE — the
@@ -87,11 +87,10 @@ object IndexOps {
     * compacted index equals a fresh build over the live docs (oracle row
     * q53). A no-op on an index with one live generation and no tombstones.
     */
-  def forceMerge(spark: SparkSession, indexDir: String,
-                 outputPartitions: Option[Int] = None): BuiltIndex = {
+  def forceMerge(spark: SparkSession, indexDir: String): BuiltIndex = {
     val m = IndexIO.committed(spark, indexDir)
     if (m.deletedCount == 0L && m.liveGens.size == 1) new BuiltIndex(indexDir, m) // already compact
-    else merge(spark, indexDir, m, m.liveGens, "merged", outputPartitions)
+    else merge(spark, indexDir, m, m.liveGens, "merged")
   }
 
   /** The one merge behind [[maybeMerge]] and [[forceMerge]]: rewrite the
@@ -120,9 +119,8 @@ object IndexOps {
     * (a crash before that leaves the OLD view fully intact).
     */
   private def merge(spark: SparkSession, indexDir: String, m: Manifest, gens: Seq[Long],
-                    tag: String, outputPartitions: Option[Int]): BuiltIndex = {
+                    tag: String): BuiltIndex = {
     val gen = m.generation + 1
-    val outParts = outputPartitions.getOrElse(spark.sessionState.conf.numShufflePartitions)
     // the input generations through the schema-given readers of a view in
     // which only `gens` are visible
     val input = new BuiltIndex(indexDir, m.copy(deadGens = m.deadGens ++ m.liveGens.diff(gens)))
@@ -130,7 +128,7 @@ object IndexOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val stats = Compaction.rewriteGeneration(spark, indexDir, gen, m, input,
-        allDels.rdd.map(d => (d.segmentId, d.localDoc)), outParts)
+        allDels.rdd.map(d => (d.segmentId, d.localDoc)))
       // builds and appends write whole segments into one gen dir, so a
       // segment the rewrite read must have ALL its docs in `gens`
       val read = stats.docsRead
@@ -143,27 +141,26 @@ object IndexOps {
         stats.metas(m.segmentSize, s"$tag$gen")).sortBy(_.segmentId)
 
       // ---- consolidate surviving tombstones above a new floor -------------
+      // (written to deletes/gen=deleteGen+1 and counted as they are written;
+      // with none, the reclaim below removes the tree after the commit)
       val mergedSegs = read.keySet
-      val survivors = allDels.filter(d => !mergedSegs.contains(d.segmentId))
-      val nSurv =
-        if (m.deletedCount == 0L || m.segments.forall(s => mergedSegs(s.segmentId))) 0L
-        else survivors.count()
-      val newDeleteGen = if (nSurv > 0L) m.deleteGen + 1 else 0L
-      if (nSurv > 0L) {
+      val kept = m.segments.map(_.segmentId).filterNot(mergedSegs)
+      val nSurv = if (m.deletedCount == 0L || kept.isEmpty) 0L else {
         // one file per segment, in localDoc order: the bytes written must not
         // depend on how the scan packed the tombstone files it read (files
         // of equal length come in directory-listing order)
         import spark.implicits._
-        val kept = m.segments.map(_.segmentId).filterNot(mergedSegs)
         val slot = kept.zipWithIndex.toMap
         val bySegment = new org.apache.spark.Partitioner {
           def numPartitions: Int = kept.size
           def getPartition(key: Any): Int = slot(key.asInstanceOf[(Int, Int)]._1)
         }
-        spark.createDataset(survivors.rdd.map(d => ((d.segmentId, d.localDoc), ()))
-            .repartitionAndSortWithinPartitions(bySegment).keys.map { case (sid, local) => DeleteRow(sid, local) })
-          .write.mode("overwrite").parquet(s"$indexDir/deletes/gen=$newDeleteGen")
+        IndexIO.writeCounted(spark, spark.createDataset(allDels.rdd.filter(d => !mergedSegs(d.segmentId))
+            .map(d => ((d.segmentId, d.localDoc), ())).repartitionAndSortWithinPartitions(bySegment)
+            .keys.map { case (sid, local) => DeleteRow(sid, local) }),
+          s"$indexDir/deletes/gen=${m.deleteGen + 1}")
       }
+      val newDeleteGen = if (nSurv > 0L) m.deleteGen + 1 else 0L
 
       val deadAll = (m.deadGens ++ gens).distinct.sorted
       // advance the visibility floor past any dead PREFIX: those generations
@@ -226,13 +223,14 @@ private[index] object Compaction {
 
   /** Rewrite ONE target generation (postings + docmeta + term vectors when
     * present) from the visible generations of `input`, applying tombstones
-    * with the dense docId remap; returns the sums of the rows it wrote. The
-    * rewrite closures run in their write job's result stage, the only place
-    * a [[SegmentStats]] is fed. */
+    * with the dense docId remap, over `spark.sql.shuffle.partitions`
+    * partitions; returns the sums of the rows it wrote. The rewrite closures
+    * run in their write job's result stage, the only place a
+    * [[SegmentStats]] is fed. */
   def rewriteGeneration(spark: SparkSession, indexDir: String, gen: Long, m: Manifest,
-                        input: BuiltIndex, delRdd: org.apache.spark.rdd.RDD[(Int, Int)],
-                        outParts: Int): SegmentStats = {
+                        input: BuiltIndex, delRdd: org.apache.spark.rdd.RDD[(Int, Int)]): SegmentStats = {
     import spark.implicits._
+    val outParts = spark.sessionState.conf.numShufflePartitions
     val streams = Streams.of(m)
     val segSize = m.segmentSize
     val stats = new SegmentStats

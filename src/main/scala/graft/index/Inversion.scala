@@ -26,6 +26,8 @@ private[index] object Streams {
   def of(m: Manifest): Streams = Streams(m.hasPositions, m.hasOffsets, m.hasPayloads, m.normMode)
   val plain: Streams = Streams(positions = false, offsets = false, payloads = false,
     graft.bm25.NormMode.Mod256)
+  /** The streams of a term vector's per-doc buffers. */
+  val vectors: Streams = plain.copy(positions = true, offsets = true)
 }
 
 /** Growable primitive int buffer (no boxing; build-path hot). */
@@ -152,24 +154,29 @@ private[index] final class PostingsBuffer(streams: Streams) {
   * When a doc ends, the norm of its field length is kept once per doc
   * (`PerField.finish` and the norms writer); [[withNorms]] copies it into
   * the postings when they flush, in the pass that reads them anyway.
-  * Stage 1 inverts a whole chunk into one instance, term vectors one doc.
-  * The payload of an occurrence is its ORIGINAL (pre-lowercase) token text
-  * as UTF-8 — case-exact surface form the index otherwise loses,
-  * variable-length so the whole varint(len) + bytes codec path is
-  * exercised. */
-private[index] final class Inverter(analyzer: Analyzer, streams: Streams, intern: TermIntern)
-    extends TokenSink {
+  * Stage 1 inverts a whole chunk into one instance. With `termVectors`
+  * the same walk also fills the current doc's term vector (Lucene's
+  * `TermVectorsConsumerPerField` rides the same inversion), with positions
+  * and offsets whatever streams the postings carry. The payload of an
+  * occurrence is its ORIGINAL (pre-lowercase) token text as UTF-8 —
+  * case-exact surface form the index otherwise loses, variable-length so
+  * the whole varint(len) + bytes codec path is exercised. */
+private[index] final class Inverter(analyzer: Analyzer, streams: Streams, intern: TermIntern,
+                                    termVectors: Boolean) extends TokenSink {
   val terms = new java.util.HashMap[String, PostingsBuffer]()
   private var docNorms = new Array[Byte](64) // by doc - firstDoc
   private var firstDoc = -1
   private var doc = 0
   private var text: String = null
+  // the current doc's term vector, one buffer per term (a fresh map per doc)
+  private var docTerms: java.util.HashMap[String, PostingsBuffer] = null
 
   /** Inverts one doc (ids ascending across calls); returns its field length. */
   def invert(local: Int, content: String): Int = {
     if (firstDoc < 0) firstDoc = local
     doc = local
     text = content
+    if (termVectors) docTerms = new java.util.HashMap[String, PostingsBuffer]()
     val len = analyzer.walk(content, intern, this)
     val at = local - firstDoc
     if (at >= docNorms.length) docNorms = java.util.Arrays.copyOf(docNorms, math.max(at + 1, docNorms.length << 1))
@@ -184,6 +191,18 @@ private[index] final class Inverter(analyzer: Analyzer, streams: Streams, intern
     b
   }
 
+  /** The term vector of the doc [[invert]] inverted last, as `docId`'s
+    * rows: one per term, with its freq, positions and offsets. */
+  def vector(docId: Long): Array[TermVectorRow] = {
+    val out = Array.newBuilder[TermVectorRow]
+    docTerms.forEach { (t, b) =>
+      val f = b.freqs(0)
+      out += TermVectorRow(docId, t, f, java.util.Arrays.copyOf(b.pos.a, f),
+        Array.tabulate(f)(k => b.off.a(2 * k)), Array.tabulate(f)(k => b.off.a(2 * k + 1)))
+    }
+    out.result()
+  }
+
   def token(term: String, position: Int, startCp: Int, endCp: Int,
             startChar: Int, endChar: Int): Unit = {
     var b = terms.get(term)
@@ -192,5 +211,10 @@ private[index] final class Inverter(analyzer: Analyzer, streams: Streams, intern
     b.addOccurrence(position, startCp, endCp,
       if (streams.payloads) text.substring(startChar, endChar).getBytes(java.nio.charset.StandardCharsets.UTF_8)
       else null)
+    if (docTerms != null) {
+      var v = docTerms.get(term)
+      if (v == null) { v = new PostingsBuffer(Streams.vectors); v.addDoc(0, 0); docTerms.put(term, v) }
+      v.addOccurrence(position, startCp, endCp, null)
+    }
   }
 }

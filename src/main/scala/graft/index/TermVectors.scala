@@ -3,8 +3,6 @@ package graft.index
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.analysis.Analyzer
-
 /** One term of one document's term vector — the reference's per-document
   * mini-index (`codecs/simpletext/termvectorswriter.go`,
   * `termvectorsreader.go`: per doc, per field, the term list with freq,
@@ -23,41 +21,16 @@ final case class TermVectorRow(
 /** Term-vector store: a per-doc inverted view written as its own parquet
   * tree under `indexDir/termvectors/gen=N` (Lucene stores term vectors in
   * their own per-segment files for the same reason — they are read by
-  * docId, postings by term). Built in ONE narrow map over the input (no
-  * shuffle: each doc's vector is a pure function of its text), files
-  * docId-ordered so a `docId = k` lookup is answered via parquet min/max
-  * pushdown — the TVX seek analogue.
+  * docId, postings by term). Stage 1's walk fills each doc's vector as it
+  * inverts the doc (`Inverter.vector`), the doc's staged row carries it,
+  * and the builder writes the rows in docId order within each file, so a
+  * `docId = k` lookup is answered via parquet min/max pushdown — the TVX
+  * seek analogue.
   *
   * Consumers: highlighting (offsets), more-like-this (term weights), and
   * any per-doc feature extraction that would otherwise re-tokenize.
   */
 object TermVectors {
-
-  /** Extract one document's vector rows (shared by the writer and
-    * [[graft.memory.MemoryIndex]]-style in-process use): the doc inverted
-    * with positions and offsets, one row per term. */
-  def ofDoc(docId: Long, text: String, analyzer: Analyzer): Iterator[TermVectorRow] = {
-    val inv = new Inverter(analyzer, Streams.plain.copy(positions = true, offsets = true), null)
-    inv.invert(0, text)
-    scala.jdk.CollectionConverters.IteratorHasAsScala(inv.terms.entrySet.iterator).asScala.map { e =>
-      val b = e.getValue
-      val f = b.freqs(0)
-      TermVectorRow(docId, e.getKey, f, java.util.Arrays.copyOf(b.pos.a, f),
-        Array.tabulate(f)(k => b.off.a(2 * k)), Array.tabulate(f)(k => b.off.a(2 * k + 1)))
-    }
-  }
-
-  /** Write the generation's term vectors (called by the builder when
-    * `BuildConfig.storeTermVectors`; same gen-dir commit discipline as
-    * postings/docmeta — rows are invisible until the manifest commits). */
-  def write(spark: SparkSession, docs: Dataset[(Long, String)], stopWords: Set[String],
-            indexDir: String, generation: Long): Unit = {
-    import spark.implicits._
-    val analyzer = new Analyzer(stopWords)
-    docs.sortWithinPartitions("_1")
-      .flatMap { case (id, text) => ofDoc(id, text, analyzer) }
-      .write.mode("overwrite").parquet(s"$indexDir/termvectors/gen=$generation")
-  }
 
   /** All committed term-vector rows of `index` (gen-visibility filtered). */
   def readAll(spark: SparkSession, index: BuiltIndex): Dataset[TermVectorRow] = {

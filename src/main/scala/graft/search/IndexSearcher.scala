@@ -927,7 +927,7 @@ final class IndexSearcher(val index: BuiltIndex) extends Serializable {
     *
     * Served from the FORWARD structure when the index has one — the
     * term-vectors tree is exactly the doc->terms map Lucene's SSDV column
-    * plays (`TermVectors.write` stores it docId-sorted) — so cost is
+    * plays (the builder writes it docId-sorted) — so cost is
     * proportional to the MATCHING docs' term sets, not to index size:
     *  - selective queries (<= `maxPushdownIds` matches) push the matched
     *    docIds into the TV scan (parquet In/min-max pushdown on the

@@ -26,7 +26,7 @@ import graft.index.{BuildConfig, IndexBuilder, IndexIO}
   * from `nextDocBase`), so a day of micro-batches is structurally
   * identical to a day of bulk appends.
   *
-  * The five Spark jobs of one micro-batch (`CommitPathSpec` pins the count):
+  * The four Spark jobs of one micro-batch (`CommitPathSpec` pins the count):
   *  - [[IndexBuilder.assignDenseIds]]: the range partitioning's sample job,
   *    then one job that shuffles the batch into its range partitions and
   *    counts each one's rows. The counts fix the batch's ids
@@ -34,7 +34,8 @@ import graft.index.{BuildConfig, IndexBuilder, IndexIO}
   *    batch returns here, and the build takes its geometry
   *    (n, base, base + n - 1) as given.
   *  - the build: the docmeta write (its first stage runs stage 1's
-  *    inversion), the stage-2 shuffle and the postings write.
+  *    inversion) and the postings write (its first stage is the stage-2
+  *    shuffle) — plus the term-vector write when the index stores them.
   * Reading the manifest before and committing it after start no job.
   */
 object StreamingIndexer {

@@ -79,6 +79,19 @@ class DeleteSpec extends AnyFunSuite {
     assert(second.manifest.deletedCount == first.manifest.deletedCount)
   }
 
+  test("a delete that matches nothing commits nothing and leaves no tombstone dir") {
+    val (dir, built) = freshIndex("del-none")
+    def deleteDirs = Option(new java.io.File(s"$dir/deletes").listFiles()).map(_.map(_.getName).toSet)
+    val none = IndexOps.deleteByTerm(spark, dir, "no_such_term")
+    assert(none.manifest == built.manifest)
+    assert(IndexIO.readManifest(spark, dir).contains(built.manifest), "no new commit")
+    assert(deleteDirs.isEmpty, "no deletes tree without committed tombstones")
+    val first = IndexOps.deleteByTerm(spark, dir, "id_333")
+    val before = deleteDirs
+    val again = IndexOps.deleteByTerm(spark, dir, "no_such_term")
+    assert(again.manifest == first.manifest && deleteDirs == before, "no new dir under deletes/")
+  }
+
   test("MatchAll count is O(1)-exact after deletes; term counts go through the kernel") {
     val (dir, idx) = freshIndex("del-count")
     val total = idx.stats.docCount

@@ -164,9 +164,11 @@ class DisjunctionPropertySpec extends AnyFunSuite {
   }
 
   test("named disjunction cases and shrunk counterexamples == oracle") {
-    regressions.foreach { case (name, q) =>
+    // every case runs, so a failure names all the cases that disagree
+    val failed = regressions.flatMap { case (name, q) =>
       val bad = mismatches(q)
-      assert(bad.isEmpty, s"$name disagrees via ${bad.mkString(", ")}")
+      if (bad.isEmpty) None else Some(s"$name disagrees via ${bad.mkString(", ")}")
     }
+    assert(failed.isEmpty, failed.mkString("\n"))
   }
 }

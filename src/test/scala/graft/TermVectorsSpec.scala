@@ -29,6 +29,23 @@ class TermVectorsSpec extends AnyFunSuite {
     IndexBuilder.build(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir, cfg)
   }
 
+  /** One doc's term-vector rows as the reference tokenizer gives them. */
+  private def reference(docId: Long, text: String, a: Analyzer): Seq[TermVectorRow] =
+    a.tokenize(text).groupBy(_.term).toSeq.map { case (t, toks) =>
+      TermVectorRow(docId, t, toks.size, toks.map(_.position).toArray,
+        toks.map(_.startOffset).toArray, toks.map(_.endOffset).toArray)
+    }
+
+  /** Rows as comparable values, sorted by (docId, term). */
+  private def comparable(rows: Seq[TermVectorRow]) =
+    rows.map(r => (r.docId, r.term, r.freq, r.positions.toSeq, r.startOffsets.toSeq, r.endOffsets.toSeq))
+      .sortBy(r => (r._1, r._2))
+
+  /** The docIds of each term-vector part file of generation `gen`, in file order. */
+  private def partFileDocIds(dir: String, gen: Long): Seq[Seq[Long]] =
+    new java.io.File(s"$dir/termvectors/gen=$gen").listFiles().filter(_.getName.endsWith(".parquet"))
+      .toSeq.map(f => spark.read.parquet(f.getPath).select("docId").as[Long].collect().toSeq)
+
   test("term vectors round-trip the analyzer's freq/positions/offsets per doc") {
     val a = Analyzer.standard
     for (id <- Seq(0L, 3L, 119L)) {
@@ -134,7 +151,7 @@ class TermVectorsSpec extends AnyFunSuite {
   test("highlighter: a match longer than the window still yields a snippet (no pointer overrun)") {
     val long = "x" * 300
     val text = s"prefix $long suffix"
-    val tv = TermVectors.ofDoc(0L, text, Analyzer.standard).toSeq
+    val tv = reference(0L, text, Analyzer.standard)
     val snip = Highlighter.highlight(text, tv, Set(long), windowCp = 160)
     assert(snip.matchCount == 1)
     assert(snip.text.contains("<b>"))
@@ -203,5 +220,52 @@ class TermVectorsSpec extends AnyFunSuite {
     val totalTv = TermVectors.readAll(spark, merged).count()
     val wantTv = live.map(d => a.termFreqs(d._2)._1.size.toLong).sum
     assert(totalTv == wantTv)
+  }
+
+  test("term vectors come from the stage-1 walk: shuffled, sorted and resumed builds equal the tokenizer") {
+    val stop = Set("beta", "the")
+    val a = new Analyzer(stop)
+    val corpus = (0L until 300L).map { i =>
+      (i, if (i % 41 == 5) null else if (i % 37 == 3) "" else
+        s"The alpha w${i % 9} beta common Beta tail${i % 4} uniq$i the " + (if (i % 3 == 0) "needle " else "") +
+          s"w${i % 9} \u3000 omega")
+    }
+    val want = comparable(corpus.flatMap { case (id, t) => reference(id, t, a) })
+    val tvCfg = BuildConfig(numSegments = 2, chunkDocs = 128, storeTermVectors = true, stopWords = stop)
+    def shuffled = scala.util.Random.shuffle(corpus).toDF("doc_id", "text").repartition(3)
+    def check(name: String, idx: BuiltIndex): Unit = {
+      assert(comparable(TermVectors.readAll(spark, idx).collect().toSeq) == want, name)
+      val files = partFileDocIds(idx.indexDir, idx.manifest.generation)
+      assert(files.nonEmpty && files.forall(ids => ids == ids.sorted), s"$name: docIds ascending per file")
+    }
+    val plainDir = TestDirs.fresh("graft-tv-walk")
+    check("shuffled build", IndexBuilder.build(spark, shuffled, "doc_id", "text", plainDir, tvCfg))
+    val sortedDir = TestDirs.fresh("graft-tv-walk-sorted")
+    check("buildSorted", IndexBuilder.buildSorted(spark, shuffled, Seq(org.apache.spark.sql.functions.col("doc_id")),
+      "text", sortedDir, tvCfg))
+    // a failed later phase: the manifest is gone, the staged chunks stay
+    val ckptDir = TestDirs.fresh("graft-tv-walk-ckpt")
+    val ckptCfg = tvCfg.copy(stageCheckpoint = true)
+    IndexBuilder.build(spark, shuffled, "doc_id", "text", ckptDir, ckptCfg, inputPath = "tv-walk")
+    val staged = new java.io.File(s"$ckptDir/staging/gen=1").listFiles().filter(_.getName.endsWith(".parquet")).head
+    val mtime = staged.lastModified()
+    Thread.sleep(1100)
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$ckptDir/manifest"))
+    val resumed = IndexBuilder.build(spark, shuffled, "doc_id", "text", ckptDir, ckptCfg, inputPath = "tv-walk")
+    assert(staged.lastModified() == mtime, "the staged chunks were reused")
+    check("resumed stageCheckpoint build", resumed)
+  }
+
+  test("staged chunks written without term vectors are not reused by a term-vector build") {
+    val dir = TestDirs.fresh("graft-tv-stage-fp")
+    val plainCfg = BuildConfig(numSegments = 2, chunkDocs = 128, stageCheckpoint = true)
+    IndexBuilder.build(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir, plainCfg, inputPath = "tv-fp")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/manifest"))
+    val idx = IndexBuilder.build(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir,
+      plainCfg.copy(storeTermVectors = true), inputPath = "tv-fp")
+    val staged = spark.read.parquet(s"$dir/staging/gen=1").where("term IS NULL")
+    assert(staged.where("vector IS NULL").count() == 0L, "the staging was rewritten with vectors")
+    val want = comparable(docs.flatMap { case (id, t) => reference(id, t, Analyzer.standard) })
+    assert(comparable(TermVectors.readAll(spark, idx).collect().toSeq) == want)
   }
 }

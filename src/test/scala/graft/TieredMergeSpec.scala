@@ -135,6 +135,26 @@ class TieredMergeSpec extends AnyFunSuite {
     assert(distinctDels == merged.manifest.deletedCount)
   }
 
+  test("a tiered merge whose segments hold every tombstone commits none and leaves no deletes tree") {
+    val dir = TestDirs.fresh("graft-tiered-alldel")
+    // gen 1 = big (segment 0, no needle doc); gens 2..3 = small appends
+    val big = (0L until 500L).map(i => (i, s"alpha b${i % 9} uniq$i" + " pad" * 8))
+    IndexBuilder.build(spark, big.toDF("doc_id", "text"), "doc_id", "text", dir, cfg)
+    (0 until 2).foreach { _ =>
+      val m = IndexIO.readManifest(spark, dir).get
+      val docs = (m.nextDocBase until m.nextDocBase + 30L).map(i => (i, text(i)))
+      IndexBuilder.append(spark, docs.toDF("doc_id", "text"), "doc_id", "text", dir, cfg)
+    }
+    val afterDel = IndexOps.deleteByTerm(spark, dir, "needle")
+    assert(afterDel.manifest.deletedCount == 20L)
+    val bigBytes = IndexIO.dirBytes(spark, s"$dir/postings/gen=1")
+    val merged = IndexOps.maybeMerge(spark, dir, IndexOps.MergePolicy(smallGenBytes = bigBytes))
+    assert(merged.manifest.segments.map(_.segmentId) == Seq(0, 1, 2), "segment 0 stays unmerged")
+    assert(merged.manifest.deletedCount == 0L && merged.manifest.deleteGen == 0L)
+    assert(!new java.io.File(s"$dir/deletes").exists(), "no deletes tree")
+    assert(new IndexSearcher(merged).count(spark, MatchAllQ) == 540L)
+  }
+
   test("merge -> append -> merge cycle: visibility, stats, and identity stay consistent") {
     val dir = TestDirs.fresh("graft-tiered-cycle")
     def appendNext(n: Int): Unit = {
