@@ -37,7 +37,7 @@ object SparkEntry {
     cached.synchronized {
       cached.getOrElseUpdate(sfDir, {
         val docsPath = s"$sfDir/documents.parquet"
-        val indexDir = s"${sys.props("java.io.tmpdir")}/graft-index-f10-${IndexBuilder.sha256Hex(docsPath).take(16)}"
+        val indexDir = s"${sys.props("java.io.tmpdir")}/graft-index-f11-${IndexBuilder.sha256Hex(docsPath).take(16)}"
         val docs = spark.read.parquet(docsPath)
         // small chunkDocs so even the sf-scale tables split into several
         // segments (segSize rounds up to a chunk multiple) — the verify
@@ -65,7 +65,7 @@ object SparkEntry {
     mfCached.synchronized {
       mfCached.getOrElseUpdate(sfDir, {
         val docsPath = s"$sfDir/documents.parquet"
-        val indexDir = s"${sys.props("java.io.tmpdir")}/graft-index-mf-f10-${IndexBuilder.sha256Hex(docsPath).take(16)}"
+        val indexDir = s"${sys.props("java.io.tmpdir")}/graft-index-mf-f11-${IndexBuilder.sha256Hex(docsPath).take(16)}"
         val docs = spark.read.parquet(docsPath)
         val idx = MultiFieldIndex.buildOrLoad(spark, docs, "doc_id",
           Seq("text", "lang", "source"), indexDir,
@@ -82,7 +82,7 @@ object SparkEntry {
     cached.synchronized {
       cached.getOrElseUpdate(s"$sfDir#del", {
         val docsPath = s"$sfDir/documents.parquet"
-        val indexDir = s"${sys.props("java.io.tmpdir")}/graft-index-del-f10-${IndexBuilder.sha256Hex(docsPath).take(16)}"
+        val indexDir = s"${sys.props("java.io.tmpdir")}/graft-index-del-f11-${IndexBuilder.sha256Hex(docsPath).take(16)}"
         val docs = spark.read.parquet(docsPath)
         IndexBuilder.buildOrLoad(spark, docs, "doc_id", "text", indexDir,
           BuildConfig(numSegments = 4, chunkDocs = 128), inputPath = docsPath)
@@ -362,7 +362,7 @@ object SparkEntry {
     // build; certified via the per-row sha invariant at the new ids
     "q56_sorted_index" -> ((spark: SparkSession, sfDir: String) => {
       val docsPath = s"$sfDir/documents.parquet"
-      val dir = s"${sys.props("java.io.tmpdir")}/graft-index-sorted-f10-${IndexBuilder.sha256Hex(docsPath).take(16)}"
+      val dir = s"${sys.props("java.io.tmpdir")}/graft-index-sorted-f11-${IndexBuilder.sha256Hex(docsPath).take(16)}"
       val docs = spark.read.parquet(docsPath)
       val idx = IndexBuilder.buildSorted(spark, docs,
         Seq(col("n_chars").desc, col("doc_id").asc), "text", dir,
@@ -375,7 +375,7 @@ object SparkEntry {
     // identity certified by the sha at each early-terminated rank
     "q61_sorted_early" -> ((spark: SparkSession, sfDir: String) => {
       val docsPath = s"$sfDir/documents.parquet"
-      val dir = s"${sys.props("java.io.tmpdir")}/graft-index-sorted-f10-${IndexBuilder.sha256Hex(docsPath).take(16)}"
+      val dir = s"${sys.props("java.io.tmpdir")}/graft-index-sorted-f11-${IndexBuilder.sha256Hex(docsPath).take(16)}"
       val docs = spark.read.parquet(docsPath)
       val idx = IndexBuilder.buildSorted(spark, docs,
         Seq(col("n_chars").desc, col("doc_id").asc), "text", dir,
@@ -419,7 +419,7 @@ object SparkEntry {
     "q45_stream_stats" -> ((spark: SparkSession, sfDir: String) => {
       import spark.implicits._
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val dir = s"${sys.props("java.io.tmpdir")}/graft-stream-f10-${IndexBuilder.sha256Hex(s"$sfDir/documents.parquet").take(16)}"
+      val dir = s"${sys.props("java.io.tmpdir")}/graft-stream-f11-${IndexBuilder.sha256Hex(s"$sfDir/documents.parquet").take(16)}"
       val cfg = BuildConfig(numSegments = 2, chunkDocs = 128)
       graft.streaming.StreamingIndexer.indexBatch(spark,
         docs.where(col("doc_id") < 250), "doc_id", "text", dir, cfg, batchId = 0L)
@@ -480,12 +480,12 @@ object SparkEntry {
     // compacted docId asc, which the oracle reproduces as live-doc order.
     "q53_force_merge" -> ((spark: SparkSession, sfDir: String) => {
       val docsPath = s"$sfDir/documents.parquet"
-      val dir = s"${sys.props("java.io.tmpdir")}/graft-index-fm-f10-${IndexBuilder.sha256Hex(docsPath).take(16)}"
-      // a committed COMPACTED state (gen > 1, minGen == generation, no
-      // tombstones) is this query's end state — reuse it; buildOrLoad's
+      val dir = s"${sys.props("java.io.tmpdir")}/graft-index-fm-f11-${IndexBuilder.sha256Hex(docsPath).take(16)}"
+      // a committed COMPACTED state (one live generation above the build's,
+      // no tombstones) is this query's end state — reuse it; buildOrLoad's
       // fingerprint can't (forceMerge rewrites corpusSha and docCount)
       val merged = graft.index.IndexIO.readManifest(spark, dir) match {
-        case Some(mm) if mm.deletedCount == 0L && mm.minGen == mm.generation && mm.minGen > 1L =>
+        case Some(mm) if mm.deletedCount == 0L && mm.liveGens == Seq(mm.generation) && mm.generation > 1L =>
           new BuiltIndex(dir, mm)
         case _ =>
           val docs = spark.read.parquet(docsPath)
@@ -511,11 +511,11 @@ object SparkEntry {
     // docs >= 256
     "q62_tiered_merge" -> ((spark: SparkSession, sfDir: String) => {
       val docsPath = s"$sfDir/documents.parquet"
-      val dir = s"${sys.props("java.io.tmpdir")}/graft-index-tm-f10-${IndexBuilder.sha256Hex(docsPath).take(16)}"
+      val dir = s"${sys.props("java.io.tmpdir")}/graft-index-tm-f11-${IndexBuilder.sha256Hex(docsPath).take(16)}"
       val cfg = BuildConfig(numSegments = 2, chunkDocs = 128)
       val merged = graft.index.IndexIO.readManifest(spark, dir) match {
-        // committed end state: gens 2+3 dead, one merge generation on top
-        case Some(mm) if mm.deadGens == Seq(2L, 3L) && mm.generation == 4L =>
+        // committed end state: the build's generation and the merge of 2+3
+        case Some(mm) if mm.liveGens == Seq(1L, 4L) && mm.generation == 4L =>
           new BuiltIndex(dir, mm)
         case _ =>
           val docs = spark.read.parquet(docsPath)
@@ -570,7 +570,7 @@ object SparkEntry {
     // segment enters via one skip-structure advance)
     "q66_sorted_after" -> ((spark: SparkSession, sfDir: String) => {
       val docsPath = s"$sfDir/documents.parquet"
-      val dir = s"${sys.props("java.io.tmpdir")}/graft-index-sorted-f10-${IndexBuilder.sha256Hex(docsPath).take(16)}"
+      val dir = s"${sys.props("java.io.tmpdir")}/graft-index-sorted-f11-${IndexBuilder.sha256Hex(docsPath).take(16)}"
       val docs = spark.read.parquet(docsPath)
       val idx = IndexBuilder.buildSorted(spark, docs,
         Seq(col("n_chars").desc, col("doc_id").asc), "text", dir,
@@ -589,7 +589,7 @@ object SparkEntry {
     // mantissa × shift in SQL, never the engine's bit-twiddling.
     "q67_javalucene_norms" -> ((spark: SparkSession, sfDir: String) => {
       val docsPath = s"$sfDir/documents.parquet"
-      val dir = s"${sys.props("java.io.tmpdir")}/graft-index-jl-f10-${IndexBuilder.sha256Hex(docsPath).take(16)}"
+      val dir = s"${sys.props("java.io.tmpdir")}/graft-index-jl-f11-${IndexBuilder.sha256Hex(docsPath).take(16)}"
       val docs = spark.read.parquet(docsPath)
       val idx = IndexBuilder.buildOrLoad(spark, docs, "doc_id", "text", dir,
         BuildConfig(numSegments = 4, chunkDocs = 128,

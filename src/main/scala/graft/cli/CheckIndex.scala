@@ -26,9 +26,11 @@ import graft.index.{IndexBuilder, IndexIO, TermPostings}
   *     and a local docId within its range; distinct tombstone count equals
   *     the manifest's deletedCount (the O(1) MatchAll count depends on it).
   *
-  * All reads go through the committed-generation view (BuiltIndex) — an
-  * orphan gen dir from a crashed append is reported as a warning, not a
-  * violation (readers can't see it; a retry or rebuild reclaims it).
+  * All reads go through the committed-generation view (BuiltIndex) — a
+  * gen dir the manifest does not list (an uncommitted write, or a
+  * superseded generation a crash kept from its reclaim) is reported as a
+  * warning, not a violation (readers never open it; a retry or the next
+  * merge reclaims it).
   *
   * args: <indexDir> [inputParquet idCol contentCol]
   * exit 0 = clean, 1 = violations, 2 = no committed index.
@@ -45,35 +47,16 @@ object CheckIndex {
     val idx = new graft.index.BuiltIndex(indexDir, manifest)
     var bad = 0L
 
-    // ---- 0. orphan (uncommitted) generation dirs — warning only ---------
-    // Listed via the FileSystem API, NOT a parquet read: the whole point of
-    // this probe is a crashed append, which leaves exactly the kind of
-    // truncated/corrupt files that would make `spark.read.parquet` throw
-    // and abort the remaining checks.
-    val onDiskGens = {
-      val p = new org.apache.hadoop.fs.Path(s"$indexDir/postings")
-      val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!f.exists(p)) Array.empty[Long]
-      else f.listStatus(p).flatMap { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && n.startsWith("gen=")) n.drop(4).toLongOption else None
-      }.sorted
+    // ---- 0. gen dirs the manifest does not list — warning only ---------
+    // Listed via the FileSystem API, NOT a parquet read: a crashed write
+    // leaves exactly the kind of truncated/corrupt files that would make
+    // `spark.read.parquet` throw and abort the remaining checks.
+    IndexIO.unlisted(spark, indexDir, manifest).foreach { u =>
+      if (u.uncommitted.nonEmpty)
+        println(s"[graft] WARNING: ${u.tree}: uncommitted generations ${u.uncommitted.mkString(",")} (invisible to readers; overwritten on retry)")
+      if (u.superseded.nonEmpty)
+        println(s"[graft] WARNING: ${u.tree}: superseded generations ${u.superseded.mkString(",")} still on disk (invisible to readers; reclaimable)")
     }
-    val orphanGens = onDiskGens.filter(_ > manifest.generation)
-    if (orphanGens.nonEmpty)
-      println(s"[graft] WARNING: orphan uncommitted postings generations ${orphanGens.mkString(",")} (invisible to readers)")
-    // a tiered merge deletes its superseded (dead) generations AFTER the
-    // commit; dirs surviving a crash in that window are invisible garbage
-    val deadLeftover = onDiskGens.filter(manifest.deadGens.contains)
-    if (deadLeftover.nonEmpty)
-      println(s"[graft] WARNING: dead (tiered-merged) generations still on disk: ${deadLeftover.mkString(",")} (invisible to readers; reclaimable)")
-    // a merge that advanced minGen past its superseded prefix (or a
-    // forceMerge, which sets minGen = generation) deletes those dirs after
-    // the commit; a crash in between leaves them on disk BELOW the
-    // visibility floor — invisible garbage that deadGens no longer lists
-    val belowFloor = onDiskGens.filter(g => g < manifest.minGen)
-    if (belowFloor.nonEmpty)
-      println(s"[graft] WARNING: generations below the visibility floor (minGen=${manifest.minGen}) still on disk: ${belowFloor.mkString(",")} (invisible to readers; reclaimable)")
     // derived fuzzy-ngram sidecars are keyed by the FULL version name
     // (v=<gen>_n<N>_c<codec> — the key buildOrLoad matches on): anything
     // else is never served. A version of a still-LIVE older generation may
@@ -93,8 +76,7 @@ object CheckIndex {
               // live = could serve a concurrent reader: a live generation
               // AND the exact name this engine writes for it (a wrong
               // gram-width/codec suffix is never matched by buildOrLoad)
-              gen >= manifest.minGen && gen <= manifest.generation &&
-                !manifest.deadGens.contains(gen) &&
+              manifest.liveGens.contains(gen) &&
                 v == s"v=${gen}_n${graft.search.FuzzyNgrams.N}_c${manifest.codecVersion}"
             case _ => false
           }
@@ -102,7 +84,7 @@ object CheckIndex {
         if (dead.nonEmpty)
           println(s"[graft] WARNING: dead fuzzy-ngram sidecar versions ${dead.mkString(",")} (dead generation or wrong gram-width/codec; never served — reclaimable)")
         if (live.nonEmpty)
-          println(s"[graft] NOTE: superseded fuzzy-ngram sidecar versions ${live.mkString(",")} of still-live generations (kept for concurrent readers; reclaimed when a merge advances the floor)")
+          println(s"[graft] NOTE: superseded fuzzy-ngram sidecar versions ${live.mkString(",")} of still-live generations (kept for concurrent readers; reclaimed once a merge retires their generation)")
         vers.filter(_ == current).foreach { v =>
           if (!f.exists(new org.apache.hadoop.fs.Path(p, s"$v/_SUCCESS")))
             println(s"[graft] WARNING: fuzzy-ngram sidecar $v has no _SUCCESS (incomplete build; will be rebuilt on next use)")

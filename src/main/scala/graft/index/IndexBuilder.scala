@@ -466,13 +466,14 @@ object IndexBuilder {
     // ---- stats + manifest: the written rows' sums, no job ----------------
     if (!cfg.stageCheckpoint) staged.unpersist(blocking = false)
     // a build starts from a fresh manifest; an append commits a copy of the
-    // committed one, so what it does not own (tombstones, tiered-merge
-    // visibility, the features the match rule checked) carries over. An
-    // append's docIds start past the existing range, so its rows CANNOT
-    // interleave into the committed sort order: the global docId-order ==
-    // sort-order invariant no longer holds and its indexSort is cleared.
+    // committed one, so what it does not own (tombstones, the generations
+    // it adds its own to, the features the match rule checked) carries
+    // over. An append's docIds start past the existing range, so its rows
+    // CANNOT interleave into the committed sort order: the global
+    // docId-order == sort-order invariant no longer holds and its
+    // indexSort is cleared.
     val base = prev.map(_.copy(indexSort = "")).getOrElse(Manifest(generation = generation,
-      minGen = generation, numSegments = 0, segmentSize = segSize, stats = IndexStats.of(Nil),
+      numSegments = 0, segmentSize = segSize, stats = IndexStats.of(Nil),
       segments = Nil, corpusSha = "", hasPositions = streams.positions,
       hasTermVectors = cfg.storeTermVectors, hasOffsets = streams.offsets,
       hasPayloads = streams.payloads, normMode = streams.normMode, indexSort = indexSort))
@@ -480,6 +481,7 @@ object IndexBuilder {
     phase("stats")
     val fp = indexFingerprint(inputPath, docCount)
     val built = IndexIO.commit(spark, indexDir, base.copy(generation = generation,
+      liveGens = base.liveGens :+ generation,
       numSegments = segs.size, stats = IndexStats.of(segs), segments = segs,
       corpusSha = prev.fold(fp)(m => sha256Hex(s"${m.corpusSha}+$fp")),
       lastStreamBatch = if (streamBatch >= 0L) streamBatch else base.lastStreamBatch))

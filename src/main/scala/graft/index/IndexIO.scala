@@ -101,6 +101,29 @@ object IndexIO {
   def delete(spark: SparkSession, path: String): Unit =
     fs(spark, path).delete(new Path(path), true)
 
+  /** The trees of an index that hold `gen=N` dirs. */
+  private val GenTrees: Seq[String] = Seq("postings", "docmeta", "termvectors", "deletes")
+
+  /** For each of [[GenTrees]], the gen dirs on disk (`onDisk`, by tree)
+    * that `m` does not list, split at the tree's counter. */
+  def unlisted(m: Manifest, onDisk: Map[String, Seq[Long]]): Seq[Unlisted] = GenTrees.map { tree =>
+    val (listed, counter) = if (tree == "deletes") (m.deleteGens, m.deleteGen) else (m.liveGens, m.generation)
+    val (above, below) = onDisk.getOrElse(tree, Nil).filterNot(listed.toSet).sorted.partition(_ > counter)
+    Unlisted(tree, uncommitted = above, superseded = below)
+  }
+
+  /** [[unlisted]] over the gen dirs on disk under `indexDir`, listed
+    * through the FS (no parquet is opened: a crashed write leaves exactly
+    * the truncated files a parquet read would throw on). */
+  def unlisted(spark: SparkSession, indexDir: String, m: Manifest): Seq[Unlisted] = {
+    val f = fs(spark, indexDir)
+    unlisted(m, GenTrees.map { tree =>
+      val p = new Path(s"$indexDir/$tree")
+      tree -> (if (!f.exists(p)) Nil else f.listStatus(p).toSeq.filter(_.isDirectory)
+        .map(_.getPath.getName).collect { case s"gen=$g" => g.toLongOption }.flatten)
+    }.toMap)
+  }
+
   /** Write `rows` as the parquet tree `dir` and return how many it wrote,
     * counted by the writing tasks: Spark applies a result task's
     * accumulator update once, so a re-run map stage cannot count a row
@@ -185,6 +208,12 @@ object IndexIO {
   }
 }
 
+/** A tree's gen dirs on disk that the manifest does not list, so no reader
+  * opens them: `uncommitted` above the tree's counter (a crashed or
+  * in-flight write) and `superseded` at or below it (a crash between a
+  * merge's commit and its reclaim). */
+final case class Unlisted(tree: String, uncommitted: Seq[Long], superseded: Seq[Long])
+
 /** Per-segment sums of the rows a write job writes: sumDocFreq,
   * sumTotalTermFreq and term count from its [[TermPostings]] rows, doc count
   * and field doc count from its [[DocMeta]] rows — the field stats Lucene
@@ -246,54 +275,34 @@ final class BuiltIndex(val indexDir: String, val manifest: Manifest) extends Ser
     * for [[IndexBuilder.append]]ed documents. */
   def nextDocBase: Long = manifest.nextDocBase
 
-  /** Committed `gen=K` subdirectories of `root` with K <= maxGen, listed via
-    * the FileSystem API. Readers open ONLY these paths: an orphan gen dir
-    * left by a crashed append — possibly with truncated/corrupt parquet
-    * footers — is never touched, not even for schema inference (a raw
-    * `read.parquet(root)` + partition filter would still plan over the
-    * orphan's files and could throw on its footers). `basePath` keeps `gen`
-    * as a partition column for callers that group by it.
-    */
-  private def committedGenDirs(spark: SparkSession, root: String, minGen: Long,
-                               maxGen: Long, dead: Set[Long] = Set.empty): Seq[String] = {
-    val (f, p) = (IndexIO.fs(spark, root), new Path(root))
-    if (!f.exists(p)) Nil
-    else f.listStatus(p).toSeq
-      .filter(_.isDirectory)
-      .flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("gen=")) n.drop(4).toLongOption.map(_ -> st.getPath) else None
-      }
-      .collect { case (g, gp) if g >= minGen && g <= maxGen && !dead.contains(g) => gp.toString }
-      .sorted
-  }
-
   // Per-(session, root) memo of the reader DataFrames: a BuiltIndex's
-  // manifest is immutable, so the visible gen-dir set and schema never
-  // change for this instance — re-running the FS listing and DataFrame
-  // resolution on EVERY query is pure driver latency (tens of ms per
-  // search at interactive scale). Keyed by the session's UUID so a
-  // restarted session re-lists without the key pinning the old session; a
-  // bounded LRU (the stats memo's policy) so session-cycling processes
-  // evict only the coldest frame at the bound; @transient so the memo never
-  // rides task closures (executors get an empty map they never touch).
+  // manifest is immutable, so the gen dirs and schema never change for
+  // this instance — resolving the DataFrame again on EVERY query is pure
+  // driver latency (tens of ms per search at interactive scale). Keyed by
+  // the session's UUID so a restarted session re-resolves without the key
+  // pinning the old session; a bounded LRU (the stats memo's policy) so
+  // session-cycling processes evict only the coldest frame at the bound;
+  // @transient so the memo never rides task closures (executors get an
+  // empty map they never touch).
   @transient private lazy val readerMemo =
-    IndexSearcher.lruCache[(String, String, Long, Long, Set[Long]), DataFrame](64)
+    IndexSearcher.lruCache[(String, String, Seq[Long]), DataFrame](64)
 
-  private def readGens(spark: SparkSession, root: String, schema: StructType, minGen: Long,
-                       maxGen: Long, dead: Set[Long] = Set.empty): DataFrame = {
-    // the gen range and dead set are part of the key: for THIS manifest
-    // they are constants per root, but a same-root call with a different
-    // visibility window must never be served the stale frame
-    readerMemo.computeIfAbsent((SessionIds.of(spark), root, minGen, maxGen, dead), _ => {
-      val dirs = committedGenDirs(spark, root, minGen, maxGen, dead)
-      if (dirs.isEmpty) // no committed data dirs (shouldn't happen under a manifest)
-        throw new IllegalStateException(s"no committed gen in [$minGen,$maxGen] under $root")
-      spark.read.option("basePath", root).schema(schema).parquet(dirs: _*)
+  /** The `gen=N` dirs of `root` for the listed generations `gens`, and no
+    * other: an unlisted gen dir left by a crashed write — possibly with
+    * truncated/corrupt parquet footers — is never touched, not even for
+    * schema inference. `basePath` keeps `gen` as a partition column for
+    * callers that group by it. */
+  private def readGens(spark: SparkSession, root: String, schema: StructType, gens: Seq[Long]): DataFrame = {
+    // the generations are part of the key: for THIS manifest they are
+    // constants per root, but a same-root call with other generations
+    // must never be served the stale frame
+    readerMemo.computeIfAbsent((SessionIds.of(spark), root, gens), _ => {
+      require(gens.nonEmpty, s"no generation listed under $root")
+      spark.read.option("basePath", root).schema(schema).parquet(gens.map(g => s"$root/gen=$g"): _*)
     })
   }
 
-  /** VISIBLE data generations of this manifest ([[Manifest.liveGens]]). */
+  /** The data generations readers open ([[Manifest.liveGens]]). */
   def liveGens: Seq[Long] = manifest.liveGens
 
   /** Posting lists under `postings/gen=N/` (one subdir per committed
@@ -303,37 +312,32 @@ final class BuiltIndex(val indexDir: String, val manifest: Manifest) extends Ser
     * answered via parquet row-group min/max stats + dictionary pushdown
     * (the term-dictionary seek).
     *
-    * Only generations <= this manifest's are visible (enumerated dirs, so
-    * the orphan's files are never even opened): an orphan `gen=K` dir left
-    * by a crashed/in-flight append must never leak into a reader opened on
-    * the older manifest — the same fail-closed rule [[deleteRows]] applies
-    * to tombstones.
+    * Only the manifest's listed generations are opened: an orphan `gen=K`
+    * dir left by a crashed/in-flight append must never leak into a reader
+    * opened on the older manifest — the same fail-closed rule
+    * [[deleteRows]] applies to tombstones.
     */
   def postings(spark: SparkSession): DataFrame =
-    readGens(spark, s"$indexDir/postings", IndexIO.postingsSchema,
-      manifest.minGen, manifest.generation, manifest.deadGens.toSet)
+    readGens(spark, s"$indexDir/postings", IndexIO.postingsSchema, manifest.liveGens)
 
   /** (segmentId, docId, norm, sha) — norms + the per-row sha256 invariant.
     * Same committed-generation visibility rule as [[postings]]. */
   def docmeta(spark: SparkSession): DataFrame =
-    readGens(spark, s"$indexDir/docmeta", IndexIO.docmetaSchema,
-      manifest.minGen, manifest.generation, manifest.deadGens.toSet)
+    readGens(spark, s"$indexDir/docmeta", IndexIO.docmetaSchema, manifest.liveGens)
 
   /** Committed term-vector rows (when built with storeTermVectors) — same
     * gen-visibility rule as [[postings]]. */
   def termVectorsDf(spark: SparkSession): DataFrame =
-    readGens(spark, s"$indexDir/termvectors", IndexIO.termVectorsSchema,
-      manifest.minGen, manifest.generation, manifest.deadGens.toSet)
+    readGens(spark, s"$indexDir/termvectors", IndexIO.termVectorsSchema, manifest.liveGens)
 
   /** Committed tombstones (segmentId, localDoc); empty when the index has
-    * no deletes. Only generations in [minDeleteGen, deleteGen] are read —
-    * an orphan dir from a crashed delete op (above) or a superseded
-    * pre-merge dir (below the floor) never leaks into queries. */
+    * no deletes. Only the listed [[Manifest.deleteGens]] are read — an
+    * orphan dir from a crashed delete op or a superseded pre-merge dir
+    * never leaks into queries. */
   def deleteRows(spark: SparkSession): org.apache.spark.sql.Dataset[DeleteRow] = {
     import spark.implicits._
     if (manifest.deletedCount == 0L) spark.emptyDataset[DeleteRow]
-    else readGens(spark, s"$indexDir/deletes", IndexIO.deletesSchema,
-      manifest.minDeleteGen, manifest.deleteGen)
+    else readGens(spark, s"$indexDir/deletes", IndexIO.deletesSchema, manifest.deleteGens)
       .select($"segmentId", $"localDoc").as[DeleteRow]
   }
 }

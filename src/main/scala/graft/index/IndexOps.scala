@@ -12,9 +12,9 @@ import graft.search.{IndexSearcher, Query, TermQ}
   *  - a delete runs the query DISTRIBUTED through the normal kernels (with
   *    existing tombstones applied, so re-deleting is a no-op), writes the
   *    matching (segmentId, localDoc) pairs as a NEW tombstone generation
-  *    under `deletes/gen=K`, then commits a manifest with deleteGen = K —
-  *    readers only see committed generations (live-docs analogue,
-  *    `codecs/simpletext/livedocsformat.go`)
+  *    under `deletes/gen=K`, then commits a manifest that lists K in its
+  *    deleteGens — readers open only listed generations (live-docs
+  *    analogue, `codecs/simpletext/livedocsformat.go`)
   *  - an update appends the replacement docs as new segments (Lucene's
   *    updated docs get new docIDs; old ones are tombstoned)
   *  - statistics are NOT adjusted for deleted docs until a full rebuild —
@@ -30,22 +30,21 @@ object IndexOps {
     val idx = new BuiltIndex(indexDir, m)
     val searcher = new IndexSearcher(idx)
     val segSize = m.segmentSize
-    // tombstone dirs are numbered by deleteGen ONLY — the shared
-    // `generation` counter stays untouched. Bumping it here would let a
-    // delete commit claim a generation number for which no postings/
-    // docmeta were written, aliasing an orphan postings/gen=K left by a
-    // crashed append into the committed-visibility window.
+    // tombstone dirs have their own counter: a delete writes no postings,
+    // so it must not bump `generation`, which keys the fuzzy sidecar of
+    // the dictionary (a bump would only force a rebuild of the same one)
     val dgen = m.deleteGen + 1
     // matchingDocs applies current tombstones — only NEW deletions are
     // written, keeping deletedCount exact (and MatchAll count O(1))
     val n = IndexIO.writeCounted(spark, searcher.matchingDocs(spark, q)
       .map(sd => DeleteRow((sd.docId / segSize).toInt, (sd.docId % segSize).toInt)),
       s"$indexDir/deletes/gen=$dgen")
-    if (n > 0L) IndexIO.commit(spark, indexDir, m.copy(deleteGen = dgen, deletedCount = m.deletedCount + n))
+    if (n > 0L) IndexIO.commit(spark, indexDir,
+      m.copy(deleteGen = dgen, deleteGens = m.deleteGens :+ dgen, deletedCount = m.deletedCount + n))
     else {
       // nothing new matched: no commit, and no tombstone dir is left (with
       // no committed tombstones, the whole tree holds none)
-      IndexIO.delete(spark, if (m.deleteGen == 0L) s"$indexDir/deletes" else s"$indexDir/deletes/gen=$dgen")
+      IndexIO.delete(spark, if (m.deleteGens.isEmpty) s"$indexDir/deletes" else s"$indexDir/deletes/gen=$dgen")
       idx
     }
   }
@@ -71,12 +70,8 @@ object IndexOps {
   def maybeMerge(spark: SparkSession, indexDir: String,
                  policy: MergePolicy = MergePolicy()): BuiltIndex = {
     val m = IndexIO.committed(spark, indexDir)
-    // defensive exists(): a manifest gen whose dir is gone (e.g. a legacy
-    // pre-fix manifest) must not become a zero-byte merge candidate
-    val candidates = m.liveGens.filter { g =>
-      val dir = s"$indexDir/postings/gen=$g"
-      IndexIO.exists(spark, dir) && IndexIO.dirBytes(spark, dir) < policy.smallGenBytes
-    }
+    val candidates =
+      m.liveGens.filter(g => IndexIO.dirBytes(spark, s"$indexDir/postings/gen=$g") < policy.smallGenBytes)
     if (candidates.isEmpty || candidates.size < policy.minMerge) new BuiltIndex(indexDir, m)
     else merge(spark, indexDir, m, candidates, "tiered")
   }
@@ -109,21 +104,22 @@ object IndexOps {
     * writes (docFreq/ttf per term, per-segment doc counts): BM25 no longer
     * sees their ghost docs, exactly as in Lucene after tombstones are
     * reclaimed; segments whose docs were ALL deleted leave the manifest.
-    * Tombstones of untouched segments survive, consolidated into a fresh
-    * deletes generation above a new `minDeleteGen` floor so the superseded
+    * Tombstones of untouched segments survive, consolidated into one fresh
+    * deletes generation that replaces every listed one, so the superseded
     * pre-remap dirs can never be read again.
     *
-    * Commit is the usual atomic manifest flip: `gens` become invisible
-    * (dead, or below a raised `minGen`) and every generation the new
-    * manifest no longer shows is deleted only after the commit is durable
-    * (a crash before that leaves the OLD view fully intact).
+    * Commit is the usual atomic manifest flip: the new generation replaces
+    * `gens` in the listed ones, and every gen dir the new manifest does
+    * not list at or below its counters is deleted only after the commit is
+    * durable (a crash before that leaves the OLD view fully intact; a later
+    * merge reclaims what it left).
     */
   private def merge(spark: SparkSession, indexDir: String, m: Manifest, gens: Seq[Long],
                     tag: String): BuiltIndex = {
     val gen = m.generation + 1
     // the input generations through the schema-given readers of a view in
     // which only `gens` are visible
-    val input = new BuiltIndex(indexDir, m.copy(deadGens = m.deadGens ++ m.liveGens.diff(gens)))
+    val input = new BuiltIndex(indexDir, m.copy(liveGens = gens))
     val allDels = input.deleteRows(spark) // every committed tombstone
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -140,7 +136,7 @@ object IndexOps {
       val segs = (m.segments.filterNot(s => read.contains(s.segmentId)) ++
         stats.metas(m.segmentSize, s"$tag$gen")).sortBy(_.segmentId)
 
-      // ---- consolidate surviving tombstones above a new floor -------------
+      // ---- consolidate surviving tombstones into one new generation -------
       // (written to deletes/gen=deleteGen+1 and counted as they are written;
       // with none, the reclaim below removes the tree after the commit)
       val mergedSegs = read.keySet
@@ -162,26 +158,14 @@ object IndexOps {
       }
       val newDeleteGen = if (nSurv > 0L) m.deleteGen + 1 else 0L
 
-      val deadAll = (m.deadGens ++ gens).distinct.sorted
-      // advance the visibility floor past any dead PREFIX: those generations
-      // can never become visible again, so keeping them listed only grows
-      // the manifest and every [minGen, generation] dirBytes/visibility scan
-      // without bound across long streaming append+merge cycles (deadGens
-      // stays bounded by the number of interior holes, which repeated
-      // merges collapse)
-      val newMinGen = (m.minGen to gen).filterNot(deadAll.contains).min // gen itself is live
       val out = IndexIO.commit(spark, indexDir, m.copy(
-        generation = gen, minGen = newMinGen,
+        generation = gen, liveGens = m.liveGens.diff(gens) :+ gen,
         numSegments = segs.size, stats = IndexStats.of(segs), segments = segs,
         corpusSha = IndexBuilder.sha256Hex(s"${m.corpusSha}#$tag:$gen"),
-        deadGens = deadAll.filter(_ > newMinGen),
-        deleteGen = newDeleteGen, minDeleteGen = newDeleteGen, deletedCount = nSurv))
+        deleteGen = newDeleteGen, deleteGens = Seq(newDeleteGen).filter(_ > 0L), deletedCount = nSurv))
       // reclaim superseded dirs only after the commit is durable
-      val visible = out.liveGens.toSet
-      (m.minGen to m.generation).filterNot(visible).foreach { g =>
-        Seq("postings", "docmeta", "termvectors").foreach(t => IndexIO.delete(spark, s"$indexDir/$t/gen=$g"))
-      }
-      (m.minDeleteGen to m.deleteGen).foreach(g => IndexIO.delete(spark, s"$indexDir/deletes/gen=$g"))
+      IndexIO.unlisted(spark, indexDir, out.manifest)
+        .foreach(u => u.superseded.foreach(g => IndexIO.delete(spark, s"$indexDir/${u.tree}/gen=$g")))
       if (nSurv == 0L) IndexIO.delete(spark, s"$indexDir/deletes")
       out
     } finally allDels.unpersist(blocking = false)

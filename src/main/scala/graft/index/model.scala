@@ -131,17 +131,23 @@ object IndexStats {
 }
 
 /** `segments_N` analogue (`core/index/segmentinfos.go:39-46`): JSON manifest
-  * written atomically after all segment parquet is durable; readers only see
-  * committed generations.
+  * written atomically after all segment parquet is durable. Like
+  * `segments_N`, it lists what a reader opens: the data generations
+  * (`liveGens`) and the tombstone generations (`deleteGens`).
   */
 final case class Manifest(
+    // the counter that numbers data generations: the highest one ever
+    // committed (a build, append or merge writes gen=generation+1). The
+    // fuzzy sidecar is keyed by it.
     generation: Long,
-    // lowest VISIBLE data generation: readers open gen dirs in
-    // [minGen, generation]. Normal builds/appends keep minGen at the first
-    // committed generation; forceMerge rewrites all generations into one
-    // new dir and raises minGen to it, making the superseded dirs invisible
-    // the instant the compacted manifest commits (they are deleted after).
-    minGen: Long = 1L,
+    // the data generations readers open, ascending: postings, docmeta and
+    // term vectors under gen=N for each listed N, and nothing else. A build
+    // or append adds its generation; a merge replaces the generations it
+    // rewrote by its own, so the superseded dirs are invisible the instant
+    // its manifest commits (they are deleted after). A gen dir on disk that
+    // is not listed is garbage of a crash: above `generation` an
+    // uncommitted write, at or below it a superseded one.
+    liveGens: Seq[Long] = Nil,
     numSegments: Int,
     segmentSize: Long, // contiguous docId range per segment; docBase = segmentId * segmentSize
     stats: IndexStats,
@@ -151,12 +157,17 @@ final case class Manifest(
     docmetaBytes: Long = 0L,
     // ---- deletes (IndexWriter.DeleteDocuments / UpdateDocument analogue,
     // `core/index/indexwriter.go:416`, `codecs/simpletext/livedocsformat.go`):
-    // tombstone parquet generations under deletes/gen=K. Only generations
-    // K <= deleteGen are committed — an orphan dir from a crashed delete op
-    // is invisible to readers (fail-closed) and overwritten on retry.
+    // tombstone parquet generations under deletes/gen=K, numbered by their
+    // own counter (the highest K committed; 0 once a merge leaves none).
     // Collection/term statistics are NOT adjusted for deleted docs, exactly
     // like Lucene before segments merge away their tombstones.
     deleteGen: Long = 0L,
+    // the tombstone generations readers open, ascending: a delete adds its
+    // K; a merge replaces them all by the one it consolidates the
+    // surviving tombstones into (their pre-remap docIds of merged segments
+    // can never leak into readers). An orphan dir from a crashed delete is
+    // not listed (fail-closed) and overwritten on retry.
+    deleteGens: Seq[Long] = Nil,
     deletedCount: Long = 0L,
     // non-empty when the index was built with IndexBuilder.buildSorted
     // (IndexWriterConfig.setIndexSort role): a descriptor of the sort whose
@@ -164,18 +175,6 @@ final case class Manifest(
     // sort may early-terminate per segment (IndexSearcher.searchSortedTopK)
     // — the entire point of index sorting.
     indexSort: String = "",
-    // data generations in [minGen, generation] superseded by a TIERED merge
-    // (IndexOps.maybeMerge rewrites a SUBSET of small generations into one
-    // new gen — the TieredMergePolicy role, `core/index/mergepolicy.go:
-    // 303-335` — so visibility is no longer a contiguous range): readers
-    // skip these dirs; they are deleted after the merge commit is durable
-    // (a crash in between leaves them on disk but invisible).
-    deadGens: Seq[Long] = Nil,
-    // lowest VISIBLE tombstone generation: maybeMerge consolidates the
-    // surviving tombstones into one new deletes/gen=K dir and raises this
-    // floor so the superseded tombstone dirs (which address pre-remap
-    // docIds of merged segments) can never leak into readers.
-    minDeleteGen: Long = 0L,
     // highest Structured-Streaming micro-batch id committed into this index
     // (-1 = none): foreachBatch replays after a failure re-deliver the same
     // batchId, and the streaming indexer skips batches <= this watermark —
@@ -216,9 +215,9 @@ final case class Manifest(
     * documents; 0 for an index with no segments left. */
   def nextDocBase: Long = segments.map(_.segmentId + 1L).maxOption.getOrElse(0L) * segmentSize
 
-  /** VISIBLE data generations: [minGen, generation] minus the dead
-    * (tiered-merged) generations. */
-  def liveGens: Seq[Long] = (minGen to generation).filterNot(deadGens.contains)
+  /** The generation numbers above the oldest live one that are not live:
+    * the generations merges retired since then. */
+  def deadGens: Seq[Long] = liveGens.minOption.toSeq.flatMap(lo => (lo to generation).filterNot(liveGens.toSet))
 }
 
 object Manifest {

@@ -39,8 +39,8 @@ import graft.index.BuiltIndex
   * `_SUCCESS`. Any append or merge bumps the generation, so a stale
   * sidecar can never serve candidates for a dictionary it has not seen —
   * [[buildOrLoad]] rebuilds, reaping only sidecars of DEAD generations
-  * (below the manifest's minGen floor or in deadGens): a live older
-  * generation may still be serving a concurrent reader. Ghost terms
+  * (at or below the manifest's generation and not in its liveGens): a
+  * live older generation may still be serving a concurrent reader. Ghost terms
   * from tombstoned docs may remain in the sidecar: a candidate SUPERSET is
   * harmless (their postings are tombstone-filtered like any other query).
   */
@@ -151,23 +151,21 @@ object FuzzyNgrams {
       .write.mode("overwrite").parquet(dir)
 
     // reap sidecars of DEAD generations only (best effort, after the new
-    // commit): a generation below the manifest's visibility floor (minGen)
-    // or in deadGens has had its posting dirs deleted, so no reader it
-    // could serve survives. A sidecar of a LIVE older generation must stay
-    // — a concurrent reader holding that generation's manifest (valid: its
-    // posting dirs are still on disk after a plain append) would otherwise
-    // crash mid-query with FileNotFoundException instead of this class's
-    // clean generation-mismatch error. Live-but-superseded versions are
-    // reclaimed when a merge advances minGen (next buildOrLoad), and
+    // commit): a generation the manifest no longer lists has had its
+    // posting dirs deleted, so no reader it could serve survives. A sidecar
+    // of a LIVE older generation must stay — a concurrent reader holding
+    // that generation's manifest (valid: its posting dirs are still on
+    // disk after a plain append) would otherwise crash mid-query with
+    // FileNotFoundException instead of this class's clean
+    // generation-mismatch error. Live-but-superseded versions are reclaimed
+    // once a merge retires their generation (next buildOrLoad), and
     // CheckIndex reports them in the meantime.
     val m = index.manifest
-    val rp = new org.apache.hadoop.fs.Path(root(index))
-    fs.listStatus(rp).foreach { st =>
+    val live = m.liveGens.toSet
+    fs.listStatus(new org.apache.hadoop.fs.Path(root(index))).foreach { st =>
       if (st.isDirectory && st.getPath.getName != versionName(index)) {
         val dead = st.getPath.getName match {
-          case VersionRe(g) =>
-            val gen = g.toLong
-            gen < m.minGen || m.deadGens.contains(gen)
+          case VersionRe(g) => g.toLong <= m.generation && !live(g.toLong)
           case _ => true // unparseable garbage (never a serveable version)
         }
         if (dead) fs.delete(st.getPath, true)

@@ -37,7 +37,7 @@ class ForceMergeSpec extends AnyFunSuite {
     IndexBuilder.append(spark, extra.toDF("doc_id", "text"), "doc_id", "text", dir, cfg)
     val preIdx = IndexOps.deleteByTerm(spark, dir, "drop")
     assert(preIdx.manifest.deletedCount > 0L)
-    assert(preIdx.manifest.generation > preIdx.manifest.minGen) // multi-gen
+    assert(preIdx.manifest.liveGens.size > 1) // multi-gen
 
     val preCount = new IndexSearcher(preIdx).count(spark, TermQ("common"))
     val merged = IndexOps.forceMerge(spark, dir)
@@ -45,7 +45,7 @@ class ForceMergeSpec extends AnyFunSuite {
     // ---- commit shape ----------------------------------------------------
     val m = merged.manifest
     assert(m.deletedCount == 0L && m.deleteGen == 0L)
-    assert(m.minGen == m.generation)
+    assert(m.liveGens == Seq(m.generation))
     assert(!new java.io.File(s"$dir/deletes").exists(), "tombstone dirs reclaimed")
     val genDirs = new java.io.File(s"$dir/postings").listFiles().filter(_.isDirectory)
     assert(genDirs.map(_.getName).toSet == Set(s"gen=${m.generation}"), "old gens deleted")

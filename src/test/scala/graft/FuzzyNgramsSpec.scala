@@ -170,10 +170,10 @@ class FuzzyNgramsSpec extends AnyFunSuite {
     assert(versions() ==
       Set(new java.io.File(ng.dataDir).getName, new java.io.File(ng2.dataDir).getName))
 
-    // a forceMerge raises the visibility floor past the old generations —
-    // the next buildOrLoad reaps every sidecar below it
+    // a forceMerge retires every old generation — the next buildOrLoad
+    // reaps their sidecars
     val idx3 = graft.index.IndexOps.forceMerge(spark, dir)
-    assert(idx3.manifest.minGen == idx3.manifest.generation)
+    assert(idx3.manifest.liveGens == Seq(idx3.manifest.generation))
     val ng3 = FuzzyNgrams.buildOrLoad(spark, idx3)
     assert(ng3.generation == idx3.manifest.generation)
     assert(versions() == Set(new java.io.File(ng3.dataDir).getName))

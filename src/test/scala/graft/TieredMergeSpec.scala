@@ -117,7 +117,7 @@ class TieredMergeSpec extends AnyFunSuite {
     // segments' tombstones were reclaimed into the rewrite
     assert(merged.manifest.deletedCount > 0L && merged.manifest.deletedCount < delCount)
     assert(merged.manifest.deletedCount == delCount - reclaimedSha.length)
-    assert(merged.manifest.minDeleteGen == merged.manifest.deleteGen)
+    assert(merged.manifest.deleteGens == Seq(merged.manifest.deleteGen))
     val sM = new IndexSearcher(merged)
     // live-doc count is invariant (reclaimed tombstones removed docs AND
     // their tombstones together)
@@ -169,15 +169,12 @@ class TieredMergeSpec extends AnyFunSuite {
     appendNext(40); appendNext(30)
     val all = IndexOps.MergePolicy(smallGenBytes = 1L << 30)
     val m1 = IndexOps.maybeMerge(spark, dir, all)
-    // the dead PREFIX advances minGen instead of accumulating in deadGens
-    // (long streaming append+merge cycles must not grow the manifest or the
-    // [minGen, generation] dir scans without bound)
-    assert(m1.liveGens == Seq(4L) && m1.manifest.minGen == 4L && m1.manifest.deadGens.isEmpty,
-      s"minGen=${m1.manifest.minGen} dead=${m1.manifest.deadGens}")
+    // the manifest lists only the merge's generation: the retired ones leave
+    // it (long streaming append+merge cycles must not grow it)
+    assert(m1.manifest.liveGens == Seq(4L), s"live = ${m1.manifest.liveGens}")
     appendNext(25)
     val m2 = IndexOps.maybeMerge(spark, dir, all)
-    assert(m2.liveGens == Seq(6L), s"live = ${m2.liveGens}")
-    assert(m2.manifest.minGen == 6L && m2.manifest.deadGens.isEmpty)
+    assert(m2.manifest.liveGens == Seq(6L), s"live = ${m2.manifest.liveGens}")
     val s = new IndexSearcher(m2)
     assert(s.count(spark, MatchAllQ) == 145L)
     // content identity: docmeta shas == exactly the ingested docs (ids
@@ -187,6 +184,34 @@ class TieredMergeSpec extends AnyFunSuite {
     assert(shas == ingested.map(i => IndexBuilder.sha256Hex(text(i))).sorted)
     // stats = sum of per-seg metas; alpha appears once per doc
     assert(s.count(spark, TermQ("alpha")) == 145L)
+  }
+
+  test("a stream over a big base generation: the manifest lists two generations and stops growing") {
+    val dir = TestDirs.fresh("graft-tiered-history")
+    IndexBuilder.build(spark, (0L until 3000L).map(i => (i, text(i) + s" pad$i pad${i + 1}")).toDF("doc_id", "text"),
+      "doc_id", "text", dir, cfg)
+    // the perfbench ingest policy: a generation is small under half the
+    // base's postings, so the base is never merged
+    val policy = IndexOps.MergePolicy(smallGenBytes = IndexIO.dirBytes(spark, s"$dir/postings") / 2)
+    def manifestBytes(): Long = {
+      val versions = new java.io.File(s"$dir/manifest").listFiles().map(_.getName.drop(2).toLong)
+      new java.io.File(s"$dir/manifest/v=${versions.max}/manifest.json").length()
+    }
+    // every cycle streams two batches, deletes the previous cycle's docs
+    // and merges: the index keeps its size, only its history grows
+    val sizes = (0 until 6).map { c =>
+      (0 until 2).foreach { b =>
+        val batch = (0 until 20).map(i => (i.toLong, s"alpha cycle$c uniq$c$b$i")).toDF("doc_id", "text")
+        graft.streaming.StreamingIndexer.indexBatch(spark, batch, "doc_id", "text", dir, cfg, 2L * c + b)
+      }
+      if (c > 0) IndexOps.deleteByTerm(spark, dir, s"cycle${c - 1}")
+      val merged = IndexOps.maybeMerge(spark, dir, policy).manifest
+      assert(merged.liveGens == Seq(1L, merged.generation), s"cycle $c: live = ${merged.liveGens}")
+      assert(new IndexSearcher(new BuiltIndex(dir, merged)).count(spark, MatchAllQ) == 3040L, s"cycle $c")
+      manifestBytes()
+    }
+    info(s"manifest.json bytes per cycle: ${sizes.mkString(", ")}")
+    assert(math.abs(sizes.last - sizes(1)) <= 8L, s"manifest.json bytes per cycle: ${sizes.mkString(", ")}")
   }
 
   test("no-op below the merge threshold") {

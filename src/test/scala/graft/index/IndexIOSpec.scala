@@ -90,6 +90,21 @@ class IndexIOSpec extends AnyFunSuite {
     }
   }
 
+  test("a manifest that encodes its generations as a range minus dead ones reads as no index") {
+    val dir = buildIndex("range")
+    val m = IndexIO.readManifest(spark, dir).get
+    val mapper = new ObjectMapper()
+    val tree = mapper.readTree(IndexIO.readText(spark, s"$dir/manifest/v=1/manifest.json").get)
+      .asInstanceOf[ObjectNode]
+    tree.remove("liveGens")
+    tree.remove("deleteGens")
+    tree.put("minGen", 1L).put("minDeleteGen", 0L).putArray("deadGens")
+    writeVersion(dir, 99L, mapper.writeValueAsString(tree))
+    assert(IndexIO.readManifest(spark, dir).isEmpty)
+    IndexIO.delete(spark, s"$dir/manifest/v=99")
+    assert(IndexIO.readManifest(spark, dir).contains(m))
+  }
+
   test("a malformed manifest.json reads as no index") {
     val dir = buildIndex("malformed")
     val m = IndexIO.readManifest(spark, dir).get
@@ -107,11 +122,11 @@ class IndexIOSpec extends AnyFunSuite {
     val segs = Seq(
       SegmentMeta(0, 0L, 512L, 509L, 40960L, 3100L, 900L, 3100L, 0L, IndexBuilder.sha256Hex("0")),
       SegmentMeta(3, 1536L, 77L, 0L, 0L, 0L, 0L, 0L, 0L, IndexBuilder.sha256Hex("3")))
-    val m = Manifest(generation = 9L, minGen = 2L, numSegments = segs.size, segmentSize = 512L,
+    val m = Manifest(generation = 9L, liveGens = Seq(2L, 4L, 9L), numSegments = segs.size, segmentSize = 512L,
       stats = IndexStats.of(segs), segments = segs, corpusSha = IndexBuilder.sha256Hex("corpus"),
       postingsBytes = 123456L, docmetaBytes = 7890L, deleteGen = 4L, deletedCount = 17L,
-      indexSort = "n_chars DESC NULLS LAST, \"größe\" ASC", deadGens = Seq(3L, 5L),
-      minDeleteGen = 2L, lastStreamBatch = 41L, hasPositions = true, hasTermVectors = true,
+      indexSort = "n_chars DESC NULLS LAST, \"größe\" ASC", deleteGens = Seq(2L, 4L),
+      lastStreamBatch = 41L, hasPositions = true, hasTermVectors = true,
       hasOffsets = true, hasPayloads = true, normMode = graft.bm25.NormMode.JavaLucene)
     IndexIO.writeManifest(spark, dir, m)
     // the reference: the Dataset query that encoded manifests before
